@@ -16,17 +16,28 @@ import scala.collection.mutable
   * `runMain graft.Profile <sfDir> <query1,query2,...>`
   */
 object Profile {
+  /** An immutable copy of an [[Agg]]'s counters. */
+  final case class Totals(jobs: Int, stages: Int, tasks: Int, taskTimeMs: Long,
+                          shuffleReadB: Long, shuffleWriteB: Long,
+                          stageTime: Map[String, Long], stageCount: Map[String, Int])
+
+  /** Written on the listener-bus thread, read by the profiling thread:
+    * every update and [[snapshot]] hold the listener's monitor, so a
+    * read never sees a torn or stale count or a map mid-update. */
   final class Agg extends SparkListener {
-    var jobs = 0
-    var stages = 0
-    var tasks = 0
-    var taskTimeMs = 0L
-    var shuffleReadB = 0L
-    var shuffleWriteB = 0L
-    val stageTime = mutable.Map.empty[String, Long]
-    val stageCount = mutable.Map.empty[String, Int]
-    override def onJobStart(jobStart: SparkListenerJobStart): Unit = jobs += 1
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+    private var jobs = 0
+    private var stages = 0
+    private var tasks = 0
+    private var taskTimeMs = 0L
+    private var shuffleReadB = 0L
+    private var shuffleWriteB = 0L
+    private val stageTime = mutable.Map.empty[String, Long]
+    private val stageCount = mutable.Map.empty[String, Int]
+    def snapshot: Totals = synchronized {
+      Totals(jobs, stages, tasks, taskTimeMs, shuffleReadB, shuffleWriteB, stageTime.toMap, stageCount.toMap)
+    }
+    override def onJobStart(jobStart: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = synchronized {
       stages += 1
       val info = sc.stageInfo
       tasks += info.numTasks
@@ -84,19 +95,24 @@ object Profile {
       var last = (-1, -1, -1L); var quiet = 0; var waited = 0
       while (quiet < 2 && waited < 5000) {
         Thread.sleep(100); waited += 100
-        val now = (agg.jobs, agg.stages, agg.taskTimeMs)
+        val s = agg.snapshot
+        val now = (s.jobs, s.stages, s.taskTimeMs)
         if (now == last) quiet += 1 else { quiet = 0; last = now }
       }
       spark.sparkContext.removeSparkListener(agg)
-      val taskSec = agg.taskTimeMs / 1e3
-      println(f"[profile] $n wall=$wall%7.2f s  jobs=${agg.jobs}%4d stages=${agg.stages}%4d " +
-        f"tasks=${agg.tasks}%5d  tasktime=$taskSec%8.2f s (/$nCores cores = ${taskSec / nCores}%6.2f s)  " +
-        f"shufR=${agg.shuffleReadB / 1e6}%8.1f MB shufW=${agg.shuffleWriteB / 1e6}%8.1f MB")
-      agg.stageTime.toSeq.sortBy(-_._2).take(12).foreach { case (k, v) =>
-        println(f"[profile]    ${v / 1e3}%8.2f s  n=${agg.stageCount.getOrElse(k, 0)}%4d  $k")
+      if (quiet < 2)
+        println(s"[profile] WARNING $n: listener events still arriving after ${waited / 1000} s; " +
+          "the numbers below are truncated")
+      val a = agg.snapshot
+      val taskSec = a.taskTimeMs / 1e3
+      println(f"[profile] $n wall=$wall%7.2f s  jobs=${a.jobs}%4d stages=${a.stages}%4d " +
+        f"tasks=${a.tasks}%5d  tasktime=$taskSec%8.2f s (/$nCores cores = ${taskSec / nCores}%6.2f s)  " +
+        f"shufR=${a.shuffleReadB / 1e6}%8.1f MB shufW=${a.shuffleWriteB / 1e6}%8.1f MB")
+      a.stageTime.toSeq.sortBy(-_._2).take(12).foreach { case (k, v) =>
+        println(f"[profile]    ${v / 1e3}%8.2f s  n=${a.stageCount.getOrElse(k, 0)}%4d  $k")
       }
-      agg.stageCount.toSeq.sortBy(-_._2).take(15).foreach { case (k, v) =>
-        println(f"[profile]  count $v%4d  ${agg.stageTime.getOrElse(k, 0L) / 1e3}%8.2f s  $k")
+      a.stageCount.toSeq.sortBy(-_._2).take(15).foreach { case (k, v) =>
+        println(f"[profile]  count $v%4d  ${a.stageTime.getOrElse(k, 0L) / 1e3}%8.2f s  $k")
       }
     }
     spark.stop()

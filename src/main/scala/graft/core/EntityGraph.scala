@@ -3,6 +3,7 @@ package graft.core
 import graft.model.{EntityDataset, Namespaces}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The entity graph: a registry of datasets plus the traversal planner.
   *
@@ -17,6 +18,25 @@ import org.apache.spark.sql.functions._
   * push filters into the scans and pick broadcast-hash for
   * dimension-sized sides — nothing is materialized driver-side, which is
   * what keeps these operators valid on a 1000-executor / 100 TB cluster.
+  *
+  * The one piece of state: the BFS operators (`reachable`,
+  * `reachableFrom`) share an adjacency pinned per graph value
+  * ([[allEdges]] persisted with its lineage, `PinBridge`). It is
+  * planned on the first BFS call that runs a hop (a 0-hop call builds
+  * nothing), and the first job that runs a hop stores its rows as read
+  * from the datasets at that moment; later hops and calls read the
+  * stored rows. It is a cache, not a checkpoint, and so ignores
+  * `graft.checkpointDir`: a partition whose blocks are lost (executor
+  * loss, eviction, or housekeeping that unpersists every RDD) is re-read
+  * from the datasets on its next use, so losing blocks costs a re-scan,
+  * never a failed call (a lineage-cut pin that outlives one call would
+  * fail every later call instead). It is freed along with the graph value (the
+  * ContextCleaner drops the blocks when the driver GCs it). Data that
+  * changes under a live graph value: the other operators (`out`, `in`,
+  * `lookup`, ...) re-read the datasets on every action while the BFS
+  * operators keep the rows of the first call, except for partitions
+  * they had to re-read — so the two can disagree. Build a new
+  * `EntityGraph` value after the data changes.
   */
 final case class EntityGraph(datasets: Map[String, EntityDataset], ns: Namespaces) {
 
@@ -197,8 +217,9 @@ final case class EntityGraph(datasets: Map[String, EntityDataset], ns: Namespace
   }
 
   /** The full entity-to-entity edge list: one (src, dst) URI pair per
-    * declared ref of every dataset — the materialized adjacency view
-    * BFS-style operators run over. */
+    * declared ref of every dataset, unpinned (every action re-reads the
+    * datasets). The BFS operators run over its pinned copy,
+    * [[adjacency]]. */
   def allEdges: DataFrame =
     datasets.values.toSeq.sortBy(_.name).flatMap { d =>
       d.refs.sortBy(_.predicate).map { r =>
@@ -212,34 +233,27 @@ final case class EntityGraph(datasets: Map[String, EntityDataset], ns: Namespace
       }
     }.reduce(_ unionByName _)
 
+  /** The adjacency every BFS hop joins against: [[allEdges]] pinned
+    * once per graph value (life cycle in the class doc). Without the pin
+    * every hop of every call re-plans and re-scans the union of one scan
+    * per declared ref. */
+  private lazy val adjacency: DataFrame =
+    org.apache.spark.sql.graft.PinBridge.persisted(allEdges, StorageLevel.MEMORY_AND_DISK)
+
   /** Variable-depth reachability: all entities within `maxHops` of the
     * start set following ANY outgoing ref, with their minimum depth —
     * the unbounded-traversal companion to the fixed-predicate queries.
-    * Frontier expansion: each hop is one equi-join + anti-join against
-    * the visited set, lineage truncated per hop (Checkpoints.truncate: localCheckpoint,
-    * or reliable checkpoints via the graft.checkpointDir conf), only
+    * Frontier expansion: each hop is one equi-join of the frontier with
+    * the pinned [[adjacency]] + anti-join against the visited set, only
     * NEW nodes join the next frontier — so the work per hop is
     * O(frontier edges), not O(total reached), and the driver never sees
-    * row data. */
-  def reachable(startUris: DataFrame, maxHops: Int): DataFrame = {
-    val edges = allEdges
-    // only FRONTIERS are checkpointed; the visited set stays a union of
-    // already-checkpointed frontiers, so its lineage is one union node
-    // per hop — checkpointing it again would double the materialization
-    // work per hop for no lineage benefit
-    var frontier = startUris.select(col("uri"), lit(0).as("depth")).transform(Checkpoints.truncate)
-    var reached = frontier
-    for (k <- 1 to maxHops) {
-      val next = edges.join(frontier, edges("src") === frontier("uri"))
-        .select(col("dst").as("uri"), lit(k).as("depth"))
-        .distinct()
-        .join(reached.select("uri"), Seq("uri"), "left_anti")
-        .transform(Checkpoints.truncate)
-      reached = reached.unionByName(next)
-      frontier = next
-    }
-    reached
-  }
+    * row data. Every frontier a later hop reads is lineage-truncated
+    * (Checkpoints.truncate) or a driver-side literal. Output (uri,
+    * depth): null FKs are no edges, a dangling ref's target is reached
+    * like any other node, start rows pass through at depth 0 as given,
+    * and every other node appears once, at its minimum depth. */
+  def reachable(startUris: DataFrame, maxHops: Int): DataFrame =
+    bfs(startUris.select(col("uri"), lit(0).as("depth")), Seq.empty, maxHops)
 
   /** Per-ROOT variable-depth reachability — the traversal-aggregation
     * primitive behind the reference's "javascript query" pattern
@@ -249,24 +263,43 @@ final case class EntityGraph(datasets: Map[String, EntityDataset], ns: Namespace
     * whole start set. Output (root, uri, depth) with the MINIMUM depth
     * per (root, uri).
     *
-    * Scale shape: identical to `reachable` — each hop is one edge
-    * equi-join + anti-join against the per-root visited set, frontier
-    * lineage truncated per hop — except keys are (root, uri) pairs, so
+    * Scale shape: identical to `reachable` (same pinned adjacency, same
+    * pinning of frontiers) — except keys are (root, uri) pairs, so
     * work per hop is O(Σ per-root frontier edges) and the shuffle key
     * cardinality GROWS with the start set (no hot single key). The
     * driver never sees row data. */
-  def reachableFrom(startUris: DataFrame, maxHops: Int): DataFrame = {
-    val edges = allEdges
-    var frontier = startUris
-      .select(col("uri").as("root"), col("uri"), lit(0).as("depth"))
-      .transform(Checkpoints.truncate)
+  def reachableFrom(startUris: DataFrame, maxHops: Int): DataFrame =
+    bfs(startUris.select(col("uri").as("root"), col("uri"), lit(0).as("depth")), Seq("root"), maxHops)
+
+  /** The frontier-expansion loop both BFS operators share: `start` holds
+    * the depth-0 rows, `carry` the columns that ride along with every
+    * node (`root` for the per-root BFS), and a node is new when its
+    * (carry, uri) key is not yet reached.
+    *
+    * Only frontiers a later hop reads are pinned: the start set when a
+    * hop runs, unless its plan is already a driver-side literal
+    * (explicit start URIs, `Seq(...).toDF`: its rows already sit in
+    * driver memory and ride along with each hop's plan, where a pin
+    * would cost one job per call), and every hop's new nodes but the
+    * last's, which only the caller reads. The visited set stays a union
+    * of pinned frontiers, so its lineage is one union node per hop —
+    * pinning it again would double the materialization work per hop for
+    * no lineage benefit. */
+  private def bfs(start: DataFrame, carry: Seq[String], maxHops: Int): DataFrame = {
+    val key = carry :+ "uri"
+    var frontier = start.queryExecution.optimizedPlan match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => start
+      case _ if maxHops > 0 => Checkpoints.truncate(start)
+      case _ => start
+    }
     var reached = frontier
     for (k <- 1 to maxHops) {
-      val next = edges.join(frontier, edges("src") === frontier("uri"))
-        .select(col("root"), col("dst").as("uri"), lit(k).as("depth"))
+      val edges = adjacency
+      val hop = edges.join(frontier, edges("src") === frontier("uri"))
+        .select(carry.map(col) :+ col("dst").as("uri") :+ lit(k).as("depth"): _*)
         .distinct()
-        .join(reached.select("root", "uri"), Seq("root", "uri"), "left_anti")
-        .transform(Checkpoints.truncate)
+        .join(reached.select(key.map(col): _*), key, "left_anti")
+      val next = if (k < maxHops) Checkpoints.truncate(hop) else hop
       reached = reached.unionByName(next)
       frontier = next
     }

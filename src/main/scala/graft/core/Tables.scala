@@ -52,8 +52,9 @@ object Tables {
     * two jobs' tasks interleave on the executor pool and the absorb
     * pays ONE job-latency slot instead of two — the r18-verdict #3
     * per-batch floor cut. Both sides are always awaited (a failure in
-    * one does not abandon the other mid-write); the first failure
-    * rethrows. Crash contract unchanged: either write may exist
+    * one does not abandon the other mid-write); a failure rethrows,
+    * leg `a`'s first, with leg `b`'s attached via `addSuppressed` when
+    * both fail. Crash contract unchanged: either write may exist
     * without the other exactly as a crash between the previous
     * sequential appends could leave, and the replay/marker discipline
     * nets both cases. */
@@ -65,6 +66,7 @@ object Tables {
     val fb = Future(b)
     val ra = scala.util.Try(Await.result(fa, Duration.Inf))
     val rb = scala.util.Try(Await.result(fb, Duration.Inf))
+    for (ea <- ra.failed; eb <- rb.failed if ea ne eb) ea.addSuppressed(eb)
     ra.get; rb.get
   }
 

@@ -161,21 +161,29 @@ object OnChange {
     * this for stateful plans, where it is unsupported). Timed results
     * are unchanged: partitioning is invisible to the emitted rows. */
   /** The state-partition decision, pure and spec-pinned: a deployment
-    * override (`SPARK_GRAFT_STREAM_PARTS`) wins verbatim; otherwise
+    * override (`SPARK_GRAFT_STREAM_PARTS`) wins when it is an integer
+    * >= 1 and fails fast with an IllegalArgumentException otherwise
+    * (before any conf is touched, not mid-drain); without it,
     * min(session shuffle partitions, 8); a non-numeric session value
     * degrades to the default instead of throwing. */
   private[graft] def streamStateParts(prev: String, envOverride: Option[String]): String =
-    envOverride.getOrElse(
-      scala.util.Try(math.min(prev.trim.toInt, 8)).getOrElse(8).toString)
+    envOverride match {
+      case Some(v) =>
+        scala.util.Try(v.trim.toInt).toOption.filter(_ >= 1).getOrElse(
+          throw new IllegalArgumentException(
+            s"SPARK_GRAFT_STREAM_PARTS must be an integer >= 1, got '$v'")).toString
+      case None => scala.util.Try(math.min(prev.trim.toInt, 8)).getOrElse(8).toString
+    }
 
+  // JVM-global on purpose: the conf is per session and the save/restore
+  // non-atomic, so two concurrent drains on one session could race it
+  // and leave the session pinned low (r18 advice). A per-session lock
+  // would need a session-keyed (weak) map for a case no graft path has
+  // (drains run sequentially everywhere); the price of one lock is that
+  // drains on DIFFERENT sessions serialize too, which the shared
+  // SparkContext's executor pool would mostly do anyway.
   private val streamPartsLock = new Object
   private def withStreamStateParts[T](spark: SparkSession)(body: => T): T =
-    // the conf is session-global and the save/restore non-atomic: two
-    // concurrent drains on one session could race it and leave the
-    // session pinned low (r18 advice). Drains are sequential in every
-    // graft path, but the lock makes the contract explicit; the parse
-    // is defensive so a non-numeric session value degrades to the
-    // default instead of throwing mid-drain.
     streamPartsLock.synchronized {
       val key = "spark.sql.shuffle.partitions"
       val prev = spark.conf.get(key)

@@ -358,6 +358,77 @@ class GraphPlanSpec extends SparkSpec {
       (ns + "top/4", ns + "leaf/20", 1)), got.toString)
   }
 
+  test("BFS pins the adjacency once: later calls read the pin, and a lost pin is re-read, not fatal") {
+    val s = spark
+    import s.implicits._
+    import graft.model.{EntityDataset, Ref}
+    val dir = java.nio.file.Files.createTempDirectory("graft_bfs_pin_").toString
+    Seq((1L, Option(2L)), (2L, Option(3L)), (3L, Option(1L)), (4L, None)).toDF("key", "next")
+      .write.parquet(s"$dir/chain")
+    Seq((1L, Seq(1L, 2L)), (2L, Seq.empty[Long])).toDF("key", "chains").write.parquet(s"$dir/hub")
+    val ns = "http://graft.io/spec/"
+    val g = graft.core.EntityGraph(Map(
+      "chain" -> EntityDataset("chain", spark.read.parquet(s"$dir/chain"), "key", ns + "chain/",
+        refs = Seq(Ref(ns + "next", "next", "chain"))),
+      "hub" -> EntityDataset("hub", spark.read.parquet(s"$dir/hub"), "key", ns + "hub/",
+        refs = Seq(Ref(ns + "chains", "chains", "chain", array = true)))),
+      Tpch.namespaces)
+    val start = Seq(ns + "hub/1").toDF("uri")
+    def bothCalls() = (
+      g.reachable(start, maxHops = 3).collect().map(r => (r.getString(0), r.getInt(1))).toSet,
+      g.reachableFrom(start, maxHops = 3).collect().map(r => (r.getString(1), r.getInt(2))).toSet)
+
+    // the dataset scans in the executed plans of every action `body` runs
+    object Scans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    def datasetScans[T](body: => T): (T, Seq[String]) = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val qel = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+          Scans.collectWithSubqueries(qe.executedPlan) {
+            case f: org.apache.spark.sql.execution.FileSourceScanExec => f.relation.location.rootPaths
+          }.flatten.map(_.toString).filter(_.contains(dir)).foreach(seen.add)
+        override def onFailure(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+      }
+      org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
+      spark.listenerManager.register(qel)
+      try {
+        val out = body
+        org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
+        (out, seen.toArray.toSeq.map(_.toString))
+      } finally spark.listenerManager.unregister(qel)
+    }
+
+    // the detector sees the scans of the unpinned edge union
+    val (_, edgeScans) = datasetScans(g.allEdges.collect())
+    assert(edgeScans.exists(_.contains("chain")) && edgeScans.exists(_.contains("hub")), edgeScans)
+
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val first = bothCalls()
+    assert(first._1 == Set(ns + "hub/1" -> 0, ns + "chain/1" -> 1, ns + "chain/2" -> 1, ns + "chain/3" -> 2),
+      first._1.toString)
+    assert(first._2 == first._1, first._2.toString)
+    val (second, secondScans) = datasetScans(bothCalls())
+    assert(second == first)
+    assert(secondScans.isEmpty, s"a second BFS call re-scanned the datasets: $secondScans")
+
+    // with the dataset files moved away a re-scan would fail: the third
+    // call must be answered from the stored pin
+    val away = java.nio.file.Paths.get(dir + "_away")
+    java.nio.file.Files.move(java.nio.file.Paths.get(dir), away)
+    try assert(bothCalls() == first)
+    finally java.nio.file.Files.move(away, java.nio.file.Paths.get(dir))
+
+    // housekeeping that unpersists the RDDs the calls persisted (as
+    // graft.Bench and graft.Profile do between queries) drops the pin's
+    // blocks: the graph value must re-read the datasets, not fail
+    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!before.contains(id)) rdd.unpersist(blocking = true)
+    }
+    assert(bothCalls() == first)
+  }
+
   test("events scan prunes columns (ReadSchema only carries what is used)") {
     val events = spark.read.parquet(s"$sfDir/events.parquet")
     val plan = planOf(events.select(col("event_type")).groupBy("event_type").count())

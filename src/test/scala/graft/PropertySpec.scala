@@ -484,4 +484,76 @@ class PropertySpec extends SparkSpec {
       }
     }
   }
+
+  test("reachable / reachableFrom ≡ a driver-side BFS on random graphs; a second call reads the pin") {
+    val s = spark
+    import s.implicits._
+    import graft.model.{EntityDataset, Ref}
+    val ns = "http://graft.io/prop/"
+    val (aNs, bNs) = (ns + "a/", ns + "b/")
+    // FK values range past the key range, so some refs dangle
+    val fk: Gen[Option[Long]] = Gen.frequency(4 -> Gen.choose(0L, 6L).map(Some(_)), 1 -> Gen.const(None))
+    // array refs: null, empty, or elements that may themselves be null
+    val fkArr: Gen[Option[Seq[Option[Long]]]] = Gen.frequency(
+      1 -> Gen.const(None), 1 -> Gen.const(Some(Seq.empty)), 4 -> Gen.resize(3, Gen.listOf(fk)).map(Some(_)))
+    val graphGen = for {
+      nA <- Gen.choose(1, 5)
+      nB <- Gen.choose(1, 4)
+      aRows <- Gen.listOfN(nA, Gen.zip(fk, fkArr))
+      bRows <- Gen.listOfN(nB, fk)
+      // starts: existing, dangling and duplicated URIs of both datasets
+      starts <- Gen.resize(4, Gen.nonEmptyListOf(Gen.zip(Gen.oneOf(aNs, bNs), Gen.choose(0L, 6L))))
+      hops <- Gen.choose(0, 3)
+      literal <- Gen.oneOf(true, false)
+    } yield (aRows, bRows, starts.map { case (n, k) => n + k }, hops, literal)
+
+    forAllSeeded(graphGen, trials = 12) { case (aRows, bRows, starts, hops, literal) =>
+      val aKeyed = aRows.zipWithIndex.map { case ((b, arr), i) => (i.toLong, b, arr) }
+      val bKeyed = bRows.zipWithIndex.map { case (a, i) => (i.toLong, a) }
+      val a = aKeyed.toDF("key", "b_ref", "a_refs")
+      val b = bKeyed.toDF("key", "a_ref")
+      val g = graft.core.EntityGraph(Map(
+        "a" -> EntityDataset("a", a, "key", aNs,
+          refs = Seq(Ref(ns + "b", "b_ref", "b"), Ref(ns + "a", "a_refs", "a", array = true))),
+        "b" -> EntityDataset("b", b, "key", bNs, refs = Seq(Ref(ns + "a", "a_ref", "a")))),
+        graft.core.Tpch.namespaces)
+
+      // the model: null FKs and null array elements are no edges;
+      // dangling targets are nodes like any other
+      val edges: Map[String, Set[String]] = (
+        aKeyed.flatMap { case (k, bRef, arr) =>
+          bRef.map(t => aNs + k -> (bNs + t)).toSeq ++
+            arr.toSeq.flatten.flatten.map(t => aNs + k -> (aNs + t))
+        } ++ bKeyed.flatMap { case (k, aRef) => aRef.map(t => bNs + k -> (aNs + t)) }
+      ).groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+      def bfs(from: Set[String]): Seq[(String, Int)] = {
+        var visited = from
+        var frontier = from
+        (1 to hops).flatMap { k =>
+          frontier = frontier.flatMap(edges.getOrElse(_, Set.empty)) -- visited
+          visited ++= frontier
+          frontier.toSeq.map(_ -> k)
+        }
+      }
+      // start rows pass through as given (duplicates included)
+      val wantReach = (starts.map(_ -> 0) ++ bfs(starts.toSet)).sorted
+      val wantFrom = (starts.map(u => (u, u, 0)) ++
+        starts.distinct.flatMap(r => bfs(Set(r)).map { case (u, d) => (r, u, d) })).sorted
+
+      // a driver-literal start (LocalRelation, unpinned) and an
+      // RDD-backed one (pinned) must agree
+      val startDf =
+        if (literal) starts.toDF("uri")
+        else spark.sparkContext.parallelize(starts, 2).toDF("uri")
+      val ctx = s"a=$aKeyed b=$bKeyed starts=$starts hops=$hops literal=$literal"
+      (1 to 2).foreach { call =>
+        val gotReach = g.reachable(startDf, hops).collect()
+          .map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
+        assert(gotReach == wantReach, s"reachable call $call: $ctx")
+        val gotFrom = g.reachableFrom(startDf, hops).collect()
+          .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSeq.sorted
+        assert(gotFrom == wantFrom, s"reachableFrom call $call: $ctx")
+      }
+    }
+  }
 }

@@ -28,6 +28,12 @@ class StreamingSpec extends SparkSpec {
     assert(OnChange.streamStateParts("32", None) == "8")        // lowered to the state default
     assert(OnChange.streamStateParts("4", None) == "4")         // never raised above the session
     assert(OnChange.streamStateParts("garbage", None) == "8")   // defensive parse, no throw
+    // a bad override fails fast, naming the variable and the value
+    Seq("abc", "0").foreach { bad =>
+      val e = intercept[IllegalArgumentException](OnChange.streamStateParts("32", Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_STREAM_PARTS") && e.getMessage.contains(s"'$bad'"),
+        e.getMessage)
+    }
     // integration: a stateful drain under a RAISED session conf emits
     // the batch-equal rows and restores the conf afterwards
     val key = "spark.sql.shuffle.partitions"

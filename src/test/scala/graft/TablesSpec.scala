@@ -69,4 +69,16 @@ class TablesSpec extends SparkSpec {
     assert(props.get("graft.periodUs").contains("86400000000"), props.toString)
     assert(spark.table(t).select("user_id").as[Long].collect().sorted.toSeq == Seq(1L, 3L))
   }
+
+  test("inParallel: both legs failing rethrows leg a's error with leg b's suppressed") {
+    val e = intercept[IllegalStateException] {
+      Tables.inParallel(throw new IllegalStateException("leg a"), throw new RuntimeException("leg b"))
+    }
+    assert(e.getMessage == "leg a")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("leg b"))
+    // one failing leg: its error alone, the other leg still ran to completion
+    val ran = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val only = intercept[RuntimeException](Tables.inParallel(ran.set(true), throw new RuntimeException("only b")))
+    assert(only.getMessage == "only b" && only.getSuppressed.isEmpty && ran.get)
+  }
 }
