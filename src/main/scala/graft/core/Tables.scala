@@ -35,15 +35,6 @@ object Tables {
     if (fs.exists(loc)) fs.delete(loc, true)
   }
 
-  /** Compact a standing index table by REMOVING the given ids — the
-    * supersede step shared by every graft index family (shingle, LSH
-    * sketch, IVF inverted file, PQ codes). The table is NOT recomputed:
-    * its existing rows are filtered through a broadcast anti-join on
-    * `id` and rewritten UNDER THE TABLE'S OWN bucket/sort spec (read
-    * from the catalog) into a swap table that atomically takes the
-    * index's name — the same rewrite-not-delete-in-place discipline as
-    * the reference's log compaction. Companions keyed by id are
-    * compacted by calling this on them too. */
   /** Run two INDEPENDENT write actions concurrently (guide §2.6:
     * Spark happily runs several jobs at once — actions are only
     * sequential because the driver calls them sequentially). For the
@@ -59,17 +50,42 @@ object Tables {
     * sequential appends could leave, and the replay/marker discipline
     * nets both cases. */
   def inParallel(a: => Unit, b: => Unit): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fa = Future(a)
-    val fb = Future(b)
-    val ra = scala.util.Try(Await.result(fa, Duration.Inf))
-    val rb = scala.util.Try(Await.result(fb, Duration.Inf))
+    // each leg runs on Scala's global pool under the caller's local
+    // properties (job group, streaming batch id, SQL execution id) and
+    // active session, so a cancel of the caller's job group reaches the
+    // legs' jobs
+    val session = org.apache.spark.sql.classic.SparkSession.active
+    def leg(body: => Unit) =
+      org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(session, globalPool)(body)
+    val fa = leg(a)
+    val fb = leg(b)
+    def await(f: java.util.concurrent.Future[Unit]) = scala.util.Try(f.get()).recover {
+      case e: java.util.concurrent.ExecutionException => throw e.getCause
+    }
+    val ra = await(fa)
+    val rb = await(fb)
     for (ea <- ra.failed; eb <- rb.failed if ea ne eb) ea.addSuppressed(eb)
     ra.get; rb.get
   }
 
+  private object globalPool extends java.util.concurrent.AbstractExecutorService {
+    def execute(r: Runnable): Unit = scala.concurrent.ExecutionContext.global.execute(r)
+    def shutdown(): Unit = ()
+    def shutdownNow(): java.util.List[Runnable] = java.util.Collections.emptyList()
+    def isShutdown: Boolean = false
+    def isTerminated: Boolean = false
+    def awaitTermination(timeout: Long, unit: java.util.concurrent.TimeUnit): Boolean = false
+  }
+
+  /** Compact a standing index table by REMOVING the given ids — the
+    * supersede step shared by every graft index family (shingle, LSH
+    * sketch, IVF inverted file, PQ codes). The table is NOT recomputed:
+    * its existing rows are filtered through a broadcast anti-join on
+    * `id` and rewritten UNDER THE TABLE'S OWN bucket/sort spec (read
+    * from the catalog) into a swap table that atomically takes the
+    * index's name — the same rewrite-not-delete-in-place discipline as
+    * the reference's log compaction. Companions keyed by id are
+    * compacted by calling this on them too. */
   def compactById(spark: SparkSession, table: String,
                   ids: org.apache.spark.sql.DataFrame): Unit =
     compactByKey(spark, table, ids, "id")

@@ -1120,10 +1120,7 @@ object Dedup {
   def compactGramIndex(spark: org.apache.spark.sql.SparkSession, table: String,
                        ids: DataFrame): Unit = {
     graft.core.Tables.compactByKey(spark, table, ids, "id")
-    // pre-roster indexes (persisted before `_ids` existed) compact
-    // without one; the next build writes it
-    if (spark.catalog.tableExists(s"${table}_ids"))
-      graft.core.Tables.compactByKey(spark, s"${table}_ids", ids, "id")
+    graft.core.Tables.compactByKey(spark, s"${table}_ids", ids, "id")
   }
 
   /** SPAN-level decontamination — the eval-overlap scrub frontier

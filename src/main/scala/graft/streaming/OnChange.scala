@@ -144,22 +144,6 @@ object OnChange {
         "the stream violated the in-order (non-strict) arrival contract")
   }
 
-  /** Run `body` (a STATEFUL drain: construct + start + await) with
-    * `spark.sql.shuffle.partitions` lowered to the stream-state
-    * default, restored afterwards. A stateful query pins its state
-    * partition count from this conf at the first checkpoint, and every
-    * micro-batch then pays one state-store open+commit PER PARTITION —
-    * measured here at ~0.4 s of task time per partition per batch
-    * (HDFS-backed store, local disk), dwarfing the actual aggregation
-    * at bench scale: the e3 drain ran 1.9× faster at 4 partitions than
-    * at 32 in the same JVM. Core count is the wrong driver for state
-    * partitioning — state volume is — so the drains default to
-    * min(session setting, 8) and a deployment overrides with
-    * SPARK_GRAFT_STREAM_PARTS sized to its state (the knob to raise
-    * when per-key state per partition approaches executor memory,
-    * e.g. hundreds of GB of open sessions at 100 TB — AQE cannot do
-    * this for stateful plans, where it is unsupported). Timed results
-    * are unchanged: partitioning is invisible to the emitted rows. */
   /** The state-partition decision, pure and spec-pinned: a deployment
     * override (`SPARK_GRAFT_STREAM_PARTS`) wins when it is an integer
     * >= 1 and fails fast with an IllegalArgumentException otherwise
@@ -183,6 +167,23 @@ object OnChange {
   // drains on DIFFERENT sessions serialize too, which the shared
   // SparkContext's executor pool would mostly do anyway.
   private val streamPartsLock = new Object
+
+  /** Run `body` (a STATEFUL drain: construct + start + await) with
+    * `spark.sql.shuffle.partitions` lowered to the stream-state
+    * default, restored afterwards. A stateful query pins its state
+    * partition count from this conf at the first checkpoint, and every
+    * micro-batch then pays one state-store open+commit PER PARTITION —
+    * measured here at ~0.4 s of task time per partition per batch
+    * (HDFS-backed store, local disk), dwarfing the actual aggregation
+    * at bench scale: the e3 drain ran 1.9× faster at 4 partitions than
+    * at 32 in the same JVM. Core count is the wrong driver for state
+    * partitioning — state volume is — so the drains default to
+    * min(session setting, 8) and a deployment overrides with
+    * SPARK_GRAFT_STREAM_PARTS sized to its state (the knob to raise
+    * when per-key state per partition approaches executor memory,
+    * e.g. hundreds of GB of open sessions at 100 TB — AQE cannot do
+    * this for stateful plans, where it is unsupported). Timed results
+    * are unchanged: partitioning is invisible to the emitted rows. */
   private def withStreamStateParts[T](spark: SparkSession)(body: => T): T =
     streamPartsLock.synchronized {
       val key = "spark.sql.shuffle.partitions"
@@ -470,479 +471,317 @@ object OnChange {
       log, idCol, recordedCol, deletedCol, batch, batchIdCol, t)
   }
 
-  /** STREAMING incremental dedup — the full operational ingest loop
-    * composed from the standing-index machinery: each micro-batch of
-    * new documents (one chunk file per batch) dedups against the
-    * standing shingle index with `Dedup.ngramJaccardDelta` (batch ×
-    * corpus rides the index buckets; corpus × corpus never runs), its
-    * pairs append to `pairsPath` tagged with the batch id, and the
-    * batch is then ABSORBED into the index — so a later batch pairs
-    * against every earlier one without any rescan. The union of all
-    * batch outputs equals the one-shot delta of the whole stream (each
-    * cross-batch pair surfaces exactly once, in the later doc's batch).
-    *
-    * Replay semantics under `foreachBatch`'s at-least-once contract:
-    * pairs land in a PER-BATCH directory with overwrite, so a replayed
-    * batch rewrites its own output (idempotent); the absorb is guarded
-    * by a `<indexTable>_batches` marker table written after it, so a
-    * replay of a fully-processed batch skips the append entirely. The
-    * residual window (crash between absorb and marker) double-absorbs
-    * one batch — the same bounded at-least-once trade the reference
-    * makes on its continuation tokens; `compactShingleIndex` with the
-    * batch's ids repairs it.
-    *
-    * Re-emitted ids: a batch may carry an id already in the index (an
-    * update — `ngramJaccardDelta` itself scores it with supersede
-    * semantics). Before the absorb, any overlap between the batch's ids
-    * and the `<indexTable>_sizes` companion is compacted OUT of the
-    * index, so the absorb never appends a second copy of a doc's
-    * shingles (which would silently corrupt every later batch's pair
-    * joins and Jaccard denominators). The overlap probe is one map-only
-    * scan of the single-column `_sizes` companion against the broadcast
-    * batch-id set; the compact itself — a bucketed anti-join rewrite —
-    * only runs when an overlap actually exists. */
+  /** STREAMING incremental dedup: each micro-batch of new documents
+    * (one chunk file per batch) dedups against the standing shingle
+    * index with `Dedup.ngramJaccardDelta` (batch × corpus rides the
+    * index buckets; corpus × corpus never runs), its pairs land under
+    * `pairsPath/batch_id=N`, and the batch is then absorbed, so a later
+    * batch pairs against every earlier one without any rescan. The
+    * union of all batch outputs equals the one-shot delta of the whole
+    * stream (each cross-batch pair surfaces exactly once, in the later
+    * doc's batch). Replay and supersede: [[indexStep]], probing the
+    * per-doc `<indexTable>_sizes` roster. */
   def streamingDedupDelta(spark: SparkSession, docsDir: String, textCol: String,
                           idCol: String, n: Int, threshold: Double, indexTable: String,
                           pairsPath: String, checkpointDir: String,
                           maxDf: Int = 10000): Unit =
-    streamingShingleLoop(spark, docsDir, textCol, idCol, n, indexTable, pairsPath,
-      checkpointDir,
+    shingleLoop(spark, docsDir, textCol, idCol, n, indexTable, pairsPath, checkpointDir,
       (bs, batch) => graft.dedup.Dedup
         .ngramJaccardDelta(bs, batch, textCol, idCol, n, threshold, indexTable, maxDf))
 
   /** `streamingDedupDelta`'s loop with the CONTAINMENT screen as the
-    * per-batch pair generator — the sixth standing family's streaming
-    * closure (quote/excerpt screening on every ingest batch): same
-    * index, same absorb/supersede/replay contract, same as-of-arrival
-    * pair semantics; only the scoring tail differs (the engine-side
-    * sharing is literal — both loops ride `streamingShingleLoop` and
-    * `Dedup.deltaInterSizes`). */
+    * per-batch pair generator (quote/excerpt screening on every ingest
+    * batch): same index, same as-of-arrival pair semantics; only the
+    * scoring tail differs (both ride `Dedup.deltaInterSizes`). */
   def streamingContainment(spark: SparkSession, docsDir: String, textCol: String,
                            idCol: String, n: Int, threshold: Double, indexTable: String,
                            pairsPath: String, checkpointDir: String,
                            maxDf: Int = 10000): Unit =
-    streamingShingleLoop(spark, docsDir, textCol, idCol, n, indexTable, pairsPath,
-      checkpointDir,
+    shingleLoop(spark, docsDir, textCol, idCol, n, indexTable, pairsPath, checkpointDir,
       (bs, batch) => graft.dedup.Dedup
         .containmentDelta(bs, batch, textCol, idCol, n, threshold, indexTable, maxDf))
 
-  /** ONE-job batch gate shared by the index-maintaining foreachBatch
-    * loops: (replayed, hasOverlap) from a single driver action. The
-    * replay-marker probe and the supersede-overlap probe previously
-    * cost a job each on EVERY micro-batch; fusing them halves the
-    * loop's fixed per-batch driver actions (the processBatch
-    * one-action discipline applied to the streaming gates). On the
-    * rare replay path the overlap side is computed wastefully once —
-    * a map-only probe of a roster-sized table.
-    *
-    * Contract (r18 advice): `overlap` must be CONSTRUCTIBLE before the
-    * replay check — the loops build it from the index's roster
-    * companion, so a drain against an index whose build never ran (no
-    * companion table) fails here with an AnalysisException rather than
-    * short-circuiting on the marker: the companions are part of the
-    * index build contract, and a missing one is a broken index the
-    * loop must not silently ride past. */
-  private def batchGate(bs: SparkSession, markers: String, batchId: Long,
-                        overlap: DataFrame): (Boolean, Boolean) = {
-    if (!bs.catalog.tableExists(markers)) return (false, !overlap.isEmpty)
-    val m = bs.table(markers).filter(col("batch_id") === batchId)
-      .limit(1).select(lit(1).as("__src"))
-    val o = overlap.limit(1).select(lit(2).as("__src"))
-    val got = m.unionByName(o).collect().map(_.getInt(0)).toSet
-    (got.contains(1), got.contains(2))
-  }
-
-  /** The shingle-index streaming loop shared by the Jaccard and
-    * containment screens — ONE definition of the per-batch replay
-    * guard, supersede-before-absorb, and session-clone refresh, so the
-    * two loops cannot drift on operational semantics. */
-  private def streamingShingleLoop(spark: SparkSession, docsDir: String, textCol: String,
-                                   idCol: String, n: Int, indexTable: String,
-                                   pairsPath: String, checkpointDir: String,
-                                   pairFn: (SparkSession, DataFrame) => DataFrame): Unit = {
-    val schema = spark.read.parquet(docsDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(docsDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // everything runs on the BATCH's session (the stream's session
-        // clone): a table appended through one session is stale in the
-        // cached file listing of another, and the next batch must see
-        // this batch's absorb
+  private def shingleLoop(spark: SparkSession, docsDir: String, textCol: String,
+                          idCol: String, n: Int, indexTable: String,
+                          pairsPath: String, checkpointDir: String,
+                          pairFn: (SparkSession, DataFrame) => DataFrame): Unit =
+    drain(spark, docsDir, checkpointDir, Seq(indexTable, s"${indexTable}_sizes")) {
+      (batch, batchId) =>
         val bs = batch.sparkSession
-        import bs.implicits._
-        val markers = s"${indexTable}_batches"
-        // supersede before absorb: ids this batch re-emits leave the
-        // standing index first, so the append below cannot double
-        // their shingles/sizes (absorb itself is append-only)
-        val batchIds = batch.select(col(idCol).as("id")).distinct()
-        val overlap = bs.table(s"${indexTable}_sizes")
-          .join(broadcast(batchIds), Seq("id"), "leftsemi")
-        val (replayed, hasOverlap) = batchGate(bs, markers, batchId, overlap)
-        if (!replayed) {
-          pairFn(bs, batch)
-            .write.mode("overwrite").parquet(s"$pairsPath/batch_id=$batchId")
-          if (hasOverlap)
-            graft.dedup.Dedup.compactShingleIndex(bs, indexTable, overlap)
-          graft.dedup.Dedup.absorbIntoShingleIndex(bs, batch, textCol, idCol, n, indexTable)
-          Seq(batchId).toDF("batch_id").write.mode("append").saveAsTable(markers)
-        }
-        ()
-      }
+        indexStep(batch, batchId, indexTable, pairsPath,
+          emit = pairFn(bs, batch),
+          absorb = graft.dedup.Dedup.absorbIntoShingleIndex(bs, batch, textCol, idCol, n, indexTable),
+          roster = Some(bs.table(s"${indexTable}_sizes")), idCol = idCol,
+          compact = graft.dedup.Dedup.compactShingleIndex(bs, indexTable, _))
+    }
+
+  /** The skeleton every `foreachBatch` loop shares: `dir` drained one
+    * file per micro-batch up to what is there now, `step` run on each
+    * batch, then the CALLER's view of the `refresh` tables that exist
+    * is refreshed, since the appends ran through the stream's session
+    * clone. A restart with the same `checkpointDir` resumes after the
+    * last committed batch and redelivers an uncommitted one. */
+  private[graft] def drain(spark: SparkSession, dir: String, checkpointDir: String,
+                           refresh: Seq[String])(step: (DataFrame, Long) => Unit): Unit = {
+    val schema = spark.read.parquet(dir).schema
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(dir)
+      .writeStream
+      .foreachBatch(step)
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-    // the appends ran through the stream's session clone; refresh the
-    // CALLER's view of the index so post-drain reads see the absorbed
-    // batches
-    spark.catalog.refreshTable(indexTable)
-    spark.catalog.refreshTable(s"${indexTable}_sizes")
+      .awaitTermination()
+    refresh.filter(spark.catalog.tableExists).foreach(spark.catalog.refreshTable)
   }
 
-  /** STREAMING incremental embedding dedup — `streamingDedupDelta`'s
-    * operational loop for VECTORS: each micro-batch of new embeddings
-    * dedups against the standing sketch index
+  /** One micro-batch of a marker-guarded index loop: the replay and
+    * supersede contract of every standing-state loop, written once.
+    * Everything runs on the BATCH's session (the stream's clone): a
+    * table appended through one session is stale in the cached file
+    * listing of another, and the next batch must see this one's absorb.
+    *
+    *  1. [[batchGate]], one job: is batch `batchId` already in the
+    *     `<table>_batches` marker, and, when the loop names a `roster`
+    *     (one row per indexed `id`), does the batch re-emit a standing
+    *     id? The ids are read off the raw batch's `idCol`, so a replayed
+    *     batch pays no per-family pass.
+    *  2. A marked batch stops here. Otherwise `emit`'s output is written
+    *     to `<out>/batch_id=N` with overwrite before any state changes:
+    *     a redelivered batch rewrites its own output.
+    *  3. Supersede before absorb: when the gate found an overlap,
+    *     `compact` removes those ids from the index and its roster.
+    *     Absorbs are append-only, and a second copy of a doc's rows
+    *     would corrupt every later batch's joins and denominators.
+    *  4. `absorb` appends the batch, so later batches see it through
+    *     the standing state alone.
+    *  5. The marker row, last.
+    *
+    * A crash anywhere before the marker redelivers the batch, which
+    * recomputes the same output: the family deltas supersede batch ids
+    * out of the corpus side, so an absorbed copy of the batch does not
+    * pair with itself. With a roster, a crash after the absorb leaves
+    * every batch id in the roster; the redelivery compacts them out and
+    * absorbs once more, so the index and roster end equal to an
+    * uninterrupted run (StreamingSpec, fault injection); only the
+    * shingle index's `_absorbed` drift ledger counts the batch twice,
+    * which brings the next hot-list refresh forward. A crash INSIDE
+    * an absorb, between the index append and the roster append, is not
+    * repaired: ids missing from the roster are not compacted and their
+    * index rows double. Without a roster (recipe, pack) the absorb
+    * itself must be safe to redo. */
+  private[graft] def indexStep(batch: DataFrame, batchId: Long, table: String, out: String,
+                               emit: => DataFrame, absorb: => Unit,
+                               roster: Option[DataFrame] = None, idCol: String = "id",
+                               compact: DataFrame => Unit = _ => ()): Unit = {
+    val bs = batch.sparkSession
+    import bs.implicits._
+    val markers = s"${table}_batches"
+    val overlap = roster.map(_.join(broadcast(batch.select(col(idCol).as("id")).distinct()),
+      Seq("id"), "leftsemi").select("id"))
+    val (replayed, hasOverlap) = batchGate(bs, markers, batchId, overlap)
+    if (!replayed) {
+      emit.write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
+      if (hasOverlap) overlap.foreach(compact)
+      absorb
+      Seq(batchId).toDF("batch_id").write.mode("append").saveAsTable(markers)
+    }
+  }
+
+  /** The batch gate as ONE driver action: (replayed, hasOverlap). The
+    * marker probe and the overlap probe share one job on every
+    * micro-batch; on the rare replay path the overlap side is computed
+    * wastefully once, a map-only probe of a roster-sized table. Without
+    * an overlap side the gate is the marker probe alone.
+    *
+    * `overlap` is built before the replay check, so a drain against an
+    * index whose build never wrote its roster companion (`_sizes`,
+    * `_ids`, `_fps`) fails here with an AnalysisException rather than
+    * short-circuiting on the marker: the companions are part of the
+    * index build contract, and a missing one is a broken index. */
+  private def batchGate(bs: SparkSession, markers: String, batchId: Long,
+                        overlap: Option[DataFrame]): (Boolean, Boolean) = {
+    if (!bs.catalog.tableExists(markers)) return (false, overlap.exists(!_.isEmpty))
+    val m = bs.table(markers).filter(col("batch_id") === batchId)
+    overlap match {
+      case None => (!m.isEmpty, false)
+      case Some(o) =>
+        val got = m.limit(1).select(lit(1).as("__src"))
+          .unionByName(o.limit(1).select(lit(2).as("__src")))
+          .collect().map(_.getInt(0)).toSet
+        (got.contains(1), got.contains(2))
+    }
+  }
+
+  /** STREAMING incremental embedding dedup: each micro-batch of new
+    * embeddings dedups against the standing sketch index
     * (`Dedup.embeddingNearDupDelta`: batch × corpus through the
-    * bucketed (t, sk) join, corpus × corpus never runs), appends its
-    * pairs per-batch, and is absorbed (`Ann.absorbIntoAnnIndex`) so
-    * later batches pair against earlier ones without a rescan. Same
-    * replay contract as the text loop: per-batch overwrite + a
-    * `<indexTable>_batches` marker guarding the absorb; re-emitted ids
-    * are compacted out before absorbing (supersede, never double). */
+    * bucketed (t, sk) join) and is absorbed (`Ann.absorbIntoAnnIndex`).
+    * The roster is the index's t = 0 slice: the index holds one row
+    * per (vector, table), so the slice is one row per vector. */
   def streamingVectorDedup(spark: SparkSession, embDir: String, vecCol: String,
                            idCol: String, indexTable: String, threshold: Double,
-                           pairsPath: String, checkpointDir: String): Unit = {
-    val schema = spark.read.parquet(embDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(embDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bs = batch.sparkSession
-        import bs.implicits._
-        val markers = s"${indexTable}_batches"
-        val batchIds = batch.select(col(idCol).as("id")).distinct()
-        // overlap probe on the t = 0 slice only: the index holds one
-        // row per (vector, table), so the slice is one row per vector
-        // — the `_sizes`-sized probe of the text loop, not a scan of
-        // the tables×-replicated index. No distinct: the existence
-        // check doesn't need it, and compact dedups its key side.
-        val overlap = bs.table(indexTable).filter(col("t") === 0)
-          .join(broadcast(batchIds), Seq("id"), "leftsemi")
-          .select("id")
-        val (replayed, hasOverlap) = batchGate(bs, markers, batchId, overlap)
-        if (!replayed) {
-          graft.dedup.Dedup
-            .embeddingNearDupDelta(bs, batch, vecCol, idCol, indexTable, threshold)
-            .write.mode("overwrite").parquet(s"$pairsPath/batch_id=$batchId")
-          if (hasOverlap)
-            graft.ann.Ann.compactAnnIndex(bs, indexTable, overlap)
-          graft.ann.Ann.absorbIntoAnnIndex(bs, batch, vecCol, idCol, indexTable)
-          Seq(batchId).toDF("batch_id").write.mode("append").saveAsTable(markers)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.catalog.refreshTable(indexTable)
-  }
+                           pairsPath: String, checkpointDir: String): Unit =
+    drain(spark, embDir, checkpointDir, Seq(indexTable)) { (batch, batchId) =>
+      val bs = batch.sparkSession
+      indexStep(batch, batchId, indexTable, pairsPath,
+        emit = graft.dedup.Dedup
+          .embeddingNearDupDelta(bs, batch, vecCol, idCol, indexTable, threshold),
+        absorb = graft.ann.Ann.absorbIntoAnnIndex(bs, batch, vecCol, idCol, indexTable),
+        roster = Some(bs.table(indexTable).filter(col("t") === 0)), idCol = idCol,
+        compact = graft.ann.Ann.compactAnnIndex(bs, indexTable, _))
+    }
 
-  /** STREAMING incremental SEMANTIC dedup — the d10/d11 operational
-    * loop for the k-means-cell family, closing the streaming story for
-    * all three index layouts: each micro-batch of new embeddings
-    * routes to cells under the standing inverted file's FROZEN `_cent`
-    * quantizer (`SemDedup.semanticDedupDelta`: batch × corpus rides
-    * the bucketed cid join; corpus × corpus never runs, nothing
-    * re-trains), appends its pairs per-batch, and is absorbed
-    * (`Ann.absorbIntoIvfIndex` — the standard IVF add) so later
-    * batches pair against earlier ones through the index alone. Same
-    * replay contract as the other two loops: per-batch overwrite + a
-    * `<indexTable>_batches` marker guarding the absorb; re-emitted ids
-    * are compacted out before absorbing (supersede, never double). The
-    * union of per-batch pair sets equals the one-shot delta over the
-    * whole stream (cross-batch pairs surface exactly once, in the
-    * later vector's batch — the absorbed rows carry v/norm/cid, so the
-    * cross pair scores bit-identically to a batch × batch pair). */
+  /** STREAMING incremental SEMANTIC dedup (the d10/d11 k-means-cell
+    * family): each micro-batch of new embeddings routes to cells under
+    * the standing inverted file's FROZEN `_cent` quantizer
+    * (`SemDedup.semanticDedupDelta`: batch × corpus rides the bucketed
+    * cid join; nothing re-trains) and is absorbed
+    * (`Ann.absorbIntoIvfIndex`, the standard IVF add). The inverted
+    * file holds one row per vector, so it is its own roster. The union
+    * of per-batch pair sets equals the one-shot delta over the whole
+    * stream: the absorbed rows carry v/norm/cid, so a cross-batch pair
+    * scores bit-identically to a batch × batch pair. */
   def streamingSemanticDedup(spark: SparkSession, embDir: String, vecCol: String,
                              idCol: String, indexTable: String, threshold: Double,
-                             pairsPath: String, checkpointDir: String): Unit = {
-    val schema = spark.read.parquet(embDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(embDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bs = batch.sparkSession
-        import bs.implicits._
-        val markers = s"${indexTable}_batches"
-        // the inverted file holds ONE row per vector — the overlap
-        // probe is a map-only scan against the broadcast batch ids
-        val batchIds = batch.select(col(idCol).as("id")).distinct()
-        val overlap = bs.table(indexTable)
-          .join(broadcast(batchIds), Seq("id"), "leftsemi")
-          .select("id")
-        val (replayed, hasOverlap) = batchGate(bs, markers, batchId, overlap)
-        if (!replayed) {
-          graft.ann.SemDedup
-            .semanticDedupDelta(bs, batch, vecCol, idCol, indexTable, threshold)
-            .write.mode("overwrite").parquet(s"$pairsPath/batch_id=$batchId")
-          if (hasOverlap)
-            graft.ann.Ann.compactIvfIndex(bs, indexTable, overlap)
-          graft.ann.Ann.absorbIntoIvfIndex(bs, batch, vecCol, idCol, indexTable)
-          Seq(batchId).toDF("batch_id").write.mode("append").saveAsTable(markers)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.catalog.refreshTable(indexTable)
-  }
+                             pairsPath: String, checkpointDir: String): Unit =
+    drain(spark, embDir, checkpointDir, Seq(indexTable)) { (batch, batchId) =>
+      val bs = batch.sparkSession
+      indexStep(batch, batchId, indexTable, pairsPath,
+        emit = graft.ann.SemDedup
+          .semanticDedupDelta(bs, batch, vecCol, idCol, indexTable, threshold),
+        absorb = graft.ann.Ann.absorbIntoIvfIndex(bs, batch, vecCol, idCol, indexTable),
+        roster = Some(bs.table(indexTable)), idCol = idCol,
+        compact = graft.ann.Ann.compactIvfIndex(bs, indexTable, _))
+    }
 
   /** Streaming form of the incremental recipe (p12 through
-    * foreachBatch): each arriving micro-batch of raw docs routes
-    * through the standing refinery ([[graft.jobs.Recipe.processBatch]]
-    * — supersede, delta scrub, eval decon, standing model gate, ledger
-    * accounting), its mixture emission lands under
-    * `outPath/batch_id=N`, then the batch absorbs
-    * ([[graft.jobs.Recipe.absorbBatch]]) so the NEXT batch accounts
-    * against it through the standing state alone. Marker-guarded for
-    * exactly-once on replay (the streamingSubstringDedup discipline);
-    * the emission is materialized BEFORE absorb mutates the state.
-    * Each staged micro-batch must carry ONE version per id —
-    * processBatch enforces it (a producer re-emitting an id twice in
-    * one file would self-scrub the two versions against each other
-    * and double-count the ledger). */
+    * foreachBatch): each micro-batch of raw docs routes through the
+    * standing refinery ([[graft.jobs.Recipe.processBatch]]: supersede,
+    * delta scrub, eval decon, standing model gate, ledger accounting),
+    * its mixture emission lands under `outPath/batch_id=N`, then the
+    * batch absorbs ([[graft.jobs.Recipe.absorbBatch]], which supersedes
+    * re-ingested ids itself) so the NEXT batch accounts against it
+    * through the standing state alone. The step is guarded by the
+    * `<gramIndex>_batches` marker alone. Each staged micro-batch must
+    * carry ONE version per id: processBatch enforces it (a producer
+    * re-emitting an id twice in one file would self-scrub the two
+    * versions against each other and double-count the ledger). */
   def streamingRecipe(spark: SparkSession, docsDir: String, st: graft.jobs.Recipe.Standing,
                       textCol: String, idCol: String, groupCol: String,
                       budgets: Map[String, Long], k: Int,
                       merges: Seq[(String, String)],
-                      outPath: String, checkpointDir: String): Unit = {
-    val schema = spark.read.parquet(docsDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(docsDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bs = batch.sparkSession
-        import bs.implicits._
-        val markers = s"${st.gramIndex}_batches"
-        if (!bs.catalog.tableExists(markers) ||
-            bs.table(markers).filter(col("batch_id") === batchId).isEmpty) {
-          val res = graft.jobs.Recipe.processBatch(bs, st, batch, textCol, idCol,
-            groupCol, budgets, k, merges)
-          res.emission.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-          graft.jobs.Recipe.absorbBatch(bs, st, batch, res.gatedCounts, textCol, idCol, k)
-          Seq(batchId).toDF("batch_id").write.mode("append").saveAsTable(markers)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.catalog.refreshTable(st.gramIndex)
-  }
+                      outPath: String, checkpointDir: String): Unit =
+    drain(spark, docsDir, checkpointDir, Seq(st.gramIndex)) { (batch, batchId) =>
+      val bs = batch.sparkSession
+      lazy val res = graft.jobs.Recipe.processBatch(bs, st, batch, textCol, idCol,
+        groupCol, budgets, k, merges)
+      indexStep(batch, batchId, st.gramIndex, outPath,
+        emit = res.emission,
+        absorb = graft.jobs.Recipe.absorbBatch(bs, st, batch, res.gatedCounts, textCol, idCol, k))
+    }
 
-  /** STREAMING incremental SUBSTRING dedup — the operational loop for
-    * the exact-substring family (d16/d18), closing the streaming story
-    * for all FOUR dedup index families: each micro-batch of new docs
-    * finds its maximal duplicated spans against the standing gram index
-    * + itself (`Dedup.substringSpansDelta`: the index leg is a gh-keyed
-    * probe; corpus never re-tokenizes), appends its spans per-batch,
-    * and is absorbed so later batches count this batch's grams through
-    * the index alone. Same replay contract as the other three loops:
-    * per-batch overwrite + a `<indexTable>_batches` marker guarding the
-    * absorb; re-emitted ids are compacted out before absorbing
-    * (supersede, never double).
+  /** STREAMING incremental SUBSTRING dedup (the exact-substring family,
+    * d16/d18): each micro-batch of new docs finds its maximal
+    * duplicated spans against the standing gram index + itself
+    * (`Dedup.substringSpansDelta`: the index leg is a gh-keyed probe;
+    * the corpus never re-tokenizes), its spans land under
+    * `spansPath/batch_id=N`, and it is absorbed so later batches count
+    * its grams through the index alone. The index is the largest
+    * standing table, so the roster is its per-doc `_ids` companion.
     *
-    * Span semantics are AS-OF-ARRIVAL — per-doc verdicts against the
+    * Span semantics are AS-OF-ARRIVAL: per-doc verdicts against the
     * corpus so far plus the doc's own batch. A cross-batch duplicate
     * therefore surfaces on the LATER doc (the keep-first / drop-later
     * policy deployed dedup actually runs); batch-internal repeats
-    * surface on both copies, like the one-shot.
-    */
+    * surface on both copies, like the one-shot. */
   def streamingSubstringDedup(spark: SparkSession, docsDir: String, textCol: String,
                               idCol: String, k: Int, indexTable: String,
-                              spansPath: String, checkpointDir: String): Unit = {
-    val schema = spark.read.parquet(docsDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(docsDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bs = batch.sparkSession
-        import bs.implicits._
-        val markers = s"${indexTable}_batches"
-        // supersede before absorb: the token-level index is the
-        // largest standing table, so the overlap probe reads the
-        // per-DOC `_ids` roster companion (the `_sizes` idiom of the
-        // shingle loop); a pre-roster index falls back to the index
-        // itself until its next build writes one
-        val batchIds = batch.select(col(idCol).as("id")).distinct()
-        val roster =
-          if (bs.catalog.tableExists(s"${indexTable}_ids")) bs.table(s"${indexTable}_ids")
-          else bs.table(indexTable).select("id")
-        val overlap = roster
-          .join(broadcast(batchIds), Seq("id"), "leftsemi")
-        val (replayed, hasOverlap) = batchGate(bs, markers, batchId, overlap)
-        if (!replayed) {
-          graft.dedup.Dedup
-            .substringSpansDelta(bs, batch, textCol, idCol, k, indexTable)
-            .write.mode("overwrite").parquet(s"$spansPath/batch_id=$batchId")
-          if (hasOverlap)
-            graft.dedup.Dedup.compactGramIndex(bs, indexTable, overlap)
-          graft.dedup.Dedup.absorbIntoGramIndex(bs, batch, textCol, idCol, k, indexTable)
-          Seq(batchId).toDF("batch_id").write.mode("append").saveAsTable(markers)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.catalog.refreshTable(indexTable)
-  }
+                              spansPath: String, checkpointDir: String): Unit =
+    drain(spark, docsDir, checkpointDir, Seq(indexTable)) { (batch, batchId) =>
+      val bs = batch.sparkSession
+      indexStep(batch, batchId, indexTable, spansPath,
+        emit = graft.dedup.Dedup.substringSpansDelta(bs, batch, textCol, idCol, k, indexTable),
+        absorb = graft.dedup.Dedup.absorbIntoGramIndex(bs, batch, textCol, idCol, k, indexTable),
+        roster = Some(bs.table(s"${indexTable}_ids")), idCol = idCol,
+        compact = graft.dedup.Dedup.compactGramIndex(bs, indexTable, _))
+    }
 
-  /** STREAMING incremental PACKING — the operational loop for the
-    * loader-side pack state (p15), the same closure discipline as the
-    * dedup families and the refinery: each micro-batch of docs
-    * extends/repacks ONLY its touched shards against the standing
-    * placement table (`PackIndex.packDelta` — token counts come from
-    * standing rows, untouched shards never read), writes the FULL
-    * touched-shard delta per-batch (the packJob emission shape: an
-    * out-of-order or superseding batch displaces same-shard standing
-    * placements, and a downstream loader must see every placement
-    * that may have moved — latest emission per id IS the current
-    * placement; in the append-at-tail regime standing rows re-emit
-    * with identical values), and absorbs (dynamic partition
-    * overwrite) so later batches pack against this one through the
-    * standing state alone. Replay contract: per-batch overwrite + a
-    * `<table>_batches` marker guarding the absorb; the delta is
-    * PINNED before the absorb mutates the partitions it reads (the
-    * streamingRecipe discipline). After the run the standing table
-    * equals the one-shot packer over everything streamed — the p15
-    * invariant, batch ≡ streaming. */
+  /** STREAMING incremental PACKING (the loader-side pack state, p15):
+    * each micro-batch of docs extends/repacks ONLY its touched shards
+    * against the standing placement table (`PackIndex.packDelta`:
+    * token counts come from standing rows, untouched shards are never
+    * read), writes the FULL touched-shard delta per batch (the packJob
+    * emission shape: a superseding batch displaces same-shard standing
+    * placements, and a downstream loader must see every placement that
+    * may have moved; the latest emission per id IS the current
+    * placement), and absorbs it (dynamic partition overwrite). The
+    * delta is PINNED before the absorb mutates the partitions it
+    * reads; the step is guarded by the `<table>_batches` marker alone.
+    * After the run the standing table equals the one-shot packer over
+    * everything streamed (the p15 invariant, batch ≡ streaming). */
   def streamingPackDelta(spark: SparkSession, docsDir: String, idCol: String,
                          groupCol: String, tokenCol: String, capacity: Long,
                          shardSize: Long, table: String,
-                         outPath: String, checkpointDir: String): Unit = {
-    val schema = spark.read.parquet(docsDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(docsDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bs = batch.sparkSession
-        import bs.implicits._
-        val markers = s"${table}_batches"
-        if (!bs.catalog.tableExists(markers) ||
-            bs.table(markers).filter(col("batch_id") === batchId).isEmpty) {
-          val delta = graft.core.Checkpoints.truncate(
-            graft.text.PackIndex.packDelta(bs, batch, idCol, groupCol, tokenCol,
-              capacity, shardSize, table))
-          delta.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-          graft.text.PackIndex.absorbPackDelta(bs, table, delta)
-          Seq(batchId).toDF("batch_id").write.mode("append").saveAsTable(markers)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.catalog.refreshTable(table)
-  }
+                         outPath: String, checkpointDir: String): Unit =
+    drain(spark, docsDir, checkpointDir, Seq(table)) { (batch, batchId) =>
+      val bs = batch.sparkSession
+      lazy val delta = graft.core.Checkpoints.truncate(
+        graft.text.PackIndex.packDelta(bs, batch, idCol, groupCol, tokenCol,
+          capacity, shardSize, table))
+      indexStep(batch, batchId, table, outPath,
+        emit = delta,
+        absorb = graft.text.PackIndex.absorbPackDelta(bs, table, delta))
+    }
 
-  /** STREAMING corpus statistics — the operational ingest loop for the
-    * standing stats state (x18), the same foreachBatch closure
-    * discipline as the five dedup loops and the pack/recipe loops:
-    * each micro-batch of docs absorbs into the standing state
-    * ([[graft.text.StatsState.absorbIntoStatsState]] — O(batch +
+  /** STREAMING corpus statistics (the standing stats state, x18): each
+    * micro-batch of docs absorbs into the standing state
+    * ([[graft.text.StatsState.absorbIntoStatsState]]: O(batch +
     * touched shards), supersede on re-emitted ids), and later batches
-    * see this one through the standing state alone. Replay contract:
-    * absorb is marker-guarded AND crash-recovering by itself (every
-    * log row carries its batch id, so a redelivery after a mid-absorb
-    * crash nets the partial rows out — the StatsState at-least-once
-    * contract), so this loop needs no wrapper guard; streaming batch
-    * ids start at 0 and shift by +1 into the positive user range
-    * (0/−1 are the build/compaction tags). Each micro-batch must
-    * carry ONE version per id (absorb refuses multi-version batches —
-    * collapse re-emits upstream with `ChangeLog.latestOnly`). After
-    * the drain the read-outs equal the one-shot statistics over
-    * everything streamed — batch ≡ streaming ≡ one-shot. */
+    * see it through the standing state alone. The absorb guards itself
+    * (marker-guarded, and every log row carries its batch id, so a
+    * redelivery after a mid-absorb crash nets the partial rows out), so
+    * this loop runs no [[indexStep]]; streaming batch ids shift by +1
+    * into the positive user range (0/−1 are the build/compaction tags).
+    * Each micro-batch must carry ONE version per id (absorb refuses
+    * multi-version batches; collapse re-emits upstream with
+    * `ChangeLog.latestOnly`). After the drain the read-outs equal the
+    * one-shot statistics over everything streamed. */
   def streamingStats(spark: SparkSession, docsDir: String, textCol: String,
                      groupCol: String, idCol: String, table: String,
-                     checkpointDir: String, n: Int = 3, k: Int = 256): Unit = {
-    val schema = spark.read.parquet(docsDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(docsDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.text.StatsState.absorbIntoStatsState(batch.sparkSession, batch,
-          textCol, groupCol, idCol, table, batchId = batchId + 1L, n = n, k = k)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    Seq(s"${table}_freq", s"${table}_kmv", s"${table}_docs", s"${table}_batches")
-      .filter(spark.catalog.tableExists)
-      .foreach(spark.catalog.refreshTable)
-  }
+                     checkpointDir: String, n: Int = 3, k: Int = 256): Unit =
+    drain(spark, docsDir, checkpointDir,
+        Seq("_freq", "_kmv", "_docs", "_batches").map(table + _)) { (batch, batchId) =>
+      graft.text.StatsState.absorbIntoStatsState(batch.sparkSession, batch,
+        textCol, groupCol, idCol, table, batchId = batchId + 1L, n = n, k = k)
+    }
 
-  /** The retention family's STREAMING closure (the streamingStats
+  /** The retention family's streaming closure (the streamingStats
     * pattern): each micro-batch of events absorbs into the standing
-    * cohort/activity state ([[graft.ops.Retention]] — O(batch +
-    * matched rows), roster-anti-joined appends), so the triangle
-    * read-out is refreshable per batch with the event log never
-    * re-scanned. Absorb is marker-guarded and its appends are
-    * set-monotone (anti-joined), so replays and crashed retries are
-    * no-ops / exact — no wrapper guard needed. Chunk files must
-    * arrive in event-time order (the change-log contract;
-    * out-of-order batches refuse loudly inside absorb). */
+    * cohort/activity state ([[graft.ops.Retention]]: O(batch + matched
+    * rows), roster-anti-joined appends), so the triangle read-out is
+    * refreshable per batch with the event log never re-scanned. The
+    * absorb is marker-guarded and its appends are set-monotone, so
+    * replays and crashed retries are no-ops or exact. Chunk files must
+    * arrive in event-time order (the change-log contract; out-of-order
+    * batches refuse loudly inside absorb). */
   def streamingRetention(spark: SparkSession, eventsDir: String, nsCol: String,
                          userCol: String, table: String,
                          checkpointDir: String): Unit = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(eventsDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Retention.absorbIntoRetentionState(batch.sparkSession, batch,
-          nsCol, userCol, table, batchId = batchId + 1L)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    Seq(s"${table}_first", s"${table}_active", s"${table}_batches")
-      .filter(spark.catalog.tableExists)
-      .foreach(spark.catalog.refreshTable)
+    drain(spark, eventsDir, checkpointDir,
+        Seq("_first", "_active", "_batches").map(table + _)) { (batch, batchId) =>
+      graft.ops.Retention.absorbIntoRetentionState(batch.sparkSession, batch,
+        nsCol, userCol, table, batchId = batchId + 1L)
+    }
   }
 
-  /** STREAMING incremental SIMHASH dedup — the operational loop for
-    * the fingerprint family (d4/d22), giving ALL FIVE dedup index
-    * families streaming closure: each micro-batch fingerprints itself
-    * once, finds every within-radius pair touching it against the
-    * standing chunk-pair index + itself (`Dedup.simhashPairsDelta`:
-    * the corpus leg rides the index buckets; the corpus never
-    * re-fingerprints), appends its pairs per-batch, and absorbs so
-    * later batches pair against it through the index alone. Same
-    * replay contract as the other four loops: per-batch overwrite + a
-    * `<indexTable>_batches` marker guarding the absorb; re-emitted ids
-    * are compacted out before absorbing (supersede, never double —
-    * the `_fps` companion, one row per doc, serves the overlap probe).
+  /** STREAMING incremental SIMHASH dedup (the fingerprint family,
+    * d4/d22): each micro-batch fingerprints itself once, finds every
+    * within-radius pair touching it against the standing chunk-pair
+    * index + itself (`Dedup.simhashPairsDelta`: the corpus leg rides
+    * the index buckets; the corpus never re-fingerprints), and absorbs.
     * Pair semantics are AS-OF-ARRIVAL: a cross-batch pair surfaces
     * exactly once, in the later doc's batch. */
   def streamingSimhashDedup(spark: SparkSession, docsDir: String, textCol: String,
@@ -952,75 +791,42 @@ object OnChange {
       indexTable, pairsPath, checkpointDir,
       b => graft.dedup.Dedup.simhash(b, textCol, idCol), rawIdCol = idCol)
 
-  /** [[streamingSimhashDedup]] over ANY per-batch fingerprinting — the
-    * streaming closure of the fingerprint-agnostic family (d34 streams
-    * perceptual image hashes through it; `fingerprint` maps a raw doc
-    * micro-batch to its (`fpIdCol`, `fpCol`) fingerprint relation and
-    * runs on the DRIVER inside foreachBatch, so any typed decode
-    * pipeline composes). Same replay/supersede discipline as every
-    * streaming loop in the file: a marker refuses replayed batch ids,
-    * a re-emitted id's standing rows compact out before the absorb.
+  /** [[streamingSimhashDedup]] over ANY per-batch fingerprinting (d34
+    * streams perceptual image hashes through it): `fingerprint` maps a
+    * raw doc micro-batch to its (`fpIdCol`, `fpCol`) relation and runs
+    * on the DRIVER inside foreachBatch, so any typed decode pipeline
+    * composes. The roster is the `<indexTable>_fps` companion, probed
+    * with the RAW batch's ids (`rawIdCol` names them when `fingerprint`
+    * renames the column), and the fingerprint pass is pinned lazily, so
+    * a replayed batch never pays it.
     *
     * `fingerprint` must be 1:1 on ids (every raw row yields exactly one
-    * fingerprint row — r18 advice): the supersede overlap is probed off
-    * the RAW batch ids so a replayed batch never pays the fingerprint
-    * pass, which means a fingerprint fn that DROPS rows (e.g. a decoder
+    * fingerprint row): a fingerprint fn that DROPS rows (e.g. a decoder
     * rejecting a malformed payload) would compact a re-emitted id's
-    * standing rows out without re-absorbing them — the id would vanish
-    * from the index rather than keep its previous version. Both shipped
-    * fingerprints (Dedup.simhash, the d34 phash decode) emit one row
-    * per input row. */
+    * standing rows out without re-absorbing them, so the id would
+    * vanish from the index rather than keep its previous version. Both
+    * shipped fingerprints (Dedup.simhash, the d34 phash decode) emit one
+    * row per input row. */
   def streamingFingerprintDedup(spark: SparkSession, docsDir: String,
                                 fpIdCol: String, fpCol: String, maxDist: Int,
                                 indexTable: String, pairsPath: String,
                                 checkpointDir: String,
                                 fingerprint: DataFrame => DataFrame,
-                                rawIdCol: String = ""): Unit = {
-    // the gate's overlap probe reads ids off the RAW batch (so a
-    // replayed batch never pays the fingerprint pass); rawIdCol names
-    // the id column on the raw rows when `fingerprint` renames it
-    val rawId = if (rawIdCol.isEmpty) fpIdCol else rawIdCol
-    val schema = spark.read.parquet(docsDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(docsDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+                                rawIdCol: String = ""): Unit =
+    drain(spark, docsDir, checkpointDir, Seq(indexTable, s"${indexTable}_fps")) {
+      (batch, batchId) =>
         val bs = batch.sparkSession
-        import bs.implicits._
-        val markers = s"${indexTable}_batches"
-        // fingerprint ONCE per batch: the delta probe and the absorb
-        // both read the pinned frame (lazily — a replayed batch never
-        // pays it: the gate's overlap side only scans the roster)
+        // fingerprint ONCE per batch: the delta and the absorb both read the pin
         lazy val fps = graft.core.Checkpoints.truncate(fingerprint(batch))
-        val batchIds = batch.select(col(rawId).as("id")).distinct()
-        val overlap = bs.table(s"${indexTable}_fps")
-          .join(broadcast(batchIds), Seq("id"), "leftsemi")
-          .select("id")
-        val (replayed, hasOverlap) = batchGate(bs, markers, batchId, overlap)
-        if (!replayed) {
-          graft.dedup.Dedup
-            .fingerprintPairsDelta(bs, fps, fpIdCol, fpCol, maxDist, indexTable)
-            .write.mode("overwrite").parquet(s"$pairsPath/batch_id=$batchId")
-          if (hasOverlap)
-            graft.dedup.Dedup.compactSimhashIndex(bs, indexTable, overlap)
-          graft.dedup.Dedup.absorbIntoFingerprintIndex(
-            bs, fps, fpIdCol, fpCol, maxDist, indexTable)
-          Seq(batchId).toDF("batch_id").write.mode("append").saveAsTable(markers)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // the absorbs' appends ran through the stream's session clone;
-    // refresh the CALLER's view of the index AND the fingerprint
-    // companion (a stale cached `_fps` listing would make a caller-side
-    // supersede probe miss the absorbed ids)
-    spark.catalog.refreshTable(indexTable)
-    spark.catalog.refreshTable(s"${indexTable}_fps")
-  }
+        indexStep(batch, batchId, indexTable, pairsPath,
+          emit = graft.dedup.Dedup
+            .fingerprintPairsDelta(bs, fps, fpIdCol, fpCol, maxDist, indexTable),
+          absorb = graft.dedup.Dedup
+            .absorbIntoFingerprintIndex(bs, fps, fpIdCol, fpCol, maxDist, indexTable),
+          roster = Some(bs.table(s"${indexTable}_fps")),
+          idCol = if (rawIdCol.isEmpty) fpIdCol else rawIdCol,
+          compact = graft.dedup.Dedup.compactSimhashIndex(bs, indexTable, _))
+    }
 
   /** One event version of one entity (user) in the change stream. */
   final case class EventVersion(user_id: Long, event_id: Long, event_type: String, value: Double)

@@ -353,6 +353,24 @@ class RecipeSpec extends SparkSpec {
     assert(sLedger == ledger, "streaming ledger must equal the batch-mode ledger")
   }
 
+  test("job counts per micro-batch: the marker-gated recipe loop") {
+    // batch 1 re-ingests standing doc 0; pinned so an extra action in
+    // the shared index step fails here
+    val st = Recipe.buildStanding(spark, stdDf, evalDf, "text", "id", "grp",
+      "label", k = 4, Bpe.DefaultMerges, "rcpj")
+    val staged = batch1.withColumn("seq", lit(0L))
+      .unionByName(batch2.withColumn("seq", lit(1L)))
+    val docsDir = SparkEntry.stageMicroBatches(staged, "seq",
+      Seq((0L, 1L), (1L, 2L)), "rcpj")
+    val out = java.nio.file.Files.createTempDirectory("graft_rcpj_out_").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_rcpj_ckpt_").toString
+    val jobs = jobsPerBatch {
+      graft.streaming.OnChange.streamingRecipe(spark, docsDir, st, "text", "id", "grp",
+        Map("h" -> hBudget), k = 4, Bpe.DefaultMerges, out, ckpt)
+    }
+    assert(jobs == Map(0L -> 62, 1L -> 52), s"recipe loop jobs per batch: $jobs")
+  }
+
   test("chain: emission retraction propagates — a gated-out re-ingest rolls up to zero and repacks") {
     import graft.jobs._
     import java.time.LocalDateTime

@@ -17,6 +17,27 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     Console.withOut(new java.io.PrintStream(out)) { df.explain("formatted") }
     out.toString
   }
+
+  /** Spark jobs started per streaming micro-batch while `body` runs,
+    * keyed by the batch id a stream sets as a local property on every
+    * job its batch starts (a job that escapes the stream's local
+    * properties is not counted). */
+  def jobsPerBatch(body: => Unit): Map[Long, Int] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach(b => seen.add(b.toLong))
+    }
+    org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toSeq.groupBy(identity).map { case (b, js) => b -> js.size }
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {

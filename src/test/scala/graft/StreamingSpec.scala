@@ -759,6 +759,128 @@ class StreamingSpec extends SparkSpec {
     assert(kmvMap(StatsState.kmvReadout(s, table, 8)) == wantKmv)
   }
 
+  test("index step: a crash after the output, the compact or the absorb replays to the uninterrupted state") {
+    // the real shingle and fingerprint pieces behind the shared step,
+    // one of them wrapped to throw once in batch 1 (which re-emits a
+    // standing id, so its compact runs); the drain then restarts on the
+    // same checkpoint and must end where an uninterrupted drain ends
+    val s = spark
+    import s.implicits._
+    import graft.dedup.Dedup
+    final class Fault(point: String) {
+      private val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+      private def hit(at: String): Unit =
+        if (at == point && armed.getAndSet(false)) throw new IllegalStateException(s"injected crash $at")
+      def around(piece: String, batchId: Long)(body: => Unit): Unit = {
+        if (batchId == 1L) hit(s"before $piece")
+        body
+        if (batchId == 1L) hit(s"after $piece")
+      }
+    }
+    case class Family(name: String, build: String => Unit, roster: String,
+                      step: (String, String, Fault) => (org.apache.spark.sql.DataFrame, Long) => Unit,
+                      b0: org.apache.spark.sql.DataFrame, b1: org.apache.spark.sql.DataFrame)
+    val shingle = Family("shingle",
+      t => Dedup.buildShingleIndex(Seq((1L, "aa bb cc dd ee ff"), (2L, "xx yy zz ww vv uu"))
+        .toDF("doc_id", "text"), "text", "doc_id", 3, t, buckets = 4),
+      "_sizes",
+      (t, out, fault) => (batch, batchId) => {
+        val bs = batch.sparkSession
+        OnChange.indexStep(batch, batchId, t, out,
+          emit = Dedup.ngramJaccardDelta(bs, batch, "text", "doc_id", 3, 0.5, t),
+          absorb = fault.around("absorb", batchId)(
+            Dedup.absorbIntoShingleIndex(bs, batch, "text", "doc_id", 3, t)),
+          roster = Some(bs.table(s"${t}_sizes")), idCol = "doc_id",
+          compact = ids => fault.around("compact", batchId)(Dedup.compactShingleIndex(bs, t, ids)))
+      },
+      Seq((10L, "aa bb cc dd ee gg")).toDF("doc_id", "text"),
+      Seq((1L, "mm nn oo pp qq rr"), (20L, "mm nn oo pp qq ss")).toDF("doc_id", "text"))
+    def textA(v: String) = s"alpha bravo charlie delta echo foxtrot golf hotel india juliet " +
+      s"kilo lima mike november oscar papa quebec romeo sierra tango $v " +
+      "uniform victor whiskey xray yankee zulu one two three"
+    val fingerprint = Family("fingerprint",
+      t => Dedup.buildSimhashIndex(Seq((1L, textA("v1")), (2L, "plain standing words nothing shared here"))
+        .toDF("doc_id", "text"), "text", "doc_id", 10, t, buckets = 4),
+      "_fps",
+      (t, out, fault) => (batch, batchId) => {
+        val bs = batch.sparkSession
+        lazy val fps = graft.core.Checkpoints.truncate(Dedup.simhash(batch, "text", "doc_id"))
+        OnChange.indexStep(batch, batchId, t, out,
+          emit = Dedup.fingerprintPairsDelta(bs, fps, "id", "simhash", 10, t),
+          absorb = fault.around("absorb", batchId)(
+            Dedup.absorbIntoFingerprintIndex(bs, fps, "id", "simhash", 10, t)),
+          roster = Some(bs.table(s"${t}_fps")), idCol = "doc_id",
+          compact = ids => fault.around("compact", batchId)(Dedup.compactSimhashIndex(bs, t, ids)))
+      },
+      Seq((10L, textA("v2"))).toDF("doc_id", "text"),
+      // re-emits doc 1 as a near-dup of doc 10, plus a near-dup of doc 1's old text
+      Seq((1L, textA("v3")), (20L, textA("v1"))).toDF("doc_id", "text"))
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    // (index, roster, pairs) as sorted multisets: a doubled absorb shows
+    def state(t: String, roster: String, pairs: String) = Seq(
+      s.table(t), s.table(t + roster), s.read.parquet(pairs)
+    ).map(_.collect().map(_.toString).sorted.toSeq)
+    for (f <- Seq(shingle, fingerprint)) {
+      val chunks = tmp(s"graft_fi_${f.name}_chunks_")
+      stageChunk(chunks, f.b0, "a.parquet", 0)
+      stageChunk(chunks, f.b1, "b.parquet", 1)
+      def run(t: String, pairs: String, ckpt: String, fault: Fault): Unit =
+        OnChange.drain(s, chunks, ckpt, Seq(t, t + f.roster))(f.step(t, pairs, fault))
+      val ref = s"fi_${f.name}_ref"
+      val refPairs = tmp("graft_fi_pairs_")
+      f.build(ref)
+      run(ref, refPairs, tmp("graft_fi_ckpt_"), new Fault(""))
+      val want = state(ref, f.roster, refPairs)
+      assert(want(2).nonEmpty, s"${f.name}: the fixture must emit pairs")
+      for ((point, i) <- Seq("before compact", "after compact", "after absorb").zipWithIndex) {
+        val t = s"fi_${f.name}_$i"
+        val pairs = tmp("graft_fi_pairs_")
+        val ckpt = tmp("graft_fi_ckpt_")
+        f.build(t)
+        val fault = new Fault(point)
+        val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](run(t, pairs, ckpt, fault))
+        assert(e.getCause.getMessage == s"injected crash $point", e.toString)
+        run(t, pairs, ckpt, fault) // the restart redelivers batch 1
+        assert(state(t, f.roster, pairs) == want, s"${f.name}, crash $point")
+      }
+    }
+  }
+
+  test("job counts per micro-batch: roster-gated shingle loop and ungated stats loop") {
+    // two batches, batch 1 re-emitting a standing id: each micro-batch
+    // of a roster-gated loop runs gate, pairs write, (compact), absorb
+    // and marker; the stats loop runs its self-guarding absorb alone.
+    // Pinned so an extra action in the shared step fails here.
+    val s = spark
+    import s.implicits._
+    val corpus = Seq((1L, "aa bb cc dd ee ff"), (2L, "xx yy zz ww vv uu")).toDF("doc_id", "text")
+    val table = "shingle_idx_jobcount"
+    graft.dedup.Dedup.buildShingleIndex(corpus, "text", "doc_id", 3, table, buckets = 4)
+    val chunks = java.nio.file.Files.createTempDirectory("graft_jc_chunks_").toString
+    stageChunk(chunks, Seq((10L, "aa bb cc dd ee gg")).toDF("doc_id", "text"), "a.parquet", 0)
+    stageChunk(chunks, Seq((1L, "mm nn oo pp qq rr"), (20L, "mm nn oo pp qq ss"))
+      .toDF("doc_id", "text"), "b.parquet", 1)
+    val pairs = java.nio.file.Files.createTempDirectory("graft_jc_pairs_").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_jc_ckpt_").toString
+    val shingleJobs = jobsPerBatch {
+      OnChange.streamingDedupDelta(s, chunks, "text", "doc_id", 3, 0.5, table, pairs, ckpt)
+    }
+    import graft.text.StatsState
+    def mk(rows: Seq[(Long, String, String)]) = rows.toDF("doc_id", "lang", "text")
+    val stats = "sst_jobcount"
+    StatsState.buildStatsState(mk(Seq((1L, "a", "x y z x"), (2L, "b", "m n o"))),
+      "text", "lang", "doc_id", stats, n = 3, k = 8, buckets = 4, shardSize = 2L)
+    val sChunks = java.nio.file.Files.createTempDirectory("graft_jcs_chunks_").toString
+    stageChunk(sChunks, mk(Seq((3L, "a", "p q r s"))), "a.parquet", 0)
+    stageChunk(sChunks, mk(Seq((1L, "a", "x y z x new tail"), (5L, "b", "k k j"))), "b.parquet", 1)
+    val sCkpt = java.nio.file.Files.createTempDirectory("graft_jcs_ckpt_").toString
+    val statsJobs = jobsPerBatch {
+      OnChange.streamingStats(s, sChunks, "text", "lang", "doc_id", stats, sCkpt, n = 3, k = 8)
+    }
+    assert(shingleJobs == Map(0L -> 22, 1L -> 34), s"shingle loop jobs per batch: $shingleJobs")
+    assert(statsJobs == Map(0L -> 16, 1L -> 19), s"stats loop jobs per batch: $statsJobs")
+  }
+
   test("streamed incremental agg equals batch agg") {
     val path = s"$sfDir/events.parquet"
     val streamed = OnChange.aggregateEvents(spark, path)

@@ -81,4 +81,20 @@ class TablesSpec extends SparkSpec {
     val only = intercept[RuntimeException](Tables.inParallel(ran.set(true), throw new RuntimeException("only b")))
     assert(only.getMessage == "only b" && only.getSuppressed.isEmpty && ran.get)
   }
+
+  test("inParallel: each leg runs under the caller's current job group") {
+    // the legs' jobs must stay in the caller's job group so a cancel of
+    // that group (Scheduler.kill, a stopped streaming query) reaches
+    // them; a pool thread that kept the local properties of the call
+    // that created it would report the first group on the second call
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    def leg(group: String): Unit = { seen.add(group -> sc.getLocalProperty("spark.jobGroup.id")); () }
+    try for (g <- Seq("graft-group-1", "graft-group-2")) {
+      sc.setJobGroup(g, "inParallel spec")
+      Tables.inParallel(leg(g), leg(g))
+    } finally sc.clearJobGroup()
+    val got = { import scala.jdk.CollectionConverters._; seen.asScala.toSeq }
+    assert(got.length == 4 && got.forall { case (want, saw) => want == saw }, got.toString)
+  }
 }
