@@ -56,6 +56,23 @@ object Ann {
     struct((-cosine(col("fu"), c.getField("cv"), col("fnorm"), c.getField("cnorm"))).as("negsim"),
       c.getField("cid").as("cid"))))
 
+  /** `rows` (carrying `fu`/`fnorm`) each routed to its nearest cell
+    * under the `<table>_cent` quantizer, as column `cid` — the routing
+    * every IVF build and absorb shares, so a build and a later absorb
+    * place a vector in the same cell. */
+  private[ann] def routed(spark: org.apache.spark.sql.SparkSession, rows: DataFrame,
+                          table: String): DataFrame =
+    rows.join(broadcast(spark.table(s"${table}_cent")))
+      .withColumn("cid", sortedCells.getItem(0).getField("cid"))
+
+  /** `rows` (keyed by `id`) joined with the `keep` metadata columns of
+    * the same ids in `src` — the filtered-search layout that stores
+    * metadata inline with the index rows. */
+  private[ann] def withKeep(rows: DataFrame, src: DataFrame, idCol: String,
+                            keep: Seq[String]): DataFrame =
+    if (keep.isEmpty) rows
+    else rows.join(src.select(col(idCol).as("id") +: keep.map(col): _*), Seq("id"))
+
   /** Exact cosine top-k for each query vector (queries = `queryFilter`
     * rows of the corpus, self excluded). Deterministic tie-break on
     * neighbor id; the ranking cosine consumes the fu/fnorm fixed-point
@@ -538,8 +555,7 @@ object Ann {
                     buckets: Int = 32): String = {
     val spark = emb.sparkSession
     import spark.implicits._
-    Seq(table, s"${table}_meta", s"${table}_batches")
-      .foreach(graft.core.Tables.drop(spark, _))
+    graft.core.Tables.reset(spark, table, "_meta")
     // fu/fnorm are deterministic recomputes — store only the raw
     // vectors (probing re-derives the projection map-side)
     sketchRows(normed(emb, vecCol, idCol), dims, tables, bits)
@@ -567,14 +583,7 @@ object Ann {
                          vecCol: String, idCol: String, table: String): Unit = {
     val m = spark.table(s"${table}_meta").head()
     val (tables, bits, dims) = (m.getInt(0), m.getInt(1), m.getInt(2))
-    val buckets = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets).getOrElse(32)
-    sketchRows(normed(batch, vecCol, idCol), dims, tables, bits)
-      .select("id", "v", "norm", "t", "sk")
-      .write.mode("append").bucketBy(buckets, "t", "sk").sortBy("t", "sk")
-      .saveAsTable(table)
-    spark.catalog.refreshTable(table)
+    graft.core.Tables.append(spark, table, sketchRows(normed(batch, vecCol, idCol), dims, tables, bits))
   }
 
   /** Remove the given ids from the standing sketch index — the
@@ -613,8 +622,7 @@ object Ann {
                     rounds: Int = 2, keep: Seq[String] = Nil,
                     trainFrac: Double = 1.0): String = {
     val spark = emb.sparkSession
-    Seq(table, s"${table}_cent", s"${table}_batches")
-      .foreach(graft.core.Tables.drop(spark, _))
+    graft.core.Tables.reset(spark, table, "_cent")
     // `keep`: filterable metadata stored INLINE with the vectors (the
     // filtered-search layout) — a probe-time attribute predicate is
     // then a map-side filter on the bucketed scan, not a join
@@ -624,9 +632,7 @@ object Ann {
     (if (rounds > 0) trainCentroids(emb, vecCol, idCol, nlist, rounds, trainFrac)
      else sampleCentroids(emb, vecCol, idCol, nlist))
       .write.mode("overwrite").saveAsTable(s"${table}_cent")
-    val cent = spark.table(s"${table}_cent")
-    e.join(broadcast(cent))
-      .withColumn("cid", sortedCells.getItem(0).getField("cid"))
+    routed(spark, e, table)
       .select((Seq("id", "v", "norm", "cid") ++ keep).map(col): _*)
       .write.mode("overwrite")
       .bucketBy(buckets, "cid").sortBy("cid")
@@ -644,24 +650,12 @@ object Ann {
     * exactly what a build at the same centroids would store. */
   def absorbIntoIvfIndex(spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
                          vecCol: String, idCol: String, table: String): Unit = {
-    val buckets = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets).getOrElse(16)
-    val cent = spark.table(s"${table}_cent")
     // keep-metadata columns (filtered-search layout) come from the
     // table's own schema, so absorb works against any build
-    val tableCols = spark.table(table).columns.toSeq
-    val keep = tableCols.filterNot(Set("id", "v", "norm", "cid"))
-    val assigned = normed(batch, vecCol, idCol).join(broadcast(cent))
-      .withColumn("cid", sortedCells.getItem(0).getField("cid"))
+    val keep = spark.table(table).columns.toSeq.filterNot(Set("id", "v", "norm", "cid"))
+    val assigned = routed(spark, normed(batch, vecCol, idCol), table)
       .select("id", "v", "norm", "cid")
-    val withMeta =
-      if (keep.isEmpty) assigned
-      else assigned.join(batch.select(col(idCol).as("id") +: keep.map(col): _*), Seq("id"))
-    withMeta.select(tableCols.map(col): _*)
-      .write.mode("append").bucketBy(buckets, "cid").sortBy("cid")
-      .saveAsTable(table)
-    spark.catalog.refreshTable(table)
+    graft.core.Tables.append(spark, table, withKeep(assigned, batch, idCol, keep))
   }
 
   /** Remove the given ids from the standing inverted file (anti-join

@@ -36,8 +36,7 @@ object IvfPq {
                       pqRounds: Int = 1, dims: Int = 0, buckets: Int = 16,
                       keep: Seq[String] = Nil): String = {
     val spark = emb.sparkSession
-    Seq(table, s"${table}_cent", s"${table}_books", s"${table}_batches")
-      .foreach(graft.core.Tables.drop(spark, _))
+    graft.core.Tables.reset(spark, table, "_cent", "_books")
     Ann.trainCentroids(emb, vecCol, idCol, nlist, ivfRounds)
       .write.mode("overwrite").saveAsTable(s"${table}_cent")
     Pq.trainCodebooks(emb, vecCol, idCol, m, ksub, pqRounds, dims)
@@ -45,14 +44,8 @@ object IvfPq {
     val codes = Pq.encode(emb, vecCol, idCol, spark.table(s"${table}_books"), m)
     // `keep`: filterable metadata stored inline with the codes (same
     // filtered-search layout as Ann.buildIvfIndex)
-    val assign = Ann.normed(emb, vecCol, idCol)
-      .join(broadcast(spark.table(s"${table}_cent")))
-      .withColumn("cid", Ann.sortedCells.getItem(0).getField("cid"))
-      .select("id", "cid")
-    val withMeta =
-      if (keep.isEmpty) assign
-      else assign.join(emb.select(col(idCol).as("id") +: keep.map(col): _*), Seq("id"))
-    withMeta.join(codes, Seq("id"))
+    val assign = Ann.routed(spark, Ann.normed(emb, vecCol, idCol), table).select("id", "cid")
+    Ann.withKeep(assign, emb, idCol, keep).join(codes, Seq("id"))
       .write.mode("overwrite")
       .bucketBy(buckets, "cid").sortBy("cid")
       .saveAsTable(table)
@@ -111,27 +104,13 @@ object IvfPq {
     * bit-for-bit. */
   def absorbIntoIvfPqIndex(spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
                            vecCol: String, idCol: String, table: String): Unit = {
-    val buckets = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets).getOrElse(16)
     // m = 0: encode derives the subspace count from the codebook itself
     val codes = Pq.encode(batch, vecCol, idCol, spark.table(s"${table}_books"), m = 0)
-    val assign = Ann.normed(batch, vecCol, idCol)
-      .join(broadcast(spark.table(s"${table}_cent")))
-      .withColumn("cid", Ann.sortedCells.getItem(0).getField("cid"))
-      .select("id", "cid")
+    val assign = Ann.routed(spark, Ann.normed(batch, vecCol, idCol), table).select("id", "cid")
     // keep-metadata columns (filtered-search layout) are derived from
     // the table's own schema, so absorb works against any build
-    val tableCols = spark.table(table).columns.toSeq
-    val keep = tableCols.filterNot(Set("id", "cid", "codes"))
-    val withMeta =
-      if (keep.isEmpty) assign
-      else assign.join(batch.select(col(idCol).as("id") +: keep.map(col): _*), Seq("id"))
-    withMeta.join(codes, Seq("id"))
-      .select(tableCols.map(col): _*)
-      .write.mode("append").bucketBy(buckets, "cid").sortBy("cid")
-      .saveAsTable(table)
-    spark.catalog.refreshTable(table)
+    val keep = spark.table(table).columns.toSeq.filterNot(Set("id", "cid", "codes"))
+    graft.core.Tables.append(spark, table, Ann.withKeep(assign, batch, idCol, keep).join(codes, Seq("id")))
   }
 
   /** Remove the given ids from the standing IVF×PQ index (anti-join

@@ -219,8 +219,7 @@ object Pq {
   def buildPqIndex(emb: DataFrame, vecCol: String, idCol: String, table: String,
                    m: Int = 8, ksub: Int = 16, rounds: Int = 1, dims: Int = 0): String = {
     val spark = emb.sparkSession
-    Seq(table, s"${table}_books", s"${table}_batches")
-      .foreach(graft.core.Tables.drop(spark, _))
+    graft.core.Tables.reset(spark, table, "_books")
     trainCodebooks(emb, vecCol, idCol, m, ksub, rounds, dims)
       .write.mode("overwrite").saveAsTable(s"${table}_books")
     encode(emb, vecCol, idCol, spark.table(s"${table}_books"), m)

@@ -16,6 +16,16 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
+  import graft.core.Tables
+
+  /** Roster companions, as suffixes of the index name: one row per
+    * indexed id, read by the streaming loops' supersede gate and
+    * written through `Tables.absorb` / `Tables.compact`. Shingle:
+    * per-doc set sizes; fingerprint: the fingerprints; gram: the ids. */
+  private[graft] val ShingleRoster = "_sizes"
+  private[graft] val FingerprintRoster = "_fps"
+  private[graft] val GramRoster = "_ids"
+
   /** Exact dedup: group by content hash, keep the smallest id, count
     * copies. One hash-aggregate shuffle (map-side partial agg). */
   def exact(docs: DataFrame, textCol: String, idCol: String): DataFrame =
@@ -111,8 +121,7 @@ object Dedup {
   def buildShingleIndex(docs: DataFrame, textCol: String, idCol: String, n: Int,
                         table: String, buckets: Int = 32, maxDf: Int = 10000): String = {
     val spark = docs.sparkSession
-    Seq(table, s"${table}_hot", s"${table}_sizes", s"${table}_batches", s"${table}_absorbed")
-      .foreach(graft.core.Tables.drop(spark, _))
+    Tables.reset(spark, table, "_hot", ShingleRoster, "_absorbed")
     // one tokenizer pass feeds both the df aggregate and the index write
     // (set graft.checkpointDir so the materialization is reliable — and
     // spills to the FS — when the corpus outgrows executor storage)
@@ -125,7 +134,7 @@ object Dedup {
       .bucketBy(buckets, "s").sortBy("s")
       .saveAsTable(table)
     spark.table(table).groupBy("id").agg(count(lit(1)).as("sz"))
-      .write.mode("overwrite").saveAsTable(s"${table}_sizes")
+      .write.mode("overwrite").saveAsTable(table + ShingleRoster)
     table
   }
 
@@ -170,7 +179,7 @@ object Dedup {
                           maxDf: Int = Int.MaxValue): DataFrame = {
     val sh = capDf(spark.table(table), maxDf)
     val sizes =
-      if (maxDf == Int.MaxValue) spark.table(s"${table}_sizes")
+      if (maxDf == Int.MaxValue) spark.table(table + ShingleRoster)
       else sh.groupBy("id").agg(count(lit(1)).as("sz"))
     jaccardScore(pairIntersections(sh), sizes, threshold)
   }
@@ -276,7 +285,7 @@ object Dedup {
     // corpus sizes from the build-time companion — the full-index
     // per-batch aggregate this replaces was the operator's one
     // residual corpus scan
-    val corpusSizes = spark.table(s"${indexTable}_sizes")
+    val corpusSizes = spark.table(indexTable + ShingleRoster)
       .join(broadcast(batchIds), Seq("id"), "left_anti")
     val sizes = newSh.groupBy("id").agg(count(lit(1)).as("sz"))
       .unionByName(corpusSizes)
@@ -305,27 +314,12 @@ object Dedup {
     val (capped, nRows) = graft.core.Checkpoints.truncateCounted(
       shingles(batch, textCol, idCol, n)
         .join(broadcast(spark.table(s"${table}_hot")), Seq("s"), "left_anti"))
-    val buckets = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets).getOrElse(32)
-    // the anti-join puts the join key first — restore the index's
-    // canonical column order before appending. (Concurrent index +
-    // companion appends were tried here and in the gram/fingerprint
-    // absorbs — Tables.inParallel — and measured a wash to a ~10%
-    // penalty on the small per-batch writes; reverted, numbers in
-    // OPTIMIZATION_r19.md §4.)
-    capped.select("id", "s")
-      .write.mode("append").bucketBy(buckets, "s").sortBy("s").saveAsTable(table)
-    capped.groupBy("id").agg(count(lit(1)).as("sz"))
-      .write.mode("append").saveAsTable(s"${table}_sizes")
+    Tables.absorb(spark, table, capped, table + ShingleRoster,
+      capped.groupBy("id").agg(count(lit(1)).as("sz")))
     // drift ledger: absorbed shingle-row volume since the last hot-list
     // refresh (or build) — `maybeRefreshHotList` reads its sum
     Seq(nRows).toDF("n_rows")
       .write.mode("append").saveAsTable(s"${table}_absorbed")
-    // drop any cached file listing so the caller's next read (possibly
-    // through a different session clone) sees the appended files
-    spark.catalog.refreshTable(table)
-    spark.catalog.refreshTable(s"${table}_sizes")
   }
 
   /** Re-derive the stop-shingle list from the CURRENT index — the
@@ -347,17 +341,11 @@ object Dedup {
         .filter(col("__df") > maxDf).select("s"))
     if (!newHot.isEmpty) {
       newHot.write.mode("append").saveAsTable(s"${table}_hot")
-      graft.core.Tables.compactByKey(spark, table, newHot, "s")
-      val tmp = s"${table}_sizes__refresh"
-      graft.core.Tables.drop(spark, tmp)
-      spark.table(table).groupBy("id").agg(count(lit(1)).as("sz"))
-        .write.saveAsTable(tmp)
-      graft.core.Tables.drop(spark, s"${table}_sizes")
-      spark.sql(s"ALTER TABLE `$tmp` RENAME TO `${table}_sizes`")
+      Tables.compactByKey(spark, table, newHot, "s")
+      Tables.rewrite(spark, table + ShingleRoster,
+        spark.table(table).groupBy("id").agg(count(lit(1)).as("sz")))
     }
-    graft.core.Tables.drop(spark, s"${table}_absorbed") // ledger reset
-    spark.catalog.refreshTable(table)
-    spark.catalog.refreshTable(s"${table}_sizes")
+    Tables.drop(spark, s"${table}_absorbed") // ledger reset
   }
 
   /** Run `refreshHotList` when the absorbed-row ledger has crossed
@@ -386,10 +374,8 @@ object Dedup {
     * reference's log compaction, which also rewrites rather than
     * deletes in place). The `_hot` stop list stays as-of-build. */
   def compactShingleIndex(spark: org.apache.spark.sql.SparkSession, table: String,
-                          ids: DataFrame): Unit = {
-    graft.core.Tables.compactById(spark, table, ids)
-    graft.core.Tables.compactById(spark, s"${table}_sizes", ids)
-  }
+                          ids: DataFrame): Unit =
+    Tables.compact(spark, table, table + ShingleRoster, ids)
 
   /** Exact n-gram Jaccard similarity join via the inverted index:
     * pairs sharing ≥1 shingle, |A∩B| counted by grouping the index
@@ -455,7 +441,7 @@ object Dedup {
                          threshold: Double, maxDf: Int = Int.MaxValue): DataFrame = {
     val sh = capDf(spark.table(table), maxDf)
     val sizes =
-      if (maxDf == Int.MaxValue) spark.table(s"${table}_sizes")
+      if (maxDf == Int.MaxValue) spark.table(table + ShingleRoster)
       else sh.groupBy("id").agg(count(lit(1)).as("sz"))
     containmentScore(pairIntersections(sh), sizes, threshold)
   }
@@ -821,19 +807,20 @@ object Dedup {
   def buildFingerprintIndex(fps0: DataFrame, idCol: String, fpCol: String,
                             maxDist: Int, table: String, buckets: Int = 32): String = {
     val spark = fps0.sparkSession
-    // _batches too: a rebuild must reset the streaming loop's replay
-    // markers or the next stream run trips over the stale location
-    Seq(table, s"${table}_fps", s"${table}_batches")
-      .foreach(graft.core.Tables.drop(spark, _))
+    Tables.reset(spark, table, FingerprintRoster)
     // fingerprint ONCE; the key explosion and the companion both read it
     val fps = graft.core.Checkpoints.truncate(
       fps0.select(col(idCol).as("id"), col(fpCol).as("simhash")))
-    fps.select(col("id"), col("simhash"),
-        explode(chunkPairKeys(col("simhash"), maxDist)).as("bk"))
+    chunkRows(fps, maxDist)
       .write.mode("overwrite").bucketBy(buckets, "bk").sortBy("bk").saveAsTable(table)
-    fps.write.mode("overwrite").saveAsTable(s"${table}_fps")
+    fps.write.mode("overwrite").saveAsTable(table + FingerprintRoster)
     table
   }
+
+  /** The fingerprint index's rows: each (id, simhash) exploded over its
+    * chunk-pair bucket keys `bk`. */
+  private def chunkRows(fps: DataFrame, maxDist: Int): DataFrame =
+    fps.select(col("id"), col("simhash"), explode(chunkPairKeys(col("simhash"), maxDist)).as("bk"))
 
   /** INCREMENTAL simhash near-dup pairs: all (a, b, hamming ≤ maxDist)
     * pairs touching the BATCH — batch-internal plus batch×corpus via
@@ -933,26 +920,16 @@ object Dedup {
   def absorbIntoFingerprintIndex(spark: org.apache.spark.sql.SparkSession,
                                  batchFps: DataFrame, idCol: String, fpCol: String,
                                  maxDist: Int, table: String): Unit = {
-    val buckets = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets).getOrElse(32)
     val fps = graft.core.Checkpoints.truncate(
       batchFps.select(col(idCol).as("id"), col(fpCol).as("simhash")))
-    fps.select(col("id"), col("simhash"),
-        explode(chunkPairKeys(col("simhash"), maxDist)).as("bk"))
-      .write.mode("append").bucketBy(buckets, "bk").sortBy("bk").saveAsTable(table)
-    fps.write.mode("append").saveAsTable(s"${table}_fps")
-    spark.catalog.refreshTable(table)
-    spark.catalog.refreshTable(s"${table}_fps")
+    Tables.absorb(spark, table, chunkRows(fps, maxDist), table + FingerprintRoster, fps)
   }
 
   /** Remove the given ids' rows from the standing simhash index and its
     * fingerprint companion — the supersede step of a re-ingest. */
   def compactSimhashIndex(spark: org.apache.spark.sql.SparkSession, table: String,
-                          ids: DataFrame): Unit = {
-    graft.core.Tables.compactByKey(spark, table, ids, "id")
-    graft.core.Tables.compactByKey(spark, s"${table}_fps", ids, "id")
-  }
+                          ids: DataFrame): Unit =
+    Tables.compact(spark, table, table + FingerprintRoster, ids)
 
   /** EXACT SUBSTRING dedup — the Lee et al. 2021 family ("Deduplicating
     * Training Data Makes Language Models Better", arXiv:2107.06499 —
@@ -1041,8 +1018,7 @@ object Dedup {
   def buildGramIndex(docs: DataFrame, textCol: String, idCol: String, k: Int,
                      table: String, buckets: Int = 32): String = {
     val spark = docs.sparkSession
-    Seq(table, s"${table}_ids", s"${table}_batches")
-      .foreach(graft.core.Tables.drop(spark, _))
+    Tables.reset(spark, table, GramRoster)
     positionalGrams(docs, textCol, idCol, k)
       .write.mode("overwrite")
       .bucketBy(buckets, "gh").sortBy("gh")
@@ -1051,7 +1027,7 @@ object Dedup {
     // doc-id probe, so supersede checks (one row per DOC, not per
     // token) read this instead of scanning the index
     spark.table(table).select("id").distinct()
-      .write.mode("overwrite").saveAsTable(s"${table}_ids")
+      .write.mode("overwrite").saveAsTable(table + GramRoster)
     table
   }
 
@@ -1098,30 +1074,21 @@ object Dedup {
     * index). */
   def absorbIntoGramIndex(spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
                           textCol: String, idCol: String, k: Int, table: String): Unit = {
-    val buckets = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets).getOrElse(32)
     // one tokenizer pass feeds the index append AND the roster (the
     // roster holds ids WITH index rows — same derivation as build, so
     // absorb ≡ rebuild holds even for gram-less (< k token) docs, and
     // a re-emit of a gram-less doc never triggers a pointless compact)
     val g = graft.core.Checkpoints.truncate(
       positionalGrams(batch, textCol, idCol, k))
-    g.write.mode("append").bucketBy(buckets, "gh").sortBy("gh").saveAsTable(table)
-    g.select("id").distinct()
-      .write.mode("append").saveAsTable(s"${table}_ids")
-    spark.catalog.refreshTable(table)
-    spark.catalog.refreshTable(s"${table}_ids")
+    Tables.absorb(spark, table, g, table + GramRoster, g.select("id").distinct())
   }
 
   /** Remove the given ids' rows from the standing gram index (and its
     * roster) — the supersede step of a re-ingest (bucketed anti-join
     * rewrite). */
   def compactGramIndex(spark: org.apache.spark.sql.SparkSession, table: String,
-                       ids: DataFrame): Unit = {
-    graft.core.Tables.compactByKey(spark, table, ids, "id")
-    graft.core.Tables.compactByKey(spark, s"${table}_ids", ids, "id")
-  }
+                       ids: DataFrame): Unit =
+    Tables.compact(spark, table, table + GramRoster, ids)
 
   /** SPAN-level decontamination — the eval-overlap scrub frontier
     * pipelines run before training (GPT-3, Brown et al. 2020 §C,

@@ -370,17 +370,9 @@ object Recipe {
         .select(col("id").as(idCol), col("scrubbed").as(textCol)))
     // swap-write, not drop-then-write-in-place: a crash between a
     // drop and the rewrite would leave NO model and fail every batch
-    // until the next firing — write the new model beside the old one
-    // and take the name last (the compactByKey rewrite discipline;
-    // the exposure shrinks to the rename)
-    val tmp = s"${st.model}__refresh"
-    graft.core.Tables.drop(spark, tmp)
-    TextAnalysis.trainQualityModel(
-        s2.join(docs.select(col(idCol), col(labelCol)), idCol), textCol, labelCol)
-      .write.saveAsTable(tmp)
-    graft.core.Tables.drop(spark, st.model)
-    spark.sql(s"ALTER TABLE `$tmp` RENAME TO `${st.model}`")
-    spark.catalog.refreshTable(st.model)
+    // until the next firing
+    graft.core.Tables.rewrite(spark, st.model, TextAnalysis.trainQualityModel(
+      s2.join(docs.select(col(idCol), col(labelCol)), idCol), textCol, labelCol))
   }
 
   /** Absorb a processed batch into the standing state — ALL mutation
@@ -398,7 +390,7 @@ object Recipe {
     // supersede: drop re-ingested ids' OLD postings before appending
     // the new ones (roster-read — one row per doc, not per gram)
     val batchIds = batch.select(col(idCol).as("id")).distinct()
-    val overlap = spark.table(s"${st.gramIndex}_ids")
+    val overlap = spark.table(st.gramIndex + Dedup.GramRoster)
       .join(broadcast(batchIds), Seq("id"), "leftsemi")
     // the gram-index leg and the budget-ledger leg mutate DISJOINT
     // state and neither reads the other's tables — the one legal
@@ -408,7 +400,6 @@ object Recipe {
     // crash windows are the union of the windows the sequential order
     // already had, and the at-least-once refire recovers both legs
     // idempotently (gram: compact+re-absorb; ledger: swap+re-append).
-    val countsCols = spark.table(st.counts).columns.toIndexedSeq
     graft.core.Tables.inParallel(
       {
         if (!overlap.isEmpty)
@@ -418,9 +409,7 @@ object Recipe {
       {
         graft.core.Tables.compactByKey(spark, st.counts,
           batch.select(col(idCol)).distinct(), idCol)
-        gatedCounts.select(countsCols.map(col): _*)
-          .write.mode("append").saveAsTable(st.counts)
+        graft.core.Tables.append(spark, st.counts, gatedCounts)
       })
-    spark.catalog.refreshTable(st.counts)
   }
 }

@@ -74,7 +74,7 @@ object Retention {
   }
 
   /** The pinned period size — LOUD on a missing property (the
-    * freqLayout discipline: a guessed period mis-buckets silently). */
+    * freqShardSize discipline: a guessed period mis-buckets silently). */
   private def periodOf(spark: SparkSession, table: String): Long = {
     val meta = spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(s"${table}_first"))

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.core.Tables
+import graft.dedup.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, Trigger}
@@ -486,8 +488,7 @@ object OnChange {
                           pairsPath: String, checkpointDir: String,
                           maxDf: Int = 10000): Unit =
     shingleLoop(spark, docsDir, textCol, idCol, n, indexTable, pairsPath, checkpointDir,
-      (bs, batch) => graft.dedup.Dedup
-        .ngramJaccardDelta(bs, batch, textCol, idCol, n, threshold, indexTable, maxDf))
+      (bs, batch) => Dedup.ngramJaccardDelta(bs, batch, textCol, idCol, n, threshold, indexTable, maxDf))
 
   /** `streamingDedupDelta`'s loop with the CONTAINMENT screen as the
     * per-batch pair generator (quote/excerpt screening on every ingest
@@ -498,31 +499,35 @@ object OnChange {
                            pairsPath: String, checkpointDir: String,
                            maxDf: Int = 10000): Unit =
     shingleLoop(spark, docsDir, textCol, idCol, n, indexTable, pairsPath, checkpointDir,
-      (bs, batch) => graft.dedup.Dedup
-        .containmentDelta(bs, batch, textCol, idCol, n, threshold, indexTable, maxDf))
+      (bs, batch) => Dedup.containmentDelta(bs, batch, textCol, idCol, n, threshold, indexTable, maxDf))
 
   private def shingleLoop(spark: SparkSession, docsDir: String, textCol: String,
                           idCol: String, n: Int, indexTable: String,
                           pairsPath: String, checkpointDir: String,
                           pairFn: (SparkSession, DataFrame) => DataFrame): Unit =
-    drain(spark, docsDir, checkpointDir, Seq(indexTable, s"${indexTable}_sizes")) {
+    drain(spark, docsDir, checkpointDir, Seq(indexTable, indexTable + Dedup.ShingleRoster)) {
       (batch, batchId) =>
         val bs = batch.sparkSession
         indexStep(batch, batchId, indexTable, pairsPath,
           emit = pairFn(bs, batch),
-          absorb = graft.dedup.Dedup.absorbIntoShingleIndex(bs, batch, textCol, idCol, n, indexTable),
-          roster = Some(bs.table(s"${indexTable}_sizes")), idCol = idCol,
-          compact = graft.dedup.Dedup.compactShingleIndex(bs, indexTable, _))
+          absorb = Dedup.absorbIntoShingleIndex(bs, batch, textCol, idCol, n, indexTable),
+          roster = Some(bs.table(indexTable + Dedup.ShingleRoster)), idCol = idCol,
+          compact = Dedup.compactShingleIndex(bs, indexTable, _))
     }
 
   /** The skeleton every `foreachBatch` loop shares: `dir` drained one
     * file per micro-batch up to what is there now, `step` run on each
-    * batch, then the CALLER's view of the `refresh` tables that exist
-    * is refreshed, since the appends ran through the stream's session
-    * clone. A restart with the same `checkpointDir` resumes after the
-    * last committed batch and redelivers an uncommitted one. */
+    * batch. `tables` names the standing tables the loop writes: before
+    * the drain starts, any of them that a table swap left only under
+    * its swap name (a crash between the swap's drop and its rename) is
+    * renamed back (`Tables.recover`, catalog-only); after it, the
+    * CALLER's view of those that exist is refreshed, since the appends
+    * ran through the stream's session clone. A restart with the same
+    * `checkpointDir` resumes after the last committed batch and
+    * redelivers an uncommitted one. */
   private[graft] def drain(spark: SparkSession, dir: String, checkpointDir: String,
-                           refresh: Seq[String])(step: (DataFrame, Long) => Unit): Unit = {
+                           tables: Seq[String])(step: (DataFrame, Long) => Unit): Unit = {
+    tables.foreach(Tables.recover(spark, _))
     val schema = spark.read.parquet(dir).schema
     spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
@@ -533,7 +538,7 @@ object OnChange {
       .trigger(Trigger.AvailableNow())
       .start()
       .awaitTermination()
-    refresh.filter(spark.catalog.tableExists).foreach(spark.catalog.refreshTable)
+    tables.filter(spark.catalog.tableExists).foreach(spark.catalog.refreshTable)
   }
 
   /** One micro-batch of a marker-guarded index loop: the replay and
@@ -566,10 +571,10 @@ object OnChange {
     * absorbs once more, so the index and roster end equal to an
     * uninterrupted run (StreamingSpec, fault injection); only the
     * shingle index's `_absorbed` drift ledger counts the batch twice,
-    * which brings the next hot-list refresh forward. A crash INSIDE
-    * an absorb, between the index append and the roster append, is not
-    * repaired: ids missing from the roster are not compacted and their
-    * index rows double. Without a roster (recipe, pack) the absorb
+    * which brings the next hot-list refresh forward. A crash INSIDE an
+    * absorb is repaired the same way: `Tables.absorb` appends the
+    * roster before the index, so the roster holds every batch id that
+    * may have index rows. Without a roster (recipe, pack) the absorb
     * itself must be safe to redo. */
   private[graft] def indexStep(batch: DataFrame, batchId: Long, table: String, out: String,
                                emit: => DataFrame, absorb: => Unit,
@@ -626,8 +631,7 @@ object OnChange {
     drain(spark, embDir, checkpointDir, Seq(indexTable)) { (batch, batchId) =>
       val bs = batch.sparkSession
       indexStep(batch, batchId, indexTable, pairsPath,
-        emit = graft.dedup.Dedup
-          .embeddingNearDupDelta(bs, batch, vecCol, idCol, indexTable, threshold),
+        emit = Dedup.embeddingNearDupDelta(bs, batch, vecCol, idCol, indexTable, threshold),
         absorb = graft.ann.Ann.absorbIntoAnnIndex(bs, batch, vecCol, idCol, indexTable),
         roster = Some(bs.table(indexTable).filter(col("t") === 0)), idCol = idCol,
         compact = graft.ann.Ann.compactAnnIndex(bs, indexTable, _))
@@ -649,8 +653,7 @@ object OnChange {
     drain(spark, embDir, checkpointDir, Seq(indexTable)) { (batch, batchId) =>
       val bs = batch.sparkSession
       indexStep(batch, batchId, indexTable, pairsPath,
-        emit = graft.ann.SemDedup
-          .semanticDedupDelta(bs, batch, vecCol, idCol, indexTable, threshold),
+        emit = graft.ann.SemDedup.semanticDedupDelta(bs, batch, vecCol, idCol, indexTable, threshold),
         absorb = graft.ann.Ann.absorbIntoIvfIndex(bs, batch, vecCol, idCol, indexTable),
         roster = Some(bs.table(indexTable)), idCol = idCol,
         compact = graft.ann.Ann.compactIvfIndex(bs, indexTable, _))
@@ -673,7 +676,8 @@ object OnChange {
                       budgets: Map[String, Long], k: Int,
                       merges: Seq[(String, String)],
                       outPath: String, checkpointDir: String): Unit =
-    drain(spark, docsDir, checkpointDir, Seq(st.gramIndex)) { (batch, batchId) =>
+    drain(spark, docsDir, checkpointDir,
+        Seq(st.gramIndex, st.gramIndex + Dedup.GramRoster, st.counts, st.model)) { (batch, batchId) =>
       val bs = batch.sparkSession
       lazy val res = graft.jobs.Recipe.processBatch(bs, st, batch, textCol, idCol,
         groupCol, budgets, k, merges)
@@ -699,13 +703,14 @@ object OnChange {
   def streamingSubstringDedup(spark: SparkSession, docsDir: String, textCol: String,
                               idCol: String, k: Int, indexTable: String,
                               spansPath: String, checkpointDir: String): Unit =
-    drain(spark, docsDir, checkpointDir, Seq(indexTable)) { (batch, batchId) =>
-      val bs = batch.sparkSession
-      indexStep(batch, batchId, indexTable, spansPath,
-        emit = graft.dedup.Dedup.substringSpansDelta(bs, batch, textCol, idCol, k, indexTable),
-        absorb = graft.dedup.Dedup.absorbIntoGramIndex(bs, batch, textCol, idCol, k, indexTable),
-        roster = Some(bs.table(s"${indexTable}_ids")), idCol = idCol,
-        compact = graft.dedup.Dedup.compactGramIndex(bs, indexTable, _))
+    drain(spark, docsDir, checkpointDir, Seq(indexTable, indexTable + Dedup.GramRoster)) {
+      (batch, batchId) =>
+        val bs = batch.sparkSession
+        indexStep(batch, batchId, indexTable, spansPath,
+          emit = Dedup.substringSpansDelta(bs, batch, textCol, idCol, k, indexTable),
+          absorb = Dedup.absorbIntoGramIndex(bs, batch, textCol, idCol, k, indexTable),
+          roster = Some(bs.table(indexTable + Dedup.GramRoster)), idCol = idCol,
+          compact = Dedup.compactGramIndex(bs, indexTable, _))
     }
 
   /** STREAMING incremental PACKING (the loader-side pack state, p15):
@@ -789,7 +794,7 @@ object OnChange {
                             pairsPath: String, checkpointDir: String): Unit =
     streamingFingerprintDedup(spark, docsDir, "id", "simhash", maxDist,
       indexTable, pairsPath, checkpointDir,
-      b => graft.dedup.Dedup.simhash(b, textCol, idCol), rawIdCol = idCol)
+      b => Dedup.simhash(b, textCol, idCol), rawIdCol = idCol)
 
   /** [[streamingSimhashDedup]] over ANY per-batch fingerprinting (d34
     * streams perceptual image hashes through it): `fingerprint` maps a
@@ -813,19 +818,17 @@ object OnChange {
                                 checkpointDir: String,
                                 fingerprint: DataFrame => DataFrame,
                                 rawIdCol: String = ""): Unit =
-    drain(spark, docsDir, checkpointDir, Seq(indexTable, s"${indexTable}_fps")) {
+    drain(spark, docsDir, checkpointDir, Seq(indexTable, indexTable + Dedup.FingerprintRoster)) {
       (batch, batchId) =>
         val bs = batch.sparkSession
         // fingerprint ONCE per batch: the delta and the absorb both read the pin
         lazy val fps = graft.core.Checkpoints.truncate(fingerprint(batch))
         indexStep(batch, batchId, indexTable, pairsPath,
-          emit = graft.dedup.Dedup
-            .fingerprintPairsDelta(bs, fps, fpIdCol, fpCol, maxDist, indexTable),
-          absorb = graft.dedup.Dedup
-            .absorbIntoFingerprintIndex(bs, fps, fpIdCol, fpCol, maxDist, indexTable),
-          roster = Some(bs.table(s"${indexTable}_fps")),
+          emit = Dedup.fingerprintPairsDelta(bs, fps, fpIdCol, fpCol, maxDist, indexTable),
+          absorb = Dedup.absorbIntoFingerprintIndex(bs, fps, fpIdCol, fpCol, maxDist, indexTable),
+          roster = Some(bs.table(indexTable + Dedup.FingerprintRoster)),
           idCol = if (rawIdCol.isEmpty) fpIdCol else rawIdCol,
-          compact = graft.dedup.Dedup.compactSimhashIndex(bs, indexTable, _))
+          compact = Dedup.compactSimhashIndex(bs, indexTable, _))
     }
 
   /** One event version of one entity (user) in the change stream. */

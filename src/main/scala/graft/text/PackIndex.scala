@@ -60,9 +60,7 @@ object PackIndex {
                      tokenCol: String, capacity: Long, shardSize: Long,
                      table: String): String = {
     val spark = docs.sparkSession
-    // _batches too: a rebuild must reset the streaming loop's replay
-    // markers (the buildSimhashIndex discipline)
-    Seq(table, s"${table}_batches").foreach(graft.core.Tables.drop(spark, _))
+    graft.core.Tables.reset(spark, table)
     TextAnalysis.packSequencesBy(normalize(docs, idCol, groupCol, tokenCol, shardSize),
         "id", "grp", "tok", capacity, shardCol = "shard", posCol = "id")
       .write.partitionBy("shard").saveAsTable(table)

@@ -165,7 +165,7 @@ object StatsState {
     val markers = s"${table}_batches"
     if (spark.catalog.tableExists(markers) &&
         !spark.table(markers).filter(col("batch_id") === batchId).isEmpty) return false
-    val (buckets, shardSize) = freqLayout(spark, table)
+    val shardSize = freqShardSize(spark, table)
     // pin batch ids + shards; ONE action gives the touched-shard list
     // AND the one-version-per-id check (the packDelta fused probe —
     // ids cannot collide across shards, shard is a function of id)
@@ -206,7 +206,7 @@ object StatsState {
     // the crash-recovery contract is tag-based, so a partial write of
     // the fused job nets out on retry exactly as the two-job windows
     // did
-    appendFreq(spark, table, buckets,
+    appendFreq(spark, table,
       if (needNet)
         supersedeNet(spark, table, ids, shards, batchId, isinShardMax)
           .unionByName(contrib)
@@ -255,27 +255,23 @@ object StatsState {
   }
 
   /** Append rows (id, group, token, c, batch_id, shard) to the log
-    * under its pinned layout. `private[graft]` so the crash-recovery
-    * spec can plant a partial (unmarked) batch through the same
-    * writer absorb uses. */
-  private[graft] def appendFreq(spark: SparkSession, table: String, buckets: Int,
-                                rows: DataFrame): Unit =
-    rows.select(col("id"), col("group"), col("token"), col("c"),
-        col("batch_id"), col("shard"))
-      // one file per touched (partition, bucket) per absorb, not one
-      // per task per cell (see the build-write comment) — the append
-      // accumulation the compact valve nets is batch COUNT, not
-      // batch count × task count
-      .repartition(col("shard"))
-      .write.mode("append").partitionBy("shard")
-      .bucketBy(buckets, "token").sortBy("token")
-      .saveAsTable(s"${table}_freq")
+    * under its pinned layout, which `Tables.append` reads from the
+    * catalog. `private[graft]` so the crash-recovery spec can plant a
+    * partial (unmarked) batch through the same writer absorb uses. */
+  private[graft] def appendFreq(spark: SparkSession, table: String, rows: DataFrame): Unit =
+    // one file per touched (partition, bucket) per absorb, not one per
+    // task per cell (see the build-write comment) — the append
+    // accumulation the compact valve nets is batch COUNT, not batch
+    // count × task count
+    graft.core.Tables.append(spark, s"${table}_freq",
+      rows.select(col("id"), col("group"), col("token"), col("c"), col("batch_id"), col("shard"))
+        .repartition(col("shard")))
 
-  /** The log's pinned layout: (bucket count, shard size). LOUD on a
+  /** The log's pinned shard size, after checking its layout. LOUD on a
     * missing bucket spec or shard-size property — a silently assumed
     * layout would mis-place appends (buckets) or mis-derive the prune
     * (shards), both wrong-results failures, not slow paths. */
-  private def freqLayout(spark: SparkSession, table: String): (Int, Long) = {
+  private def freqShardSize(spark: SparkSession, table: String): Long = {
     val meta = spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(s"${table}_freq"))
     require(meta.bucketSpec.nonEmpty,
@@ -286,7 +282,7 @@ object StatsState {
       s"${table}_freq carries no $ShardSizeProp table property — absorb derives " +
         "shards from it, and a guessed size would silently miss standing rows " +
         "in the supersede prune")
-    (meta.bucketSpec.get.numBuckets, meta.properties(ShardSizeProp).toLong)
+    meta.properties(ShardSizeProp).toLong
   }
 
   /** Net the log: frequency rows of SETTLED batches sum per
@@ -322,13 +318,13 @@ object StatsState {
     // undoes the per-absorb small-file accumulation (each absorb
     // appends a file per touched (partition × bucket); read-out cost
     // rises with batch count between compacts, spec-pinned census)
-    swapInto(spark, freq, netted.unionByName(inflight).repartition(col("shard")))
+    graft.core.Tables.rewrite(spark, freq, netted.unionByName(inflight).repartition(col("shard")))
     val merged = spark.table(s"${table}_kmv")
       .select(col("group"), explode(col("minima")).as("__h"))
       .groupBy(col("group"))
       .agg(graft.functions.KmvMinima.kmvMinima(col("__h"), k).as("minima"))
-    swapInto(spark, s"${table}_kmv", merged)
-    swapInto(spark, s"${table}_docs", spark.table(s"${table}_docs").distinct())
+    graft.core.Tables.rewrite(spark, s"${table}_kmv", merged)
+    graft.core.Tables.rewrite(spark, s"${table}_docs", spark.table(s"${table}_docs").distinct())
   }
 
   /** Rebuild the KMV companion from the EFFECTIVE corpus — the
@@ -339,7 +335,7 @@ object StatsState {
   def refreshKmvState(docs: DataFrame, textCol: String, groupCol: String,
                       table: String, n: Int = 3, k: Int = 256): Unit = {
     val spark = docs.sparkSession
-    swapInto(spark, s"${table}_kmv",
+    graft.core.Tables.rewrite(spark, s"${table}_kmv",
       TextAnalysis.ngramKmvSketch(docs, textCol, groupCol, n, k)
         .withColumnRenamed(groupCol, "group"))
   }
@@ -415,45 +411,5 @@ object StatsState {
         val mx = registry.get(docsName).agg(max(col(recordedCol))).collect()(0)
         if (mx.isNullAt(0)) None else Some(mx.getLong(0))
       })
-  }
-
-  /** Replace `table` with `df` under the table's OWN catalog
-    * partition/bucket/sort spec and graft.* table properties (write
-    * beside, drop, rename — the Tables.compactByKey rewrite
-    * discipline). NOT atomic: a concurrent reader in the drop→rename
-    * window sees the table missing, and a crash there strands the
-    * new data under `{table}__swap` (recovery = manual rename back).
-    * The family contract keeps compaction single-writer, so the
-    * exposure is the rename window only. */
-  private def swapInto(spark: SparkSession, table: String, df: DataFrame): Unit = {
-    val meta = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val tmp = s"${table}__swap"
-    graft.core.Tables.drop(spark, tmp)
-    val w0 = df.write
-    val w = if (meta.partitionColumnNames.nonEmpty)
-              w0.partitionBy(meta.partitionColumnNames: _*)
-            else w0
-    meta.bucketSpec match {
-      case Some(bs) =>
-        val b = w.bucketBy(bs.numBuckets,
-          bs.bucketColumnNames.head, bs.bucketColumnNames.tail: _*)
-        (if (bs.sortColumnNames.nonEmpty)
-           b.sortBy(bs.sortColumnNames.head, bs.sortColumnNames.tail: _*)
-         else b).saveAsTable(tmp)
-      case None => w.saveAsTable(tmp)
-    }
-    val props = meta.properties.filter { case (key, _) => key.startsWith("graft.") }
-    if (props.nonEmpty)
-      spark.sql(s"ALTER TABLE `$tmp` SET TBLPROPERTIES (" +
-        props.map { case (key, v) => s"'$key' = '$v'" }.mkString(", ") + ")")
-    graft.core.Tables.drop(spark, table)
-    spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
-    // renaming a catalog-partitioned table moves its files but leaves
-    // the per-partition LOCATIONs pointing at the __swap dir — resync
-    // them from the moved directory (metadata-only)
-    if (meta.partitionColumnNames.nonEmpty)
-      spark.sql(s"MSCK REPAIR TABLE `$table` SYNC PARTITIONS")
-    spark.catalog.refreshTable(table)
   }
 }

@@ -763,17 +763,25 @@ class StreamingSpec extends SparkSpec {
     // the real shingle and fingerprint pieces behind the shared step,
     // one of them wrapped to throw once in batch 1 (which re-emits a
     // standing id, so its compact runs); the drain then restarts on the
-    // same checkpoint and must end where an uninterrupted drain ends
+    // same checkpoint and must end where an uninterrupted drain ends.
+    // The absorb's own two appends (roster, index) are split through
+    // the `Tables.beforeAppend` seam, which throws before the second.
     val s = spark
     import s.implicits._
     import graft.dedup.Dedup
+    import graft.core.Tables
+    val between = "between the roster and index appends"
     final class Fault(point: String) {
       private val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
       private def hit(at: String): Unit =
         if (at == point && armed.getAndSet(false)) throw new IllegalStateException(s"injected crash $at")
       def around(piece: String, batchId: Long)(body: => Unit): Unit = {
         if (batchId == 1L) hit(s"before $piece")
-        body
+        if (batchId == 1L && piece == "absorb") {
+          val appends = new java.util.concurrent.atomic.AtomicInteger(0)
+          Tables.beforeAppend = _ => if (appends.incrementAndGet() == 2) hit(between)
+          try body finally Tables.beforeAppend = _ => ()
+        } else body
         if (batchId == 1L) hit(s"after $piece")
       }
     }
@@ -832,7 +840,7 @@ class StreamingSpec extends SparkSpec {
       run(ref, refPairs, tmp("graft_fi_ckpt_"), new Fault(""))
       val want = state(ref, f.roster, refPairs)
       assert(want(2).nonEmpty, s"${f.name}: the fixture must emit pairs")
-      for ((point, i) <- Seq("before compact", "after compact", "after absorb").zipWithIndex) {
+      for ((point, i) <- Seq("before compact", "after compact", between, "after absorb").zipWithIndex) {
         val t = s"fi_${f.name}_$i"
         val pairs = tmp("graft_fi_pairs_")
         val ckpt = tmp("graft_fi_ckpt_")
@@ -840,10 +848,72 @@ class StreamingSpec extends SparkSpec {
         val fault = new Fault(point)
         val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](run(t, pairs, ckpt, fault))
         assert(e.getCause.getMessage == s"injected crash $point", e.toString)
+        // batch 1's ids (1, 20) in (index, roster) as the crash left them
+        // (the crashed drain never refreshed this session's view)
+        def batchIds(table: String) = {
+          s.catalog.refreshTable(table)
+          s.table(table).filter(col("id").isin(1L, 20L)).select("id").distinct().count()
+        }
+        val cut = (batchIds(t), batchIds(t + f.roster))
         run(t, pairs, ckpt, fault) // the restart redelivers batch 1
         assert(state(t, f.roster, pairs) == want, s"${f.name}, crash $point")
+        // the cut absorb had written exactly its first append, the roster
+        if (point == between) assert(cut == ((0L, 2L)), s"${f.name}: (index, roster) ids $cut")
       }
     }
+  }
+
+  test("drain start finishes a table swap cut between its drop and its rename") {
+    // a kill between a swap's drop and its rename leaves the rows only
+    // under the swap name (planted here by renaming the live table); the
+    // restarted drain renames them back before its first read — with the
+    // partition resync for the partitioned stats log — and ends where an
+    // uninterrupted drain ends
+    val s = spark
+    import s.implicits._
+    import graft.core.Tables
+    import graft.text.StatsState
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def cutSwap(t: String): Unit = s.sql(s"ALTER TABLE `$t` RENAME TO `${Tables.swapName(t)}`")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    // two drains on one checkpoint, one batch each, the swap cut in between
+    def twoDrains(b0: org.apache.spark.sql.DataFrame, b1: org.apache.spark.sql.DataFrame,
+                  cut: Seq[String])(drainOnce: (String, String) => Unit): Unit = {
+      val chunks = tmp("graft_swc_chunks_")
+      val ckpt = tmp("graft_swc_ckpt_")
+      stageChunk(chunks, b0, "a.parquet", 0)
+      drainOnce(chunks, ckpt)
+      cut.foreach(cutSwap)
+      assert(cut.forall(t => !s.catalog.tableExists(t)))
+      stageChunk(chunks, b1, "b.parquet", 1)
+      drainOnce(chunks, ckpt)
+    }
+    def shingle(t: String, cut: Boolean): Seq[Seq[String]] = {
+      graft.dedup.Dedup.buildShingleIndex(
+        Seq((1L, "aa bb cc dd ee ff"), (2L, "xx yy zz ww vv uu")).toDF("doc_id", "text"),
+        "text", "doc_id", 3, t, buckets = 4)
+      val pairs = tmp("graft_swc_pairs_")
+      twoDrains(Seq((10L, "aa bb cc dd ee gg")).toDF("doc_id", "text"),
+        Seq((1L, "mm nn oo pp qq rr"), (20L, "mm nn oo pp qq ss")).toDF("doc_id", "text"),
+        if (cut) Seq(t, t + "_sizes") else Nil) { (chunks, ckpt) =>
+        OnChange.streamingDedupDelta(s, chunks, "text", "doc_id", 3, 0.5, t, pairs, ckpt)
+      }
+      Seq(s.table(t), s.table(t + "_sizes"), s.read.parquet(pairs)).map(rows)
+    }
+    assert(shingle("swc_shingle_cut", cut = true) == shingle("swc_shingle_ref", cut = false))
+    def mk(r: Seq[(Long, String, String)]) = r.toDF("doc_id", "lang", "text")
+    def stats(t: String, cut: Boolean): Seq[Seq[String]] = {
+      StatsState.buildStatsState(mk(Seq((1L, "a", "x y z x"), (2L, "b", "m n o"))),
+        "text", "lang", "doc_id", t, n = 3, k = 8, buckets = 4, shardSize = 2L)
+      twoDrains(mk(Seq((3L, "a", "p q r s"))), mk(Seq((1L, "a", "x y z x new tail"), (5L, "b", "k k j"))),
+        if (cut) Seq(t + "_freq") else Nil) { (chunks, ckpt) =>
+        OnChange.streamingStats(s, chunks, "text", "lang", "doc_id", t, ckpt, n = 3, k = 8)
+      }
+      Seq(s.table(t + "_freq"), StatsState.tokenStatsReadout(s, t, 10)).map(rows)
+    }
+    val statsRef = stats("swc_stats_ref", cut = false)
+    assert(statsRef.head.nonEmpty)
+    assert(stats("swc_stats_cut", cut = true) == statsRef)
   }
 
   test("job counts per micro-batch: roster-gated shingle loop and ungated stats loop") {
@@ -879,6 +949,48 @@ class StreamingSpec extends SparkSpec {
     }
     assert(shingleJobs == Map(0L -> 22, 1L -> 34), s"shingle loop jobs per batch: $shingleJobs")
     assert(statsJobs == Map(0L -> 16, 1L -> 19), s"stats loop jobs per batch: $statsJobs")
+  }
+
+  test("job counts per micro-batch: roster-gated simhash and semantic loops") {
+    // the shingle pin's shape through the other two roster-gated loops:
+    // a two-batch drain, batch 1 re-emitting a standing id, so its
+    // compact runs on the index and, for simhash, on the `_fps` roster
+    val s = spark
+    import s.implicits._
+    def textA(v: String) = s"alpha bravo charlie delta echo foxtrot golf hotel india juliet " +
+      s"kilo lima mike november oscar papa quebec romeo sierra tango $v " +
+      "uniform victor whiskey xray yankee zulu one two three"
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val fpTable = "simhash_idx_jobcount"
+    graft.dedup.Dedup.buildSimhashIndex(
+      Seq((1L, textA("v1")), (2L, "plain standing words nothing shared here")).toDF("doc_id", "text"),
+      "text", "doc_id", 10, fpTable, buckets = 4)
+    val fpChunks = tmp("graft_jcf_chunks_")
+    stageChunk(fpChunks, Seq((10L, textA("v2"))).toDF("doc_id", "text"), "a.parquet", 0)
+    stageChunk(fpChunks, Seq((1L, textA("v3")), (20L, textA("v1"))).toDF("doc_id", "text"),
+      "b.parquet", 1)
+    val simhashJobs = jobsPerBatch {
+      OnChange.streamingSimhashDedup(s, fpChunks, "text", "doc_id", 10, fpTable,
+        tmp("graft_jcf_pairs_"), tmp("graft_jcf_ckpt_"))
+    }
+    def vec(seed: Int): Seq[Float] = {
+      val r = new scala.util.Random(seed)
+      Seq.fill(64)(r.nextGaussian().toFloat)
+    }
+    def near(v: Seq[Float]): Seq[Float] = v.updated(0, (v.head.toDouble + 0.1).toFloat)
+    val ivfTable = "ivf_idx_jobcount"
+    graft.ann.Ann.buildIvfIndex(Seq((1L, vec(1)), (2L, vec(2))).toDF("vec_id", "embedding"),
+      "embedding", "vec_id", ivfTable, nlist = 2, buckets = 4)
+    val ivfChunks = tmp("graft_jci_chunks_")
+    stageChunk(ivfChunks, Seq((10L, near(vec(1)))).toDF("vec_id", "embedding"), "a.parquet", 0)
+    stageChunk(ivfChunks, Seq((1L, vec(3)), (20L, near(vec(3)))).toDF("vec_id", "embedding"),
+      "b.parquet", 1)
+    val semanticJobs = jobsPerBatch {
+      OnChange.streamingSemanticDedup(s, ivfChunks, "embedding", "vec_id", ivfTable, 0.9,
+        tmp("graft_jci_pairs_"), tmp("graft_jci_ckpt_"))
+    }
+    assert(simhashJobs == Map(0L -> 16, 1L -> 28), s"simhash loop jobs per batch: $simhashJobs")
+    assert(semanticJobs == Map(0L -> 12, 1L -> 19), s"semantic loop jobs per batch: $semanticJobs")
   }
 
   test("streamed incremental agg equals batch agg") {

@@ -1501,7 +1501,7 @@ class TextMultimodalSpec extends SparkSpec {
     // attempt appended its supersede negation of doc 1 AND part of its
     // contributions, then died before kmv/docs/marker — plant exactly
     // those rows through the same writer absorb uses
-    StatsState.appendFreq(s, tbl, 4, Seq(
+    StatsState.appendFreq(s, tbl, Seq(
       (1L, "a", "x", -1L, 9L, 0L), (1L, "a", "y", -1L, 9L, 0L),
       (1L, "a", "z", -1L, 9L, 0L), (4L, "b", "u", 1L, 9L, 2L)
     ).toDF("id", "group", "token", "c", "batch_id", "shard"))
@@ -1518,7 +1518,7 @@ class TextMultimodalSpec extends SparkSpec {
     // in-flight protection: plant a partial batch 11 (unmarked), compact
     // — the tagged rows must stay RAW (folding them into the settled net
     // would double-count the retry's recovery probe)
-    StatsState.appendFreq(s, tbl, 4,
+    StatsState.appendFreq(s, tbl,
       Seq((5L, "a", "k", 1L, 11L, 2L)).toDF("id", "group", "token", "c", "batch_id", "shard"))
     StatsState.compactStatsState(s, tbl, 8)
     assert(s.table(s"${tbl}_freq").filter(col("batch_id") === 11L).count() == 1L,
