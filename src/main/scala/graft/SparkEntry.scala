@@ -1,17 +1,10 @@
 package graft
 
-import graft.ann.Ann
-import graft.core.{EntityGraph, Tpch}
-import graft.dedup.Dedup
-import graft.jobs.{DatasetRegistry, DatasetSink, DatasetSource, FunctionSource, Job, MultiSource, RegistrySource, Transaction, Transforms, VirtualDataset}
-import graft.multimodal.Multimodal
-import graft.ops.{ChangeLog, Events, Retention, TimeTravel}
-import graft.streaming.OnChange
-import graft.text.{PackIndex, TextAnalysis}
+import graft.queries._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory.
+/** Driver contract — see SURVEY.md §2 for the inventory.
   *
   * Conventions shared by every query/oracle pair (SURVEY.md §5):
   * deterministic ORDER BY on both sides, identical column aliases,
@@ -22,7 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
+  private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
   /** events.parquet's `ts` encoding has varied across testdata
@@ -31,317 +24,10 @@ object SparkEntry {
     * harmless for other encodings — and every consumer goes through the
     * schema-adaptive [[graft.ops.Events.tsMicros]], so all three
     * encodings stay integer-exact against the DuckDB oracle's epoch_us. */
-  private def events(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def events(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     s.read.parquet(s"$dir/events.parquet")
   }
-
-  private val tpchBase = Tpch.base
-
-  /** Deterministic PII planting shared by the x7/p3 queries — MUST stay
-    * in lockstep with `plantPiiSql` (the oracle-side construction). */
-  private def plantPii(docs: DataFrame): DataFrame =
-    docs.withColumn("text", concat(col("text"),
-      when(col("doc_id") % 7 === 0,
-        concat(lit(" reach me at user"), col("doc_id"), lit("@example.com"))).otherwise(lit("")),
-      when(col("doc_id") % 5 === 0, lit(" call 555-867-5309")).otherwise(lit("")),
-      when(col("doc_id") % 3 === 0,
-        concat(lit(" from host 10.1.2."), col("doc_id") % 256)).otherwise(lit(""))))
-
-  /** Deterministic URL planting shared by d31 — four surface forms of
-    * the same logical resource per base (doc_id div 4; host from
-    * base % 7): uppercased scheme/host + www + default port + tracking
-    * params, plain form with swapped param order, an https twin (a
-    * DIFFERENT resource — scheme is semantic), and a trailing-slash +
-    * fragment form. MUST stay in lockstep with `plantUrlSql`. */
-  private def plantUrl(docs: DataFrame): DataFrame = {
-    val base = expr("doc_id div 4")
-    val h = base % 7
-    docs.withColumn("url",
-      when(col("doc_id") % 4 === 0,
-        concat(lit("HTTP://WWW.SITE"), h, lit(".EXAMPLE.COM:80/articles/item"),
-          base, lit("/?utm_source=feed&b=2&a=1")))
-      .when(col("doc_id") % 4 === 1,
-        concat(lit("http://site"), h, lit(".example.com/articles/item"),
-          base, lit("?b=2&a=1")))
-      .when(col("doc_id") % 4 === 2,
-        concat(lit("https://site"), h, lit(".example.com/articles/item"),
-          base, lit("?a=1&b=2")))
-      .otherwise(
-        concat(lit("http://site"), h, lit(".example.com/articles/item"),
-          base, lit("/?a=1&b=2#frag"))))
-  }
-
-  /** `plantUrl` as a SQL expression over `documents.doc_id` —
-    * single-line by the plantPiiSql contract. */
-  private val plantUrlSql: String =
-    "CASE doc_id % 4" +
-      " WHEN 0 THEN 'HTTP://WWW.SITE' || ((doc_id // 4) % 7) || '.EXAMPLE.COM:80/articles/item' || (doc_id // 4) || '/?utm_source=feed&b=2&a=1'" +
-      " WHEN 1 THEN 'http://site' || ((doc_id // 4) % 7) || '.example.com/articles/item' || (doc_id // 4) || '?b=2&a=1'" +
-      " WHEN 2 THEN 'https://site' || ((doc_id // 4) % 7) || '.example.com/articles/item' || (doc_id // 4) || '?a=1&b=2'" +
-      " ELSE 'http://site' || ((doc_id // 4) % 7) || '.example.com/articles/item' || (doc_id // 4) || '/?a=1&b=2#frag' END"
-
-  /** `plantPii` as a SQL expression over `documents`' (doc_id, text).
-    * Single-line ON PURPOSE: a multi-line fragment interpolated into a
-    * stripMargin template would lose one `|` of every leading `||`. */
-  private val plantPiiSql: String =
-    "text" +
-      " || CASE WHEN doc_id % 7 = 0 THEN ' reach me at user' || doc_id || '@example.com' ELSE '' END" +
-      " || CASE WHEN doc_id % 5 = 0 THEN ' call 555-867-5309' ELSE '' END" +
-      " || CASE WHEN doc_id % 3 = 0 THEN ' from host 10.1.2.' || (doc_id % 256) ELSE '' END"
-
-  /** Deterministic ASCII-punctuation planting shared by the x14 query
-    * and its oracle — bytes the 36-symbol alphabet cannot express
-    * (no parens or single quotes: the oracle's parenthesized-symbol
-    * replay machinery owns those). Lockstep twin of [[plantPunctSql]]. */
-  private def plantPunct(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), concat(substring(col("text"), 1, 200),
-      lit(" mix: id="), col("doc_id"),
-      lit(", 50% off!! a.b=c; path/to/file \"q\" & #tag ?end.")).as("text"))
-
-  /** `plantPunct` as a SQL expression over `documents` (single-line —
-    * see `plantPiiSql`). */
-  private val plantPunctSql: String =
-    "substr(text, 1, 200) || ' mix: id=' || doc_id || " +
-      "', 50% off!! a.b=c; path/to/file \"q\" & #tag ?end.'"
-
-  /** The deep-table BYTE-LEVEL encode replay shared by the x13/x14
-    * oracles: a 4096-deep single replace chain blows the DuckDB
-    * parser, so the rank-order sweep runs as 64 sequential CTEs of 64
-    * nested replaces each — same semantics, bounded expression depth —
-    * over the DISTINCT words (vocabulary-sized, not corpus-sized),
-    * joined back to word instances. Byte-level ids: single-char
-    * symbols fall through to ord() (≡ the byte value while the corpus
-    * is ASCII — verified single-byte), merge symbols hit 256+rank
-    * rows generated from the same checked-in table the kernel
-    * carries. `head` supplies the CTE(s) ending in w(doc_id, ws). */
-  /** The shared front of the deep replays: `head`'s CTEs (ending in
-    * w(doc_id, ws)), word instances `t`, distinct words `dw`, and the
-    * chunked merge-sweep chain. Returns (cte block, last cte name) —
-    * [[deepEncodeSql]] appends the token-id tail, the x15 oracle a
-    * per-doc counting tail. */
-  private def deepChainCtes(head: String): (String, String) = {
-    val merges = graft.text.Bpe.DeepMerges
-    val chunk = 64
-    val ctes = merges.grouped(chunk).zipWithIndex.map { case (ms, ci) =>
-      val expr = ms.foldLeft("s") { case (e, (a, b)) =>
-        s"replace($e,'($a)($b)','(${a + b})')"
-      }
-      s"c${ci + 1} AS (SELECT wd, $expr AS s FROM c$ci)"
-    }.mkString(",\n")
-    val last = s"c${(merges.size + chunk - 1) / chunk}"
-    (s"""$head,
-       |t AS (SELECT doc_id, t.i AS widx, ws[t.i] AS wd FROM w, unnest(range(1, len(ws)+1)) AS t(i)),
-       |dw AS (SELECT DISTINCT wd FROM t),
-       |c0 AS (SELECT wd, regexp_replace(wd, '(.)', '(\\1)', 'g') AS s FROM dw),
-       |$ctes""".stripMargin, last)
-  }
-
-  private def deepEncodeSql(head: String): String = {
-    val merges = graft.text.Bpe.DeepMerges
-    val (chain, last) = deepChainCtes(head)
-    val mergeVals = merges.zipWithIndex
-      .map { case ((a, b), r) => s"('${a + b}', ${256 + r})" }.mkString(", ")
-    s"""WITH $chain,
-       |sym AS (
-       |  SELECT wd, u.j AS sidx, l[u.j] AS sym
-       |  FROM (SELECT wd, regexp_extract_all(s, '\\(([^()]*)\\)', 1) AS l FROM $last),
-       |       unnest(range(1, len(l)+1)) AS u(j)),
-       |v(sym, id) AS (VALUES $mergeVals),
-       |ids AS (SELECT wd, sidx, coalesce(v.id, ord(sym))::INT AS id
-       |        FROM sym LEFT JOIN v USING (sym))
-       |SELECT t.doc_id,
-       |  (row_number() OVER (PARTITION BY t.doc_id ORDER BY t.widx, ids.sidx) - 1)::BIGINT AS pos,
-       |  ids.id AS token_id
-       |FROM t JOIN ids USING (wd)
-       |ORDER BY doc_id, pos""".stripMargin
-  }
-
-  /** The x15 oracle's per-doc counting tail over [[deepChainCtes]]:
-    * byte-level token count per distinct word = its '(' wrapper count
-    * after the sweep, byte mass = strlen (the corpus is verified
-    * single-byte ASCII), summed per doc over word instances; zero-word
-    * docs re-enter via the left join with 0/0 and flag. */
-  private def deepCompressionSql(head: String, lo: Long, hi: Long): String = {
-    val (chain, last) = deepChainCtes(head)
-    s"""WITH $chain,
-       |cnt AS (SELECT wd, (length(s) - length(replace(s, '(', '')))::BIGINT AS c,
-       |               strlen(wd)::BIGINT AS b FROM $last),
-       |per AS (
-       |  SELECT t.doc_id, sum(cnt.b)::BIGINT AS n_bytes, sum(cnt.c)::BIGINT AS bpe_tokens
-       |  FROM t JOIN cnt USING (wd) GROUP BY 1),
-       |cov AS (
-       |  SELECT w.doc_id, coalesce(per.n_bytes, 0)::BIGINT AS n_bytes,
-       |         coalesce(per.bpe_tokens, 0)::BIGINT AS bpe_tokens
-       |  FROM w LEFT JOIN per USING (doc_id)),
-       |r AS (
-       |  SELECT doc_id, n_bytes, bpe_tokens,
-       |    (CASE WHEN bpe_tokens = 0 THEN 0 ELSE n_bytes * 10000 // bpe_tokens END)::BIGINT AS bpt_x4
-       |  FROM cov)
-       |SELECT doc_id, n_bytes, bpe_tokens, bpt_x4,
-       |  (CASE WHEN bpt_x4 < $lo OR bpt_x4 > $hi THEN 1 ELSE 0 END)::INT AS flagged
-       |FROM r ORDER BY doc_id""".stripMargin
-  }
-
-  /** The p14/p21 oracle: the x12 segmentation aggregated to per-doc id
-    * arrays, the p10 placement arithmetic, the p13 segment explode,
-    * per-segment token unnest. `withDoc` additionally threads doc
-    * identity through the explode and emits the p21 `doc_start` flag
-    * (1 exactly on a doc's first token — continuation segments have
-    * seg_start > 0). */
-  private def packedStreamSql(withDoc: Boolean, rel: String = "documents",
-                              prefixCtes: String = ""): String = {
-    val base = "abcdefghijklmnopqrstuvwxyz0123456789"
-    val vocabRows = (base.zipWithIndex.map { case (c, i) => s"('$c', $i)" } ++
-      graft.text.Bpe.DefaultMerges.zipWithIndex.map { case ((a, b), r) =>
-        s"('${a + b}', ${36 + r})"
-      }).mkString(", ")
-    val segDoc = if (withDoc) " p.doc_id," else ""
-    val outDoc = if (withDoc)
-      ",\n  doc_id,\n  (CASE WHEN seg_start = 0 AND u.k = 1 THEN 1 ELSE 0 END)::INT AS doc_start"
-    else ""
-    s"""WITH ${prefixCtes}w AS (
-       |  SELECT doc_id,
-       |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-       |  FROM $rel),
-       |t AS (SELECT doc_id, t.i AS widx, ws[t.i] AS wd FROM w, unnest(range(1, len(ws)+1)) AS t(i)),
-       |enc AS (SELECT doc_id, widx, ${graft.text.Bpe.mergeChainSql("wd", graft.text.Bpe.DefaultMerges)} AS s FROM t),
-       |sym AS (
-       |  SELECT doc_id, widx, u.j AS sidx, l[u.j] AS sym
-       |  FROM (SELECT doc_id, widx, regexp_extract_all(s, '\\(([^()]*)\\)', 1) AS l FROM enc),
-       |       unnest(range(1, len(l)+1)) AS u(j)),
-       |v(sym, id) AS (VALUES $vocabRows),
-       |ids AS (
-       |  SELECT doc_id, array_agg(v.id ORDER BY widx, sidx) AS ids
-       |  FROM sym JOIN v USING (sym) GROUP BY doc_id),
-       |d AS (
-       |  SELECT d0.doc_id, d0.source,
-       |    coalesce(len(ids.ids), 0)::BIGINT AS n,
-       |    coalesce(ids.ids, CAST([] AS INT[])) AS ids,
-       |    (d0.doc_id // 1000)::BIGINT AS shard
-       |  FROM $rel d0 LEFT JOIN ids USING (doc_id)),
-       |c AS (
-       |  SELECT doc_id, source, n, ids, shard,
-       |    coalesce(sum(n) OVER (PARTITION BY source, shard ORDER BY doc_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS pre
-       |  FROM d),
-       |p AS (
-       |  SELECT doc_id, source, n, ids, shard, pre,
-       |    (pre // 512)::BIGINT AS bin_first,
-       |    (CASE WHEN n <= 0 THEN pre // 512 ELSE (pre + n - 1) // 512 END)::BIGINT AS bin_last
-       |  FROM c),
-       |seg AS (
-       |  SELECT$segDoc source, shard, b.bin::BIGINT AS bin, ids,
-       |    (CASE WHEN b.bin = bin_first THEN 0 ELSE b.bin * 512 - pre END)::BIGINT AS seg_start,
-       |    (CASE WHEN n <= 0 THEN 0
-       |          ELSE least(pre + n, (b.bin + 1) * 512) - greatest(pre, b.bin * 512) END)::BIGINT AS seg_len,
-       |    greatest(pre - b.bin * 512, 0)::BIGINT AS bin_offset
-       |  FROM p, unnest(range(bin_first, bin_last + 1)) AS b(bin))
-       |SELECT source, shard, bin,
-       |  (bin_offset + u.k - 1)::BIGINT AS bin_pos,
-       |  ids[(seg_start + u.k)::INT]::INT AS token_id$outDoc
-       |FROM seg, unnest(range(1, seg_len + 1)) AS u(k)
-       |WHERE seg_len > 0
-       |ORDER BY source, shard, bin, bin_pos""".stripMargin
-  }
-
-  /** `TextAnalysis.piiScrubText` as a SQL expression over `c`. */
-  private def scrubSql(c: String): String =
-    s"regexp_replace(regexp_replace(regexp_replace($c, " +
-      s"'${TextAnalysis.EmailRe}', '<EMAIL>', 'g'), " +
-      s"'${TextAnalysis.IpRe}', '<IP>', 'g'), " +
-      s"'${TextAnalysis.PhoneRe}', '<PHONE>', 'g')"
-
-  /** Deterministic duplicated-span planting shared by the d16 query and
-    * its oracle: a fixed 22-token sentence appended to every 10th doc,
-    * so the corpus provably contains ≥ k-token exact duplicate spans at
-    * every SF (the d5/x7 planting idiom). All-lowercase alnum — the
-    * tokenizer passes it through verbatim. */
-  private val DupSpan =
-    "the quick brown fox jumps over the lazy dog while seven wizards " +
-      "brew strong coffee near the old stone bridge at dawn"
-
-  private def plantSpan(docs: DataFrame): DataFrame =
-    docs.withColumn("text", concat(col("text"),
-      when(col("doc_id") % 10 === 0, lit(" " + DupSpan)).otherwise(lit(""))))
-
-  /** `plantSpan` as a SQL expression over `documents` (single-line — see
-    * `plantPiiSql` for why). */
-  private val plantSpanSql: String =
-    s"text || CASE WHEN doc_id % 10 = 0 THEN ' $DupSpan' ELSE '' END"
-
-  /** Deterministic low-quality planting for the x9 learned filter (the
-    * x7/d16 idiom): junk tokens appended to every 4th doc (offset 1),
-    * label = not planted. Tokens stay outside the corpus vocabulary so
-    * the classifier must RECOVER the plant from label evidence alone. */
-  private val JunkTokens =
-    "zzspam0 zzspam1 zzspam2 zzspam3 zzspam4 zzspam5 zzspam6 zzspam7"
-
-  private def plantJunk(docs: DataFrame): DataFrame =
-    docs.withColumn("text", concat(col("text"),
-      when(col("doc_id") % 4 === 1, lit(" " + JunkTokens)).otherwise(lit(""))))
-
-  /** `plantJunk` + label as SQL over `documents` (single-line — see
-    * `plantPiiSql`). */
-  private val plantJunkSql: String =
-    s"text || CASE WHEN doc_id % 4 = 1 THEN ' $JunkTokens' ELSE '' END"
-
-  /** Deterministic eval-leak planting for the p8 composite: a 17-token
-    * sentence on exactly ONE training doc (13) and every 10th eval doc
-    * (403, 413, …). Unique WITHIN train, so the stage-1 substring
-    * scrub (occurrences ≥ 2) leaves it alone and the stage-2
-    * decontaminator provably has work at every SF — the two stages
-    * answer different questions and the plant separates them. */
-  private val LeakSpan =
-    "purple elephants quietly discuss ancient theorems beneath silver " +
-      "moonlight while patient rivers carry forgotten melodies home tonight"
-
-  private def plantLeak(docs: DataFrame): DataFrame =
-    docs.withColumn("text", concat(col("text"),
-      when(col("doc_id") === 13 || (col("doc_id") >= 400 && col("doc_id") % 10 === 3),
-        lit(" " + LeakSpan)).otherwise(lit(""))))
-
-  /** plantSpan ∘ plantJunk ∘ plantLeak as ONE SQL expression over
-    * `documents` (single-line — see `plantPiiSql`); concat order
-    * matches the engine-side composition in p8. */
-  private val plantRecipeSql: String =
-    s"text || CASE WHEN doc_id % 10 = 0 THEN ' $DupSpan' ELSE '' END" +
-      s" || CASE WHEN doc_id % 4 = 1 THEN ' $JunkTokens' ELSE '' END" +
-      s" || CASE WHEN doc_id = 13 OR (doc_id >= 400 AND doc_id % 10 = 3) THEN ' $LeakSpan' ELSE '' END"
-
-  /** One span-scrub pass as DuckDB CTEs — the p8 oracle chain
-    * parameterized so the p12 delta oracle can instantiate it four
-    * times (standing stage 1/2, batch stage 1/2). From words CTE
-    * `src`(doc_id, ws): 15-grams (`${p}g`), a duplicated-gram set
-    * (`${p}dup` := `dupSql`, which may reference `${p}g` or an eval
-    * gram CTE), maximal-island merge on docs matching `cond`, token
-    * excision, re-emit `${p}out`(doc_id, ws) for those docs. */
-  private def scrubChainSql(p: String, src: String, cond: String, dupSql: String): String =
-    s"""${p}g AS (
-       |  SELECT doc_id, t.i - 1 AS pos, md5(array_to_string(ws[t.i:t.i+14], ' ')) AS gh
-       |  FROM $src, unnest(range(1, len(ws)-13)) AS t(i)),
-       |${p}dup AS ($dupSql),
-       |${p}m AS (SELECT doc_id, pos FROM ${p}g JOIN ${p}dup USING (gh) WHERE $cond),
-       |${p}isl AS (
-       |  SELECT doc_id, pos,
-       |         CASE WHEN lag(pos) OVER win IS NULL OR pos - lag(pos) OVER win > 15 THEN 1 ELSE 0 END AS ns
-       |  FROM ${p}m WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
-       |${p}sp AS (
-       |  SELECT doc_id, pos,
-       |         sum(ns) OVER (PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING) AS sid
-       |  FROM ${p}isl),
-       |${p}spans AS (SELECT doc_id, min(pos) AS s, max(pos) + 15 - min(pos) AS l FROM ${p}sp GROUP BY doc_id, sid),
-       |${p}tk AS (
-       |  SELECT doc_id, t.i - 1 AS pos, ws[t.i] AS wd
-       |  FROM $src, unnest(range(1, len(ws)+1)) AS t(i) WHERE $cond),
-       |${p}tkf AS (
-       |  SELECT k.doc_id, k.pos, k.wd FROM ${p}tk k
-       |  WHERE NOT EXISTS (SELECT 1 FROM ${p}spans s
-       |                    WHERE s.doc_id = k.doc_id AND k.pos >= s.s AND k.pos < s.s + s.l)),
-       |${p}out AS (
-       |  SELECT d.doc_id, coalesce(a.ws, CAST([] AS VARCHAR[])) AS ws
-       |  FROM (SELECT doc_id FROM $src WHERE $cond) d
-       |  LEFT JOIN (SELECT doc_id, array_agg(wd ORDER BY pos) AS ws FROM ${p}tkf GROUP BY doc_id) a USING (doc_id))""".stripMargin
 
   /** Stages each `[lo, hi)` slice of `df` (on `idCol`) as one parquet
     * chunk file in a fresh chunks dir with STRICTLY INCREASING
@@ -377,2538 +63,27 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_pricing_summary")(spark, "/root/testdata/sf0.001")
 
-  // ---------------------------------------------------------------- queries
-
-  /** Order-independent rounded money sum: per-row DECIMAL(38,6) cast
-    * before the sum. A double sum is merge-order-dependent, and at sf1
-    * volumes (6M lineitem) the rounded cent digit diverged between
-    * engines/runs; the decimal sum is exact and order-independent, and
-    * the cast itself is deterministic (the product's double error sits
-    * ~8 digits below the 6th decimal for 4-decimal price data). The
-    * oracle-SQL twin is `round(sum(CAST(e AS DECIMAL(38,6))),2)::DOUBLE`. */
-  private def decSum(c: Column): Column =
-    round(sum(c.cast("decimal(38,6)")), 2).cast("double")
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ===== analytics =====================================================
-    "q1_pricing_summary" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          decSum(col("l_quantity")).as("sum_qty"),
-          decSum(col("l_extendedprice")).as("sum_base_price"),
-          decSum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("sum_disc_price"),
-          decSum(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * (lit(1.0) + col("l_tax"))).as("sum_charge"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-
-    // ===== entity graph ==================================================
-    "g1_lookup" -> ((s, dir) => {
-      val g = Tpch.graph(s, dir)
-      val d = g("customer")
-      g.lookup("customer", 42)
-        .select(d.uri.as("id"), col("c_name").as("name"), col("c_acctbal").as("acctbal"))
-    }),
-
-    "g2_outgoing" -> ((s, dir) => {
-      val g = Tpch.graph(s, dir)
-      g.out("customer", Tpch.pNation, col("c_mktsegment") === "BUILDING")
-        .select(col("start"), col("predicate"), col("related"), col("n_name").as("name"))
-        .orderBy("start")
-    }),
-
-    "g3_incoming" -> ((s, dir) => {
-      val g = Tpch.graph(s, dir)
-      g.in("nation", Tpch.pNation, col("n_name") === "NATION_7", Seq("customer", "supplier"))
-        .orderBy("dataset", "related_key")
-    }),
-
-    "g4_two_hop" -> ((s, dir) => {
-      val g = Tpch.graph(s, dir)
-      g.out2("customer", Tpch.pNation, Tpch.pRegion, col("c_custkey") < 50)
-        .select(col("start"), col("related"), col("r_name").as("region_name"))
-        .orderBy("start")
-    }),
-
-    "g5_star_predicate" -> ((s, dir) => {
-      val g = Tpch.graph(s, dir)
-      g.outStar("lineitem", col("l_orderkey") <= 32)
-        .orderBy("start", "predicate", "related")
-    }),
-
-    "g6_dataset_scope" -> ((s, dir) => {
-      val g = Tpch.graph(s, dir)
-      g.in("nation", Tpch.pNation, col("n_name") === "NATION_3", Seq("supplier"))
-        .orderBy("dataset", "related_key")
-    }),
-
-    "g7_namespaces" -> ((s, dir) => {
-      val g = Tpch.graph(s, dir)
-      val d = g("supplier")
-      d.df.select(d.uri.as("id"))
-        .select(col("id"), g.ns.contract(col("id")).as("curie"))
-        .select(col("id"), col("curie"), g.ns.expand(col("curie")).as("expanded"))
-        .orderBy("id")
-    }),
-
-    "g8_details_lookup" -> ((s, dir) => {
-      val g = Tpch.graph(s, dir)
-      g.detailsLookup("part", 7, Seq("p_name", "p_brand", "p_type", "p_size"))
-        .orderBy("property")
-    }),
-
-    "g11_reachability" -> ((s, dir) => {
-      val g = Tpch.graph(s, dir)
-      val start = g("customer").df.filter(col("c_custkey") < 5)
-        .select(g("customer").uri.as("uri"))
-      g.reachable(start, maxHops = 2).orderBy("uri")
-    }),
-
-    "g15_traversal_agg" -> ((s, dir) => {
-      // traversal AGGREGATION (the "javascript query" pattern): per
-      // start lineitem, stats over everything within 2 hops — counts
-      // per depth plus a weighted sum over numeric properties of the
-      // reached entities (order totalprice / part retailprice /
-      // supplier acctbal; nodes without a weight count as 0)
-      val g = Tpch.graph(s, dir)
-      val li = g("lineitem")
-      val start = li.df.filter(col("l_orderkey") < 100).select(li.uri.as("uri"))
-      val reached = g.reachableFrom(start, maxHops = 2).filter(col("depth") > 0)
-      val weights = Seq(
-        ("orders", col("o_totalprice")),
-        ("part", col("p_retailprice")),
-        ("supplier", col("s_acctbal")))
-        .map { case (n, c) =>
-          val d = g(n)
-          d.df.select(d.uri.as("uri"), c.cast("double").as("weight"))
-        }.reduce(_ unionByName _)
-      reached.join(weights, Seq("uri"), "left")
-        .groupBy(col("root"))
-        .agg(count(lit(1)).as("n_reached"),
-          sum(when(col("depth") === 1, 1L).otherwise(0L)).as("n_depth1"),
-          sum(when(col("depth") === 2, 1L).otherwise(0L)).as("n_depth2"),
-          round(sum(coalesce(col("weight"), lit(0.0d))), 2).as("sum_weight"))
-        .orderBy("root")
-    }),
-
-    "g12_traversal_at_time" -> ((s, dir) =>
-      // time-aware inverse traversal over a VERSIONED entity log
-      // (store.go:999 GetManyRelatedEntitiesAtTime): the events table is
-      // the version log — entity = user, token = event_id, ref = the
-      // event_type node, tombstone = an 'error' version. As of token 700
-      // each user's latest version wins; tombstoned refs are suppressed.
-      TimeTravel.inAtTime(events(s, dir), "user_id", "event_id",
-          deleted = col("event_type") === "error", fkCol = "event_type", t = 700,
-          srcNs = "http://graft.io/events/user/",
-          predicate = Tpch.schemaNs + "did",
-          tgtNs = "http://graft.io/events/type/")
-        .orderBy("start", "related_key")),
-
-    "g13_array_refs" -> ((s, dir) => {
-      // multi-valued refs (entity.go: refs: URI | [URI]): a dataset whose
-      // FK column is an ARRAY of order keys; traversal explodes map-side
-      val orders = t(s, dir, "orders")
-      val bundles = orders.filter(col("o_orderkey") <= 320)
-        .groupBy(col("o_custkey"))
-        .agg(sort_array(collect_list(col("o_orderkey"))).as("order_refs"))
-      val g = Tpch.graph(s, dir)
-      val withBundles = EntityGraph(
-        g.datasets + ("customer_bundles" -> graft.model.EntityDataset(
-          "customer_bundles", bundles, "o_custkey", tpchBase + "customer/",
-          refs = Seq(graft.model.Ref(Tpch.pOrder, "order_refs", "orders", array = true)))),
-        g.ns)
-      withBundles.out("customer_bundles", Tpch.pOrder)
-        .select(col("start"), col("predicate"), col("related"), col("o_totalprice"))
-        .orderBy("start", "related")
-    }),
-
-    "g14_paged_incoming" -> ((s, dir) => {
-      // keyset-paged INVERSE traversal: resume strictly past the
-      // (dataset, related_key) continuation token, next 15 rows
-      val g = Tpch.graph(s, dir)
-      g.inPaged("nation", Tpch.pNation, col("n_name") === "NATION_7",
-          scope = Seq("customer", "supplier"),
-          after = Some(("customer", 50L)), pageSize = 15)
-        .orderBy("dataset", "related_key")
-    }),
-
-    "j14_proxy_dataset" -> ((s, dir) => {
-      // proxy dataset (proxydataset.go): nation lives behind a "remote"
-      // wire location; its entities join local datasets in one plan
-      val g = Tpch.graph(s, dir)
-      val loc = java.nio.file.Files.createTempDirectory("graft_proxy_").toString
-      jobs.WireDatasetSink(loc).write(graft.sources.EntityJson.toEntityRows(g, "nation"))
-      val proxy = graft.sources.ProxyDataset("nation", loc)
-      val nat = proxy.flattened(s, Seq((Tpch.schemaNs + "nation/n_name", "n_name")))
-        .select(col("key").cast("int").as("n_nationkey"), col("n_name"))
-      t(s, dir, "customer")
-        .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
-        .filter(col("n_name") === "NATION_5")
-        .select(concat(lit(tpchBase + "customer/"), col("c_custkey")).as("id"),
-          col("c_name").as("name"), col("n_name"))
-        .orderBy("id")
-    }),
-
-    "g10_merge_partials" -> ((s, dir) => {
-      // two datasets sharing the customer id space, each holding a
-      // property subset (reference: partial entities across datasets)
-      val cust = t(s, dir, "customer")
-      val primary = cust.select(col("c_custkey").as("key"), col("c_name").as("name"), col("c_acctbal").as("acctbal"))
-      val contact = cust.filter(pmod(col("c_custkey"), lit(2)) === 0)
-        .select(col("c_custkey").as("key"), col("c_mktsegment").as("segment"))
-      graft.core.Partials.merge(Seq(primary, contact), "key")
-        .select(concat(lit(tpchBase + "customer/"), col("key")).as("id"),
-          col("name"), col("acctbal"), col("segment"))
-        .orderBy("id")
-    }),
-
-    // ===== change log / temporal ========================================
-    "c1_changes_since" -> ((s, dir) => {
-      val changed = ChangeLog.changesSince(events(s, dir), "event_id", 500)
-      changed.select(col("event_id"), graft.ops.Events.tsMicros(changed, "ts").as("ts_us"),
-        col("user_id"), col("event_type"), col("value"))
-    }),
-
-    "c2_latest_only" -> ((s, dir) => {
-      ChangeLog.latestOnly(events(s, dir), "user_id", "event_id")
-        .select(col("user_id"), col("event_id").as("last_event_id"),
-          col("event_type").as("last_type"), col("value").as("last_value"))
-        .orderBy("user_id")
-    }),
-
-    "c3_asof_snapshot" -> ((s, dir) => {
-      ChangeLog.asOf(events(s, dir), "user_id", "event_id", 700)
-        .select(col("user_id"), col("event_id").as("last_event_id"),
-          col("event_type").as("last_type"), col("value").as("last_value"))
-        .orderBy("user_id")
-    }),
-
-    "c4_deleted_tombstones" -> ((s, dir) => {
-      ChangeLog.snapshot(events(s, dir), "user_id", "event_id", col("event_type") === "error")
-        .select(col("user_id"), col("event_id").as("last_event_id"),
-          col("event_type").as("last_type"))
-        .orderBy("user_id")
-    }),
-
-    "c5_compaction_dedup" -> ((s, dir) => {
-      ChangeLog.compactDedup(events(s, dir), "user_id", "event_id", Seq("event_type"))
-        .select("user_id", "event_id", "event_type")
-        .orderBy("user_id", "event_id")
-    }),
-
-    "c7_asof_join" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val probes = ev.select(col("user_id")).distinct()
-        .select(col("user_id"), explode(array(lit(300L), lit(600L), lit(900L))).as("t"))
-      ChangeLog.asOfJoin(ev, "user_id", "event_id", Seq("event_id", "event_type", "value"),
-          probes, "user_id", "t")
-        .select(col("__id").as("user_id"), col("__t").as("t"),
-          col("event_id").as("asof_event_id"), col("event_type").as("asof_type"),
-          col("value").as("asof_value"))
-        .orderBy("user_id", "t")
-    }),
-
-    "c6_changes_count" -> ((s, dir) => {
-      ChangeLog.changesSince(events(s, dir), "event_id", 200)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-        .orderBy("event_type")
-    }),
-
-    "c8_props_extract" -> ((s, dir) =>
-      // semi-structured props payload (the reference keeps arbitrary
-      // props per entity): parse JSON, aggregate the extracted field
-      events(s, dir)
-        .withColumn("k", from_json(col("props"), org.apache.spark.sql.types.StructType.fromDDL("k INT")).getField("k"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum("k").cast("long").as("sum_k"),
-          min("k").as("min_k"), max("k").as("max_k"))
-        .orderBy("event_type")),
-
-    "c10_partitioned_changes" -> ((s, dir) => {
-      // writePartitionedLog promoted to the oracle gate (r17): the log
-      // lands partitioned by coarse token buckets (the 100 TB
-      // /changes?since= storage layout — planning-time directory
-      // pruning on top of row-group min/max pruning), the incremental
-      // read goes THROUGH the partitioned layout, and the rows equal
-      // plain changesSince exactly (the c1 oracle). Bucket size scales
-      // with the log's token range (a footer-level max, not a scan)
-      val ev = events(s, dir)
-      val mx = ev.agg(max("event_id")).head.getLong(0)
-      val bucket = math.max(1L, mx / 8)
-      val path = java.nio.file.Files.createTempDirectory("graft_plog_c10_").toString
-      ChangeLog.writePartitionedLog(ev, "event_id", path, bucket)
-      val changed = ChangeLog.readChangesSince(s, path, "event_id", 500, bucket)
-      changed.select(col("event_id"), graft.ops.Events.tsMicros(changed, "ts").as("ts_us"),
-        col("user_id"), col("event_type"), col("value"))
-    }),
-
-    "c9_retention_gc" -> ((s, dir) =>
-      // GC/retention (garbagecollector.go): drop versions older than
-      // token 9000, keep each entity's latest at-or-before-9000 version
-      ChangeLog.retain(events(s, dir), "user_id", "event_id", 9000)
-        .select(col("user_id"), col("event_id"), col("event_type"), col("value"))
-        .orderBy("user_id", "event_id")),
-
-    "j12_fullsync_deletes" -> ((s, dir) => {
-      // CompleteFullSync (dataset.go:158): the sync batch = entities seen
-      // in the last change window; previously-live entities absent from
-      // it get tombstoned at token 10001. Output = the post-sync
-      // snapshot, which must hide exactly the tombstoned entities.
-      val ev = events(s, dir)
-      val log = ev.withColumn("deleted", col("event_type") === "error")
-      val batch = ev.filter(col("event_id") > 9900).select("user_id")
-      val post = jobs.FullSync.completeFullSync(
-        log, "user_id", "event_id", "deleted", batch, "user_id", 10001L)
-      ChangeLog.snapshot(post, "user_id", "event_id", col("deleted"))
-        .select(col("user_id"), col("event_id").as("last_event_id"),
-          col("event_type").as("last_type"))
-        .orderBy("user_id")
-    }),
-
-    "j17_stream_fullsync" -> ((s, dir) => {
-      // fullsync as a STREAMING job (job.go:99 isFullSync): the same
-      // sync payload as j12, but arriving as chunk files drained through
-      // a checkpointed stream before CompleteFullSync tombstones the
-      // absentees — output must equal the batch fullsync (j12's oracle)
-      val ev = events(s, dir)
-      val log = ev.withColumn("deleted", col("event_type") === "error")
-      val chunks = java.nio.file.Files.createTempDirectory("graft_fs_chunks_").toString
-      ev.filter(col("event_id") > 9900).select("user_id")
-        .repartition(4).write.mode("overwrite").parquet(chunks)
-      val staging = java.nio.file.Files.createTempDirectory("graft_fs_staging_").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_fs_ckpt_").toString
-      val post = OnChange.streamingFullSync(s, log, "user_id", "event_id", "deleted",
-        chunks, "user_id", staging, ckpt, 10001L)
-      ChangeLog.snapshot(post, "user_id", "event_id", col("deleted"))
-        .select(col("user_id"), col("event_id").as("last_event_id"),
-          col("event_type").as("last_type"))
-        .orderBy("user_id")
-    }),
-
-    // ===== jobs ==========================================================
-    "j1_union_source" -> ((s, dir) => {
-      val g = Tpch.graph(s, dir)
-      val cust = g("customer").df.select(
-        g("customer").uri.as("id"), col("c_name").as("name"), col("c_acctbal").as("acctbal"))
-      val supp = g("supplier").df.select(
-        g("supplier").uri.as("id"), col("s_name").as("name"), col("s_acctbal").as("acctbal"))
-      jobs.UnionDatasetSource(Seq("customer" -> cust, "supplier" -> supp)).read(s)
-        .orderBy("dataset", "id")
-    }),
-
-    "j2_multisource_affected" -> ((s, dir) => {
-      val g = Tpch.graph(s, dir)
-      MultiSource.affected(g, "nation", col("n_name").isin("NATION_1", "NATION_2"), Seq(
-          MultiSource.Hop("customer", Tpch.pNation, inverse = true),
-          MultiSource.Hop("orders", Tpch.pCustomer, inverse = true)))
-        .select(g("orders").uri.as("id"), col("o_orderkey"))
-        .orderBy("o_orderkey")
-    }),
-
-    "j3_transform_pipeline" -> ((s, dir) => {
-      val g = Tpch.graph(s, dir)
-      val pipe = Transforms.pipeline(
-        Transforms.renameProperty("p_type", "category"),
-        Transforms.setProperty("margin", round(col("p_retailprice") * 0.1, 2)),
-        Transforms.removeProperty("p_brand"),
-        Transforms.addReference("size_class", Tpch.schemaNs + "size/", col("p_size")),
-        Transforms.newEntityFrom("p_partkey", Tpch.base + "part/",
-          Seq("p_name", "category", "margin", "size_class")))
-      pipe(g("part").df).orderBy("id")
-    }),
-
-    "j18_stats_rollup" -> ((s, dir) => {
-      // the /statistics "all" rollup (reference DOCUMENTATION.md
-      // "Maintenance → statistics": a generated entry summing every
-      // dataset) through the DISTRIBUTED snapshot — one union plan of
-      // count branches, never a per-dataset driver loop; byte stats
-      // are parquet-specific and spec-checked (MaintenanceSpec), the
-      // oracle pins the counts and the rollup sum
-      val reg = new graft.jobs.DatasetRegistry
-      val names = Seq("region", "nation", "customer", "orders")
-      names.foreach(n => reg.put(n, t(s, dir, n)))
-      graft.jobs.Maintenance.statsSnapshot(s, reg,
-          names.map(graft.jobs.Maintenance.Target(_)), seq = 1L)
-        .select(col("dataset"), col("rows").as("n_rows"), col("refresh_seq"))
-        .orderBy("dataset")
-    }),
-
-    "j19_stats_top" -> ((s, dir) => {
-      // `mim stats top` (reference DOCUMENTATION.md "Maintenance →
-      // statistics"): the largest datasets per storage category over a
-      // stats snapshot, generated rollup excluded. Registry-only
-      // targets report no bytes, so the oracle pins the rows category
-      val reg = new graft.jobs.DatasetRegistry
-      val names = Seq("region", "nation", "customer", "orders", "supplier", "part")
-      names.foreach(n => reg.put(n, t(s, dir, n)))
-      val snap = graft.jobs.Maintenance.statsSnapshot(s, reg,
-        names.map(graft.jobs.Maintenance.Target(_)), seq = 1L)
-      graft.jobs.Maintenance.statsTop(snap, k = 3)
-        .select(col("category"), col("dataset"), col("value"), col("rank"))
-        .orderBy("category", "rank")
-    }),
-
-    "j20_job_history" -> ((s, dir) => {
-      // the reference's job run history (internal/jobs/job.go:40
-      // jobResult, scheduler.go:368 GetJobHistory, `mim jobs history`):
-      // every firing of a simulated three-day schedule appends a
-      // history row — job id, firing seq, tick instant, processed
-      // count, last error — and the read is the LATEST run per job
-      // with firing/failure counts. Day 14: rollup-b FAILS loudly (its
-      // source dataset doesn't exist yet — the reference
-      // pipeline_test.go:2010 fixture) and the failure is recorded
-      // without starving copy-a; day 15 the dataset lands and the
-      // SAME job succeeds; weekly-c fires only on the 16th. The
-      // history log is append-only (success overwrites nothing) and
-      // bounded by firings, never data volume.
-      import graft.jobs._
-      import java.time.LocalDateTime
-      val docs = t(s, dir, "documents")
-      val reg = new DatasetRegistry
-      reg.put("raw_a", docs.filter(col("doc_id") % 2 === 0))
-      val sched = new CronScheduler(Seq(
-        CronJob("copy-a", Cron.parse("0 3 * * *"),
-          _ => Job(id = "copy-a", source = RegistrySource(reg, "raw_a"),
-            sink = DatasetSink(reg, "out_a")), () => None),
-        CronJob("rollup-b", Cron.parse("0 3 * * *"),
-          _ => Job(id = "rollup-b",
-            source = FunctionSource { _ =>
-              if (!reg.names.contains("raw_b"))
-                sys.error("dataset does not exist: raw_b")
-              reg.get("raw_b")
-            },
-            sink = DatasetSink(reg, "out_b")), () => None),
-        CronJob("weekly-c", Cron.parse("0 4 16 * *"),
-          _ => Job(id = "weekly-c",
-            source = RegistrySource(reg, "raw_c"),
-            sink = DatasetSink(reg, "out_c")), () => None)),
-        historyTo = Some(JobHistory.DefaultDataset))
-      reg.put("raw_c", docs.filter(col("doc_id") % 5 === 0))
-      def day(d: Int): Unit = {
-        sched.tick(s, reg, LocalDateTime.of(2026, 8, d, 3, 0))
-        sched.tick(s, reg, LocalDateTime.of(2026, 8, d, 4, 0))
-      }
-      day(14)
-      reg.put("raw_b", docs.filter(col("doc_id") % 3 === 0))
-      day(15)
-      day(16)
-      JobHistory.latest(reg).orderBy("job_id")
-    }),
-
-    "j6_stats" -> ((s, dir) => {
-      // /statistics analog: row counts + storage bytes per dataset; the
-      // bytes come from parquet footers (Statistics.parquetDataBytes) —
-      // a metadata walk, not a data scan — and match DuckDB's
-      // parquet_metadata sum exactly
-      val g = Tpch.graph(s, dir)
-      g.datasets.keys.toSeq.sorted
-        .map(n => g(n).df.agg(count(lit(1)).as("n_rows"))
-          .select(lit(n).as("dataset"), col("n_rows"),
-            lit(graft.jobs.Statistics.parquetDataBytes(s, s"$dir/$n.parquet")).as("bytes")))
-        .reduce(_ unionByName _)
-        .orderBy("dataset")
-    }),
-
-    // ===== analytics (cont.) ============================================
-    "q3_top_orders" -> ((s, dir) => {
-      val cust = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-      val ord = t(s, dir, "orders").filter(col("o_orderdate") < lit("1998-06-01").cast("timestamp"))
-      val li = t(s, dir, "lineitem").filter(col("l_shipdate") > lit("1998-06-01").cast("timestamp"))
-      cust.join(ord, col("c_custkey") === col("o_custkey"))
-        .join(li, col("o_orderkey") === col("l_orderkey"))
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2).as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey"))
-        .limit(10)
-        .select(col("l_orderkey"), col("revenue"), date_format(col("o_orderdate"), "yyyy-MM-dd").as("o_date"))
-    }),
-
-    "q5_region_volume" -> ((s, dir) => {
-      val r = broadcast(t(s, dir, "region").filter(col("r_name") === "ASIA"))
-      val n = broadcast(t(s, dir, "nation"))
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders").filter(
-        col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
-      val li = t(s, dir, "lineitem")
-      val sup = broadcast(t(s, dir, "supplier"))
-      r.join(n, col("n_regionkey") === col("r_regionkey"))
-        .join(c, col("c_nationkey") === col("n_nationkey"))
-        .join(o, col("o_custkey") === col("c_custkey"))
-        .join(li, col("l_orderkey") === col("o_orderkey"))
-        .join(sup, col("s_suppkey") === col("l_suppkey") && col("s_nationkey") === col("c_nationkey"))
-        .groupBy("n_name")
-        .agg(decSum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"))
-        .orderBy(col("revenue").desc, col("n_name"))
-    }),
-
-    "q6_forecast_revenue" -> ((s, dir) =>
-      // TPC-H Q6 shape: every predicate reaches the parquet scan
-      // (PushedFilters + row-group pruning), result is a single
-      // map-side-combined aggregate — the minimal full-scan query
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
-          col("l_discount").between(0.05, 0.07) && col("l_quantity") < 24)
-        .agg(decSum(col("l_extendedprice") * col("l_discount")).as("revenue"),
-          count(lit(1)).as("n"))),
-
-    "e1_window_agg" -> ((s, dir) =>
-      Events.tumblingAgg(events(s, dir), "ts", "1 hour", "event_type")
-        .orderBy("window_start", "event_type")),
-
-    "e4_sliding_window" -> ((s, dir) =>
-      Events.slidingAgg(events(s, dir), "ts", "2 hours", "1 hour", "event_type")
-        .orderBy("window_start", "event_type")),
-
-    "e2_sessionize" -> ((s, dir) =>
-      Events.sessionize(events(s, dir), "ts", "user_id", "2 hours")
-        .orderBy("user_id", "session_start_us")),
-
-    "e5_stream_sessions" -> ((s, dir) =>
-      // flatMapGroupsWithState sessionization: closed sessions only —
-      // each user's final (still-open) session stays in the state store,
-      // so the oracle is batch sessionize minus each user's last session
-      OnChange.streamingSessionize(s, s"$dir/events.parquet", gapUs = 7200000000L)
-        .orderBy("user_id", "session_start_us")),
-
-    "e6_funnel" -> ((s, dir) =>
-      // ordered view → click → purchase funnel, 24 h horizon from
-      // first touch: per entered user the three step timestamps (NULL
-      // past the drop-out point) + depth; type filter pushed to the
-      // scan, then two user-keyed join+min rounds — no per-user sort
-      Events.funnel(events(s, dir), "ts", "user_id", "event_type",
-          Seq("view", "click", "purchase"), horizonUs = 86400000000L)
-        .orderBy("user_id")),
-
-    "e7_retention_cohorts" -> ((s, dir) =>
-      // weekly retention triangle: cohort = epoch-week of first event,
-      // each (cohort, offset) cell = cohort members active that many
-      // weeks later; user-keyed min + join + distinct, no window
-      Events.retentionCohorts(events(s, dir), "ts", "user_id",
-          periodUs = 604800000000L)
-        .orderBy("cohort", "period_offset")),
-
-    "e9_retention_delta" -> ((s, dir) => {
-      // e7's operational closure (the standing-state pattern, not a
-      // per-refresh log re-scan): the standing event log builds the
-      // cohort roster + distinct activity cells once; the new batch
-      // (the later half of the log) absorbs in O(batch + matched
-      // rows) — new users insert their cohort, cells dedup against
-      // the standing set — and the read-out equals the one-shot e7
-      // triangle over the union (the d8 identity for retention)
-      val ev = events(s, dir)
-      val tus = Events.tsMicros(ev, "ts")
-      val mm = ev.agg(min(tus).as("mn"), max(tus).as("mx")).head // 1-row agg
-      val mid = (mm.getLong(0) + mm.getLong(1)) / 2
-      val table = graft.core.Tables.scoped("retention_state_e9")
-      Retention.buildRetentionState(ev.filter(tus <= mid), "ts", "user_id",
-        periodUs = 604800000000L, table)
-      Retention.absorbIntoRetentionState(s, ev.filter(tus > mid), "ts", "user_id",
-        table, batchId = 1L)
-      Retention.retentionReadout(s, table)
-        .orderBy("cohort", "period_offset")
-    }),
-
-    "e8_stream_funnel" -> ((s, dir) => {
-      // e6's operational closure: the event log arrives as TIME-ordered
-      // micro-batches (split at the midpoint timestamp — users' steps
-      // genuinely span the boundary); per-user step state advances
-      // across batches and each COMPLETED funnel emits exactly once,
-      // in the batch where the purchase lands — the log is never
-      // re-scanned per refresh. Mid-funnel users stay in the state
-      // store (e5's open-tail discipline), so the oracle is the batch
-      // funnel restricted to depth = 3
-      val ev = events(s, dir)
-      val tus = Events.tsMicros(ev, "ts")
-      val mm = ev.agg(min(tus).as("mn"), max(tus).as("mx")).head // 1-row agg
-      val mid = (mm.getLong(0) + mm.getLong(1)) / 2
-      val chunks = stagePredChunks(ev, Seq(tus <= mid, tus > mid), "ef")
-      OnChange.streamingFunnelDir(s, chunks, Seq("view", "click", "purchase"),
-          horizonUs = 86400000000L)
-        .orderBy("user_id")
-    }),
-
-    // ===== dedup =========================================================
-    "d1_exact_dedup" -> ((s, dir) => {
-      // two overlapping ingest sources -> exact content-hash dedup
-      val docs = t(s, dir, "documents")
-      Dedup.exact(docs.unionByName(docs), "text", "doc_id")
-        .withColumn("kept_id", col("kept_id").cast("long"))
-        .orderBy("content_hash")
-    }),
-
-    "d2_ngram_jaccard" -> ((s, dir) =>
-      Dedup.ngramJaccard(t(s, dir, "documents"), "text", "doc_id", 3, 0.8)
-        .orderBy("a", "b")),
-
-    "d3_minhash_lsh" -> ((s, dir) =>
-      Dedup.minhashLsh(t(s, dir, "documents"), "text", "doc_id", 3,
-          numHashes = 128, bandRows = 4, threshold = 0.8)
-        .orderBy("a", "b")),
-
-    "d27_containment" -> ((s, dir) =>
-      // asymmetric containment over the same shingle index: catches
-      // the partial-copy class (short doc quoted inside a long one)
-      // that symmetric Jaccard structurally misses — c(a→b) = 1 while
-      // jac ≈ |a|/|b|; both directions emitted so a caller tells
-      // "a inside b" from "mutual"
-      Dedup.ngramContainment(t(s, dir, "documents"), "text", "doc_id", 3,
-          threshold = 0.9)
-        .orderBy("a", "b")),
-
-    "d4_simhash" -> ((s, dir) =>
-      // maxDist 10: SimHash proximity is probabilistic, and the planted
-      // jaccard>=0.95 pairs in the fixtures reach Hamming 9 — 10 keeps a
-      // margin; candidates come from C(12,2) chunk-PAIR buckets with
-      // ~11-bit keys (lossless by pigeonhole), so bucket occupancy stays
-      // flat as the corpus grows
-      Dedup.simhashPairs(t(s, dir, "documents"), "text", "doc_id", maxDist = 10)
-        .orderBy("a", "b")),
-
-    "d23_stream_simhash" -> ((s, dir) => {
-      // streaming simhash dedup: docs [400, 600) arrive as two
-      // micro-batches over the standing fingerprint index (the rest of
-      // the corpus); each batch's within-radius pairs are judged
-      // AS-OF-ARRIVAL (corpus so far + own batch), then the batch
-      // absorbs so batch b pairs against batch a through the index
-      // alone — the fifth dedup family's streaming closure
-      val docs = t(s, dir, "documents")
-      val table = graft.core.Tables.scoped("simhash_idx_stream")
-      Dedup.buildSimhashIndex(docs.filter(col("doc_id") < 400 || col("doc_id") >= 600),
-        "text", "doc_id", maxDist = 10, table, buckets = 16)
-      val chunks = stageMicroBatches(docs, "doc_id",
-        Seq((400L, 500L), (500L, 600L)), "sh")
-      val pairs = java.nio.file.Files.createTempDirectory("graft_sh_pairs_").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_sh_ckpt_").toString
-      OnChange.streamingSimhashDedup(s, chunks, "text", "doc_id", 10, table, pairs, ckpt)
-      s.read.parquet(pairs).select("a", "b", "hamming").orderBy("a", "b")
-    }),
-
-    "d22_simhash_delta" -> ((s, dir) => {
-      // incremental simhash near-dup — d4's operational loop, closing
-      // the FIFTH dedup family's build/delta/absorb/compact discipline:
-      // the standing corpus (doc_id < 400) is fingerprinted + key-
-      // exploded once into a bucketed index; the new batch finds every
-      // within-radius pair touching it (batch-internal + batch×corpus)
-      // without the corpus re-fingerprinting or reshuffling
-      val docs = t(s, dir, "documents")
-      val table = graft.core.Tables.scoped("simhash_idx_delta")
-      Dedup.buildSimhashIndex(docs.filter(col("doc_id") < 400), "text", "doc_id",
-        maxDist = 10, table, buckets = 16)
-      Dedup.simhashPairsDelta(s, docs.filter(col("doc_id") >= 400), "text", "doc_id",
-          maxDist = 10, table)
-        .orderBy("a", "b")
-    }),
-
-    "d21_simhash_cert" -> ((s, dir) => {
-      // d4's ANY-SCALE certificate: the full-corpus simhash oracle is
-      // C(n,2)·64-bit quadratic and empirically disk-infeasible at sf1,
-      // so independent verification rides a DETERMINISTIC
-      // md5-thresholded doc sample sized ~400 REGARDLESS of corpus
-      // size (threshold = 400·2³² div n, integer-exact on both
-      // engines). The engine side still runs the real chunk-pair
-      // candidate machinery — so fingerprint computation, candidate
-      // losslessness, and the Hamming cut are all certified on a
-      // representative subset at a cost that never grows past
-      // O(target²) on the oracle side. The count() is one
-      // metadata-sized action that sizes the threshold.
-      val docs = t(s, dir, "documents")
-      val thr = math.min(4294967296L, 400L * 4294967296L / docs.count())
-      val samp = docs.filter(
-        TextAnalysis.sampleHash(col("doc_id"), "cert") < lit(thr))
-      Dedup.simhashPairs(samp, "text", "doc_id", maxDist = 10)
-        .orderBy("a", "b")
-    }),
-
-    "d5_embedding_neardup" -> ((s, dir) => {
-      // plant near-duplicates: a perturbed copy of every vector
-      // (id+10000, first component +0.1 on unit-norm vectors → cosine
-      // ≈ 0.995) so near-dup detection runs on a corpus that actually
-      // contains near-dups. The construction is engine-exact: double
-      // add, one IEEE round back to float — DuckDB reproduces it
-      // bit-for-bit. Default path = LSH candidates → DotProduct verify
-      // (no all-pairs join); the exact all-pairs oracle checks recall=1.
-      val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val perturbed = e.select((col("vec_id") + 10000).as("vec_id"),
-        transform(col("embedding"), (x, i) =>
-          when(i === 0, (x.cast("double") + lit(0.1d)).cast("float")).otherwise(x)).as("embedding"))
-      Dedup.embeddingNearDup(e.unionByName(perturbed), "embedding", "vec_id", 0.9, dims = 64)
-        .orderBy("a", "b")
-    }),
-
-    "d6_dedup_clusters" -> ((s, dir) =>
-      Dedup.clusters(Dedup.ngramJaccard(t(s, dir, "documents"), "text", "doc_id", 3, 0.8))
-        .orderBy("id")),
-
-    "d32_phash_dedup" -> ((s, dir) => {
-      // perceptual-hash image dedup — the key-level media screen
-      // web-scale pipelines run (LAION-style dHash): planted re-ingest
-      // twins are BRIGHTNESS-SHIFTED copies (every printable byte +1 —
-      // different bytes, so d1's exact content hash misses all of
-      // them), but dHash records brightness GRADIENTS, which a uniform
-      // shift leaves bit-identical — the twins surface at Hamming 0.
-      // Pairs ride d4's Manku chunk machinery (exact recall at the
-      // radius, pairs only inside shared chunk buckets)
-      val docs = t(s, dir, "documents")
-      val from = (32 to 126).map(_.toChar).mkString
-      val to = (33 to 127).map(_.toChar).mkString
-      val twins = docs.filter(col("doc_id") % 10 === 0)
-        .withColumn("doc_id", col("doc_id") + 10000000L)
-        .withColumn("text", translate(col("text"), from, to))
-      val fps = Multimodal.dHash(
-        Multimodal.mediaFromDocs(docs.unionByName(twins))).toDF()
-      Dedup.hammingPairs(fps, "doc_id", "phash", maxDist = 6)
-        .orderBy("a", "b")
-    }),
-
-    "d35_audio_phash" -> ((s, dir) => {
-      // perceptual-hash AUDIO dedup — d32's screen applied to the
-      // audio branch (r17 verdict "What's missing #3"): band-energy
-      // gradient hash over the decoded waveform's |amplitude| pooled
-      // into 72 time bands. The planted twins are the d32 byte-shift
-      // re-encodes — the delta synthesis cancels a uniform shift in
-      // every sample except the first, so the twins land at Hamming
-      // ≤ maxDist while exact content-hash dedup sees nothing. Pairs
-      // ride d4's Manku chunk machinery (exact recall at the radius)
-      val docs = t(s, dir, "documents")
-      val from = (32 to 126).map(_.toChar).mkString
-      val to = (33 to 127).map(_.toChar).mkString
-      val twins = docs.filter(col("doc_id") % 10 === 0)
-        .withColumn("doc_id", col("doc_id") + 10000000L)
-        .withColumn("text", translate(col("text"), from, to))
-      val fps = Multimodal.audioHash(
-        Multimodal.audioFromDocs(docs.unionByName(twins))).toDF()
-      Dedup.hammingPairs(fps, "doc_id", "phash", maxDist = 6)
-        .orderBy("a", "b")
-    }),
-
-    "d36_video_phash" -> ((s, dir) => {
-      // perceptual-hash VIDEO dedup — the third branch (r17 "What's
-      // missing #3"): temporal-gradient (motion-signature) hash over
-      // the decoded frame stream — bit (r,c) compares a time×position
-      // cell against the SAME position one time-row later, so the 64
-      // bits record what changes ACROSS frames where d32's dHash
-      // records within-image structure. Brightness-shifted re-encodes
-      // (the d32 twins) land at small Hamming; same chunk-pair
-      // machinery, same exact recall at the radius
-      val docs = t(s, dir, "documents")
-      val from = (32 to 126).map(_.toChar).mkString
-      val to = (33 to 127).map(_.toChar).mkString
-      val twins = docs.filter(col("doc_id") % 10 === 0)
-        .withColumn("doc_id", col("doc_id") + 10000000L)
-        .withColumn("text", translate(col("text"), from, to))
-      val fps = Multimodal.tHash(
-        Multimodal.mediaFromDocs(docs.unionByName(twins))).toDF()
-      Dedup.hammingPairs(fps, "doc_id", "phash", maxDist = 6)
-        .orderBy("a", "b")
-    }),
-
-    "d37_audio_phash_delta" -> ((s, dir) => {
-      // d35's DEPLOYMENT shape — the d33 discipline on the audio
-      // fingerprint: the corpus's band-energy hashes feed the standing
-      // chunk-bucket index (fingerprint-source-agnostic machinery,
-      // unchanged); the byte-shift twin batch probes incrementally —
-      // batch-internal + batch×corpus pairs only, the corpus never
-      // re-decodes or re-fingerprints
-      val docs = t(s, dir, "documents")
-      val from = (32 to 126).map(_.toChar).mkString
-      val to = (33 to 127).map(_.toChar).mkString
-      val twins = docs.filter(col("doc_id") % 10 === 0)
-        .withColumn("doc_id", col("doc_id") + 10000000L)
-        .withColumn("text", translate(col("text"), from, to))
-      val table = graft.core.Tables.scoped("aphash_idx_d37")
-      Dedup.buildFingerprintIndex(
-        Multimodal.audioHash(Multimodal.audioFromDocs(docs)).toDF(),
-        "doc_id", "phash", maxDist = 6, table)
-      Dedup.fingerprintPairsDelta(s,
-          Multimodal.audioHash(Multimodal.audioFromDocs(twins)).toDF(),
-          "doc_id", "phash", maxDist = 6, table)
-        .orderBy("a", "b")
-    }),
-
-    "d38_video_phash_delta" -> ((s, dir) => {
-      // d36's deployment shape — the d33 discipline on the temporal-
-      // gradient video fingerprint, same agnostic index machinery
-      val docs = t(s, dir, "documents")
-      val from = (32 to 126).map(_.toChar).mkString
-      val to = (33 to 127).map(_.toChar).mkString
-      val twins = docs.filter(col("doc_id") % 10 === 0)
-        .withColumn("doc_id", col("doc_id") + 10000000L)
-        .withColumn("text", translate(col("text"), from, to))
-      val table = graft.core.Tables.scoped("vphash_idx_d38")
-      Dedup.buildFingerprintIndex(
-        Multimodal.tHash(Multimodal.mediaFromDocs(docs)).toDF(),
-        "doc_id", "phash", maxDist = 6, table)
-      Dedup.fingerprintPairsDelta(s,
-          Multimodal.tHash(Multimodal.mediaFromDocs(twins)).toDF(),
-          "doc_id", "phash", maxDist = 6, table)
-        .orderBy("a", "b")
-    }),
-
-    "d33_phash_delta" -> ((s, dir) => {
-      // d32's DEPLOYMENT shape: the corpus's perceptual hashes feed a
-      // standing chunk-bucket index (built once per snapshot — the d4
-      // index machinery, fingerprint-source-agnostic); the re-ingest
-      // batch (the brightness-shifted twins) probes it incrementally —
-      // batch-internal + batch×corpus pairs only, the corpus never
-      // re-fingerprints. Oracle = the d32 one-shot restricted to
-      // batch-touching pairs (the d8 identity)
-      val docs = t(s, dir, "documents")
-      val from = (32 to 126).map(_.toChar).mkString
-      val to = (33 to 127).map(_.toChar).mkString
-      val twins = docs.filter(col("doc_id") % 10 === 0)
-        .withColumn("doc_id", col("doc_id") + 10000000L)
-        .withColumn("text", translate(col("text"), from, to))
-      val table = graft.core.Tables.scoped("phash_idx_d33")
-      Dedup.buildFingerprintIndex(
-        Multimodal.dHash(Multimodal.mediaFromDocs(docs)).toDF(),
-        "doc_id", "phash", maxDist = 6, table)
-      Dedup.fingerprintPairsDelta(s,
-          Multimodal.dHash(Multimodal.mediaFromDocs(twins)).toDF(),
-          "doc_id", "phash", maxDist = 6, table)
-        .orderBy("a", "b")
-    }),
-
-    "d34_stream_phash" -> ((s, dir) => {
-      // the perceptual-hash family's STREAMING closure (the d23 loop,
-      // fingerprint-agnostic): brightness-shifted re-ingest twins
-      // arrive as two micro-batches over the standing phash index;
-      // each batch's within-radius pairs are judged AS-OF-ARRIVAL,
-      // then the batch absorbs so batch b pairs against batch a
-      // through the index alone. Oracle = the one-shot d32 chain
-      // restricted to twin-touching pairs (the streamed union covers
-      // each such pair exactly once, at its later endpoint's batch)
-      val docs = t(s, dir, "documents")
-      val from = (32 to 126).map(_.toChar).mkString
-      val to = (33 to 127).map(_.toChar).mkString
-      val twins = docs.filter(col("doc_id") % 10 === 0)
-        .withColumn("doc_id", col("doc_id") + 10000000L)
-        .withColumn("text", translate(col("text"), from, to))
-      val table = graft.core.Tables.scoped("phash_idx_stream")
-      Dedup.buildFingerprintIndex(
-        Multimodal.dHash(Multimodal.mediaFromDocs(docs)).toDF(),
-        "doc_id", "phash", maxDist = 6, table, buckets = 16)
-      val chunks = stagePredChunks(twins,
-        Seq((col("doc_id") - 10000000L) % 20 === 0,
-          (col("doc_id") - 10000000L) % 20 === 10), "ph")
-      val pairs = java.nio.file.Files.createTempDirectory("graft_ph_pairs_").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ph_ckpt_").toString
-      OnChange.streamingFingerprintDedup(s, chunks, "doc_id", "phash", 6,
-        table, pairs, ckpt,
-        b => Multimodal.dHash(Multimodal.mediaFromDocs(b)).toDF())
-      s.read.parquet(pairs).select("a", "b", "hamming").orderBy("a", "b")
-    }),
-
-    "d31_url_dedup" -> ((s, dir) =>
-      // key-level dedup BEFORE content dedup — the step real web
-      // pipelines (CCNet lineage) run first: canonicalize the planted
-      // URL surface forms (case, www, default port, fragment, tracking
-      // params, param order, trailing slash — all transport noise;
-      // scheme is SEMANTIC, so the https twin stays distinct) and
-      // keep-first per canonical key. Map-only normalization (pure
-      // built-ins, full codegen) + ONE hash-agg shuffle
-      Dedup.urlDedup(plantUrl(t(s, dir, "documents")), "url", "doc_id")
-        .orderBy("canonical_url")),
-
-    "d30_media_neardup" -> ((s, dir) => {
-      // near-dup media removal at ingest — PURE COMPOSITION, zero new
-      // machinery (the point): m4's media embeddings feed a standing
-      // IVF index; a re-ingest batch (perturbed variants of the first
-      // 100 docs' rasters — the d5/d14 construction, offset past any
-      // doc id) screens through d14's semantic-dedup delta against
-      // that index; the surfaced pairs cluster (d6's components) and
-      // each near-dup cluster keeps its best variant by a media
-      // quality stat (d25's policy; the first window-sum dim — the
-      // perturbed re-encode scores fractionally higher, so keep-best
-      // genuinely decides, not just tie-breaks). 0.9999 cosine: raster
-      // window-sums of same-length text are correlated, so the
-      // near-dup bar sits above the background (measured ~0.999)
-      val emb = Multimodal.embed(Multimodal.mediaFromDocs(t(s, dir, "documents"))).toDF()
-      val table = graft.core.Tables.scoped("ivf_idx_d30")
-      Ann.buildIvfIndex(emb, "embedding", "doc_id", table)
-      val batch = graft.ann.SemDedup.perturbedBatch(emb, "embedding", "doc_id",
-        offset = 10000000L)
-      val pairs = graft.ann.SemDedup.semanticDedupDelta(
-        s, batch, "embedding", "doc_id", table, 0.9999)
-      val quality = emb.select(col("doc_id").as("id"),
-          round(element_at(col("embedding"), 1).cast("double"), 4).as("quality"))
-        .unionByName(batch.select(col("doc_id").as("id"),
-          round(element_at(col("embedding"), 1).cast("double"), 4).as("quality")))
-      Dedup.keepBest(Dedup.clusters(pairs), quality, "id", "quality")
-        .orderBy("cluster_id")
-    }),
-
-    "d25_keep_best" -> ((s, dir) => {
-      // dedup DECISION by quality: near-dup clusters (d6's components)
-      // ranked by the x2 heuristic score — keep each cluster's best
-      // member (score desc, id asc), the keep-best policy real web
-      // pipelines apply where keepCanonical/keep-first would keep an
-      // arbitrary or merely-earliest copy. Oracle composes the d6
-      // recursive-component chain with the x2 quality chain over ONE
-      // shared words CTE.
-      val docs = t(s, dir, "documents")
-      val cl = Dedup.clusters(Dedup.ngramJaccard(docs, "text", "doc_id", 3, 0.8))
-      val q = TextAnalysis.qualityScore(docs, "text", "doc_id")
-        .select(col("doc_id"), col("quality"))
-      Dedup.keepBest(cl, q, "doc_id", "quality").orderBy("cluster_id")
-    }),
-
-    "p22_leak_split" -> ((s, dir) => {
-      // LEAK-PROOF eval split: the split decision is made per near-dup
-      // CLUSTER (d6's components; singletons are their own rep), so no
-      // near-dup pair can ever cross the train/eval boundary — the
-      // contamination d9/d20/d26 report after the fact, prevented at
-      // split time
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.ngramJaccard(docs, "text", "doc_id", 3, 0.8)
-      Dedup.leakProofSplit(docs, "doc_id", pairs, holdBp = 2000)
-        .select("doc_id", "cluster_id", "split")
-        .orderBy("doc_id")
-    }),
-
-    "p25_split_drift" -> ((s, dir) => {
-      // bridge-drift monitor for the one-shot leak-proof split (p22's
-      // documented limitation as a MONITORED SIGNAL): the standing
-      // corpus (doc_id < 400) is clustered and split once; the delta
-      // batch — new docs (doc_id >= 400) PLUS re-emits of docs 0..19
-      // carrying donor text from docs 200..219 (deterministic plant,
-      // mirrored in the oracle) — produces its d8-shaped delta pairs,
-      // and every pair bridging two standing clusters surfaces with
-      // each side's split verdict: true = leak materialized (re-split
-      // due), false = same-side growth, null = a side the standing
-      // split never saw (new cluster)
-      val docs = t(s, dir, "documents")
-      val standing = docs.filter(col("doc_id") < 400)
-      val table = graft.core.Tables.scoped("shingle_idx_drift")
-      Dedup.buildShingleIndex(standing, "text", "doc_id", 3, table, buckets = 16)
-      val assign = Dedup.clusters(Dedup.ngramJaccard(standing, "text", "doc_id", 3, 0.8))
-      val splits = Dedup.leakProofSplitAssigned(standing, "doc_id", assign, holdBp = 2000)
-        .select(col("cluster_id"), col("split")).distinct()
-      val donor = docs.select((col("doc_id") - 200).as("doc_id"), col("text").as("__t"))
-      val reem = docs.filter(col("doc_id") < 20).drop("text")
-        .join(donor, Seq("doc_id")).withColumnRenamed("__t", "text")
-      val batch = reem.unionByName(docs.filter(col("doc_id") >= 400))
-      val batchPairs = Dedup.ngramJaccardDelta(s, batch, "text", "doc_id", 3, 0.8, table)
-      Dedup.splitDriftProbe(batchPairs, assign, splits)
-        .withColumn("crosses_split_boundary", col("crosses_split_boundary").cast("int"))
-        .orderBy("a", "b")
-    }),
-
-    "d8_dedup_delta" -> ((s, dir) => {
-      // incremental ingest: the standing corpus (doc_id < 400) is
-      // indexed once; the new batch dedups against the index + itself —
-      // corpus × corpus never re-runs
-      val docs = t(s, dir, "documents")
-      val table = graft.core.Tables.scoped("shingle_idx_delta")
-      Dedup.buildShingleIndex(docs.filter(col("doc_id") < 400), "text", "doc_id", 3, table, buckets = 16)
-      Dedup.ngramJaccardDelta(s, docs.filter(col("doc_id") >= 400), "text", "doc_id", 3, 0.8, table)
-        .orderBy("a", "b")
-    }),
-
-    "d28_containment_delta" -> ((s, dir) => {
-      // d27's deployment shape — the quote/excerpt screen run per
-      // ingest batch: the standing corpus (doc_id < 400) is indexed
-      // once (the d8 index; `_sizes` already holds the |S|
-      // denominators containment needs); the batch's partial-copy
-      // pairs come from the bucket-riding batch×corpus join + the
-      // batch self-join — the corpus never re-tokenizes. MinHash can't
-      // estimate containment (the sketch is symmetric), so this exact
-      // indexed delta IS the scale path, verified by the one-shot d27
-      val docs = t(s, dir, "documents")
-      val table = graft.core.Tables.scoped("shingle_idx_cont_delta")
-      Dedup.buildShingleIndex(docs.filter(col("doc_id") < 400), "text", "doc_id", 3, table, buckets = 16)
-      Dedup.containmentDelta(s, docs.filter(col("doc_id") >= 400), "text", "doc_id", 3, 0.9, table)
-        .orderBy("a", "b")
-    }),
-
-    "d29_stream_containment" -> ((s, dir) => {
-      // streaming containment screening — the d10 loop with the
-      // quote/excerpt screen as the per-batch pair generator: docs
-      // [400, 600) arrive as two micro-batches over the standing
-      // shingle index; each batch's containment pairs are judged
-      // AS-OF-ARRIVAL (corpus so far + own batch), then the batch
-      // absorbs so batch b screens against batch a through the index
-      // alone — the containment family's streaming closure
-      val docs = t(s, dir, "documents")
-      val table = graft.core.Tables.scoped("shingle_idx_cont_stream")
-      Dedup.buildShingleIndex(docs.filter(col("doc_id") < 400 || col("doc_id") >= 600),
-        "text", "doc_id", 3, table, buckets = 16)
-      val chunks = stageMicroBatches(docs, "doc_id",
-        Seq((400L, 500L), (500L, 600L)), "ct")
-      val pairs = java.nio.file.Files.createTempDirectory("graft_ct_pairs_").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ct_ckpt_").toString
-      OnChange.streamingContainment(s, chunks, "text", "doc_id", 3, 0.9, table, pairs, ckpt)
-      s.read.parquet(pairs).select("a", "b", "inter", "cont_ab", "cont_ba")
-        .orderBy("a", "b")
-    }),
-
-    "d10_stream_dedup" -> ((s, dir) => {
-      // streaming incremental dedup: the batch stream dedups against the
-      // standing index and is absorbed into it batch by batch — the
-      // union of per-batch pairs must equal the one-shot delta (d8's
-      // oracle), with cross-batch pairs surfacing exactly once
-      // streamed region = docs [400, 600): batches stay small next to
-      // the corpus (the operational regime) at every SF
-      val docs = t(s, dir, "documents")
-      val table = graft.core.Tables.scoped("shingle_idx_stream")
-      Dedup.buildShingleIndex(docs.filter(col("doc_id") < 400 || col("doc_id") >= 600),
-        "text", "doc_id", 3, table, buckets = 16)
-      val chunks = stageMicroBatches(docs, "doc_id",
-        Seq((400L, 500L), (500L, 600L)), "dd")
-      val pairs = java.nio.file.Files.createTempDirectory("graft_dd_pairs_").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_dd_ckpt_").toString
-      OnChange.streamingDedupDelta(s, chunks, "text", "doc_id", 3, 0.8, table, pairs, ckpt)
-      s.read.parquet(pairs).select("a", "b", "jac").orderBy("a", "b")
-    }),
-
-    "d11_stream_embed_dedup" -> ((s, dir) => {
-      // streaming embedding dedup: perturbed near-dup copies of
-      // vec_id < 100 arrive as two micro-batches, dedup against the
-      // standing sketch index (batch × corpus rides the buckets), and
-      // absorb — the union of per-batch pairs must equal the one-shot
-      // exact pair set involving streamed ids (recall 1 at 0.9, as d5)
-      val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val perturbed = e.filter(col("vec_id") < 100)
-        .select((col("vec_id") + 10000).as("vec_id"),
-          transform(col("embedding"), (x, i) =>
-            when(i === 0, (x.cast("double") + lit(0.1d)).cast("float")).otherwise(x)).as("embedding"))
-      val table = graft.core.Tables.scoped("ann_idx_stream_d11")
-      Ann.buildAnnIndex(e, "embedding", "vec_id", dims = 64, table, tables = 8, bits = 8, buckets = 16)
-      val chunks = stageMicroBatches(perturbed, "vec_id",
-        Seq((10000L, 10050L), (10050L, 10100L)), "vd")
-      val pairs = java.nio.file.Files.createTempDirectory("graft_vd_pairs_").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_vd_ckpt_").toString
-      OnChange.streamingVectorDedup(s, chunks, "embedding", "vec_id", table, 0.9, pairs, ckpt)
-      s.read.parquet(pairs).select("a", "b", "sim").orderBy("a", "b")
-    }),
-
-    "d9_contamination" -> ((s, dir) => {
-      // decontamination: per eval doc, the fraction of its 3-grams that
-      // appear anywhere in the training split — high containment = the
-      // doc leaked into training data
-      val docs = t(s, dir, "documents")
-      Dedup.contamination(docs.filter(col("doc_id") < 400),
-          docs.filter(col("doc_id") >= 400), "text", "doc_id", 3)
-        .orderBy("id")
-    }),
-
-    "d13_boilerplate" -> ((s, dir) =>
-      // cross-doc boilerplate spans: 3-grams occurring in >= 3 docs;
-      // per-doc ratio of shared spans (template/mirror detector)
-      Dedup.boilerplate(t(s, dir, "documents"), "text", "doc_id", 3, 3)
-        .orderBy("id")),
-
-    "d16_substring_dedup" -> ((s, dir) =>
-      // exact substring dedup (Lee et al. 2021): maximal >= 15-token
-      // spans occurring more than once anywhere in the corpus, as
-      // (doc, span_start, span_len); a fixed 22-token sentence is
-      // planted on every 10th doc so duplicated spans provably exist
-      // at every SF, on top of whatever the corpus shares naturally
-      Dedup.substringSpans(plantSpan(t(s, dir, "documents")), "text", "doc_id", 15)
-        .orderBy("id", "span_start")),
-
-    "d18_substring_delta" -> ((s, dir) => {
-      // incremental exact-substring dedup — d16's operational loop:
-      // the standing corpus (doc_id < 400) is gram-indexed once; the
-      // new batch finds its duplicated spans against the index + itself
-      // without the corpus re-tokenizing or reshuffling. Planted spans
-      // land on every 10th doc, so cross (batch gram duplicated only in
-      // the corpus) and batch-internal duplication both provably exist
-      val docs = plantSpan(t(s, dir, "documents"))
-      val table = graft.core.Tables.scoped("gram_idx_delta")
-      Dedup.buildGramIndex(docs.filter(col("doc_id") < 400), "text", "doc_id", 15,
-        table, buckets = 16)
-      Dedup.substringSpansDelta(s, docs.filter(col("doc_id") >= 400), "text", "doc_id", 15, table)
-        .orderBy("id", "span_start")
-    }),
-
-    "d20_decontaminate" -> ((s, dir) => {
-      // span-level eval decontamination (GPT-3 §C): every maximal
-      // ≥ 15-gram span of a TRAINING doc (< 400) that overlaps the
-      // eval set (≥ 400) — one eval occurrence marks (the eval copy is
-      // what matters). Planted sentences land on every 10th doc, so
-      // train/eval overlap provably exists at every SF
-      val docs = plantSpan(t(s, dir, "documents"))
-      Dedup.decontaminateSpans(docs.filter(col("doc_id") < 400),
-          docs.filter(col("doc_id") >= 400), "text", "doc_id", 15)
-        .orderBy("id", "span_start")
-    }),
-
-    "d24_bloom_decontaminate" -> ((s, dir) => {
-      // d20 through the broadcast-Bloom prefilter — the 100 TB shape
-      // when the eval gram set outgrows an exact broadcast: train grams
-      // probe the sketch map-side, only fpp·grams + matches reach the
-      // exact verify shuffle. RESULT-IDENTICAL to d20 by construction
-      // (no false negatives; exact join kills false positives), so it
-      // shares d20's oracle verbatim
-      val docs = plantSpan(t(s, dir, "documents"))
-      Dedup.bloomDecontaminateSpans(docs.filter(col("doc_id") < 400),
-          docs.filter(col("doc_id") >= 400), "text", "doc_id", 15, fpp = 0.01)
-        .orderBy("id", "span_start")
-    }),
-
-    "d19_stream_substring" -> ((s, dir) => {
-      // streaming substring dedup: docs [400, 600) arrive as two
-      // micro-batches over the standing gram index (the rest of the
-      // corpus); each batch's spans are judged AS-OF-ARRIVAL (corpus so
-      // far + own batch — the keep-first/drop-later policy), then the
-      // batch absorbs so batch b counts batch a's grams through the
-      // index alone. Planted spans guarantee cross-batch duplication
-      val docs = plantSpan(t(s, dir, "documents"))
-      val table = graft.core.Tables.scoped("gram_idx_stream")
-      Dedup.buildGramIndex(docs.filter(col("doc_id") < 400 || col("doc_id") >= 600),
-        "text", "doc_id", 15, table, buckets = 16)
-      val chunks = stageMicroBatches(docs, "doc_id",
-        Seq((400L, 500L), (500L, 600L)), "sg")
-      val spans = java.nio.file.Files.createTempDirectory("graft_sg_spans_").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_sg_ckpt_").toString
-      OnChange.streamingSubstringDedup(s, chunks, "text", "doc_id", 15, table, spans, ckpt)
-      s.read.parquet(spans).select("id", "span_start", "span_len")
-        .orderBy("id", "span_start")
-    }),
-
-    "d14_semantic_delta" -> ((s, dir) => {
-      // incremental semantic dedup: the standing inverted file carries
-      // the frozen quantizer; a batch of NEW vectors (perturbed copies
-      // of ids < 100, the d5 construction) routes to its cells and
-      // pairs only against cell members + itself — corpus × corpus
-      // never runs, nothing re-trains
-      val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val batch = graft.ann.SemDedup.perturbedBatch(e, "embedding", "vec_id")
-      val table = graft.core.Tables.scoped("ivf_idx_d14")
-      Ann.buildIvfIndex(e, "embedding", "vec_id", table)
-      graft.ann.SemDedup.semanticDedupDelta(s, batch, "embedding", "vec_id", table, 0.9)
-        .orderBy("a", "b")
-    }),
-
-    "d26_semantic_decon" -> ((s, dir) => {
-      // semantic train/eval decontamination — the decon triad's third
-      // member (d9 n-gram containment, d20/d24 span excision, this the
-      // REPHRASED leak neither sees): the eval set is perturbed copies
-      // of train vectors (the rephrase analog, d5's construction);
-      // eval routes to its nprobe = 2 nearest cells under the standing
-      // train index's frozen quantizer (the recall knob a decon run
-      // turns up: a rephrasing that drifted across a cell boundary is
-      // still caught) and flags the train members ≥ 0.9 cosine — the
-      // train corpus never reshuffles or re-trains
-      val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val eval = graft.ann.SemDedup.perturbedBatch(e, "embedding", "vec_id")
-      val table = graft.core.Tables.scoped("ivf_idx_d26")
-      Ann.buildIvfIndex(e, "embedding", "vec_id", table)
-      graft.ann.SemDedup.semanticDecontaminate(s, eval, "embedding", "vec_id", table, 0.9,
-          nprobe = 2)
-        .orderBy("id")
-    }),
-
-    "d17_stream_semantic" -> ((s, dir) => {
-      // streaming semantic ingest: d14's delta through the OnChange
-      // loop — the perturbed batch (d5 construction, ids +10000)
-      // arrives as two micro-batches; each routes under the frozen
-      // quantizer, pairs against its cells, and is absorbed, so the
-      // second batch pairs against the first through the index alone;
-      // the union of per-batch pairs must equal the one-shot delta
-      // (d14's oracle)
-      val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val batch = graft.ann.SemDedup.perturbedBatch(e, "embedding", "vec_id")
-      val table = graft.core.Tables.scoped("ivf_idx_d17")
-      Ann.buildIvfIndex(e, "embedding", "vec_id", table)
-      val chunks = stageMicroBatches(batch, "vec_id",
-        Seq((10000L, 10050L), (10050L, 10100L)), "sd")
-      val pairs = java.nio.file.Files.createTempDirectory("graft_sd_pairs_").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_sd_ckpt_").toString
-      OnChange.streamingSemanticDedup(s, chunks, "embedding", "vec_id", table, 0.9, pairs, ckpt)
-      s.read.parquet(pairs).select("a", "b", "sim").orderBy("a", "b")
-    }),
-
-    "d15_semantic_indexed" -> ((s, dir) => {
-      // d12 against the standing inverted file (deployment shape):
-      // same trained quantizer → identical output, so it shares d12's
-      // oracle; the bucketed cid self-join runs shuffle-free
-      val table = graft.core.Tables.scoped("ivf_idx_d15")
-      Ann.buildIvfIndex(t(s, dir, "embeddings"), "embedding", "vec_id", table)
-      graft.ann.SemDedup.semanticDedupIndexed(s, table, 0.4)
-        .orderBy("id")
-    }),
-
-    "d12_semantic_dedup" -> ((s, dir) =>
-      // SemDeDup: k-means cells route the near-dup scan — pairs are
-      // only generated inside a cluster, so the corpus shuffles once on
-      // cid instead of the d7 all-pairs kernel; drop rule = smaller-id
-      // representative wins at >= 0.4 cosine
-      graft.ann.SemDedup.semanticDedup(t(s, dir, "embeddings"), "embedding", "vec_id",
-          nlist = 16, rounds = 2, threshold = 0.4)
-        .orderBy("id")),
-
-    "d7_embedding_simjoin" -> ((s, dir) =>
-      // EXACT similarity join at a moderate threshold (LSH recall can't
-      // reach 1 down here) — block-pair replication: no broadcast of the
-      // corpus, no BNLJ, shuffle = n*blocks rows
-      Dedup.embeddingSimJoin(t(s, dir, "embeddings"), "embedding", "vec_id", 0.4)
-        .orderBy("a", "b")),
-
-    // ===== similarity search ============================================
-    "s1_ann_bruteforce" -> ((s, dir) =>
-      Ann.bruteForceTopK(t(s, dir, "embeddings"), "embedding", "vec_id",
-          col("id") < 10, k = 5)
-        .orderBy("query_id", "rnk")),
-
-    "s4_ann_indexed" -> ((s, dir) => {
-      // ANN against the standing sketch index (deployment shape):
-      // result must equal s2's recompute-everything path, so it shares
-      // s2's end-to-end oracle
-      val table = graft.core.Tables.scoped("ann_idx_s4")
-      Ann.buildAnnIndex(t(s, dir, "embeddings"), "embedding", "vec_id", dims = 64, table)
-      Ann.lshTopKIndexed(s, table, queryFilter = col("id") < 10, k = 5)
-        .orderBy("query_id", "rnk")
-    }),
-
-    "s2_ann_lsh" -> ((s, dir) =>
-      Ann.lshTopK(t(s, dir, "embeddings"), "embedding", "vec_id", dims = 64,
-          queryFilter = col("id") < 10, k = 5)
-        .orderBy("query_id", "rnk")),
-
-    "s7_ann_pq" -> ((s, dir) =>
-      // product-quantized ANN: per-subspace k-means codebooks, corpus
-      // stored as m codes (32× compression), full-precision queries
-      // score reconstructions (ADC) — train/encode/score in one plan
-      graft.ann.Pq.pqTopK(t(s, dir, "embeddings"), "embedding", "vec_id",
-          queryFilter = col("id") < 10, k = 5, dims = 64)
-        .orderBy("query_id", "rnk")),
-
-    "s9_ivfpq_indexed" -> ((s, dir) => {
-      // IVF×PQ: the billion-vector layout — trained cells route the
-      // probe, PQ codes inside each cell carry the ADC scan, full
-      // vectors only surface for the shortlist rerank
-      val table = graft.core.Tables.scoped("ivfpq_idx_s9")
-      graft.ann.IvfPq.buildIvfPqIndex(t(s, dir, "embeddings"), "embedding", "vec_id",
-        table, dims = 64)
-      graft.ann.IvfPq.ivfPqTopKIndexed(s, table, t(s, dir, "embeddings"), "embedding", "vec_id",
-          queryFilter = col("id") < 10, k = 5)
-        .orderBy("query_id", "rnk")
-    }),
-
-    "s11_filtered_ivfpq" -> ((s, dir) => {
-      // filtered search on the billion-vector layout: the label rides
-      // the codes table; non-qualifying codes are cut map-side BEFORE
-      // the ADC stage, so they are never decoded and cannot starve the
-      // shortlist or the final k
-      val table = graft.core.Tables.scoped("ivfpq_idx_s11")
-      graft.ann.IvfPq.buildIvfPqIndex(t(s, dir, "embeddings"), "embedding", "vec_id",
-        table, dims = 64, keep = Seq("label"))
-      graft.ann.IvfPq.ivfPqTopKIndexed(s, table, t(s, dir, "embeddings"), "embedding", "vec_id",
-          queryFilter = col("id") < 10, k = 5, neighborPred = col("label") === 1)
-        .orderBy("query_id", "rnk")
-    }),
-
-    "s10_filtered_ann" -> ((s, dir) => {
-      // FILTERED vector search (hybrid metadata+vector retrieval): the
-      // label column is stored INLINE in the inverted file, so the
-      // attribute predicate is a map-side filter on the bucketed scan
-      // (pre-filtering — the top-k ranks only qualifying neighbors)
-      val table = graft.core.Tables.scoped("ivf_idx_s10")
-      Ann.buildIvfIndex(t(s, dir, "embeddings"), "embedding", "vec_id", table,
-        keep = Seq("label"))
-      Ann.ivfTopKIndexed(s, table, queryFilter = col("id") < 10, k = 5,
-          neighborPred = col("label") === 1)
-        .orderBy("query_id", "rnk")
-    }),
-
-    "s8_ann_pq_indexed" -> ((s, dir) => {
-      // PQ against the STANDING index (deployment shape): codes +
-      // codebook companion are built once; the probe ADC-scans stored
-      // codes and reranks the shortlist — identical output to s7, so it
-      // shares s7's from-scratch oracle
-      val table = graft.core.Tables.scoped("pq_idx_s8")
-      graft.ann.Pq.buildPqIndex(t(s, dir, "embeddings"), "embedding", "vec_id", table, dims = 64)
-      graft.ann.Pq.pqTopKIndexed(s, table, t(s, dir, "embeddings"), "embedding", "vec_id",
-          queryFilter = col("id") < 10, k = 5)
-        .orderBy("query_id", "rnk")
-    }),
-
-    // ===== text analysis ================================================
-    "x1_langid" -> ((s, dir) =>
-      TextAnalysis.langId(t(s, dir, "documents"), "text", "doc_id").orderBy("doc_id")),
-
-    "x2_quality_score" -> ((s, dir) =>
-      TextAnalysis.qualityScore(t(s, dir, "documents"), "text", "doc_id").orderBy("doc_id")),
-
-    "x3_token_count" -> ((s, dir) =>
-      TextAnalysis.tokenCounts(t(s, dir, "documents"), "text", "doc_id").orderBy("doc_id")),
-
-    "x4_fingerprint" -> ((s, dir) =>
-      TextAnalysis.fingerprints(t(s, dir, "documents"), "text", "doc_id").orderBy("doc_id")),
-
-    "x5_repetition" -> ((s, dir) =>
-      TextAnalysis.repetition(t(s, dir, "documents"), "text", "doc_id").orderBy("doc_id")),
-
-    "x6_keywords" -> ((s, dir) =>
-      TextAnalysis.keywords(t(s, dir, "documents"), "text", "doc_id", 3)
-        .orderBy("doc_id", "rnk")),
-
-    "x7_pii_scrub" -> ((s, dir) =>
-      // the corpus is synthetic word salad, so PII is PLANTED
-      // deterministically (the d5 idiom: identical construction in the
-      // oracle) and then scrubbed by the map-only redaction pass
-      TextAnalysis.piiScrub(plantPii(t(s, dir, "documents")), "text", "doc_id")
-        .orderBy("doc_id")),
-
-    "x8_bpe_tokens" -> ((s, dir) =>
-      // vocab-driven token counting: the REAL BPE merge loop (x3's
-      // regex count is the heuristic fallback) under the checked-in
-      // corpus-trained merges table, fused into one codegen'd map-only
-      // kernel — the number mixture/budget accounting downstream uses
-      graft.text.Bpe.tokenCounts(t(s, dir, "documents"), "text", "doc_id",
-          graft.text.Bpe.DefaultMerges)
-        .orderBy("doc_id")),
-
-    "x12_bpe_encode" -> ((s, dir) => {
-      // the tokenizer's LOADER output: per doc the flat BPE token-ID
-      // sequence (x8 is its counting shadow — same segmentation loop,
-      // so the sequence length equals the count by construction) under
-      // the public id contract: 0–35 the fixed base alphabet a..z0..9,
-      // 36+r for merge r. One codegen'd map-only projection; exploded
-      // to (doc_id, pos, token_id) scalar rows for the exact compare
-      val docs = t(s, dir, "documents")
-      docs.select(col("doc_id"),
-          posexplode(graft.text.Bpe.bpeEncode(TextAnalysis.words(col("text")),
-            graft.text.Bpe.DefaultMerges)).as(Seq("pos", "token_id")))
-        .select(col("doc_id"), col("pos").cast("long").as("pos"),
-          col("token_id").cast("int").as("token_id"))
-        .orderBy("doc_id", "pos")
-    }),
-
-    "x13_bpe_encode_deep" -> ((s, dir) => {
-      // the REALISTIC-vocab encode: x12's loader output under (a) the
-      // byte-level id contract — base ids 0–255 ARE the byte values,
-      // merge r at 256+r, the GPT-2-style base that needs no
-      // per-deployment alphabet — and (b) a 4096-merge table trained
-      // by trainFast on the deterministic deep corpus (the synthetic
-      // corpus's own closure exhausts in double digits; applying a
-      // foreign tokenizer's deep vocab IS the deployment). Same
-      // codegen'd map-only kernel; counting shadow unchanged
-      val docs = t(s, dir, "documents")
-      docs.select(col("doc_id"),
-          posexplode(graft.text.Bpe.bpeEncodeBytes(TextAnalysis.words(col("text")),
-            graft.text.Bpe.DeepMerges)).as(Seq("pos", "token_id")))
-        .select(col("doc_id"), col("pos").cast("long").as("pos"),
-          col("token_id").cast("int").as("token_id"))
-        .orderBy("doc_id", "pos")
-    }),
-
-    "x14_bpe_bytes" -> ((s, dir) => {
-      // the byte-level contract EXERCISED beyond [a-z0-9] (x13 feeds
-      // it only lowercase-alnum words): plant deterministic ASCII
-      // punctuation into every doc, split on WHITESPACE ONLY — the
-      // punctuation stays inside the words — and encode under the
-      // same 4096-merge byte-level table. Alphabetic runs still merge
-      // (ids 256+) while ',' '%' '"' '=' pass through as their raw
-      // byte ids (44, 37, 34, 61): no per-deployment alphabet had to
-      // anticipate them, which is the point of the byte base
-      val aug = plantPunct(t(s, dir, "documents"))
-      aug.select(col("doc_id"),
-          posexplode(graft.text.Bpe.bpeEncodeBytes(TextAnalysis.wsWords(col("text")),
-            graft.text.Bpe.DeepMerges)).as(Seq("pos", "token_id")))
-        .select(col("doc_id"), col("pos").cast("long").as("pos"),
-          col("token_id").cast("int").as("token_id"))
-        .orderBy("doc_id", "pos")
-    }),
-
-    "x17_token_stats" -> ((s, dir) =>
-      // corpus-health distribution stats per language: type-token
-      // ratio, hapax share, head-mass concentration — one corpus pass
-      // (the map-side-combined frequency count), everything after is
-      // vocabulary-bounded
-      TextAnalysis.tokenFrequencyStats(t(s, dir, "documents"), "text", "lang")
-        .orderBy("lang")),
-
-    "x16_ngram_kmv" -> ((s, dir) =>
-      // engine-exact KMV distinct sketch: per-language distinct
-      // 3-gram cardinality estimated from the 256 minimum md5 values
-      // next to the exact count — both engines pick the identical k
-      // minima, so the estimate is bit-identical (the thing HLL can
-      // never be across engines). The sketch leg runs the bounded
-      // KmvMinima aggregate (no distinct shuffle — the deployment
-      // kernel, here put under the oracle); the exact count is the
-      // verification column
-      TextAnalysis.ngramKmv(t(s, dir, "documents"), "text", "lang")
-        .orderBy("lang")),
-
-    "x18_standing_stats" -> ((s, dir) => {
-      // the x16/x17 statistics with STANDING state (StatsState):
-      // build on the even half, absorb the odd half, REPLAY it (the
-      // marker makes it a no-op), then supersede every doc_id%10==0
-      // doc with append-edited text, compact the log — the read-outs
-      // must equal the one-shot statistics over the EFFECTIVE corpus
-      // (the d8 delta identity; append-edits keep the sketch exact
-      // too — grams are only ever added, see StatsState's contract)
-      val docs = t(s, dir, "documents")
-      val tbl = graft.core.Tables.scoped("x18_stats")
-      graft.text.StatsState.buildStatsState(docs.filter(col("doc_id") % 2 === 0),
-        "text", "lang", "doc_id", tbl)
-      val odd = docs.filter(col("doc_id") % 2 === 1)
-      graft.text.StatsState.absorbIntoStatsState(s, odd,
-        "text", "lang", "doc_id", tbl, batchId = 1L)
-      graft.text.StatsState.absorbIntoStatsState(s, odd,
-        "text", "lang", "doc_id", tbl, batchId = 1L) // at-least-once replay
-      graft.text.StatsState.absorbIntoStatsState(s,
-        docs.filter(col("doc_id") % 10 === 0)
-          .withColumn("text", concat(col("text"), lit(" graftxa graftxb graftxa"))),
-        "text", "lang", "doc_id", tbl, batchId = 2L)
-      graft.text.StatsState.compactStatsState(s, tbl)
-      graft.text.StatsState.tokenStatsReadout(s, tbl)
-        .join(graft.text.StatsState.kmvReadout(s, tbl), Seq("group"))
-        .withColumnRenamed("group", "lang")
-        .orderBy("lang")
-    }),
-
-    "x15_compression_ratio" -> ((s, dir) => {
-      // tokenizer compression-ratio junk signal over the punctuation-
-      // planted corpus (the x14 byte-level construction): bytes per
-      // BPE token in ×10⁴ fixed point under the 4096-merge table —
-      // natural words merge (high bytes/token), planted punctuation
-      // costs a token per byte — flag outside [lo, hi]; one codegen'd
-      // map-only projection, no shuffle
-      val aug = plantPunct(t(s, dir, "documents"))
-      TextAnalysis.compressionRatio(aug, "text", "doc_id", graft.text.Bpe.DeepMerges)
-        .orderBy("doc_id")
-    }),
-
-    "x9_quality_classifier" -> ((s, dir) => {
-      // learned doc-quality gate (fastText/CCNet shape, deterministic
-      // core): junk tokens are PLANTED on every 4th doc; the model
-      // trains on the labeled split (doc_id < 400) — per hashed token
-      // bucket, fixed-point NB purity; buckets below half the prior
-      // are the learned bad vocabulary — and scores the held-out split
-      // by bad-token fraction. The plant is outside the corpus
-      // vocabulary, so a correct train pass must recover exactly it
-      val docs = plantJunk(t(s, dir, "documents"))
-        .withColumn("label", col("doc_id") % 4 =!= 1)
-      val model = TextAnalysis.trainQualityModel(
-        docs.filter(col("doc_id") < 400), "text", "label")
-      TextAnalysis.qualityScore(docs.filter(col("doc_id") >= 400), "text", "doc_id", model)
-        .orderBy("id")
-    }),
-
-    "x10_surprisal" -> ((s, dir) => {
-      // perplexity-style corpus scoring (CCNet shape, integer log2):
-      // the unigram model trains on the corpus itself, every doc gets
-      // its mean token surprisal in bits — the LM-quality signal a
-      // data team gates on, with no float log anywhere
-      val docs = t(s, dir, "documents")
-      val model = TextAnalysis.trainUnigramModel(docs, "text")
-      TextAnalysis.surprisalScore(docs, "text", "doc_id", model)
-        .orderBy("id")
-    }),
-
-    "x11_quality_topq" -> ((s, dir) => {
-      // adaptive per-language quality gate (keep each language's best
-      // 20% by the fixed-point quality score): computed as a bounded-
-      // domain histogram + broadcast per-group threshold + boundary-
-      // only tie-break — never a per-group sort of the corpus. The
-      // oracle IS that sort (row_number window); equality proves the
-      // histogram shape exact, ties and all
-      // the score table is PINNED before the gate (the p8 materialize-
-      // between-stages shape): the gate's histogram + both filter
-      // branches each consume it, and without the pin every consumer
-      // re-runs the regex-heavy score derivation over the raw text —
-      // 3 text passes where one (id, lang, iq) table (tiny vs the
-      // corpus — exactly what a production run would persist) serves
-      // all three
-      val docs = t(s, dir, "documents")
-      val scored = graft.core.Checkpoints.truncate(
-        TextAnalysis.qualityInt(docs, "text", "doc_id")
-          .select("doc_id", "lang", "iq"))
-      TextAnalysis.topQualityFraction(scored, "doc_id", "lang", "iq", qBp = 2000)
-        .select(col("doc_id"), col("lang"), expr("iq / 10000.0D").as("quality"))
-        .orderBy("doc_id")
-    }),
-
-    "x19_quality_quantiles" -> ((s, dir) =>
-      // per-language quality percentiles (p50/p90/p99 of the
-      // fixed-point score): the read-out a team inspects before
-      // choosing x11's q — rank-based order statistics from a
-      // bounded-domain histogram CDF (one map-side-combined count +
-      // windows over histogram rows; the corpus is never per-group
-      // sorted); the oracle IS that sort
-      TextAnalysis.groupQuantiles(
-          TextAnalysis.qualityInt(t(s, dir, "documents"), "text", "doc_id")
-            .select("doc_id", "lang", "iq"),
-          "lang", "iq",
-          Seq("p50_iq" -> 5000, "p90_iq" -> 9000, "p99_iq" -> 9900))
-        .orderBy("lang")),
-
-    "x20_bigram_surprisal" -> ((s, dir) => {
-      // context-sensitive LM quality scoring (CCNet's reference-corpus
-      // deployment shape): the bigram model trains on the English
-      // slice ONLY, the whole corpus is scored under it — in-domain
-      // docs ride cheap seen-pair conditional bits, out-of-domain docs
-      // pay the backoff (+1 bit through the unigram leg, worst-case
-      // 1+bits(total) for vocabulary the reference corpus never saw);
-      // all model legs broadcast (bounded pair table), the corpus pays
-      // one map-only pair pass + one doc-keyed aggregate
-      val docs = t(s, dir, "documents")
-      val model = TextAnalysis.trainBigramModel(
-        docs.filter(col("lang") === "en"), "text")
-      TextAnalysis.bigramSurprisal(docs, "text", "doc_id", model)
-        .orderBy("id")
-    }),
-
-    "x21_chunk_windows" -> ((s, dir) =>
-      // long-document handling: 64-token windows every 48 tokens (the
-      // context-window slicing an embedding/indexing pipeline feeds on)
-      // — every token covered, last window clipped, chunk text re-joined
-      // in token space; one higher-order transform + explode, map-only
-      TextAnalysis.chunkWindows(t(s, dir, "documents"), "text", "doc_id",
-          window = 64, stride = 48)
-        .orderBy("id", "chunk_idx")),
-
-    "x22_cross_entropy_diff" -> ((s, dir) => {
-      // Moore–Lewis data selection: in-domain LM = the en slice,
-      // out-of-domain LM = the whole pool; each doc's diff_bits =
-      // surprisal under the pool model minus under the target model —
-      // positive = reads more like the target domain than the pool —
-      // and selected is the threshold-0 gate. Both models' legs
-      // broadcast onto ONE pair pass (six bounded joins + one doc agg)
-      val docs = t(s, dir, "documents")
-      val inM = TextAnalysis.trainBigramModel(
-        docs.filter(col("lang") === "en"), "text")
-      val outM = TextAnalysis.trainBigramModel(docs, "text")
-      TextAnalysis.crossEntropyDiff(docs, "text", "doc_id", inM, outM)
-        .orderBy("id")
-    }),
-
-    "p2_weighted_sample" -> ((s, dir) =>
-      // training-mix sampling: downweight the dominant language,
-      // lightly trim fr, pass the rest — decided per row by the
-      // deterministic md5 hash, so the sampled corpus is reproducible
-      TextAnalysis.weightedSample(t(s, dir, "documents"), "doc_id", "lang",
-          rates = Map("en" -> 0.35, "fr" -> 0.8))
-        .select("doc_id", "lang", "source")
-        .orderBy("doc_id")),
-
-    "p23_exact_sample" -> ((s, dir) =>
-      // fixed-COUNT per-group draw: exactly 120 en docs and 40 fr docs
-      // in the deterministic md5 order; zh's over-sized quota
-      // saturates (the whole group keeps); unnamed groups drop — the
-      // p19 machinery with a quota map instead of a fraction
-      TextAnalysis.sampleExact(t(s, dir, "documents"), "doc_id", "lang",
-          counts = Map("en" -> 120L, "fr" -> 40L, "zh" -> 1000000L))
-        .select("doc_id", "lang", "source")
-        .orderBy("doc_id")),
-
-    "p19_holdout_split" -> ((s, dir) =>
-      // deterministic EXACT-COUNT eval split: exactly ceil(10% · n)
-      // docs per language to the holdout, decided by the md5-uniform
-      // order — computed as a coarse-bucket histogram + broadcast
-      // threshold + boundary-bucket-only rank, never a per-group sort
-      // of the corpus; the oracle IS that sort (row_number window)
-      TextAnalysis.holdoutSplit(t(s, dir, "documents"), "doc_id", "lang", holdBp = 1000)
-        .select("doc_id", "lang", "split")
-        .orderBy("doc_id")),
-
-    "p5_token_budget_mix" -> ((s, dir) => {
-      // mixture/budget accounting: weigh languages into a training
-      // recipe by TOKEN budget, not doc count — per-lang BPE token
-      // totals (the x8 kernel) set exact integer acceptance
-      // thresholds; the md5 uniform decides each doc. en/fr are
-      // capped, the rest pass whole; a lang already under its budget
-      // keeps everything (threshold saturates) at small SFs
-      val docs = t(s, dir, "documents")
-      val counts = graft.text.Bpe.tokenCounts(docs, "text", "doc_id",
-          graft.text.Bpe.DefaultMerges)
-        .join(docs.select("doc_id", "lang"), Seq("doc_id"))
-      TextAnalysis.tokenBudgetSample(counts, "doc_id", "lang", "bpe_tokens",
-          Map("en" -> 10000L, "fr" -> 5000L))
-        .select("doc_id", "lang", "bpe_tokens").orderBy("doc_id")
-    }),
-
-    "p7_token_budget_repeat" -> ((s, dir) => {
-      // the up-sampling half of the mixture: en's budget EXCEEDS its
-      // token mass at the gate SF (docs repeat, copy-indexed), fr's
-      // sits below it (the sampler special case) — one operator covers
-      // the whole epochs-per-source recipe
-      val docs = t(s, dir, "documents")
-      val counts = graft.text.Bpe.tokenCounts(docs, "text", "doc_id",
-          graft.text.Bpe.DefaultMerges)
-        .join(docs.select("doc_id", "lang"), Seq("doc_id"))
-      TextAnalysis.tokenBudgetRepeat(counts, "doc_id", "lang", "bpe_tokens",
-          Map("en" -> 50000L, "fr" -> 2000L))
-        .select("doc_id", "lang", "bpe_tokens", "copy")
-        .orderBy("doc_id", "copy")
-    }),
-
-    "p8_full_recipe" -> ((s, dir) => {
-      // THE full pre-training data recipe, end-to-end in ONE plan —
-      // every round-7 stage active and oracle-checked in composition:
-      // exact substring scrub (d16) → eval decontamination (d20) →
-      // learned quality gate (x9) → BPE token counts (x8) →
-      // token-budget repetition (p7, the p5 superset) → epoch shuffle
-      // (p6). Plants make each stage provably active at every SF:
-      // DupSpan (in-train duplicates, stage 1), LeakSpan (train-unique
-      // but eval-repeated, stage 2), JunkTokens (labeled junk, the
-      // gate). Every stage is linear-volume shuffles over the corpus
-      // plus a broadcastable model/budget head — the same 100 TB
-      // shapes as the component queries, just composed.
-      val base = plantLeak(plantJunk(plantSpan(t(s, dir, "documents"))))
-      val train0 = base.filter(col("doc_id") < 400)
-      val evalS = base.filter(col("doc_id") >= 400)
-      // 1. duplicated-span scrub within the training corpus.
-      // scrub1/scrub2 each feed MULTIPLE downstream stages (scrub1 →
-      // spans2 + scrub2; scrub2 → model training + gating join + BPE
-      // counts): pin them (localCheckpoint) so the expensive span
-      // machinery runs once per stage, not once per consumer — the
-      // same materialize-between-stages shape a production recipe
-      // would use (each stage's output written to storage)
-      val spans1 = Dedup.substringSpans(train0, "text", "doc_id", 15)
-      val scrub1 = graft.core.Checkpoints.truncate(
-        Dedup.scrubSpans(train0, spans1, "text", "doc_id")
-          .select(col("id").as("doc_id"), col("scrubbed").as("text")))
-      // 2. excise any >= 15-gram overlap with the eval set
-      val spans2 = Dedup.decontaminateSpans(scrub1, evalS, "text", "doc_id", 15)
-      val scrub2 = graft.core.Checkpoints.truncate(
-        Dedup.scrubSpans(scrub1, spans2, "text", "doc_id")
-          .select(col("id").as("doc_id"), col("scrubbed").as("text")))
-      // 3. learned quality gate, trained on the corpus's own labels
-      val model = TextAnalysis.trainQualityModel(
-        scrub2.withColumn("label", col("doc_id") % 4 =!= 1), "text", "label")
-      val gated = scrub2.join(
-        TextAnalysis.qualityScore(scrub2, "text", "doc_id", model)
-          .filter(col("pred")).select(col("id").as("doc_id")), "doc_id")
-      // 4+5. BPE token mass per doc -> per-lang budget repetition:
-      // en's budget EXCEEDS its gated mass (docs repeat), fr's sits
-      // below (the sampler case), de/es/zh pass whole
-      val counts = graft.text.Bpe.tokenCounts(gated, "text", "doc_id",
-          graft.text.Bpe.DefaultMerges)
-        .join(base.select("doc_id", "lang"), Seq("doc_id"))
-      val mixed = TextAnalysis.tokenBudgetRepeat(counts, "doc_id", "lang",
-        "bpe_tokens", Map("en" -> 30000L, "fr" -> 800L), seed = "rep")
-      // 6. epoch-1 permutation of the final mixture, keyed by (doc, copy)
-      val keyed = mixed.withColumn("__k",
-        concat_ws(":", col("doc_id"), col("copy")))
-      TextAnalysis.epochShuffle(keyed, "__k", epoch = 1, nShards = 8)
-        .select("doc_id", "copy", "lang", "bpe_tokens", "shard", "pos")
-        .orderBy("doc_id", "copy")
-    }),
-
-    "p12_recipe_delta" -> ((s, dir) => {
-      // the OPERATIONAL form of p8 — the standing refinery routing an
-      // ingest batch through its standing state: corpus (< 300) is
-      // gram-indexed + modeled + ledgered once; the batch = new docs
-      // [300, 400) PLUS re-ingested revisions of every 50th standing
-      // doc and of doc 13 (the planted eval-leak carrier), so
-      // supersede, cross/batch-internal span duplication, and eval
-      // decon are all provably active. Stages run in their delta
-      // shapes: d18 span probe against the standing gram index, decon
-      // off the standing eval index, the STANDING x9 model, BPE
-      // counts, budget copies against the superseded-updated ledger
-      // totals. Oracle: the one-shot chain over the effective corpus
-      // restricted to batch docs (the d18 delta identity), with
-      // model/ledger state as of the batch's arrival.
-      val base = plantLeak(plantJunk(plantSpan(t(s, dir, "documents"))))
-      val std = base.filter(col("doc_id") < 300)
-      val evalS = base.filter(col("doc_id") >= 400)
-      val batch = base.filter(col("doc_id") >= 300 && col("doc_id") < 400)
-        .unionByName(std.filter(col("doc_id") % 50 === 0 || col("doc_id") === 13)
-          .withColumn("text", concat(lit("revision two of this document "), col("text"))))
-      val st = graft.jobs.Recipe.buildStanding(s,
-        std.withColumn("label", col("doc_id") % 4 =!= 1), evalS,
-        "text", "doc_id", "lang", "label", k = 15,
-        graft.text.Bpe.DefaultMerges, prefix = graft.core.Tables.scoped("p12rd"), buckets = 16)
-      graft.jobs.Recipe.processBatch(s, st, batch, "text", "doc_id", "lang",
-          Map("en" -> 30000L, "fr" -> 800L), k = 15, graft.text.Bpe.DefaultMerges)
-        .emission
-        .select("doc_id", "lang", "bpe_tokens", "copy")
-        .orderBy("doc_id", "copy")
-    }),
-
-    "p9_source_cap" -> ((s, dir) => {
-      // domain capping: bound every source's token contribution at a
-      // fixed budget — at the gate SFs some sources sit under the cap
-      // (pass whole, no window touches them) and some over (kept in
-      // deterministic md5 order until the budget is hit), so both
-      // branches are active; at 10×+ every source is over-cap
-      val docs = t(s, dir, "documents")
-      val counts = TextAnalysis.tokenCounts(docs, "text", "doc_id")
-        .select(col("doc_id"), col("ws_tokens"))
-        .join(docs.select("doc_id", "source"), Seq("doc_id"))
-      TextAnalysis.sourceCap(counts, "doc_id", "source", "ws_tokens", cap = 1300L)
-        .select("doc_id", "source", "ws_tokens")
-        .orderBy("doc_id")
-    }),
-
-    "p11_temperature_mix" -> ((s, dir) => {
-      // α=1/2 temperature mixing at a target just under the corpus token
-      // mass: the dominant language's √-deflated share thins it while
-      // minority languages land budgets ABOVE their mass and repeat —
-      // both regimes of the mixer active in one run
-      val docs = t(s, dir, "documents")
-      val counts = docs.select(col("doc_id"), col("lang"),
-        TextAnalysis.wsTokens(col("text")).as("ws_tokens"))
-      TextAnalysis.temperatureMix(counts, "doc_id", "lang", "ws_tokens",
-          targetTokens = 30000L)
-        .select("doc_id", "lang", "ws_tokens", "copy")
-        .orderBy("doc_id", "copy")
-    }),
-
-    "p26_length_buckets" -> ((s, dir) => {
-      // padding-minimizing length-bucketed batching (the seq2seq
-      // bucketing step): 16-token-wide length buckets, batches of 8,
-      // ranks sharded per 256-doc id range (the packSequences
-      // discipline — no global per-bucket sort exists in the plan);
-      // each batch row carries the padding account a team sizes
-      // bucketWidth by
-      val docs = t(s, dir, "documents")
-      val lens = docs.select(col("doc_id"),
-        size(TextAnalysis.words(col("text"))).cast("long").as("n_tok"))
-      TextAnalysis.lengthBucketBatches(lens, "doc_id", "n_tok",
-          bucketWidth = 16L, batchSize = 8L, shardSize = 256L)
-        .orderBy("bucket", "shard", "batch")
-    }),
-
-    "p10_pack_sequences" -> ((s, dir) => {
-      // loader-prep: concat-and-chunk into 512-token training
-      // sequences, packed per (source, 1000-doc shard) so every
-      // prefix-sum window is bounded by the shard size and shards pack
-      // in parallel after one uniform shuffle — the global concat
-      // order a single-sequence packer would need (one task, the whole
-      // corpus through it) never exists
-      val docs = t(s, dir, "documents")
-      val counts = docs.select(col("doc_id"), col("source"),
-        TextAnalysis.wsTokens(col("text")).as("ws_tokens"))
-      TextAnalysis.packSequences(counts, "doc_id", "source", "ws_tokens",
-          capacity = 512L, shardSize = 1000L)
-        .select("doc_id", "source", "shard", "bin_first", "bin_last", "offset_in_bin")
-        .orderBy("doc_id")
-    }),
-
-    "p20_curriculum" -> ((s, dir) => {
-      // curriculum-ordered epoch shuffle: the quality quartile is the
-      // stage (best docs stage 0), shuffled within each stage by the
-      // epoch uniform — shard assignment unchanged from p6, so stage
-      // ranges align across shards and a loader interleaving shards
-      // reads easy→hard without any global stage-sort
-      val docs = t(s, dir, "documents")
-      val staged = TextAnalysis.qualityInt(docs, "text", "doc_id")
-        .select(col("doc_id"),
-          greatest(lit(0L), lit(3L) - expr("iq div 2500")).as("stage"))
-      TextAnalysis.curriculumShuffle(staged, "doc_id", "stage", epoch = 1, nShards = 8)
-        .orderBy("doc_id")
-    }),
-
-    "p21_mask_stream" -> ((s, dir) => {
-      // the packed token stream WITH document boundaries — the
-      // attention-mask loader view (packed pretraining resets
-      // attention at doc boundaries): every token carries its doc and
-      // a doc_start flag on the doc's first token; continuation
-      // segments of straddling docs never flag
-      val docs = t(s, dir, "documents")
-      val enc = docs.select(col("doc_id"), col("source"),
-        graft.text.Bpe.bpeEncode(TextAnalysis.words(col("text")),
-          graft.text.Bpe.DefaultMerges).as("ids"))
-      TextAnalysis.packedMaskStream(enc, "doc_id", "source", "ids",
-          capacity = 512L, shardSize = 1000L)
-        .select(col("source"), col("shard"), col("bin"), col("bin_pos"),
-          col("token_id").cast("int").as("token_id"), col("doc_id"), col("doc_start"))
-        .orderBy("source", "shard", "bin", "bin_pos")
-    }),
-
-    "p24_split_pack" -> ((s, dir) => {
-      // split × pack composed under ONE oracle (the p18 discipline
-      // applied to the EVAL BOUNDARY): p19's exact-count holdout
-      // decides the cut, the train side flows through the p21
-      // doc-carrying packer. The oracle packs an INDEPENDENTLY
-      // recomputed train side, so equality proves both contracts at
-      // once: the packed train stream equals the one-shot packer over
-      // the train docs, and — because every token row carries its
-      // doc_id and one extra doc would shift every later placement —
-      // no holdout doc's tokens can appear in it
-      val docs = t(s, dir, "documents")
-      val train = TextAnalysis.holdoutSplit(docs, "doc_id", "lang", holdBp = 1000)
-        .filter(col("split") === "train")
-      val enc = train.select(col("doc_id"), col("source"),
-        graft.text.Bpe.bpeEncode(TextAnalysis.words(col("text")),
-          graft.text.Bpe.DefaultMerges).as("ids"))
-      TextAnalysis.packedMaskStream(enc, "doc_id", "source", "ids",
-          capacity = 512L, shardSize = 1000L)
-        .select(col("source"), col("shard"), col("bin"), col("bin_pos"),
-          col("token_id").cast("int").as("token_id"), col("doc_id"), col("doc_start"))
-        .orderBy("source", "shard", "bin", "bin_pos")
-    }),
-
-    "p14_packed_tokens" -> ((s, dir) => {
-      // the END of the pipeline: fixed-capacity training sequences as
-      // token-id streams — x12's encoder feeds p13's segments, one row
-      // per token at its (source, shard, bin, bin_pos) coordinate.
-      // Packing counts come from the id arrays themselves, so stream
-      // and placement cannot disagree
-      val docs = t(s, dir, "documents")
-      val enc = docs.select(col("doc_id"), col("source"),
-        graft.text.Bpe.bpeEncode(TextAnalysis.words(col("text")),
-          graft.text.Bpe.DefaultMerges).as("ids"))
-      TextAnalysis.packedTokenStream(enc, "doc_id", "source", "ids",
-          capacity = 512L, shardSize = 1000L)
-        .select(col("source"), col("shard"), col("bin"),
-          col("bin_pos"), col("token_id").cast("int").as("token_id"))
-        .orderBy("source", "shard", "bin", "bin_pos")
-    }),
-
-    "p15_pack_delta" -> ((s, dir) => {
-      // INCREMENTAL packing — the loader-side delta loop: the standing
-      // corpus (doc_id < 400) is packed once into a shard-partitioned
-      // placement table; the new batch extends/repacks ONLY its
-      // touched shards (token counts from standing rows — no corpus
-      // re-tokenization, no untouched-shard rewrite: shard 0 here is
-      // never read). Emitted: the standing state after one
-      // build→delta→absorb cycle, whose oracle is the ONE-SHOT p10
-      // packer over the whole corpus — the delta identity that holds
-      // after every absorb. shardSize 300 puts the batch at shard 1's
-      // tail (with standing docs 300..399 ahead of it) and creates
-      // fresh shards beyond — both delta regimes exercised at each SF
-      val docs = t(s, dir, "documents")
-      val counts = docs.select(col("doc_id"), col("source"),
-        TextAnalysis.wsTokens(col("text")).as("ws_tokens"))
-      val table = graft.core.Tables.scoped("pack_state_p15")
-      PackIndex.buildPackState(counts.filter(col("doc_id") < 400),
-        "doc_id", "source", "ws_tokens", capacity = 512L, shardSize = 300L, table)
-      val delta = PackIndex.packDelta(s, counts.filter(col("doc_id") >= 400),
-        "doc_id", "source", "ws_tokens", capacity = 512L, shardSize = 300L, table)
-      PackIndex.absorbPackDelta(s, table, delta)
-      s.table(table)
-        .select(col("id").as("doc_id"), col("grp").as("source"), col("shard"),
-          col("bin_first"), col("bin_last"), col("offset_in_bin"))
-        .orderBy("doc_id")
-    }),
-
-    "p17_stream_pack" -> ((s, dir) => {
-      // STREAMING incremental packing — p15's operational loop under
-      // Structured Streaming: docs [400, 600) arrive as two
-      // micro-batches over the standing pack state (the rest of the
-      // corpus); each batch extends/repacks only its touched shards
-      // and absorbs so batch b packs against batch a through the
-      // standing state alone. Each batch emits the FULL touched-shard
-      // delta (a superseding batch displaces same-shard standing
-      // placements, so a loader must see every placement that may
-      // have moved); the consumer view is LATEST EMISSION PER ID —
-      // which equals the one-shot packer restricted to the ids of the
-      // touched shards ([300, 600) here: docs 400..599 stream, their
-      // shard-1 neighbours 300..399 re-emit), because an id's shard
-      // is only ever repacked to its current one-shot placement
-      val docs = t(s, dir, "documents")
-      val counts = docs.select(col("doc_id"), col("source"),
-        TextAnalysis.wsTokens(col("text")).as("ws_tokens"))
-      val table = graft.core.Tables.scoped("pack_state_p17")
-      PackIndex.buildPackState(counts.filter(col("doc_id") < 400 || col("doc_id") >= 600),
-        "doc_id", "source", "ws_tokens", capacity = 512L, shardSize = 300L, table)
-      val chunks = stageMicroBatches(counts, "doc_id",
-        Seq((400L, 500L), (500L, 600L)), "pk")
-      val out = java.nio.file.Files.createTempDirectory("graft_pk_out_").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_pk_ckpt_").toString
-      OnChange.streamingPackDelta(s, chunks, "doc_id", "source", "ws_tokens",
-        capacity = 512L, shardSize = 300L, table, out, ckpt)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("id").orderBy(col("batch_id").desc)
-      s.read.parquet(out)
-        .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-        .select(col("id").as("doc_id"), col("grp").as("source"), col("shard"),
-          col("bin_first"), col("bin_last"), col("offset_in_bin"))
-        .orderBy("doc_id")
-    }),
-
-    "p18_chain" -> ((s, dir) => {
-      // THE OPERATIONAL CHAIN under ONE oracle — three CronJobs
-      // sharing one registry (the reference's jobs-chained-through-
-      // datasets shape): raw log → recipeJob (standing refinery,
-      // tombstone-retracting emission upsert) → emissionRollupJob
-      // (per-doc emitted token mass into the token log) → packJob
-      // (standing shard-partitioned placements). Simulated schedule:
-      // window 1 = new docs [300,350); window 2 = docs [350,400) PLUS
-      // re-ingested revisions of every 50th standing doc and doc 13
-      // (supersede propagates through ALL THREE links); day 3 fires
-      // EMPTY (all tokens current — every link no-ops). Emitted: the
-      // final standing placement table, whose oracle is the one-shot
-      // recipe replayed window-by-window (the p12 as-of-arrival
-      // identity, ledger evolving across windows) composed with the
-      // one-shot packer over the final per-doc masses (the p15
-      // identity) — the emission schema, supersede propagation, and
-      // token discipline the links share, pinned end to end
-      import graft.jobs._
-      import java.time.LocalDateTime
-      val budgets = Map("en" -> 30000L, "fr" -> 800L)
-      val base = plantLeak(plantJunk(plantSpan(t(s, dir, "documents"))))
-      val std = base.filter(col("doc_id") < 300)
-      val evalS = base.filter(col("doc_id") >= 400)
-      val w1 = base.filter(col("doc_id") >= 300 && col("doc_id") < 350)
-        .withColumn("recorded", lit(1L))
-      val w2 = base.filter(col("doc_id") >= 350 && col("doc_id") < 400)
-        .unionByName(std.filter(col("doc_id") % 50 === 0 || col("doc_id") === 13)
-          .withColumn("text", concat(lit("revision two of this document "), col("text"))))
-        .withColumn("recorded", lit(2L))
-      val st = graft.jobs.Recipe.buildStanding(s,
-        std.withColumn("label", col("doc_id") % 4 =!= 1), evalS,
-        "text", "doc_id", "lang", "label", k = 15,
-        graft.text.Bpe.DefaultMerges, prefix = graft.core.Tables.scoped("p18rc"), buckets = 16)
-      // bootstrap: the standing corpus's own one-shot emission masses
-      // seed the token log and the pack state (recorded 0 — before any
-      // window; ungated standing docs seed zero mass)
-      val totS = s.table(st.counts).groupBy("lang")
-        .agg(sum("bpe_tokens").cast("long").as("__tot"))
-      val massS = TextAnalysis.tokenBudgetRepeatAgainst(
-          s.table(st.counts), totS, "doc_id", "lang", budgets)
-        .groupBy("doc_id").agg(sum("bpe_tokens").cast("long").as("emitted_tokens"))
-      val toklog0 = graft.core.Checkpoints.truncate(
-        std.select(col("doc_id"), col("lang"))
-          .join(massS, Seq("doc_id"), "left")
-          .withColumn("emitted_tokens", coalesce(col("emitted_tokens"), lit(0L)))
-          .withColumn("recorded", lit(0L)))
-      val reg = new DatasetRegistry
-      reg.put("rawlog", w1)
-      reg.put("toklog", toklog0)
-      val packTbl = graft.core.Tables.scoped("p18_pack")
-      PackIndex.buildPackState(toklog0, "doc_id", "lang", "emitted_tokens",
-        capacity = 512L, shardSize = 300L, packTbl)
-      val sched = new CronScheduler(Seq(
-        graft.jobs.Recipe.recipeJob(reg, st, "rawlog", "doc_id", "recorded",
-          "text", "lang", budgets, k = 15, graft.text.Bpe.DefaultMerges,
-          "emission", cron = "0 3 * * *"),
-        graft.jobs.Recipe.emissionRollupJob(reg, "rawlog", "emission", "toklog",
-          "doc_id", "lang", "recorded", cron = "30 3 * * *"),
-        PackIndex.packJob(reg, "toklog", "doc_id", "lang", "emitted_tokens",
-          "recorded", capacity = 512L, shardSize = 300L, packTbl,
-          "placements", cron = "0 4 * * *")))
-      def day(d: Int): Unit = {
-        sched.tick(s, reg, LocalDateTime.of(2026, 8, d, 3, 0))
-        sched.tick(s, reg, LocalDateTime.of(2026, 8, d, 3, 30))
-        sched.tick(s, reg, LocalDateTime.of(2026, 8, d, 4, 0))
-      }
-      day(14)
-      reg.put("rawlog", w1.unionByName(w2))
-      day(15)
-      day(16) // nothing recorded past the tokens: every link no-ops
-      s.table(packTbl)
-        .select(col("id").as("doc_id"), col("grp").as("lang"),
-          col("tok").as("emitted_tokens"), col("shard"),
-          col("bin_first"), col("bin_last"), col("offset_in_bin"))
-        .orderBy("doc_id")
-    }),
-
-    "p13_bin_manifest" -> ((s, dir) => {
-      // the loader-facing view of p10: per (shard, bin) the ordered doc
-      // segments (token range within the doc + offset within the bin),
-      // straddle continuation rows included — what a data loader reads
-      // to assemble each fixed-capacity training sequence. Same packing
-      // parameters as p10, plus one map-only bounded explode
-      val docs = t(s, dir, "documents")
-      val counts = docs.select(col("doc_id"), col("source"),
-        TextAnalysis.wsTokens(col("text")).as("ws_tokens"))
-      TextAnalysis.packedBins(counts, "doc_id", "source", "ws_tokens",
-          capacity = 512L, shardSize = 1000L)
-        .select("doc_id", "source", "shard", "bin", "seg_start", "seg_len", "bin_offset")
-        .orderBy("doc_id", "bin")
-    }),
-
-    "p6_epoch_shuffle" -> ((s, dir) =>
-      // loader-prep: epoch 3's deterministic permutation of the corpus
-      // as (shard, pos) coordinates — no global sort (the md5 uniform
-      // is the permutation; shard assignment is map-only, ranks are
-      // per-shard windows running in parallel)
-      TextAnalysis.epochShuffle(t(s, dir, "documents"), "doc_id", epoch = 3, nShards = 8)
-        .select("doc_id", "shard", "pos").orderBy("doc_id")),
-
-    "p16_epoch_pack" -> ((s, dir) => {
-      // epoch-ORDERED packing: p6's permutation feeds p10's packer —
-      // placements are computed IN the epoch order (shard = the
-      // permutation's shard, rank = its pos), so the packed stream IS
-      // the epoch ordering rather than raw id order. Still no global
-      // sort anywhere: the md5 uniform is the permutation, shard
-      // assignment is map-only, and the prefix sums are per-(group,
-      // shard) windows packing in parallel
-      val docs = t(s, dir, "documents")
-      val counts = docs.select(col("doc_id"), col("source"),
-        TextAnalysis.wsTokens(col("text")).as("ws_tokens"))
-      val perm = TextAnalysis.epochShuffle(counts, "doc_id", epoch = 3, nShards = 8)
-      TextAnalysis.packSequencesBy(perm, "doc_id", "source", "ws_tokens",
-          capacity = 512L, shardCol = "shard", posCol = "pos")
-        .select(col("doc_id"), col("source"), col("shard").cast("long").as("shard"),
-          col("bin_first"), col("bin_last"), col("offset_in_bin"))
-        .orderBy("doc_id")
-    }),
-
-    "p4_sharded_export" -> ((s, dir) => {
-      // last mile: hash-sharded corpus export + manifest; the shard
-      // assignment is the deterministic md5 uniform, so the manifest
-      // is engine-recomputable (bytes are parquet-specific and spec-
-      // checked instead). Fixed path + overwrite: repeated bench
-      // passes rewrite one copy instead of accumulating temp dirs
-      val out = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_export_p4").getAbsolutePath
-      graft.jobs.Export.shardedExport(t(s, dir, "documents"), "doc_id", out, 8)
-        .select(col("shard"), col("n_rows")).orderBy("shard")
-    }),
-
-    "p3_clean_pipeline" -> ((s, dir) => {
-      // the round-6 cleaning loop composed end-to-end: plant PII (x7's
-      // construction) → scrub → boilerplate gate (scrub artifacts
-      // become shared spans and are counted as such) → weighted
-      // training-mix sample → per-(lang, source) corpus stats
-      val docs = t(s, dir, "documents")
-      val scrubbed = plantPii(docs)
-        .withColumn("text", TextAnalysis.piiScrubText(col("text")))
-      // scale-aware boilerplate cut: "shared by many docs" must mean a
-      // FRACTION of the corpus, not an absolute 3, or the gate
-      // saturates as a fixed-vocabulary corpus grows (at 5k+ synthetic
-      // docs every 3-gram lands in >= 3 docs). max(3, 0.2%) keeps the
-      // sf0.01 gate exactly as before
-      val minDocs = math.max(3L, docs.count() * 2 / 1000).toInt
-      val keep = Dedup.boilerplate(scrubbed, "text", "doc_id", 3, minDocs)
-        .filter(col("boiler_ratio") <= 0.5).select(col("id").as("doc_id"))
-      val sampled = TextAnalysis.weightedSample(scrubbed.join(keep, "doc_id"),
-        "doc_id", "lang", rates = Map("en" -> 0.35, "fr" -> 0.8))
-      val toks = TextAnalysis.tokenCounts(sampled, "text", "doc_id")
-        .select(col("doc_id"), col("ws_tokens"))
-      sampled.join(toks, "doc_id")
-        .groupBy("lang", "source")
-        .agg(count(lit(1)).as("n_docs"), sum("ws_tokens").cast("long").as("total_tokens"))
-        .orderBy("lang", "source")
-    }),
-
-    // ===== composite pipeline ===========================================
-    // The full training-data prep loop: language gate + quality gate +
-    // near-dup removal (keep the smaller doc id of each pair), then
-    // per-source corpus statistics. Every stage is one of the operators
-    // above — this query exists to prove they compose.
-    "p1_training_corpus" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val lang = TextAnalysis.langId(docs, "text", "doc_id").select(col("doc_id"), col("pred_lang"))
-      val qual = TextAnalysis.qualityScore(docs, "text", "doc_id").select(col("doc_id"), col("quality"))
-      val toks = TextAnalysis.tokenCounts(docs, "text", "doc_id").select(col("doc_id"), col("ws_tokens"))
-      val dupDrop = Dedup.ngramJaccard(docs, "text", "doc_id", 3, 0.8)
-        .select(col("b").as("doc_id")).distinct()
-      docs
-        .join(lang, "doc_id").join(qual, "doc_id").join(toks, "doc_id")
-        .join(dupDrop, Seq("doc_id"), "left_anti")
-        .filter(col("pred_lang") === "en" && col("quality") >= 0.40)
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("ws_tokens").as("total_tokens"),
-          round(sum("quality"), 2).as("sum_quality"))
-        .orderBy("source")
-    }),
-
-    // ===== multimodal ===================================================
-    "m1_multimodal_meta" -> ((s, dir) =>
-      // payloads are REAL PGM images (text bytes wrapped at width 16,
-      // zero-padded) and the decode is a genuine Netpbm parse — the
-      // features carry the DECODED dimensions + pixel stats, all
-      // recomputable by the oracle from the text bytes + the encoder
-      // contract (header = 11 + digits(height) bytes)
-      Multimodal.features(s, t(s, dir, "documents")).orderBy("doc_id")),
-
-    "m2_multimodal_resize" -> ((s, dir) => {
-      // the real image loop: decode PGM → 2-D average-pool (2×2 blocks,
-      // integer div — exact) → re-encode as a smaller PGM → decode
-      // AGAIN for features; one map-only typed pipeline, and DuckDB
-      // recomputes the resized raster from the text bytes
-      val media = Multimodal.mediaFromDocs(t(s, dir, "documents"))
-      Multimodal.extractFeatures(Multimodal.asMedia(Multimodal.resize(media, 2))).toDF()
-        .select("doc_id", "width", "height", "n_pixels", "checksum", "first_byte")
-        .orderBy("doc_id")
-    }),
-
-    "m3_multimodal_ann" -> ((s, dir) => {
-      // the full multimodal loop in ONE plan: binary payload → embed
-      // stub → exact cosine top-k (graft.ann) — media similarity search
-      // with every stage map-only until the ANN join
-      val emb = Multimodal.embed(Multimodal.mediaFromDocs(t(s, dir, "documents"))).toDF()
-      Ann.bruteForceTopK(emb, "embedding", "doc_id", col("id") < 5, k = 3)
-        .orderBy("query_id", "rnk")
-    }),
-
-    "m4_multimodal_ann_indexed" -> ((s, dir) => {
-      // m3's media-similarity loop in the DEPLOYMENT shape: the embed
-      // stub feeds a standing IVF inverted file (trained centroids,
-      // cell-bucketed layout) and probes ride the bucketed cells — no
-      // exact all-pairs join anywhere, the multimodal corpus scales
-      // like the s5/s9 vector indexes. Pure composition: zero new
-      // machinery, buildIvfIndex + ivfTopKIndexed over embed()
-      val emb = Multimodal.embed(Multimodal.mediaFromDocs(t(s, dir, "documents"))).toDF()
-      val table = graft.core.Tables.scoped("ivf_idx_m4")
-      Ann.buildIvfIndex(emb, "embedding", "doc_id", table)
-      Ann.ivfTopKIndexed(s, table, queryFilter = col("id") < 5, k = 3)
-        .orderBy("query_id", "rnk")
-    }),
-
-    "m6_multimodal_rgb" -> ((s, dir) => {
-      // the codec's COLOR branch end to end: text-byte triples become
-      // RGB pixels in a real PPM (P6) payload, the decoder validates
-      // channels and emits exact per-channel sums — zero padding is
-      // sum-neutral, so DuckDB recomputes each channel from the text
-      // bytes by stride-3 positions
-      Multimodal.rgbFeatures(Multimodal.mediaFromDocsRgb(t(s, dir, "documents")))
-        .toDF().orderBy("doc_id")
-    }),
-
-    "m7_audio_energy" -> ((s, dir) => {
-      // the codec family's AUDIO branch end to end: text bytes
-      // delta-encode into PCM16 samples in a real RIFF/WAV payload (chunk-walking
-      // parser, not a fixed-offset read), the decoder emits the
-      // waveform statistics an audio front-end gates on — duration,
-      // absolute energy, peak, zero crossings — all integer, all
-      // recomputable by DuckDB from the text bytes; full-scale signed
-      // samples mean an endianness or width bug in the codec shifts
-      // every statistic
-      Multimodal.audioFeatures(Multimodal.audioFromDocs(t(s, dir, "documents")))
-        .toDF().orderBy("doc_id")
-    }),
-
-    "m9_audio_ann_indexed" -> ((s, dir) => {
-      // the AUDIO branch's media-similarity loop in the deployment
-      // shape (what m4 is to the image branch): WAV payloads decode,
-      // the per-window energy profile embeds, and the vectors feed a
-      // standing trained-IVF inverted file — probes ride the bucketed
-      // cells, no exact all-pairs join anywhere. Pure composition:
-      // audioEmbed + buildIvfIndex + ivfTopKIndexed, zero new
-      // index machinery
-      val emb = Multimodal.audioEmbed(Multimodal.audioFromDocs(t(s, dir, "documents"))).toDF()
-      val table = graft.core.Tables.scoped("ivf_idx_m9")
-      Ann.buildIvfIndex(emb, "embedding", "doc_id", table)
-      Ann.ivfTopKIndexed(s, table, queryFilter = col("id") < 5, k = 3)
-        .orderBy("query_id", "rnk")
-    }),
-
-    "m10_segment_ann_indexed" -> ((s, dir) => {
-      // the VIDEO branch's similarity loop, completing the media-
-      // similarity story across all three branches (image m4, audio
-      // m9, video here): m8's scene segments each embed as the
-      // fixed-length head profile of their frame window-sums
-      // (seg_id = doc_id·1000 + seg_idx) and feed the standing
-      // trained-IVF index — "find similar shots" in the same
-      // deployment shape; 1-in-20 docs bounds the frame fan-out as
-      // m5/m8 do
-      val media = Multimodal.mediaFromDocs(
-        t(s, dir, "documents").filter(col("doc_id") % 20 === 0))
-      val emb = Multimodal.segmentEmbed(media, threshold = 150L).toDF()
-      val table = graft.core.Tables.scoped("ivf_idx_m10")
-      Ann.buildIvfIndex(emb, "embedding", "seg_id", table)
-      // queries = segment 0 of the first five sampled docs (seg_id
-      // packing makes that id % 1000 = 0 below 100000)
-      Ann.ivfTopKIndexed(s, table,
-          queryFilter = col("id") % 1000 === 0 && col("id") < 100000, k = 3)
-        .orderBy("query_id", "rnk")
-    }),
-
-    "m10_stage_digest" -> ((s, dir) => {
-      // the r18 verdict's m10 localization harness: the SAME chain as
-      // m10_segment_ann_indexed, but emitting one exact-integer digest
-      // row per stage (index, centroids, routing, shortlist, top-k) —
-      // all-BIGINT output, so a driver-side representation difference
-      // cannot red it; a red row here names the first diverging stage
-      val media = Multimodal.mediaFromDocs(
-        t(s, dir, "documents").filter(col("doc_id") % 20 === 0))
-      val emb = Multimodal.segmentEmbed(media, threshold = 150L).toDF()
-      val table = graft.core.Tables.scoped("ivf_idx_m10d")
-      Ann.buildIvfIndex(emb, "embedding", "seg_id", table)
-      Ann.ivfStageDigests(s, table,
-          queryFilter = col("id") % 1000 === 0 && col("id") < 100000, k = 3)
-        .orderBy("stage")
-    }),
-
-    "m8_scene_cuts" -> ((s, dir) => {
-      // temporal segmentation over the decoded frame stream (the
-      // shot-boundary step before per-segment sampling): a cut opens a
-      // new segment where the inter-frame window-sum jumps > 150;
-      // map-only decode + ONE doc-keyed shuffle (lag + running cut
-      // count + the per-segment agg all ride one window partitioning);
-      // 1-in-20 docs keeps the frame fan-out oracle-sized
-      val media = Multimodal.mediaFromDocs(
-        t(s, dir, "documents").filter(col("doc_id") % 20 === 0))
-      Multimodal.sceneCuts(media, threshold = 150L)
-        .orderBy("doc_id", "seg_idx")
-    }),
-
-    "m5_frame_stats" -> ((s, dir) => {
-      // frame-LEVEL extraction with the NESTED output column
-      // (array<struct> — the schema shape real per-frame features come
-      // back in), exploded to one row per sampled frame. Every field
-      // is SQL-recomputable from the text bytes (sampled offset, the
-      // byte there, the stride-window sum), so the nested path gets a
-      // full-value oracle like the scalar m1/m2 features. Map-only
-      // until the explode; 1-in-20 docs keeps the frame fan-out
-      // oracle-sized without losing any code path.
-      val media = Multimodal.mediaFromDocs(
-        t(s, dir, "documents").filter(col("doc_id") % 20 === 0))
-      Multimodal.extractFrames(media).toDF()
-        .select(col("doc_id"), explode(col("frames")).as("f"))
-        .select(col("doc_id"), col("f.idx").as("frame_idx"),
-          col("f.offset").as("frame_offset"), col("f.value").as("byte_value"),
-          col("f.window_sum").as("window_sum"))
-        .orderBy("doc_id", "frame_idx")
-    }),
-
-    // ===== jobs (cont.) =================================================
-    "j4_txn_multi_write" -> ((s, dir) => {
-      val reg = new DatasetRegistry
-      Transaction(Seq(
-        "big_orders" -> t(s, dir, "orders").filter(col("o_totalprice") > 200000),
-        "hi_value_customers" -> t(s, dir, "customer").filter(col("c_acctbal") > 5000)
-      )).commit(reg)
-      // read BACK from the registry: proves the commit published all legs
-      reg.names
-        .map(n => reg.get(n).agg(count(lit(1)).as("n_rows")).select(lit(n).as("dataset"), col("n_rows")))
-        .reduce(_ unionByName _)
-        .orderBy("dataset")
-    }),
-
-    "j5_lineage" -> ((s, dir) => {
-      val reg = new DatasetRegistry
-      val g = Tpch.graph(s, dir)
-      Job("copy_customers",
-        DatasetSource(g("customer").df, "c_custkey", "c_custkey"),
-        sink = DatasetSink(reg, "customers_copy"),
-        sourceName = "customer", sinkName = "customers_copy").run(s, Some(reg))
-      Job("big_orders",
-        DatasetSource(g("orders").df, "o_orderkey", "o_orderkey"),
-        Transforms.setProperty("is_big", col("o_totalprice") > 100000),
-        DatasetSink(reg, "big_orders"),
-        sourceName = "orders", sinkName = "big_orders", hops = Seq("customer")).run(s, Some(reg))
-      import s.implicits._
-      reg.lineage.toDF("src", "dst", "kind").orderBy("src", "dst", "kind")
-    }),
-
-    "j7_virtual_dataset" -> ((s, dir) => {
-      val vd = VirtualDataset("bucket", sp => sp.range(0, 10).select(col("id").as("bucket_id")))
-      t(s, dir, "orders")
-        .join(broadcast(vd.read(s)), pmod(col("o_orderkey"), lit(10)) === col("bucket_id"))
-        .groupBy("bucket_id")
-        .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
-        .orderBy("bucket_id")
-    }),
-
-    "j8_onchange_stream" -> ((s, dir) =>
-      OnChange.aggregateEvents(s, s"$dir/events.parquet").orderBy("event_type")),
-
-    "g9_paged_traversal" -> ((s, dir) => {
-      val g = Tpch.graph(s, dir)
-      g.outPaged("customer", Tpch.pNation, afterKey = Some(50L), pageSize = 20)
-        .orderBy("start_key")
-    }),
-
-    "s3_ann_ivf" -> ((s, dir) =>
-      Ann.ivfTopK(t(s, dir, "embeddings"), "embedding", "vec_id",
-          queryFilter = col("id") < 10, k = 5)
-        .orderBy("query_id", "rnk")),
-
-    "s5_ivf_indexed" -> ((s, dir) => {
-      // IVF against the standing inverted file — shares s3's oracle
-      // (identical output by construction)
-      val table = graft.core.Tables.scoped("ivf_idx_s5")
-      Ann.buildIvfIndex(t(s, dir, "embeddings"), "embedding", "vec_id", table)
-      Ann.ivfTopKIndexed(s, table, queryFilter = col("id") < 10, k = 5)
-        .orderBy("query_id", "rnk")
-    }),
-
-    "e3_stream_window" -> ((s, dir) =>
-      OnChange.windowedStream(s, s"$dir/events.parquet")
-        .orderBy("window_start", "event_type")),
-
-    "j9_backup_restore" -> ((s, dir) => {
-      val reg = new DatasetRegistry
-      reg.put("customer", t(s, dir, "customer"))
-      reg.put("orders", t(s, dir, "orders"))
-      val root = java.nio.file.Files.createTempDirectory("graft_backup_").toString
-      jobs.Backup.backup(reg, root)
-      val restored = jobs.Backup.restore(s, root)
-      restored.names
-        .map(n => restored.get(n).agg(count(lit(1)).as("n_rows")).select(lit(n).as("dataset"), col("n_rows")))
-        .reduce(_ unionByName _)
-        .orderBy("dataset")
-    }),
-
-    "j10_stream_latest" -> ((s, dir) =>
-      OnChange.streamingLatestOnly(s, s"$dir/events.parquet")
-        .select(col("user_id"), col("event_id").as("last_event_id"),
-          col("event_type").as("last_type"), col("value").as("last_value"))
-        .orderBy("user_id")),
-
-    "j13_wire_source_sink" -> ((s, dir) => {
-      // the reference's HTTP transport, minus the network: sink a dataset
-      // to the entity-JSON wire format at a path, run an import Job whose
-      // source reads that path, land it in the registry, flatten back
-      val g = Tpch.graph(s, dir)
-      val wireDir = java.nio.file.Files.createTempDirectory("graft_wire_").toString
-      jobs.WireDatasetSink(wireDir).write(graft.sources.EntityJson.toEntityRows(g, "supplier"))
-      val reg = new DatasetRegistry
-      Job("import_suppliers", jobs.WireDatasetSource(wireDir),
-        sink = DatasetSink(reg, "suppliers_in"),
-        sourceName = "wire:suppliers", sinkName = "suppliers_in").run(s, Some(reg))
-      graft.sources.EntityJson.flatten(reg.get("suppliers_in"), Seq(
-          (Tpch.schemaNs + "supplier/s_name", "name"),
-          (Tpch.schemaNs + "supplier/s_acctbal", "acctbal_s")))
-        .select(col("id"), col("name"), col("acctbal_s").cast("double").as("acctbal"))
-        .orderBy("id")
-    }),
-
-    "j15_failing_entities" -> ((s, dir) => {
-      // per-entity error handling (error_handler.go + reQueue.go):
-      // entities failing validation divert to a re-queue dataset; the
-      // retry job is just a second job reading the queue
-      val reg = new DatasetRegistry
-      val ev = events(s, dir).withColumn("k",
-        from_json(col("props"), org.apache.spark.sql.types.StructType.fromDDL("k INT")).getField("k"))
-      Job("clean_events", FunctionSource(_ => ev),
-        sink = DatasetSink(reg, "clean_events"),
-        sourceName = "events", sinkName = "clean_events",
-        validate = col("k") < 90,
-        requeueTo = Some(DatasetSink(reg, "clean_events_requeue"))).run(s, Some(reg))
-      Job("retry_requeued", RegistrySource(reg, "clean_events_requeue"),
-        sink = DatasetSink(reg, "retried"),
-        sourceName = "clean_events_requeue", sinkName = "retried").run(s, Some(reg))
-      reg.names
-        .map(n => reg.get(n).agg(count(lit(1)).as("n_rows")).select(lit(n).as("dataset"), col("n_rows")))
-        .reduce(_ unionByName _)
-        .orderBy("dataset")
-    }),
-
-    "j16_wire_context" -> ((s, dir) => {
-      // the wire payload's @context pseudo-entity with per-dataset
-      // PUBLIC namespaces (DOCUMENTATION.md "Setting public namespaces
-      // for a Dataset"): only the dataset's public prefixes are
-      // advertised, and the context line round-trips through the file
-      val g = Tpch.graph(s, dir)
-      val cust = g("customer").copy(publicNamespaces = Seq(tpchBase + "customer/", Tpch.schemaNs))
-      val g2 = EntityGraph(g.datasets + ("customer" -> cust), g.ns)
-      val wireDir = java.nio.file.Files.createTempDirectory("graft_ctx_").toString
-      graft.sources.EntityJson.toJsonLinesWithContext(g2, "customer")
-        .write.mode("overwrite").text(wireDir)
-      val payload = s.read.text(wireDir).select(col("value").as("json"))
-      graft.sources.EntityJson.readContext(s, payload).orderBy("prefix")
-    }),
-
-    "j11_entity_roundtrip" -> ((s, dir) => {
-      // export to the reference's entity-JSON wire shape, re-import,
-      // flatten — the UDA interchange loop with no HTTP in between
-      val g = Tpch.graph(s, dir)
-      val wire = graft.sources.EntityJson.toJsonLines(
-        graft.sources.EntityJson.toEntityRows(g, "customer"))
-      val back = graft.sources.EntityJson.fromJsonLines(s, wire)
-      graft.sources.EntityJson.flatten(back, Seq(
-          (Tpch.schemaNs + "customer/c_name", "name"),
-          (Tpch.schemaNs + "customer/c_acctbal", "acctbal_s")))
-        .select(col("id"), col("name"), col("acctbal_s").cast("double").as("acctbal"))
-        .orderBy("id")
-    })
-  )
-
-  // ------------------------------------------------------------ oracle SQL
-
-  private val custUri = s"'${tpchBase}customer/' || c_custkey"
-  private val suppUri = s"'${tpchBase}supplier/' || s_suppkey"
-  private val natUri = s"'${tpchBase}nation/' || n_nationkey"
-
-  /** j6's bytes statistic recomputes the parquet-footer compressed sizes
-    * engine-independently, which needs the table PATHS — the one oracle
-    * that is sf-dir-dependent. The static `oracleSql` carries the
-    * driver's correctness dir; `Verify` dumps `oracleSqlFor(sfDir)` so
-    * the json always matches the dir it was produced against. */
-  private def j6OracleSql(dir: String): String =
-    Seq("customer", "lineitem", "nation", "orders", "part", "region", "supplier")
-      .map { n =>
-        s"""SELECT '$n' AS dataset, count(*) AS n_rows,
-           | (SELECT sum(total_compressed_size)::BIGINT
-           |  FROM parquet_metadata('$dir/$n.parquet')) AS bytes FROM $n""".stripMargin
-      }
-      .mkString("SELECT * FROM (", "\nUNION ALL ", ") ORDER BY dataset")
+  /** Every declared query, one [[graft.queries.QueryDef]] each — engine,
+    * oracle and audit side by side in the per-family files under
+    * `graft/queries`. Names are unique across families. */
+  private[graft] val defs: Seq[QueryDef] =
+    AnalyticsQueries.defs ++ GraphQueries.defs ++ ChangeQueries.defs ++
+      JobQueries.defs ++ EventQueries.defs ++ DedupQueries.defs ++
+      SearchQueries.defs ++ TextQueries.defs ++ PrepQueries.defs ++
+      MediaQueries.defs
+  require(defs.map(_.name).distinct.size == defs.size,
+    s"duplicate query names: ${defs.map(_.name).diff(defs.map(_.name).distinct).mkString(", ")}")
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    defs.map(d => d.name -> d.engine).toMap
+
+  val oracleSql: Map[String, String] = defs.map(d => d.name -> d.oracle).toMap
 
   /** The oracle map with every sf-dir-dependent entry interpolated for
-    * `dir` (see `j6OracleSql`); identical to `oracleSql` elsewhere. */
-  /** The containment oracle chain shared by d27 (one-shot) and d28
-    * (indexed delta) — ONE definition of the shingle CTEs, the
-    * per-direction ratios, and the max-gate, so the verifier and the
-    * deployment shape cannot drift; `pairPred` (ANDed after the gate)
-    * restricts d28 to batch-touching pairs, the d8 identity. */
-  private def containmentOracleSql(pairPred: String = ""): String =
-    s"""WITH words AS (
-       |  SELECT doc_id,
-       |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), w -> w <> '') AS ws
-       |  FROM documents),
-       |sh AS (
-       |  SELECT DISTINCT doc_id, array_to_string(ws[t.i:t.i+2], ' ') AS s
-       |  FROM words, unnest(range(1, len(ws)-1)) AS t(i)),
-       |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-       |pr AS (SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS inter
-       |       FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
-       |SELECT a, b, inter::BIGINT AS inter,
-       |  round(inter / sa.sz, 3) AS cont_ab, round(inter / sb.sz, 3) AS cont_ba
-       |FROM pr JOIN sz sa ON pr.a = sa.doc_id JOIN sz sb ON pr.b = sb.doc_id
-       |WHERE greatest(inter / sa.sz, inter / sb.sz) >= 0.9$pairPred ORDER BY a, b""".stripMargin
-
-  /** The simhash fingerprint + Hamming oracle chain shared by
-    * d4/d21/d22/d23 — ONE definition of the md5 tokenization, the
-    * per-(doc, bit) sign sums, the PACKED 64-bit fingerprint (one
-    * BIGINT per doc: bits sum UNSIGNED into a HUGEINT, then an
-    * explicit two's-complement wrap — h − 2⁶⁴ when h ≥ 2⁶³ — lands it
-    * in BIGINT, since DuckDB rejects `1::BIGINT << 63` and a signed
-    * bit-63 term can't be shifted into place directly), and the
-    * `bit_count(xor)` pair scan — so the
-    * four oracles cannot drift (the `chunkPairKeys` discipline on the
-    * SQL side). Packing is what makes the full-corpus oracle feasible
-    * at sf1: the earlier per-(doc, bit) equi-join materialized
-    * C(n,2)·64 rows through a GROUP BY (disk-infeasible at 50k docs —
-    * it exhausted 76 GB of spill); the packed scan streams C(n,2)
-    * single rows through one xor+popcount filter (~82 s at sf1).
-    * Callers differ only in the doc source (`docsFrom`, fed by
-    * optional single-line `prefixCtes` — single-line so stripMargin
-    * can't eat a `||` at a continuation-line start) and the pair
-    * scope (`pairPred`, ANDed after the Hamming cut). */
-  private def simhashOracleSql(pairPred: String = "", prefixCtes: String = "",
-                               docsFrom: String = "documents"): String =
-    s"""WITH ${prefixCtes}w AS (
-       |  SELECT doc_id,
-       |    unnest(list_filter(string_split(regexp_replace(lower(text),'[^a-z0-9 ]',' ','g'),' '), x->x<>'')) AS wd
-       |  FROM $docsFrom),
-       |tok AS (SELECT doc_id, md5(wd) AS m FROM w),
-       |bits AS (
-       |  SELECT doc_id, j.j AS j,
-       |    CASE WHEN ((
-       |        (instr('0123456789abcdef', substr(m, 1+4*(j.j//16), 1))-1)*4096
-       |      + (instr('0123456789abcdef', substr(m, 2+4*(j.j//16), 1))-1)*256
-       |      + (instr('0123456789abcdef', substr(m, 3+4*(j.j//16), 1))-1)*16
-       |      + (instr('0123456789abcdef', substr(m, 4+4*(j.j//16), 1))-1)
-       |      ) >> (j.j % 16)) & 1 = 1 THEN 1 ELSE -1 END AS sgn
-       |  FROM tok, unnest(range(0,64)) AS j(j)),
-       |s AS (SELECT doc_id, j, CASE WHEN sum(sgn) > 0 THEN 1 ELSE 0 END AS bit FROM bits GROUP BY 1,2),
-       |fph AS (SELECT doc_id, sum(bit::HUGEINT * (1::HUGEINT << j))::HUGEINT AS h FROM s GROUP BY 1),
-       |fp AS (SELECT doc_id,
-       |         (CASE WHEN h >= 9223372036854775808 THEN h - 18446744073709551616 ELSE h END)::BIGINT AS f
-       |       FROM fph),
-       |ham AS (
-       |  SELECT x.doc_id AS a, y.doc_id AS b, bit_count(xor(x.f, y.f))::INT AS hamming
-       |  FROM fp x JOIN fp y ON x.doc_id < y.doc_id)
-       |SELECT a, b, hamming FROM ham WHERE hamming <= 10$pairPred ORDER BY a, b""".stripMargin
-
-  /** The d35 one-shot band-energy chain; `pairPred` (ANDed after the
-    * radius gate) restricts the delta variant to batch-touching pairs
-    * — the d33 identity applied to the audio fingerprint. */
-  private def d35AudioOracle(pairPred: String = ""): String =
-    s"""WITH tw AS (
-        |  SELECT doc_id + 10000000 AS doc_id,
-        |    translate(text,
-        |      (SELECT string_agg(chr(i.i::INT), '' ORDER BY i.i) FROM unnest(range(32,127)) i(i)),
-        |      (SELECT string_agg(chr(i.i::INT), '' ORDER BY i.i) FROM unnest(range(33,128)) i(i))) AS text
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |d0 AS (SELECT doc_id, text FROM documents UNION ALL SELECT doc_id, text FROM tw),
-        |b AS (SELECT doc_id,
-        |        list_transform(range(1, length(text)+1),
-        |          i -> abs((ascii(substr(text,i,1)) -
-        |                    CASE WHEN i = 1 THEN 0 ELSE ascii(substr(text,i-1,1)) END) * 256)::BIGINT) AS bs,
-        |        length(text) AS P FROM d0),
-        |cells AS (
-        |  SELECT doc_id, g.g AS g,
-        |    coalesce(list_sum(bs[(g.g*P//72)+1 : ((g.g+1)*P//72)]), 0) AS s,
-        |    ((g.g+1)*P//72) - (g.g*P//72) AS n
-        |  FROM b, unnest(range(0,72)) AS g(g)),
-        |bitrows AS (
-        |  SELECT ca.doc_id, ((ca.g // 9) * 8 + (ca.g % 9))::BIGINT AS j
-        |  FROM cells ca JOIN cells cb ON ca.doc_id = cb.doc_id AND cb.g = ca.g + 1
-        |  WHERE ca.g % 9 < 8 AND ca.s * cb.n > cb.s * ca.n),
-        |fph AS (SELECT doc_id, sum(1::HUGEINT << j)::HUGEINT AS h FROM bitrows GROUP BY 1),
-        |fp AS (SELECT d0.doc_id,
-        |        (CASE WHEN coalesce(h, 0::HUGEINT) >= 9223372036854775808::HUGEINT
-        |              THEN coalesce(h, 0::HUGEINT) - 18446744073709551616::HUGEINT
-        |              ELSE coalesce(h, 0::HUGEINT) END)::BIGINT AS f
-        |       FROM d0 LEFT JOIN fph USING (doc_id)),
-        |ham AS (SELECT x.doc_id AS a, y.doc_id AS b, bit_count(xor(x.f, y.f))::INT AS hamming
-        |        FROM fp x JOIN fp y ON x.doc_id < y.doc_id)
-        |SELECT a, b, hamming FROM ham WHERE hamming <= 6$pairPred ORDER BY a, b""".stripMargin
-
-  /** The d36 one-shot temporal-gradient chain; same `pairPred`
-    * contract. */
-  private def d36VideoOracle(pairPred: String = ""): String =
-    s"""WITH tw AS (
-        |  SELECT doc_id + 10000000 AS doc_id,
-        |    translate(text,
-        |      (SELECT string_agg(chr(i.i::INT), '' ORDER BY i.i) FROM unnest(range(32,127)) i(i)),
-        |      (SELECT string_agg(chr(i.i::INT), '' ORDER BY i.i) FROM unnest(range(33,128)) i(i))) AS text
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |d0 AS (SELECT doc_id, text FROM documents UNION ALL SELECT doc_id, text FROM tw),
-        |b AS (SELECT doc_id,
-        |        list_transform(range(1, length(text)+1), i -> ascii(substr(text,i,1))::BIGINT) AS bs,
-        |        ((length(text)+15)//16)*16 AS P FROM d0),
-        |cells AS (
-        |  SELECT doc_id, g.g AS g,
-        |    coalesce(list_sum(bs[(g.g*P//72)+1 : ((g.g+1)*P//72)]), 0) AS s,
-        |    ((g.g+1)*P//72) - (g.g*P//72) AS n
-        |  FROM b, unnest(range(0,72)) AS g(g)),
-        |bitrows AS (
-        |  SELECT ca.doc_id, ca.g::BIGINT AS j
-        |  FROM cells ca JOIN cells cb ON ca.doc_id = cb.doc_id AND cb.g = ca.g + 8
-        |  WHERE ca.g < 64 AND ca.s * cb.n > cb.s * ca.n),
-        |fph AS (SELECT doc_id, sum(1::HUGEINT << j)::HUGEINT AS h FROM bitrows GROUP BY 1),
-        |fp AS (SELECT d0.doc_id,
-        |        (CASE WHEN coalesce(h, 0::HUGEINT) >= 9223372036854775808::HUGEINT
-        |              THEN coalesce(h, 0::HUGEINT) - 18446744073709551616::HUGEINT
-        |              ELSE coalesce(h, 0::HUGEINT) END)::BIGINT AS f
-        |       FROM d0 LEFT JOIN fph USING (doc_id)),
-        |ham AS (SELECT x.doc_id AS a, y.doc_id AS b, bit_count(xor(x.f, y.f))::INT AS hamming
-        |        FROM fp x JOIN fp y ON x.doc_id < y.doc_id)
-        |SELECT a, b, hamming FROM ham WHERE hamming <= 6$pairPred ORDER BY a, b""".stripMargin
-
-  /** The d32 one-shot dHash chain restricted to twin-touching pairs
-    * — the shared ground truth of the delta (d33) AND streaming (d34)
-    * closures (the d8 identity: batch ids are offset past every
-    * standing id, so "touches the batch" is exactly b >= offset). */
-  private val d33PhashOracle: String =
-    """WITH tw AS (
-        |  SELECT doc_id + 10000000 AS doc_id,
-        |    translate(text,
-        |      (SELECT string_agg(chr(i.i::INT), '' ORDER BY i.i) FROM unnest(range(32,127)) i(i)),
-        |      (SELECT string_agg(chr(i.i::INT), '' ORDER BY i.i) FROM unnest(range(33,128)) i(i))) AS text
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |d0 AS (SELECT doc_id, text FROM documents UNION ALL SELECT doc_id, text FROM tw),
-        |b AS (SELECT doc_id,
-        |        list_transform(range(1, length(text)+1), i -> ascii(substr(text,i,1))::BIGINT) AS bs,
-        |        ((length(text)+15)//16)*16 AS P FROM d0),
-        |cells AS (
-        |  SELECT doc_id, g.g AS g,
-        |    coalesce(list_sum(bs[(g.g*P//72)+1 : ((g.g+1)*P//72)]), 0) AS s,
-        |    ((g.g+1)*P//72) - (g.g*P//72) AS n
-        |  FROM b, unnest(range(0,72)) AS g(g)),
-        |bitrows AS (
-        |  SELECT ca.doc_id, ((ca.g // 9) * 8 + (ca.g % 9))::BIGINT AS j
-        |  FROM cells ca JOIN cells cb ON ca.doc_id = cb.doc_id AND cb.g = ca.g + 1
-        |  WHERE ca.g % 9 < 8 AND ca.s * cb.n > cb.s * ca.n),
-        |fph AS (SELECT doc_id, sum(1::HUGEINT << j)::HUGEINT AS h FROM bitrows GROUP BY 1),
-        |fp AS (SELECT d0.doc_id,
-        |        (CASE WHEN coalesce(h, 0::HUGEINT) >= 9223372036854775808::HUGEINT
-        |              THEN coalesce(h, 0::HUGEINT) - 18446744073709551616::HUGEINT
-        |              ELSE coalesce(h, 0::HUGEINT) END)::BIGINT AS f
-        |       FROM d0 LEFT JOIN fph USING (doc_id)),
-        |ham AS (SELECT x.doc_id AS a, y.doc_id AS b, bit_count(xor(x.f, y.f))::INT AS hamming
-        |        FROM fp x JOIN fp y ON x.doc_id < y.doc_id)
-        |SELECT a, b, hamming FROM ham
-        |WHERE hamming <= 6 AND b >= 10000000 ORDER BY a, b""".stripMargin
-
-  // the m-family oracle vector-source derivations, shared by the
-  // correctness oracles, d30's media chain, and the float-ranking
-  // audits (ONE definition each so the audited chain is exactly the
-  // verified chain)
-  private val m4VectorSourceSql = "SELECT doc_id AS id, [ coalesce(list_sum(bytes[16*d+1 : least(16*d+16, len(bytes))]), 0)::DOUBLE for d in range(0, 16) ] AS v FROM (SELECT doc_id, list_transform(range(1, length(text)+1), i -> ascii(substr(text, i, 1))::BIGINT) AS bytes FROM documents)"
-  private val m9VectorSourceSql = "SELECT doc_id AS id, [ coalesce(list_sum(list_transform(s[16*d+1 : least(16*d+16, len(s))], x -> abs(x))), 0)::DOUBLE for d in range(0, 16) ] AS v FROM (SELECT doc_id, list_transform(range(1, length(text)+1), i -> (ascii(substr(text, i, 1)) - CASE WHEN i = 1 THEN 0 ELSE ascii(substr(text, i-1, 1)) END) * 256) AS s FROM documents)"
-  // `sg` is a window SUM, which DuckDB types HUGEINT — so the composite
-  // id must be cast back to BIGINT: a HUGEINT output column reaches
-  // pandas as float64 (140000.0 vs Spark's int64 140000), which is
-  // value-equal under the local selfcheck's check_dtype=False compare
-  // but hash-DIFFERENT under the driver's canonicalization. This was
-  // the r16–r18 m10 red row: the only oracle emitting HUGEINT ids, and
-  // the only persistent hash_match=false — representation, not numerics
-  // (the fixed-point exactness sweep was chasing the wrong class).
-  private val m10VectorSourceSql = "SELECT (doc_id*1000 + sg)::BIGINT AS id, [ coalesce(fl[i+1], 0)::DOUBLE for i in range(0, 16) ] AS v FROM (SELECT doc_id, sg, list(ws ORDER BY fi) AS fl FROM (SELECT doc_id, fi, ws, sum(cut) OVER (PARTITION BY doc_id ORDER BY fi ROWS UNBOUNDED PRECEDING) AS sg FROM (SELECT doc_id, fi, ws, CASE WHEN abs(ws - lag(ws) OVER (PARTITION BY doc_id ORDER BY fi)) > 150 THEN 1 ELSE 0 END AS cut FROM (SELECT doc_id, fi, list_sum(b[fi*16+1 : least(fi*16+16, len(b))])::BIGINT AS ws FROM (SELECT doc_id, unnest(range(0, (length(text)+15)//16)) AS fi, list_transform(range(1, length(text)+1), i -> ascii(substr(text, i, 1))::BIGINT) AS b FROM documents WHERE doc_id % 20 = 0)))) GROUP BY 1, 2)"
-
+    * `dir` (see `JobQueries.j6OracleSql`); identical to `oracleSql`
+    * elsewhere. */
   def oracleSqlFor(dir: String): Map[String, String] =
-    oracleSql + ("j6_stats" -> j6OracleSql(dir))
+    oracleSql + ("j6_stats" -> JobQueries.j6OracleSql(dir))
 
   /** FLOAT-RANKING AUDITS (the r17 m10 postmortem harness): one DuckDB
     * probe per ANN-family query whose output depends on ordering or
@@ -2921,2640 +96,6 @@ object SparkEntry {
     * opposite orders on a different `list_inner_product`). `Verify`
     * dumps these as `audit_sql.json`; the audit runs in the round
     * gates next to the selfcheck. */
-  /** Threshold-margin audit for the embedding pair-dedup chains
-    * (d5/d7/d11): min |sim − threshold| over the EXACT all-pairs set
-    * plus the operand exactness class — the same verdict contract as
-    * the rest of `auditSql`. `uCte` must end in a relation `u`
-    * (vec_id, embedding); `pairPred` is ANDed onto the pair join. */
-  private def embPairAuditSql(threshold: Double, uCte: String,
-                              pairPred: String = ""): String =
-    s"""WITH $uCte,
-       |e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM u),
-       |fm AS (SELECT id, v, list_max([abs(x::DOUBLE) FOR x IN v]) AS mx FROM e),
-       |fx AS (SELECT id, [floor(x::DOUBLE / mx * 1048576.0)::BIGINT FOR x IN v] AS f FROM fm),
-       |pn AS (SELECT id, v, sqrt(list_inner_product(v, v)) AS nrm
-       |       FROM (SELECT id, [x::DOUBLE FOR x IN f] AS v FROM fx)),
-       |prs AS (SELECT list_inner_product(x.v, y.v) / (x.nrm * y.nrm) AS s
-       |        FROM pn x JOIN pn y ON x.id < y.id$pairPred),
-       |xc AS (SELECT ${graft.ann.Ann.integerExactCheck("pn", "v")}::INTEGER AS ok)
-       |SELECT 'threshold' AS stage,
-       |       (SELECT count(*) FROM prs WHERE s = $threshold)::BIGINT AS n_ties,
-       |       coalesce((SELECT min(abs(s - $threshold)) FROM prs), 1.0) AS min_gap,
-       |       (SELECT ok FROM xc) AS integer_exact""".stripMargin
-
-  def auditSql: Map[String, String] = Map(
-    "s1_ann_bruteforce" -> Ann.bruteAuditSql(k = 5, queryPred = "q.id < 10"),
-    "d7_embedding_simjoin" -> embPairAuditSql(0.4,
-      "u AS (SELECT vec_id, embedding FROM embeddings)"),
-    "d5_embedding_neardup" -> embPairAuditSql(0.9,
-      """e0 AS (SELECT vec_id, embedding FROM embeddings),
-        |p AS (SELECT vec_id + 10000 AS vec_id,
-        |        [CASE WHEN i = 1 THEN ((embedding[i]::DOUBLE + 0.1)::FLOAT) ELSE embedding[i] END
-        |         for i in range(1, len(embedding)+1)] AS embedding FROM e0),
-        |u AS (SELECT * FROM e0 UNION ALL SELECT * FROM p)""".stripMargin),
-    "d11_stream_embed_dedup" -> embPairAuditSql(0.9,
-      """e0 AS (SELECT vec_id, embedding FROM embeddings),
-        |p AS (SELECT vec_id + 10000 AS vec_id,
-        |        [CASE WHEN i = 1 THEN ((embedding[i]::DOUBLE + 0.1)::FLOAT) ELSE embedding[i] END
-        |         for i in range(1, len(embedding)+1)] AS embedding FROM e0 WHERE vec_id < 100),
-        |u AS (SELECT * FROM e0 UNION ALL SELECT * FROM p)""".stripMargin,
-      pairPred = " AND y.id >= 10000"),
-    "m3_multimodal_ann" -> Ann.bruteAuditSql(k = 3, queryPred = "q.id < 5",
-      source = m4VectorSourceSql),
-    "s2_ann_lsh" -> Ann.lshAuditSql(dims = 64, k = 5),
-    "s4_ann_indexed" -> Ann.lshAuditSql(dims = 64, k = 5),
-    "s3_ann_ivf" -> Ann.ivfAuditSql(k = 5),
-    "s5_ivf_indexed" -> Ann.ivfAuditSql(k = 5),
-    "s10_filtered_ann" -> Ann.ivfAuditSql(k = 5, neighborPred = "label = 1"),
-    "m4_multimodal_ann_indexed" -> Ann.ivfAuditSql(k = 3, queryPred = "id < 5",
-      source = m4VectorSourceSql),
-    "m9_audio_ann_indexed" -> Ann.ivfAuditSql(k = 3, queryPred = "id < 5",
-      source = m9VectorSourceSql),
-    "m10_segment_ann_indexed" -> Ann.ivfAuditSql(k = 3,
-      queryPred = "id % 1000 = 0 AND id < 100000", source = m10VectorSourceSql),
-    "s7_ann_pq" -> graft.ann.Pq.auditSql(k = 5),
-    "s8_ann_pq_indexed" -> graft.ann.Pq.auditSql(k = 5),
-    "s9_ivfpq_indexed" -> graft.ann.IvfPq.auditSql(k = 5),
-    "s11_filtered_ivfpq" -> graft.ann.IvfPq.auditSql(k = 5, neighborPred = "label = 1"),
-    "d12_semantic_dedup" -> graft.ann.SemDedup.auditSql(nlist = 16, rounds = 2, threshold = 0.4),
-    "d15_semantic_indexed" -> graft.ann.SemDedup.auditSql(nlist = 16, rounds = 2, threshold = 0.4),
-    "d14_semantic_delta" -> graft.ann.SemDedup.deltaAuditSql(nlist = 16, rounds = 2, threshold = 0.9),
-    "d17_stream_semantic" -> graft.ann.SemDedup.deltaAuditSql(nlist = 16, rounds = 2, threshold = 0.9),
-    "d26_semantic_decon" -> graft.ann.SemDedup.deconAuditSql(nlist = 16, rounds = 2,
-      threshold = 0.9, nprobe = 2),
-    "d30_media_neardup" -> graft.ann.SemDedup.mediaNeardupAuditSql(nlist = 16, rounds = 2,
-      threshold = 0.9999, source = m4VectorSourceSql))
-
-  def oracleSql: Map[String, String] = Map(
-
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        | round(sum(CAST(l_quantity AS DECIMAL(38,6))),2)::DOUBLE AS sum_qty,
-        | round(sum(CAST(l_extendedprice AS DECIMAL(38,6))),2)::DOUBLE AS sum_base_price,
-        | round(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(38,6))),2)::DOUBLE AS sum_disc_price,
-        | round(sum(CAST(l_extendedprice*(1-l_discount)*(1+l_tax) AS DECIMAL(38,6))),2)::DOUBLE AS sum_charge,
-        | count(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "g1_lookup" ->
-      s"SELECT $custUri AS id, c_name AS name, c_acctbal AS acctbal FROM customer WHERE c_custkey = 42",
-
-    "g2_outgoing" ->
-      s"""SELECT $custUri AS start, '${Tpch.pNation}' AS predicate,
-         | $natUri AS related, n_name AS name
-         |FROM customer JOIN nation ON c_nationkey = n_nationkey
-         |WHERE c_mktsegment = 'BUILDING' ORDER BY start""".stripMargin,
-
-    "g3_incoming" ->
-      s"""SELECT * FROM (
-         | SELECT $natUri AS start, '${Tpch.pNation}' AS predicate, 'customer' AS dataset,
-         |   $custUri AS related, CAST(c_custkey AS BIGINT) AS related_key
-         | FROM customer JOIN nation ON c_nationkey = n_nationkey WHERE n_name = 'NATION_7'
-         | UNION ALL
-         | SELECT $natUri, '${Tpch.pNation}', 'supplier',
-         |   $suppUri, CAST(s_suppkey AS BIGINT)
-         | FROM supplier JOIN nation ON s_nationkey = n_nationkey WHERE n_name = 'NATION_7'
-         |) ORDER BY dataset, related_key""".stripMargin,
-
-    "g4_two_hop" ->
-      s"""SELECT $custUri AS start, '${tpchBase}region/' || r_regionkey AS related, r_name AS region_name
-         |FROM customer JOIN nation ON c_nationkey = n_nationkey
-         | JOIN region ON n_regionkey = r_regionkey
-         |WHERE c_custkey < 50 ORDER BY start""".stripMargin,
-
-    "g5_star_predicate" ->
-      s"""SELECT * FROM (
-         | SELECT '${tpchBase}lineitem/' || l_orderkey || '-' || l_linenumber AS start,
-         |   '${Tpch.pOrder}' AS predicate, '${tpchBase}orders/' || o_orderkey AS related
-         | FROM lineitem JOIN orders ON l_orderkey = o_orderkey WHERE l_orderkey <= 32
-         | UNION ALL
-         | SELECT '${tpchBase}lineitem/' || l_orderkey || '-' || l_linenumber,
-         |   '${Tpch.pPart}', '${tpchBase}part/' || p_partkey
-         | FROM lineitem JOIN part ON l_partkey = p_partkey WHERE l_orderkey <= 32
-         | UNION ALL
-         | SELECT '${tpchBase}lineitem/' || l_orderkey || '-' || l_linenumber,
-         |   '${Tpch.pSupplier}', '${tpchBase}supplier/' || s_suppkey
-         | FROM lineitem JOIN supplier ON l_suppkey = s_suppkey WHERE l_orderkey <= 32
-         |) ORDER BY start, predicate, related""".stripMargin,
-
-    "g6_dataset_scope" ->
-      s"""SELECT $natUri AS start, '${Tpch.pNation}' AS predicate, 'supplier' AS dataset,
-         | $suppUri AS related, CAST(s_suppkey AS BIGINT) AS related_key
-         |FROM supplier JOIN nation ON s_nationkey = n_nationkey WHERE n_name = 'NATION_3'
-         |ORDER BY dataset, related_key""".stripMargin,
-
-    "g7_namespaces" ->
-      s"""SELECT $suppUri AS id, 'supp:' || s_suppkey AS curie, $suppUri AS expanded
-         |FROM supplier ORDER BY id""".stripMargin,
-
-    "g8_details_lookup" ->
-      s"""SELECT * FROM (
-         | SELECT '${tpchBase}part/' || p_partkey AS id, '${Tpch.schemaNs}part/p_brand' AS property,
-         |   p_brand AS value, 'part' AS dataset FROM part WHERE p_partkey = 7
-         | UNION ALL
-         | SELECT '${tpchBase}part/' || p_partkey, '${Tpch.schemaNs}part/p_name', p_name, 'part'
-         | FROM part WHERE p_partkey = 7
-         | UNION ALL
-         | SELECT '${tpchBase}part/' || p_partkey, '${Tpch.schemaNs}part/p_size', CAST(p_size AS VARCHAR), 'part'
-         | FROM part WHERE p_partkey = 7
-         | UNION ALL
-         | SELECT '${tpchBase}part/' || p_partkey, '${Tpch.schemaNs}part/p_type', p_type, 'part'
-         | FROM part WHERE p_partkey = 7
-         |) ORDER BY property""".stripMargin,
-
-    "c1_changes_since" ->
-      """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value
-        |FROM events WHERE event_id > 500 ORDER BY event_id""".stripMargin,
-
-    // the partitioned layout must be invisible to the read: same rows
-    // as plain changes-since over the unpartitioned log
-    "c10_partitioned_changes" ->
-      """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value
-        |FROM events WHERE event_id > 500 ORDER BY event_id""".stripMargin,
-
-    "g12_traversal_at_time" ->
-      s"""WITH s AS (
-         |  SELECT user_id, event_id, event_type,
-         |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-         |  FROM events WHERE event_id <= 700)
-         |SELECT 'http://graft.io/events/type/' || event_type AS start,
-         |       '${Tpch.schemaNs}did' AS predicate,
-         |       'http://graft.io/events/user/' || user_id AS related,
-         |       user_id AS related_key
-         |FROM s WHERE rn = 1 AND event_type <> 'error'
-         |ORDER BY start, related_key""".stripMargin,
-
-    "g13_array_refs" ->
-      s"""WITH b AS (
-         |  SELECT o_custkey, list(o_orderkey ORDER BY o_orderkey) AS refs
-         |  FROM orders WHERE o_orderkey <= 320 GROUP BY o_custkey)
-         |SELECT '${tpchBase}customer/' || b.o_custkey AS start,
-         |       '${Tpch.pOrder}' AS predicate,
-         |       '${tpchBase}orders/' || r.k AS related,
-         |       o.o_totalprice
-         |FROM b, unnest(b.refs) AS r(k) JOIN orders o ON o.o_orderkey = r.k
-         |ORDER BY start, related""".stripMargin,
-
-    "g14_paged_incoming" ->
-      s"""SELECT * FROM (
-         | SELECT * FROM (
-         |  SELECT $natUri AS start, '${Tpch.pNation}' AS predicate, 'customer' AS dataset,
-         |    $custUri AS related, CAST(c_custkey AS BIGINT) AS related_key
-         |  FROM customer JOIN nation ON c_nationkey = n_nationkey WHERE n_name = 'NATION_7'
-         |  UNION ALL
-         |  SELECT $natUri, '${Tpch.pNation}', 'supplier',
-         |    $suppUri, CAST(s_suppkey AS BIGINT)
-         |  FROM supplier JOIN nation ON s_nationkey = n_nationkey WHERE n_name = 'NATION_7'
-         | ) WHERE (dataset, related_key) > ('customer', 50)
-         | ORDER BY dataset, related_key LIMIT 15
-         |) ORDER BY dataset, related_key""".stripMargin,
-
-    "j14_proxy_dataset" ->
-      s"""SELECT $custUri AS id, c_name AS name, n_name
-         |FROM customer JOIN nation ON c_nationkey = n_nationkey
-         |WHERE n_name = 'NATION_5' ORDER BY id""".stripMargin,
-
-    "c9_retention_gc" ->
-      """SELECT user_id, event_id, event_type, value FROM (
-        |  SELECT user_id, event_id, event_type, value,
-        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-        |  FROM events WHERE event_id <= 9000)
-        |WHERE rn = 1
-        |UNION ALL
-        |SELECT user_id, event_id, event_type, value FROM events WHERE event_id > 9000
-        |ORDER BY user_id, event_id""".stripMargin,
-
-    "j12_fullsync_deletes" ->
-      """WITH latest AS (
-        |  SELECT user_id, event_id, event_type,
-        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-        |  FROM events),
-        |live AS (SELECT user_id, event_id, event_type FROM latest WHERE rn = 1 AND event_type <> 'error'),
-        |batch AS (SELECT DISTINCT user_id FROM events WHERE event_id > 9900)
-        |SELECT user_id, event_id AS last_event_id, event_type AS last_type
-        |FROM live WHERE user_id IN (SELECT user_id FROM batch)
-        |ORDER BY user_id""".stripMargin,
-
-    // identical ground truth to j12: the streaming drain must not change
-    // what the completed fullsync tombstones
-    "j17_stream_fullsync" ->
-      """WITH latest AS (
-        |  SELECT user_id, event_id, event_type,
-        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-        |  FROM events),
-        |live AS (SELECT user_id, event_id, event_type FROM latest WHERE rn = 1 AND event_type <> 'error'),
-        |batch AS (SELECT DISTINCT user_id FROM events WHERE event_id > 9900)
-        |SELECT user_id, event_id AS last_event_id, event_type AS last_type
-        |FROM live WHERE user_id IN (SELECT user_id FROM batch)
-        |ORDER BY user_id""".stripMargin,
-
-    "c2_latest_only" ->
-      """SELECT user_id, event_id AS last_event_id, event_type AS last_type, value AS last_value
-        |FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn FROM events)
-        |WHERE rn = 1 ORDER BY user_id""".stripMargin,
-
-    "c3_asof_snapshot" ->
-      """SELECT user_id, event_id AS last_event_id, event_type AS last_type, value AS last_value
-        |FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-        |      FROM events WHERE event_id <= 700)
-        |WHERE rn = 1 ORDER BY user_id""".stripMargin,
-
-    "c4_deleted_tombstones" ->
-      """SELECT user_id, event_id AS last_event_id, event_type AS last_type
-        |FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn FROM events)
-        |WHERE rn = 1 AND event_type <> 'error' ORDER BY user_id""".stripMargin,
-
-    "c5_compaction_dedup" ->
-      """SELECT user_id, event_id, event_type
-        |FROM (SELECT user_id, event_id, event_type,
-        |        lag(event_type) OVER (PARTITION BY user_id ORDER BY event_id) AS prev_type
-        |      FROM events)
-        |WHERE prev_type IS NULL OR prev_type <> event_type
-        |ORDER BY user_id, event_id""".stripMargin,
-
-    "c6_changes_count" ->
-      """SELECT event_type, count(*) AS n, round(sum(value),2) AS sum_value
-        |FROM events WHERE event_id > 200 GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "j1_union_source" ->
-      s"""SELECT * FROM (
-         | SELECT $custUri AS id, c_name AS name, c_acctbal AS acctbal, 'customer' AS dataset FROM customer
-         | UNION ALL
-         | SELECT $suppUri, s_name, s_acctbal, 'supplier' FROM supplier
-         |) ORDER BY dataset, id""".stripMargin,
-
-    "j2_multisource_affected" ->
-      s"""SELECT '${tpchBase}orders/' || o_orderkey AS id, o_orderkey
-         |FROM orders WHERE o_custkey IN (
-         |  SELECT c_custkey FROM customer WHERE c_nationkey IN (
-         |    SELECT n_nationkey FROM nation WHERE n_name IN ('NATION_1','NATION_2')))
-         |ORDER BY o_orderkey""".stripMargin,
-
-    "j3_transform_pipeline" ->
-      s"""SELECT '${tpchBase}part/' || p_partkey AS id, p_name, p_type AS category,
-         | round(p_retailprice * 0.1, 2) AS margin,
-         | '${Tpch.schemaNs}size/' || p_size AS size_class
-         |FROM part ORDER BY id""".stripMargin,
-
-    "j6_stats" -> j6OracleSql("/root/testdata/sf0.01"),
-
-    // top-3 datasets by row count (the only category registry-only
-    // targets report)
-    "j19_stats_top" ->
-      """WITH s AS (
-        |  SELECT 'customer' AS dataset, count(*)::BIGINT AS v FROM customer
-        |  UNION ALL SELECT 'nation', count(*)::BIGINT FROM nation
-        |  UNION ALL SELECT 'orders', count(*)::BIGINT FROM orders
-        |  UNION ALL SELECT 'region', count(*)::BIGINT FROM region
-        |  UNION ALL SELECT 'supplier', count(*)::BIGINT FROM supplier
-        |  UNION ALL SELECT 'part', count(*)::BIGINT FROM part),
-        |r AS (
-        |  SELECT 'rows' AS category, dataset, v AS value,
-        |         row_number() OVER (ORDER BY v DESC, dataset) AS rank
-        |  FROM s)
-        |SELECT category, dataset, value, rank::INT AS rank FROM r
-        |WHERE rank <= 3 ORDER BY category, rank""".stripMargin,
-
-    // the deterministic replay of the j20 schedule: the firing seqs and
-    // tick instants are fixed by the cron simulation (id-ordered firing
-    // within a tick), the processed counts recompute from documents
-    "j20_job_history" ->
-      """WITH c AS (
-        |  SELECT
-        |    (SELECT count(*) FROM documents WHERE doc_id % 2 = 0)::BIGINT AS n_a,
-        |    (SELECT count(*) FROM documents WHERE doc_id % 3 = 0)::BIGINT AS n_b,
-        |    (SELECT count(*) FROM documents WHERE doc_id % 5 = 0)::BIGINT AS n_c)
-        |SELECT * FROM (
-        |  SELECT 'copy-a' AS job_id, 5::BIGINT AS seq,
-        |    epoch_us(TIMESTAMP '2026-08-16 03:00:00') AS start_us,
-        |    epoch_us(TIMESTAMP '2026-08-16 03:00:00') AS end_us,
-        |    n_a AS processed, '' AS last_error,
-        |    3::BIGINT AS n_runs, 0::BIGINT AS n_failed FROM c
-        |  UNION ALL SELECT 'rollup-b', 6::BIGINT,
-        |    epoch_us(TIMESTAMP '2026-08-16 03:00:00'),
-        |    epoch_us(TIMESTAMP '2026-08-16 03:00:00'),
-        |    n_b, '', 3::BIGINT, 1::BIGINT FROM c
-        |  UNION ALL SELECT 'weekly-c', 7::BIGINT,
-        |    epoch_us(TIMESTAMP '2026-08-16 04:00:00'),
-        |    epoch_us(TIMESTAMP '2026-08-16 04:00:00'),
-        |    n_c, '', 1::BIGINT, 0::BIGINT FROM c)
-        |ORDER BY job_id""".stripMargin,
-
-    // per-dataset counts plus the generated `all` rollup row
-    "j18_stats_rollup" ->
-      """WITH s AS (
-        |  SELECT 'customer' AS dataset, count(*)::BIGINT AS n_rows FROM customer
-        |  UNION ALL SELECT 'nation', count(*)::BIGINT FROM nation
-        |  UNION ALL SELECT 'orders', count(*)::BIGINT FROM orders
-        |  UNION ALL SELECT 'region', count(*)::BIGINT FROM region)
-        |SELECT dataset, n_rows, 1::BIGINT AS refresh_seq FROM (
-        |  SELECT dataset, n_rows FROM s
-        |  UNION ALL SELECT 'all', sum(n_rows)::BIGINT FROM s)
-        |ORDER BY dataset""".stripMargin,
-
-    "q3_top_orders" ->
-      """SELECT l_orderkey, round(sum(l_extendedprice*(1-l_discount)),2) AS revenue,
-        | strftime(o_orderdate, '%Y-%m-%d') AS o_date
-        |FROM customer JOIN orders ON c_custkey = o_custkey JOIN lineitem ON l_orderkey = o_orderkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-06-01'
-        |  AND l_shipdate > TIMESTAMP '1998-06-01'
-        |GROUP BY l_orderkey, o_orderdate
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-
-    "q5_region_volume" ->
-      """SELECT n_name, round(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(38,6))),2)::DOUBLE AS revenue
-        |FROM region JOIN nation ON n_regionkey = r_regionkey
-        | JOIN customer ON c_nationkey = n_nationkey
-        | JOIN orders ON o_custkey = c_custkey
-        | JOIN lineitem ON l_orderkey = o_orderkey
-        | JOIN supplier ON s_suppkey = l_suppkey AND s_nationkey = c_nationkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin,
-
-    "q6_forecast_revenue" ->
-      """SELECT round(sum(CAST(l_extendedprice * l_discount AS DECIMAL(38,6))), 2)::DOUBLE AS revenue, count(*) AS n
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
-
-    "e1_window_agg" ->
-      """SELECT epoch(time_bucket(INTERVAL 1 HOUR, ts::TIMESTAMP))::BIGINT AS window_start,
-        | event_type, count(*) AS n, round(sum(value),2) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // the same first-touch min-chain, written as correlated CTEs: t1 =
-    // earliest view; t2 = earliest click after t1 within 24 h of t1;
-    // t3 = earliest purchase after t2 within the same horizon
-    "e6_funnel" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS us, event_type FROM events),
-        |s1 AS (SELECT user_id, min(us) AS t1 FROM e WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT s1.user_id, t1,
-        |         min(CASE WHEN e.us > t1 AND e.us <= t1 + 86400000000 THEN e.us END) AS t2
-        |       FROM s1 LEFT JOIN e ON e.user_id = s1.user_id AND e.event_type = 'click'
-        |       GROUP BY 1, 2),
-        |s3 AS (SELECT s2.user_id, t1, t2,
-        |         min(CASE WHEN e.us > t2 AND e.us <= t1 + 86400000000 THEN e.us END) AS t3
-        |       FROM s2 LEFT JOIN e ON e.user_id = s2.user_id AND e.event_type = 'purchase'
-        |       GROUP BY 1, 2, 3)
-        |SELECT user_id, t1, t2, t3,
-        |  (CASE WHEN t3 IS NOT NULL THEN 3 WHEN t2 IS NOT NULL THEN 2 ELSE 1 END)::BIGINT AS depth
-        |FROM s3 ORDER BY user_id""".stripMargin,
-
-    // the e7 chain verbatim: the absorbed standing state's read-out
-    // must equal the one-shot triangle over the full log (the d8
-    // identity applied to retention)
-    "e9_retention_delta" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) // 604800000000 AS p FROM events),
-        |f AS (SELECT user_id, min(p) AS cohort FROM e GROUP BY 1),
-        |act AS (SELECT DISTINCT e.user_id, f.cohort, e.p - f.cohort AS period_offset
-        |        FROM e JOIN f ON e.user_id = f.user_id),
-        |sz AS (SELECT cohort, count(*) AS cohort_size FROM f GROUP BY 1)
-        |SELECT act.cohort, act.period_offset, count(*)::BIGINT AS n_active,
-        |  sz.cohort_size::BIGINT AS cohort_size
-        |FROM act JOIN sz ON act.cohort = sz.cohort
-        |GROUP BY 1, 2, sz.cohort_size ORDER BY act.cohort, period_offset""".stripMargin,
-
-    // the e6 chain restricted to COMPLETED funnels — the streamed
-    // per-batch emissions must union to exactly the batch funnel's
-    // depth-3 rows (mid-funnel users stay in the state store)
-    "e8_stream_funnel" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS us, event_type FROM events),
-        |s1 AS (SELECT user_id, min(us) AS t1 FROM e WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT s1.user_id, t1,
-        |         min(CASE WHEN e.us > t1 AND e.us <= t1 + 86400000000 THEN e.us END) AS t2
-        |       FROM s1 LEFT JOIN e ON e.user_id = s1.user_id AND e.event_type = 'click'
-        |       GROUP BY 1, 2),
-        |s3 AS (SELECT s2.user_id, t1, t2,
-        |         min(CASE WHEN e.us > t2 AND e.us <= t1 + 86400000000 THEN e.us END) AS t3
-        |       FROM s2 LEFT JOIN e ON e.user_id = s2.user_id AND e.event_type = 'purchase'
-        |       GROUP BY 1, 2, 3)
-        |SELECT user_id, t1, t2, t3 FROM s3 WHERE t3 IS NOT NULL ORDER BY user_id""".stripMargin,
-
-    // epoch-anchored integer weeks: first-seen min per user → cohort,
-    // distinct (cohort, offset, user) → cell counts, cohort sizes from
-    // the first-seen table
-    "e7_retention_cohorts" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) // 604800000000 AS p FROM events),
-        |f AS (SELECT user_id, min(p) AS cohort FROM e GROUP BY 1),
-        |act AS (SELECT DISTINCT e.user_id, f.cohort, e.p - f.cohort AS period_offset
-        |        FROM e JOIN f ON e.user_id = f.user_id),
-        |sz AS (SELECT cohort, count(*) AS cohort_size FROM f GROUP BY 1)
-        |SELECT act.cohort, act.period_offset, count(*)::BIGINT AS n_active,
-        |  sz.cohort_size::BIGINT AS cohort_size
-        |FROM act JOIN sz ON act.cohort = sz.cohort
-        |GROUP BY 1, 2, sz.cohort_size ORDER BY act.cohort, period_offset""".stripMargin,
-
-    "e4_sliding_window" ->
-      """WITH b AS (
-        |  SELECT epoch(time_bucket(INTERVAL 1 HOUR, ts::TIMESTAMP))::BIGINT AS h, event_type, value
-        |  FROM events),
-        |cover AS (
-        |  SELECT h - 3600 AS window_start, event_type, value FROM b
-        |  UNION ALL
-        |  SELECT h AS window_start, event_type, value FROM b)
-        |SELECT window_start, event_type, count(*) AS n, round(sum(value),2) AS sum_value
-        |FROM cover GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "p4_sharded_export" ->
-      """SELECT ('0x' || substr(md5('shard:' || doc_id), 1, 8))::BIGINT % 8 AS shard,
-        |       count(*) AS n_rows
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "p3_clean_pipeline" ->
-      s"""WITH aug AS (
-         |  SELECT doc_id, lang, source, $plantPiiSql AS text
-         |  FROM documents),
-         |scr AS (
-         |  SELECT doc_id, lang, source,
-         |    ${scrubSql("text")} AS text
-         |  FROM aug),
-         |words AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), w -> w <> '') AS ws
-         |  FROM scr),
-         |sh AS (
-         |  SELECT DISTINCT doc_id, array_to_string(ws[t.i:t.i+2], ' ') AS s
-         |  FROM words, unnest(range(1, len(ws)-1)) AS t(i)),
-         |df_ AS (SELECT s, count(*) AS df FROM sh GROUP BY 1),
-         |per AS (
-         |  SELECT sh.doc_id AS id, count(*) AS n_shingles,
-         |         count(CASE WHEN df_.df >= greatest(3, (SELECT count(*) * 2 // 1000 FROM documents)) THEN 1 END) AS n_boiler
-         |  FROM sh JOIN df_ USING (s) GROUP BY 1),
-         |keepb AS (SELECT id FROM per WHERE (n_boiler * 1000 // n_shingles) / 1000.0 <= 0.5),
-         |samp AS (
-         |  SELECT s.* FROM scr s JOIN keepb k ON s.doc_id = k.id
-         |  WHERE ('0x' || substr(md5('samp:' || s.doc_id), 1, 8))::BIGINT <
-         |    CASE s.lang WHEN 'en' THEN ${TextAnalysis.sampleThreshold(0.35)}
-         |                WHEN 'fr' THEN ${TextAnalysis.sampleThreshold(0.8)}
-         |                ELSE ${TextAnalysis.sampleThreshold(1.0)} END)
-         |SELECT lang, source, count(*) AS n_docs,
-         |       sum(len(regexp_extract_all(text, '\\S+')))::BIGINT AS total_tokens
-         |FROM samp GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // full recompute of the learned filter: same plant, same md5 bucket
-    // hash, same fixed-point purity/prior integer arithmetic
-    "x9_quality_classifier" ->
-      s"""WITH d0 AS (SELECT doc_id, $plantJunkSql AS text, (doc_id % 4 <> 1) AS label FROM documents),
-        |w AS (
-        |  SELECT doc_id, label,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-        |  FROM d0),
-        |tok AS (
-        |  SELECT doc_id, label, ('0x' || substr(md5(t.t), 1, 8))::BIGINT % 256 AS bucket
-        |  FROM w, unnest(ws) AS t(t)),
-        |tr AS (SELECT * FROM tok WHERE doc_id < 400),
-        |per AS (SELECT bucket, sum(CASE WHEN label THEN 1 ELSE 0 END) AS pos, count(*) AS tot FROM tr GROUP BY 1),
-        |pri AS (SELECT (sum(CASE WHEN label THEN 1 ELSE 0 END) + 1) * 1000000 // (count(*) + 2) AS prior FROM tr),
-        |bad AS (SELECT bucket FROM per, pri WHERE (pos + 1) * 1000000 // (tot + 2) < prior // 2),
-        |sc AS (SELECT tok.doc_id AS id, count(*) AS n_tokens, count(bad.bucket) AS n_flagged
-        |       FROM tok LEFT JOIN bad USING (bucket) WHERE tok.doc_id >= 400 GROUP BY 1),
-        |ids AS (SELECT doc_id AS id FROM d0 WHERE doc_id >= 400)
-        |SELECT ids.id, coalesce(sc.n_tokens, 0)::BIGINT AS n_tokens,
-        |       coalesce(sc.n_flagged, 0)::BIGINT AS n_flagged,
-        |       (coalesce(sc.n_flagged, 0) * 1000000 // greatest(coalesce(sc.n_tokens, 0), 1)) / 1000000.0 AS bad_frac,
-        |       coalesce(sc.n_flagged, 0) = 0 AS pred
-        |FROM ids LEFT JOIN sc USING (id) ORDER BY id""".stripMargin,
-
-    // from-scratch unigram-LM recompute: bucket counts, integer-log2
-    // bits via the identical length(bin(..)) both engines expose, and
-    // the fixed-point per-doc mean
-    "x10_surprisal" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-        |  FROM documents),
-        |tok AS (SELECT doc_id, ('0x' || substr(md5(t.t), 1, 8))::BIGINT % 4096 AS bucket FROM w, unnest(ws) AS t(t)),
-        |per AS (SELECT bucket, count(*) AS cnt FROM tok GROUP BY 1),
-        |tot AS (SELECT count(*) AS total FROM tok),
-        |m AS (SELECT bucket, length(bin(total // cnt))::BIGINT AS bits FROM per, tot),
-        |sc AS (SELECT doc_id AS id, count(*) AS n_tokens, sum(bits)::BIGINT AS sum_bits
-        |       FROM tok JOIN m USING (bucket) GROUP BY 1),
-        |ids AS (SELECT DISTINCT doc_id AS id FROM documents)
-        |SELECT ids.id, coalesce(sc.n_tokens, 0)::BIGINT AS n_tokens,
-        |       coalesce(sc.sum_bits, 0)::BIGINT AS sum_bits,
-        |       (coalesce(sc.sum_bits, 0) * 1000000 // greatest(coalesce(sc.n_tokens, 0), 1))::BIGINT AS mean_bits_fp
-        |FROM ids LEFT JOIN sc USING (id) ORDER BY id""".stripMargin,
-
-    // the oracle is the semantics the histogram shape must reproduce
-    // exactly: per-language row_number by (quality desc, doc_id), keep
-    // rn <= ceil(n * 20%) — ties at the threshold keep the lowest ids
-    "x11_quality_topq" ->
-      """WITH w AS (
-        |  SELECT doc_id, lang, text,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id, lang,
-        |    length(text)::BIGINT AS n_chars_c,
-        |    len(ws)::BIGINT AS n_words,
-        |    len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))::BIGINT AS n_punct,
-        |    len(list_filter(ws, x -> list_contains(['the','a','of','and','to','in','is'], x)))::BIGINT AS n_stop
-        |  FROM w),
-        |q AS (
-        |  SELECT doc_id, lang,
-        |    (least(n_words, 100) * 50 + (n_stop * 3000 // greatest(n_words, 1))
-        |     + 2000 - (n_punct * 2000 // greatest(n_chars_c, 1)))::BIGINT AS iq
-        |  FROM s),
-        |r AS (
-        |  SELECT doc_id, lang, iq,
-        |    row_number() OVER (PARTITION BY lang ORDER BY iq DESC, doc_id) AS rn,
-        |    count(*) OVER (PARTITION BY lang) AS n
-        |  FROM q)
-        |SELECT doc_id, lang, iq / 10000.0 AS quality FROM r
-        |WHERE lang IS NOT NULL AND rn <= (n * 2000 + 9999) // 10000
-        |ORDER BY doc_id""".stripMargin,
-
-    // the naive per-group sort the engine never runs: the x11 iq
-    // formula, then each percentile = the iq at row_number rank
-    // ceil(q·n/10⁴) in ascending order (tie order cannot change the
-    // value AT a rank, so row_number is safe here)
-    "x19_quality_quantiles" ->
-      """WITH w AS (
-        |  SELECT doc_id, lang, text,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id, lang,
-        |    length(text)::BIGINT AS n_chars_c,
-        |    len(ws)::BIGINT AS n_words,
-        |    len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))::BIGINT AS n_punct,
-        |    len(list_filter(ws, x -> list_contains(['the','a','of','and','to','in','is'], x)))::BIGINT AS n_stop
-        |  FROM w WHERE lang IS NOT NULL),
-        |q AS (
-        |  SELECT doc_id, lang,
-        |    (least(n_words, 100) * 50 + (n_stop * 3000 // greatest(n_words, 1))
-        |     + 2000 - (n_punct * 2000 // greatest(n_chars_c, 1)))::BIGINT AS iq
-        |  FROM s),
-        |r AS (
-        |  SELECT lang, iq,
-        |    row_number() OVER (PARTITION BY lang ORDER BY iq) AS rn,
-        |    count(*) OVER (PARTITION BY lang) AS n
-        |  FROM q)
-        |SELECT lang,
-        |  min(CASE WHEN rn = (n * 5000 + 9999) // 10000 THEN iq END)::BIGINT AS p50_iq,
-        |  min(CASE WHEN rn = (n * 9000 + 9999) // 10000 THEN iq END)::BIGINT AS p90_iq,
-        |  min(CASE WHEN rn = (n * 9900 + 9999) // 10000 THEN iq END)::BIGINT AS p99_iq
-        |FROM r GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // from-scratch bigram-LM recompute: the (prev,cur) hashed pair
-    // stream with the -1 BOS context, the model trained on the en
-    // slice only, and the three surprisal legs (seen-pair conditional
-    // bits, +1-bit unigram backoff, 1+bits(total) worst case) via the
-    // identical length(bin(..)) integer log2 both engines expose
-    "x20_bigram_surprisal" ->
-      """WITH w AS (
-        |  SELECT doc_id, lang,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-        |  FROM documents),
-        |pr AS (
-        |  SELECT doc_id, lang,
-        |    CASE WHEN t.i = 1 THEN -1
-        |         ELSE ('0x' || substr(md5(ws[t.i-1]), 1, 8))::BIGINT % 1024 END AS pb,
-        |    ('0x' || substr(md5(ws[t.i]), 1, 8))::BIGINT % 1024 AS cb
-        |  FROM w, unnest(range(1, len(ws)+1)) AS t(i)),
-        |pair AS (SELECT pb, cb, count(*)::BIGINT AS cnt FROM pr WHERE lang = 'en' GROUP BY 1, 2),
-        |ctx AS (SELECT pb, sum(cnt)::BIGINT AS ctx_cnt FROM pair GROUP BY 1),
-        |uni AS (SELECT cb, sum(cnt)::BIGINT AS ucnt FROM pair GROUP BY 1),
-        |tot AS (SELECT coalesce(sum(cnt), 0)::BIGINT AS total FROM pair),
-        |pbits AS (SELECT pair.pb, pair.cb, length(bin(ctx_cnt // cnt))::BIGINT AS pair_bits
-        |          FROM pair JOIN ctx USING (pb)),
-        |ubits AS (SELECT cb, (1 + length(bin(total // ucnt)))::BIGINT AS uni_bits FROM uni, tot),
-        |sc AS (SELECT pr.doc_id AS id, count(*)::BIGINT AS n_tokens,
-        |         sum(coalesce(pair_bits, coalesce(uni_bits, 1 + length(bin(total)))))::BIGINT AS sum_bits
-        |       FROM pr LEFT JOIN pbits USING (pb, cb) LEFT JOIN ubits USING (cb), tot
-        |       GROUP BY 1),
-        |ids AS (SELECT DISTINCT doc_id AS id FROM documents)
-        |SELECT ids.id, coalesce(sc.n_tokens, 0)::BIGINT AS n_tokens,
-        |       coalesce(sc.sum_bits, 0)::BIGINT AS sum_bits,
-        |       (coalesce(sc.sum_bits, 0) * 1000000 // greatest(coalesce(sc.n_tokens, 0), 1))::BIGINT AS mean_bits_fp
-        |FROM ids LEFT JOIN sc USING (id) ORDER BY id""".stripMargin,
-
-    // from-scratch recompute of the sharded bucket ranks: the same
-    // (bucket, shard)-partitioned row_number (tie-broken len desc, id)
-    // and the per-batch padding account in integer fixed point
-    "p26_length_buckets" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-        |  FROM documents),
-        |l AS (SELECT doc_id, len(ws)::BIGINT AS n_tok FROM w WHERE len(ws) > 0),
-        |b AS (SELECT doc_id, n_tok, (n_tok - 1) // 16 AS bucket, doc_id // 256 AS shard FROM l),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY bucket, shard ORDER BY n_tok DESC, doc_id) AS rn FROM b),
-        |g AS (SELECT bucket, shard, (rn - 1) // 8 AS batch, count(*)::BIGINT AS n_seqs,
-        |        max(n_tok)::BIGINT AS max_len, sum(n_tok)::BIGINT AS sum_len
-        |      FROM r GROUP BY 1, 2, 3)
-        |SELECT bucket, shard, batch, n_seqs, max_len, sum_len,
-        |  (max_len * n_seqs)::BIGINT AS padded_tokens,
-        |  ((max_len * n_seqs - sum_len) * 1000000 // (max_len * n_seqs))::BIGINT AS waste_fp
-        |FROM g ORDER BY bucket, shard, batch""".stripMargin,
-
-    // the x20 chain twice from ONE pair stream: the en-trained
-    // in-domain model and the whole-pool out-of-domain model, each
-    // expanded into its three surprisal legs; diff = out − in
-    "x22_cross_entropy_diff" ->
-      """WITH w AS (
-        |  SELECT doc_id, lang,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-        |  FROM documents),
-        |pr AS (
-        |  SELECT doc_id, lang,
-        |    CASE WHEN t.i = 1 THEN -1
-        |         ELSE ('0x' || substr(md5(ws[t.i-1]), 1, 8))::BIGINT % 1024 END AS pb,
-        |    ('0x' || substr(md5(ws[t.i]), 1, 8))::BIGINT % 1024 AS cb
-        |  FROM w, unnest(range(1, len(ws)+1)) AS t(i)),
-        |pairI AS (SELECT pb, cb, count(*)::BIGINT AS cnt FROM pr WHERE lang = 'en' GROUP BY 1, 2),
-        |ctxI AS (SELECT pb, sum(cnt)::BIGINT AS ctx_cnt FROM pairI GROUP BY 1),
-        |uniI AS (SELECT cb, sum(cnt)::BIGINT AS ucnt FROM pairI GROUP BY 1),
-        |totI AS (SELECT coalesce(sum(cnt), 0)::BIGINT AS total FROM pairI),
-        |pbI AS (SELECT pairI.pb, pairI.cb, length(bin(ctx_cnt // cnt))::BIGINT AS pair_bits
-        |        FROM pairI JOIN ctxI USING (pb)),
-        |ubI AS (SELECT cb, (1 + length(bin(total // ucnt)))::BIGINT AS uni_bits FROM uniI, totI),
-        |pairO AS (SELECT pb, cb, count(*)::BIGINT AS cnt FROM pr GROUP BY 1, 2),
-        |ctxO AS (SELECT pb, sum(cnt)::BIGINT AS ctx_cnt FROM pairO GROUP BY 1),
-        |uniO AS (SELECT cb, sum(cnt)::BIGINT AS ucnt FROM pairO GROUP BY 1),
-        |totO AS (SELECT coalesce(sum(cnt), 0)::BIGINT AS total FROM pairO),
-        |pbO AS (SELECT pairO.pb, pairO.cb, length(bin(ctx_cnt // cnt))::BIGINT AS pair_bits
-        |        FROM pairO JOIN ctxO USING (pb)),
-        |ubO AS (SELECT cb, (1 + length(bin(total // ucnt)))::BIGINT AS uni_bits FROM uniO, totO),
-        |sc AS (SELECT pr.doc_id AS id, count(*)::BIGINT AS n_tokens,
-        |         sum(coalesce(pbI.pair_bits, coalesce(ubI.uni_bits, 1 + length(bin(totI.total)))))::BIGINT AS in_bits,
-        |         sum(coalesce(pbO.pair_bits, coalesce(ubO.uni_bits, 1 + length(bin(totO.total)))))::BIGINT AS out_bits
-        |       FROM pr
-        |       LEFT JOIN pbI ON pbI.pb = pr.pb AND pbI.cb = pr.cb
-        |       LEFT JOIN ubI ON ubI.cb = pr.cb
-        |       LEFT JOIN pbO ON pbO.pb = pr.pb AND pbO.cb = pr.cb
-        |       LEFT JOIN ubO ON ubO.cb = pr.cb, totI, totO
-        |       GROUP BY 1),
-        |ids AS (SELECT DISTINCT doc_id AS id FROM documents)
-        |SELECT ids.id, coalesce(sc.n_tokens, 0)::BIGINT AS n_tokens,
-        |       coalesce(sc.in_bits, 0)::BIGINT AS in_bits,
-        |       coalesce(sc.out_bits, 0)::BIGINT AS out_bits,
-        |       (coalesce(sc.out_bits, 0) - coalesce(sc.in_bits, 0))::BIGINT AS diff_bits,
-        |       ((coalesce(sc.out_bits, 0) - coalesce(sc.in_bits, 0)) * 1000000
-        |         // greatest(coalesce(sc.n_tokens, 0), 1))::BIGINT AS diff_fp,
-        |       (coalesce(sc.out_bits, 0) - coalesce(sc.in_bits, 0)) > 0 AS selected
-        |FROM ids LEFT JOIN sc USING (id) ORDER BY id""".stripMargin,
-
-    // sliding-window recompute: chunk count 1 + max(0, ceil((n-64)/48)),
-    // 1-based inclusive list slice re-joined on spaces
-    "x21_chunk_windows" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-        |  FROM documents),
-        |k AS (SELECT doc_id, ws, len(ws)::BIGINT AS n,
-        |        CASE WHEN len(ws) <= 64 THEN 0 ELSE (len(ws) - 64 + 47) // 48 END AS kmax
-        |      FROM w WHERE len(ws) > 0)
-        |SELECT doc_id AS id, t.i AS chunk_idx, (t.i * 48)::BIGINT AS start_tok,
-        |  least(64, n - t.i * 48)::BIGINT AS n_tok,
-        |  array_to_string(ws[(t.i * 48 + 1):(t.i * 48 + 64)], ' ') AS chunk_text
-        |FROM k, unnest(range(0, kmax + 1)) AS t(i)
-        |ORDER BY id, chunk_idx""".stripMargin,
-
-    // the naive sort the engine never runs: rn over the md5 order,
-    // keep rn <= quota per named group (zh's quota exceeds n → whole
-    // group), unnamed groups drop
-    "p23_exact_sample" ->
-      """WITH u AS (
-        |  SELECT doc_id, lang, source,
-        |    ('0x' || substr(md5('exact:' || doc_id), 1, 8))::BIGINT AS u
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id, lang, source,
-        |    row_number() OVER (PARTITION BY lang ORDER BY u, doc_id) AS rn
-        |  FROM u)
-        |SELECT doc_id, lang, source FROM r
-        |WHERE rn <= CASE lang WHEN 'en' THEN 120 WHEN 'fr' THEN 40
-        |                      WHEN 'zh' THEN 1000000 ELSE 0 END
-        |ORDER BY doc_id""".stripMargin,
-
-    // the naive sort the engine never runs: per-language row_number
-    // over the md5-uniform order, holdout = the first ceil(10% · n);
-    // NULL-lang rows can't rank and train whole
-    "p19_holdout_split" ->
-      """WITH u AS (
-        |  SELECT doc_id, lang,
-        |    ('0x' || substr(md5('split:' || doc_id), 1, 8))::BIGINT AS u
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id, lang, u,
-        |    row_number() OVER (PARTITION BY lang ORDER BY u, doc_id) AS rn,
-        |    count(*) OVER (PARTITION BY lang) AS n
-        |  FROM u)
-        |SELECT doc_id, lang,
-        |  CASE WHEN lang IS NOT NULL AND rn <= (n * 1000 + 9999) // 10000
-        |       THEN 'holdout' ELSE 'train' END AS split
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    // per-source prefix-sum recompute of the cap: same md5 order, same
-    // exclusive-prefix < cap rule; under-cap sources pass whole. LEFT
-    // join + explicit NULL branch: a NULL-source doc matches no totals
-    // row and must pass whole, the engine's documented contract (an
-    // inner join would silently drop it)
-    "p9_source_cap" ->
-      """WITH c AS (
-        |  SELECT doc_id, source, len(regexp_extract_all(text, '\S+'))::BIGINT AS ws_tokens
-        |  FROM documents),
-        |tot AS (SELECT source, sum(ws_tokens)::BIGINT AS tot FROM c GROUP BY 1),
-        |u AS (SELECT c.doc_id, c.source, c.ws_tokens, tot.tot,
-        |        ('0x' || substr(md5('cap:' || c.doc_id), 1, 8))::BIGINT AS u
-        |      FROM c LEFT JOIN tot USING (source)),
-        |pre AS (
-        |  SELECT doc_id, source, ws_tokens, tot,
-        |    sum(ws_tokens) OVER (PARTITION BY source ORDER BY u, doc_id ROWS UNBOUNDED PRECEDING) - ws_tokens AS pre
-        |  FROM u)
-        |SELECT doc_id, source, ws_tokens FROM pre
-        |WHERE tot IS NULL OR tot <= 1300 OR pre < 1300 ORDER BY doc_id""".stripMargin,
-
-    // α=1/2 temperature mix: weights floor(sqrt(tokens)) — IEEE sqrt
-    // is correctly rounded, so both engines floor the same double —
-    // budgets target·w//sumw, copies via the p7 repeat machinery
-    "p11_temperature_mix" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |    len(regexp_extract_all(text, '\S+'))::BIGINT AS ws_tokens
-        |  FROM documents),
-        |tot AS (
-        |  SELECT lang, sum(ws_tokens)::BIGINT AS tot FROM t
-        |  WHERE lang IS NOT NULL GROUP BY 1),
-        |wts AS (SELECT lang, tot, CAST(floor(sqrt(tot)) AS BIGINT) AS w FROM tot),
-        |sw AS (SELECT sum(w)::BIGINT AS sumw FROM wts),
-        |bud AS (
-        |  SELECT lang, tot,
-        |    (CAST(30000 AS HUGEINT) * w // greatest(sumw, 1))::BIGINT AS b
-        |  FROM wts, sw),
-        |n AS (
-        |  SELECT t.doc_id, t.lang, t.ws_tokens,
-        |    CASE WHEN b.b IS NULL THEN 1
-        |         WHEN b.tot = 0 THEN 0
-        |         ELSE (b.b // b.tot) + CASE WHEN ('0x' || substr(md5('temp:' || t.doc_id), 1, 8))::BIGINT < ((b.b % b.tot) * 4294967296 // b.tot) THEN 1 ELSE 0 END
-        |    END AS copies
-        |  FROM t LEFT JOIN bud b USING (lang))
-        |SELECT doc_id, lang, ws_tokens, c.c::BIGINT AS copy
-        |FROM n, unnest(range(0, copies)) AS c(c)
-        |ORDER BY doc_id, copy""".stripMargin,
-
-    // concat-and-chunk packing: per (source, 1000-doc shard), docs in
-    // doc_id order; each doc's placement = its exclusive prefix token
-    // sum divided into 512-token bins. Pure integer arithmetic.
-    "p10_pack_sequences" ->
-      """WITH t AS (
-        |  SELECT doc_id, source,
-        |    len(regexp_extract_all(text, '\S+'))::BIGINT AS ws_tokens,
-        |    (doc_id // 1000)::BIGINT AS shard
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, source, ws_tokens, shard,
-        |    coalesce(sum(ws_tokens) OVER (PARTITION BY source, shard ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS pre
-        |  FROM t)
-        |SELECT doc_id, source, shard,
-        |  (pre // 512)::BIGINT AS bin_first,
-        |  (CASE WHEN ws_tokens <= 0 THEN pre // 512
-        |        ELSE (pre + ws_tokens - 1) // 512 END)::BIGINT AS bin_last,
-        |  (pre % 512)::BIGINT AS offset_in_bin
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    // x12's segmentation aggregated to per-doc id arrays, p13's
-    // placement arithmetic on their lengths, then each segment
-    // unnested to (bin_pos, token_id) rows
-    "p14_packed_tokens" -> packedStreamSql(withDoc = false),
-
-    // the same chain carrying doc identity through the segment explode:
-    // doc_start = 1 exactly on each doc's first token (a straddling
-    // doc's continuation segment has seg_start > 0 and never flags)
-    "p21_mask_stream" -> packedStreamSql(withDoc = true),
-
-    // the p19 split CTE recomputed from scratch picks the train side,
-    // then the FULL p21 chain packs it — the train stream must equal
-    // the one-shot packer over exactly those docs, and (doc ids ride
-    // every row) contain no holdout doc's tokens
-    "p24_split_pack" -> packedStreamSql(withDoc = true, rel = "train_docs",
-      prefixCtes =
-        """su AS (
-          |  SELECT doc_id, lang,
-          |    ('0x' || substr(md5('split:' || doc_id), 1, 8))::BIGINT AS u
-          |  FROM documents),
-          |sr AS (
-          |  SELECT doc_id, lang, u,
-          |    row_number() OVER (PARTITION BY lang ORDER BY u, doc_id) AS rn,
-          |    count(*) OVER (PARTITION BY lang) AS n
-          |  FROM su),
-          |train_docs AS (
-          |  SELECT d.* FROM documents d JOIN sr USING (doc_id)
-          |  WHERE NOT (sr.lang IS NOT NULL AND sr.rn <= (sr.n * 1000 + 9999) // 10000)),
-          |""".stripMargin),
-
-    // p10's placements exploded to per-(shard, bin) doc segments: each
-    // doc emits one row per bin it touches; segment arithmetic is the
-    // intersection of [pre, pre+tokens) with the bin's token window
-    "p13_bin_manifest" ->
-      """WITH t AS (
-        |  SELECT doc_id, source,
-        |    len(regexp_extract_all(text, '\S+'))::BIGINT AS ws_tokens,
-        |    (doc_id // 1000)::BIGINT AS shard
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, source, ws_tokens, shard,
-        |    coalesce(sum(ws_tokens) OVER (PARTITION BY source, shard ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS pre
-        |  FROM t),
-        |p AS (
-        |  SELECT doc_id, source, ws_tokens, shard, pre,
-        |    (pre // 512)::BIGINT AS bin_first,
-        |    (CASE WHEN ws_tokens <= 0 THEN pre // 512
-        |          ELSE (pre + ws_tokens - 1) // 512 END)::BIGINT AS bin_last
-        |  FROM c)
-        |SELECT doc_id, source, shard, b.bin::BIGINT AS bin,
-        |  (CASE WHEN b.bin = bin_first THEN 0 ELSE b.bin * 512 - pre END)::BIGINT AS seg_start,
-        |  (CASE WHEN ws_tokens <= 0 THEN 0
-        |        ELSE least(pre + ws_tokens, (b.bin + 1) * 512) - greatest(pre, b.bin * 512)
-        |   END)::BIGINT AS seg_len,
-        |  greatest(pre - b.bin * 512, 0)::BIGINT AS bin_offset
-        |FROM p, unnest(range(bin_first, bin_last + 1)) AS b(bin)
-        |ORDER BY doc_id, bin""".stripMargin,
-
-    // from-scratch recompute of the ENTIRE six-stage recipe: substring
-    // scrub -> eval decontamination -> learned quality gate -> BPE
-    // counts -> budget repetition -> epoch shuffle, each stage the
-    // same SQL as its component oracle, chained through token arrays
-    "p8_full_recipe" ->
-      s"""WITH d0 AS (SELECT doc_id, lang, $plantRecipeSql AS text FROM documents),
-         |w AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-         |  FROM d0),
-         |g1 AS (
-         |  SELECT doc_id, t.i - 1 AS pos, md5(array_to_string(ws[t.i:t.i+14], ' ')) AS gh
-         |  FROM w, unnest(range(1, len(ws)-13)) AS t(i) WHERE doc_id < 400),
-         |dup1 AS (SELECT gh FROM g1 GROUP BY gh HAVING count(*) >= 2),
-         |m1 AS (SELECT doc_id, pos FROM g1 JOIN dup1 USING (gh)),
-         |isl1 AS (
-         |  SELECT doc_id, pos,
-         |         CASE WHEN lag(pos) OVER win IS NULL OR pos - lag(pos) OVER win > 15 THEN 1 ELSE 0 END AS ns
-         |  FROM m1 WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
-         |sp1 AS (
-         |  SELECT doc_id, pos,
-         |         sum(ns) OVER (PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING) AS sid
-         |  FROM isl1),
-         |spans1 AS (SELECT doc_id, min(pos) AS s, max(pos) + 15 - min(pos) AS l FROM sp1 GROUP BY doc_id, sid),
-         |tk0 AS (
-         |  SELECT doc_id, t.i - 1 AS pos, ws[t.i] AS wd
-         |  FROM w, unnest(range(1, len(ws)+1)) AS t(i) WHERE doc_id < 400),
-         |tk1 AS (
-         |  SELECT k.doc_id, k.pos, k.wd FROM tk0 k
-         |  WHERE NOT EXISTS (SELECT 1 FROM spans1 s
-         |                    WHERE s.doc_id = k.doc_id AND k.pos >= s.s AND k.pos < s.s + s.l)),
-         |w1 AS (
-         |  SELECT d.doc_id, coalesce(a.ws, CAST([] AS VARCHAR[])) AS ws
-         |  FROM (SELECT doc_id FROM d0 WHERE doc_id < 400) d
-         |  LEFT JOIN (SELECT doc_id, array_agg(wd ORDER BY pos) AS ws FROM tk1 GROUP BY doc_id) a USING (doc_id)),
-         |ge AS (
-         |  SELECT DISTINCT md5(array_to_string(ws[t.i:t.i+14], ' ')) AS gh
-         |  FROM w, unnest(range(1, len(ws)-13)) AS t(i) WHERE doc_id >= 400),
-         |g2 AS (
-         |  SELECT doc_id, t.i - 1 AS pos, md5(array_to_string(ws[t.i:t.i+14], ' ')) AS gh
-         |  FROM w1, unnest(range(1, len(ws)-13)) AS t(i)),
-         |m2 AS (SELECT doc_id, pos FROM g2 JOIN ge USING (gh)),
-         |isl2 AS (
-         |  SELECT doc_id, pos,
-         |         CASE WHEN lag(pos) OVER win IS NULL OR pos - lag(pos) OVER win > 15 THEN 1 ELSE 0 END AS ns
-         |  FROM m2 WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
-         |sp2 AS (
-         |  SELECT doc_id, pos,
-         |         sum(ns) OVER (PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING) AS sid
-         |  FROM isl2),
-         |spans2 AS (SELECT doc_id, min(pos) AS s, max(pos) + 15 - min(pos) AS l FROM sp2 GROUP BY doc_id, sid),
-         |tk2 AS (
-         |  SELECT doc_id, t.i - 1 AS pos, ws[t.i] AS wd
-         |  FROM w1, unnest(range(1, len(ws)+1)) AS t(i)),
-         |tk3 AS (
-         |  SELECT k.doc_id, k.pos, k.wd FROM tk2 k
-         |  WHERE NOT EXISTS (SELECT 1 FROM spans2 s
-         |                    WHERE s.doc_id = k.doc_id AND k.pos >= s.s AND k.pos < s.s + s.l)),
-         |w2 AS (
-         |  SELECT d.doc_id, coalesce(a.ws, CAST([] AS VARCHAR[])) AS ws
-         |  FROM (SELECT doc_id FROM d0 WHERE doc_id < 400) d
-         |  LEFT JOIN (SELECT doc_id, array_agg(wd ORDER BY pos) AS ws FROM tk3 GROUP BY doc_id) a USING (doc_id)),
-         |tok AS (
-         |  SELECT doc_id, (doc_id % 4 <> 1) AS label,
-         |         ('0x' || substr(md5(t.w), 1, 8))::BIGINT % 256 AS bucket
-         |  FROM w2, unnest(ws) AS t(w)),
-         |per AS (SELECT bucket, sum(CASE WHEN label THEN 1 ELSE 0 END) AS pos, count(*) AS tot FROM tok GROUP BY 1),
-         |pri AS (SELECT (sum(CASE WHEN label THEN 1 ELSE 0 END) + 1) * 1000000 // (count(*) + 2) AS prior FROM tok),
-         |bad AS (SELECT bucket FROM per, pri WHERE (pos + 1) * 1000000 // (tot + 2) < prior // 2),
-         |fl AS (SELECT tok.doc_id, count(bad.bucket) AS n_flagged FROM tok LEFT JOIN bad USING (bucket) GROUP BY 1),
-         |gated AS (SELECT w2.doc_id, w2.ws FROM w2 LEFT JOIN fl USING (doc_id) WHERE coalesce(fl.n_flagged, 0) = 0),
-         |t4 AS (SELECT doc_id, t.w AS wd FROM gated, unnest(ws) AS t(w)),
-         |enc AS (SELECT doc_id, ${graft.text.Bpe.mergeChainSql("wd", graft.text.Bpe.DefaultMerges)} AS s FROM t4),
-         |per4 AS (
-         |  SELECT doc_id, sum(length(s) - length(replace(s, '(', '')))::BIGINT AS bpe
-         |  FROM enc GROUP BY doc_id),
-         |cnt AS (
-         |  SELECT g.doc_id, d0.lang, coalesce(per4.bpe, 0)::BIGINT AS bpe_tokens
-         |  FROM gated g JOIN d0 USING (doc_id) LEFT JOIN per4 USING (doc_id)),
-         |tot AS (SELECT lang, sum(bpe_tokens)::BIGINT AS tot FROM cnt GROUP BY 1),
-         |par AS (SELECT lang, tot,
-         |  CASE lang WHEN 'en' THEN 30000 WHEN 'fr' THEN 800 ELSE NULL END AS b FROM tot),
-         |n AS (SELECT c.doc_id, c.lang, c.bpe_tokens,
-         |  CASE WHEN p.b IS NULL THEN 1
-         |       WHEN p.tot = 0 THEN 0
-         |       ELSE (p.b // p.tot) + CASE WHEN ('0x' || substr(md5('rep:' || c.doc_id), 1, 8))::BIGINT < ((p.b % p.tot) * 4294967296 // p.tot) THEN 1 ELSE 0 END
-         |  END AS copies
-         |  FROM cnt c LEFT JOIN par p USING (lang)),
-         |mx AS (SELECT doc_id, lang, bpe_tokens, t.c::BIGINT AS copy FROM n, unnest(range(0, copies)) AS t(c)),
-         |sh AS (SELECT doc_id, lang, bpe_tokens, copy,
-         |  ('0x' || substr(md5('epoch1:' || doc_id || ':' || copy), 1, 8))::BIGINT AS u FROM mx)
-         |SELECT doc_id, copy, lang, bpe_tokens,
-         |       (u * 8 // 4294967296)::INT AS shard,
-         |       (row_number() OVER (PARTITION BY (u * 8 // 4294967296)
-         |                           ORDER BY u, doc_id::VARCHAR || ':' || copy::VARCHAR) - 1)::BIGINT AS pos
-         |FROM sh ORDER BY doc_id, copy""".stripMargin,
-
-    // the p12 delta oracle: the one-shot recipe chain instantiated
-    // TWICE — once over the standing corpus alone (the state as built
-    // at T0: model + budget ledger) and once over the effective
-    // corpus (standing minus superseded ∪ batch) restricted to batch
-    // docs (the d18 delta identity for spans) — then batch copies
-    // drawn against the superseded-updated ledger totals
-    "p12_recipe_delta" ->
-      s"""WITH d0 AS (SELECT doc_id, lang, $plantRecipeSql AS text FROM documents),
-         |std AS (SELECT doc_id, lang, text FROM d0 WHERE doc_id < 300),
-         |bat AS (
-         |  SELECT doc_id, lang, text FROM d0 WHERE doc_id >= 300 AND doc_id < 400
-         |  UNION ALL
-         |  SELECT doc_id, lang, 'revision two of this document ' || text
-         |  FROM std WHERE doc_id % 50 = 0 OR doc_id = 13),
-         |eff AS (
-         |  SELECT * FROM std WHERE doc_id % 50 <> 0 AND doc_id <> 13
-         |  UNION ALL SELECT * FROM bat),
-         |wstd AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-         |  FROM std),
-         |weff AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-         |  FROM eff),
-         |weval AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-         |  FROM d0 WHERE doc_id >= 400),
-         |geval AS (
-         |  SELECT DISTINCT md5(array_to_string(ws[t.i:t.i+14], ' ')) AS gh
-         |  FROM weval, unnest(range(1, len(ws)-13)) AS t(i)),
-         |${scrubChainSql("a1", "wstd", "1=1",
-             "SELECT gh FROM a1g GROUP BY gh HAVING count(*) >= 2")},
-         |${scrubChainSql("a2", "a1out", "1=1", "SELECT gh FROM geval")},
-         |tokS AS (
-         |  SELECT doc_id, (doc_id % 4 <> 1) AS label,
-         |         ('0x' || substr(md5(t.w), 1, 8))::BIGINT % 256 AS bucket
-         |  FROM a2out, unnest(ws) AS t(w)),
-         |perS AS (SELECT bucket, sum(CASE WHEN label THEN 1 ELSE 0 END) AS pos, count(*) AS tot FROM tokS GROUP BY 1),
-         |priS AS (SELECT (sum(CASE WHEN label THEN 1 ELSE 0 END) + 1) * 1000000 // (count(*) + 2) AS prior FROM tokS),
-         |badS AS (SELECT bucket FROM perS, priS WHERE (pos + 1) * 1000000 // (tot + 2) < prior // 2),
-         |flS AS (SELECT tokS.doc_id, count(badS.bucket) AS n_flagged FROM tokS LEFT JOIN badS USING (bucket) GROUP BY 1),
-         |gatedS AS (SELECT a2out.doc_id, a2out.ws FROM a2out LEFT JOIN flS USING (doc_id) WHERE coalesce(flS.n_flagged, 0) = 0),
-         |t4S AS (SELECT doc_id, t.w AS wd FROM gatedS, unnest(ws) AS t(w)),
-         |encS AS (SELECT doc_id, ${graft.text.Bpe.mergeChainSql("wd", graft.text.Bpe.DefaultMerges)} AS s FROM t4S),
-         |perTS AS (
-         |  SELECT doc_id, sum(length(s) - length(replace(s, '(', '')))::BIGINT AS bpe
-         |  FROM encS GROUP BY doc_id),
-         |cntS AS (
-         |  SELECT g.doc_id, d0.lang, coalesce(perTS.bpe, 0)::BIGINT AS bpe_tokens
-         |  FROM gatedS g JOIN d0 USING (doc_id) LEFT JOIN perTS USING (doc_id)),
-         |${scrubChainSql("b1", "weff", "(doc_id >= 300 OR doc_id % 50 = 0 OR doc_id = 13)",
-             "SELECT gh FROM b1g GROUP BY gh HAVING count(*) >= 2")},
-         |${scrubChainSql("b2", "b1out", "1=1", "SELECT gh FROM geval")},
-         |tokB AS (
-         |  SELECT doc_id, ('0x' || substr(md5(t.w), 1, 8))::BIGINT % 256 AS bucket
-         |  FROM b2out, unnest(ws) AS t(w)),
-         |flB AS (SELECT tokB.doc_id, count(badS.bucket) AS n_flagged FROM tokB LEFT JOIN badS USING (bucket) GROUP BY 1),
-         |gatedB AS (SELECT b2out.doc_id, b2out.ws FROM b2out LEFT JOIN flB USING (doc_id) WHERE coalesce(flB.n_flagged, 0) = 0),
-         |t4B AS (SELECT doc_id, t.w AS wd FROM gatedB, unnest(ws) AS t(w)),
-         |encB AS (SELECT doc_id, ${graft.text.Bpe.mergeChainSql("wd", graft.text.Bpe.DefaultMerges)} AS s FROM t4B),
-         |perTB AS (
-         |  SELECT doc_id, sum(length(s) - length(replace(s, '(', '')))::BIGINT AS bpe
-         |  FROM encB GROUP BY doc_id),
-         |cntB AS (
-         |  SELECT g.doc_id, d0.lang, coalesce(perTB.bpe, 0)::BIGINT AS bpe_tokens
-         |  FROM gatedB g JOIN d0 USING (doc_id) LEFT JOIN perTB USING (doc_id)),
-         |tot AS (SELECT lang, sum(bpe_tokens)::BIGINT AS tot FROM (
-         |  SELECT lang, bpe_tokens FROM cntS WHERE doc_id % 50 <> 0 AND doc_id <> 13
-         |  UNION ALL SELECT lang, bpe_tokens FROM cntB) GROUP BY 1),
-         |par AS (SELECT lang, tot,
-         |  CASE lang WHEN 'en' THEN 30000 WHEN 'fr' THEN 800 ELSE NULL END AS b FROM tot),
-         |n AS (SELECT c.doc_id, c.lang, c.bpe_tokens,
-         |  CASE WHEN p.b IS NULL THEN 1
-         |       WHEN p.tot = 0 THEN 0
-         |       ELSE (p.b // p.tot) + CASE WHEN ('0x' || substr(md5('rep:' || c.doc_id), 1, 8))::BIGINT < ((p.b % p.tot) * 4294967296 // p.tot) THEN 1 ELSE 0 END
-         |  END AS copies
-         |  FROM cntB c LEFT JOIN par p USING (lang))
-         |SELECT doc_id, lang, bpe_tokens, t.c::BIGINT AS copy
-         |FROM n, unnest(range(0, copies)) AS t(c) ORDER BY doc_id, copy""".stripMargin,
-
-    // the x8 merge chain for counts, then floor(budget/total) full
-    // copies + one md5-decided fractional copy per doc
-    "p7_token_budget_repeat" ->
-      s"""WITH w AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-         |  FROM documents),
-         |t AS (SELECT doc_id, t.w AS wd FROM w, unnest(ws) AS t(w)),
-         |enc AS (SELECT doc_id, ${graft.text.Bpe.mergeChainSql("wd", graft.text.Bpe.DefaultMerges)} AS s FROM t),
-         |per AS (
-         |  SELECT doc_id, sum(length(s) - length(replace(s, '(', '')))::BIGINT AS bpe
-         |  FROM enc GROUP BY doc_id),
-         |cnt AS (
-         |  SELECT w.doc_id, d0.lang, coalesce(per.bpe, 0)::BIGINT AS bpe_tokens
-         |  FROM w LEFT JOIN per ON w.doc_id = per.doc_id
-         |  JOIN documents d0 ON w.doc_id = d0.doc_id),
-         |tot AS (SELECT lang, sum(bpe_tokens)::BIGINT AS tot FROM cnt GROUP BY 1),
-         |par AS (SELECT lang, tot,
-         |  CASE lang WHEN 'en' THEN 50000 WHEN 'fr' THEN 2000 ELSE NULL END AS b FROM tot),
-         |n AS (SELECT c.doc_id, c.lang, c.bpe_tokens,
-         |  CASE WHEN p.b IS NULL THEN 1
-         |       WHEN p.tot = 0 THEN 0
-         |       ELSE (p.b // p.tot) + CASE WHEN ('0x' || substr(md5('rep:' || c.doc_id), 1, 8))::BIGINT < ((p.b % p.tot) * 4294967296 // p.tot) THEN 1 ELSE 0 END
-         |  END AS copies
-         |  FROM cnt c LEFT JOIN par p USING (lang))
-         |SELECT doc_id, lang, bpe_tokens, t.c::BIGINT AS copy
-         |FROM n, unnest(range(0, copies)) AS t(c) ORDER BY doc_id, copy""".stripMargin,
-
-    // same md5 uniform, same integer shard arithmetic, same rank order
-    "p6_epoch_shuffle" ->
-      s"""WITH u AS (
-         |  SELECT doc_id, ('0x' || substr(md5('epoch3:' || doc_id), 1, 8))::BIGINT AS u
-         |  FROM documents),
-         |sh AS (SELECT doc_id, u, (u * 8 // 4294967296)::INT AS shard FROM u)
-         |SELECT doc_id, shard,
-         |       (row_number() OVER (PARTITION BY shard ORDER BY u, doc_id) - 1)::BIGINT AS pos
-         |FROM sh ORDER BY doc_id""".stripMargin,
-
-    // the x11 iq chain feeds the quartile stage; coordinates = p6's
-    // shard arithmetic with the rank ordered (stage, u, doc_id)
-    "p20_curriculum" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws,
-        |    text
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id,
-        |    length(text)::BIGINT AS n_chars_c,
-        |    len(ws)::BIGINT AS n_words,
-        |    len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))::BIGINT AS n_punct,
-        |    len(list_filter(ws, x -> list_contains(['the','a','of','and','to','in','is'], x)))::BIGINT AS n_stop
-        |  FROM w),
-        |q AS (
-        |  SELECT doc_id,
-        |    (least(n_words, 100) * 50 + (n_stop * 3000 // greatest(n_words, 1))
-        |     + 2000 - (n_punct * 2000 // greatest(n_chars_c, 1)))::BIGINT AS iq
-        |  FROM s),
-        |st AS (
-        |  SELECT doc_id, greatest(0, 3 - iq // 2500)::BIGINT AS stage,
-        |    ('0x' || substr(md5('epoch1:' || doc_id), 1, 8))::BIGINT AS u
-        |  FROM q),
-        |sh AS (SELECT doc_id, stage, u, (u * 8 // 4294967296)::INT AS shard FROM st)
-        |SELECT doc_id, stage, shard,
-        |  (row_number() OVER (PARTITION BY shard ORDER BY stage, u, doc_id) - 1)::BIGINT AS pos
-        |FROM sh ORDER BY doc_id""".stripMargin,
-
-    // the delta-identity oracle: after build→delta→absorb the standing
-    // placement table must equal the ONE-SHOT packer over the whole
-    // corpus — p10's arithmetic at the p15 parameters
-    "p15_pack_delta" ->
-      """WITH t AS (
-        |  SELECT doc_id, source,
-        |    len(regexp_extract_all(text, '\S+'))::BIGINT AS ws_tokens,
-        |    (doc_id // 300)::BIGINT AS shard
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, source, ws_tokens, shard,
-        |    coalesce(sum(ws_tokens) OVER (PARTITION BY source, shard ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS pre
-        |  FROM t)
-        |SELECT doc_id, source, shard,
-        |  (pre // 512)::BIGINT AS bin_first,
-        |  (CASE WHEN ws_tokens <= 0 THEN pre // 512
-        |        ELSE (pre + ws_tokens - 1) // 512 END)::BIGINT AS bin_last,
-        |  (pre % 512)::BIGINT AS offset_in_bin
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    // the one-shot packer restricted to the TOUCHED SHARDS' ids
-    // (streamed docs 400..599 plus their shard-1 neighbours 300..399,
-    // re-emitted by the full-delta contract) — valid because the
-    // latest emission per id is always its current one-shot placement
-    // (see the query comment)
-    "p17_stream_pack" ->
-      """WITH t AS (
-        |  SELECT doc_id, source,
-        |    len(regexp_extract_all(text, '\S+'))::BIGINT AS ws_tokens,
-        |    (doc_id // 300)::BIGINT AS shard
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, source, ws_tokens, shard,
-        |    coalesce(sum(ws_tokens) OVER (PARTITION BY source, shard ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS pre
-        |  FROM t)
-        |SELECT doc_id, source, shard,
-        |  (pre // 512)::BIGINT AS bin_first,
-        |  (CASE WHEN ws_tokens <= 0 THEN pre // 512
-        |        ELSE (pre + ws_tokens - 1) // 512 END)::BIGINT AS bin_last,
-        |  (pre % 512)::BIGINT AS offset_in_bin
-        |FROM c WHERE doc_id >= 300 AND doc_id < 600 ORDER BY doc_id""".stripMargin,
-
-    // THE CHAIN oracle: the one-shot recipe replayed WINDOW BY WINDOW
-    // (standing → +w1 → +w2, the p12 as-of-arrival identity with the
-    // ledger evolving across windows — each window's copies are drawn
-    // against the totals as of ITS arrival and never recomputed),
-    // rolled up to per-doc emitted masses (gated-out docs mass 0),
-    // composed with the one-shot packer (the p15 identity) over the
-    // final per-doc token table. The prefix chains are p12's and the
-    // packer arithmetic is p15's — prefixed and joined
-    "p18_chain" ->
-      s"""WITH d0 AS (SELECT doc_id, lang, $plantRecipeSql AS text FROM documents),
-         |std AS (SELECT doc_id, lang, text FROM d0 WHERE doc_id < 300),
-         |w1d AS (SELECT doc_id, lang, text FROM d0 WHERE doc_id >= 300 AND doc_id < 350),
-         |w2d AS (
-         |  SELECT doc_id, lang, text FROM d0 WHERE doc_id >= 350 AND doc_id < 400
-         |  UNION ALL
-         |  SELECT doc_id, lang, 'revision two of this document ' || text
-         |  FROM std WHERE doc_id % 50 = 0 OR doc_id = 13),
-         |eff1 AS (SELECT * FROM std UNION ALL SELECT * FROM w1d),
-         |eff2 AS (
-         |  SELECT * FROM std WHERE doc_id % 50 <> 0 AND doc_id <> 13
-         |  UNION ALL SELECT * FROM w1d UNION ALL SELECT * FROM w2d),
-         |wstd AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-         |  FROM std),
-         |weff1 AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-         |  FROM eff1),
-         |weff2 AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-         |  FROM eff2),
-         |weval AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-         |  FROM d0 WHERE doc_id >= 400),
-         |geval AS (
-         |  SELECT DISTINCT md5(array_to_string(ws[t.i:t.i+14], ' ')) AS gh
-         |  FROM weval, unnest(range(1, len(ws)-13)) AS t(i)),
-         |${scrubChainSql("a1", "wstd", "1=1",
-             "SELECT gh FROM a1g GROUP BY gh HAVING count(*) >= 2")},
-         |${scrubChainSql("a2", "a1out", "1=1", "SELECT gh FROM geval")},
-         |tokS AS (
-         |  SELECT doc_id, (doc_id % 4 <> 1) AS label,
-         |         ('0x' || substr(md5(t.w), 1, 8))::BIGINT % 256 AS bucket
-         |  FROM a2out, unnest(ws) AS t(w)),
-         |perS AS (SELECT bucket, sum(CASE WHEN label THEN 1 ELSE 0 END) AS pos, count(*) AS tot FROM tokS GROUP BY 1),
-         |priS AS (SELECT (sum(CASE WHEN label THEN 1 ELSE 0 END) + 1) * 1000000 // (count(*) + 2) AS prior FROM tokS),
-         |badS AS (SELECT bucket FROM perS, priS WHERE (pos + 1) * 1000000 // (tot + 2) < prior // 2),
-         |flS AS (SELECT tokS.doc_id, count(badS.bucket) AS n_flagged FROM tokS LEFT JOIN badS USING (bucket) GROUP BY 1),
-         |gatedS AS (SELECT a2out.doc_id, a2out.ws FROM a2out LEFT JOIN flS USING (doc_id) WHERE coalesce(flS.n_flagged, 0) = 0),
-         |t4S AS (SELECT doc_id, t.w AS wd FROM gatedS, unnest(ws) AS t(w)),
-         |encS AS (SELECT doc_id, ${graft.text.Bpe.mergeChainSql("wd", graft.text.Bpe.DefaultMerges)} AS s FROM t4S),
-         |perTS AS (
-         |  SELECT doc_id, sum(length(s) - length(replace(s, '(', '')))::BIGINT AS bpe
-         |  FROM encS GROUP BY doc_id),
-         |cntS AS (
-         |  SELECT g.doc_id, d0.lang, coalesce(perTS.bpe, 0)::BIGINT AS bpe_tokens
-         |  FROM gatedS g JOIN d0 USING (doc_id) LEFT JOIN perTS USING (doc_id)),
-         |totS AS (SELECT lang, sum(bpe_tokens)::BIGINT AS tot FROM cntS GROUP BY 1),
-         |parS AS (SELECT lang, tot,
-         |  CASE lang WHEN 'en' THEN 30000 WHEN 'fr' THEN 800 ELSE NULL END AS b FROM totS),
-         |nS AS (SELECT c.doc_id, c.bpe_tokens,
-         |  CASE WHEN p.b IS NULL THEN 1
-         |       WHEN p.tot = 0 THEN 0
-         |       ELSE (p.b // p.tot) + CASE WHEN ('0x' || substr(md5('rep:' || c.doc_id), 1, 8))::BIGINT < ((p.b % p.tot) * 4294967296 // p.tot) THEN 1 ELSE 0 END
-         |  END AS copies
-         |  FROM cntS c LEFT JOIN parS p USING (lang)),
-         |massS AS (SELECT doc_id, (bpe_tokens * copies)::BIGINT AS m FROM nS),
-         |${scrubChainSql("c1", "weff1", "(doc_id >= 300 AND doc_id < 350)",
-             "SELECT gh FROM c1g GROUP BY gh HAVING count(*) >= 2")},
-         |${scrubChainSql("c2", "c1out", "1=1", "SELECT gh FROM geval")},
-         |tokC AS (
-         |  SELECT doc_id, ('0x' || substr(md5(t.w), 1, 8))::BIGINT % 256 AS bucket
-         |  FROM c2out, unnest(ws) AS t(w)),
-         |flC AS (SELECT tokC.doc_id, count(badS.bucket) AS n_flagged FROM tokC LEFT JOIN badS USING (bucket) GROUP BY 1),
-         |gatedC AS (SELECT c2out.doc_id, c2out.ws FROM c2out LEFT JOIN flC USING (doc_id) WHERE coalesce(flC.n_flagged, 0) = 0),
-         |t4C AS (SELECT doc_id, t.w AS wd FROM gatedC, unnest(ws) AS t(w)),
-         |encC AS (SELECT doc_id, ${graft.text.Bpe.mergeChainSql("wd", graft.text.Bpe.DefaultMerges)} AS s FROM t4C),
-         |perTC AS (
-         |  SELECT doc_id, sum(length(s) - length(replace(s, '(', '')))::BIGINT AS bpe
-         |  FROM encC GROUP BY doc_id),
-         |cnt1 AS (
-         |  SELECT g.doc_id, d0.lang, coalesce(perTC.bpe, 0)::BIGINT AS bpe_tokens
-         |  FROM gatedC g JOIN d0 USING (doc_id) LEFT JOIN perTC USING (doc_id)),
-         |tot1 AS (SELECT lang, sum(bpe_tokens)::BIGINT AS tot FROM (
-         |  SELECT lang, bpe_tokens FROM cntS UNION ALL SELECT lang, bpe_tokens FROM cnt1) GROUP BY 1),
-         |par1 AS (SELECT lang, tot,
-         |  CASE lang WHEN 'en' THEN 30000 WHEN 'fr' THEN 800 ELSE NULL END AS b FROM tot1),
-         |n1 AS (SELECT c.doc_id, c.bpe_tokens,
-         |  CASE WHEN p.b IS NULL THEN 1
-         |       WHEN p.tot = 0 THEN 0
-         |       ELSE (p.b // p.tot) + CASE WHEN ('0x' || substr(md5('rep:' || c.doc_id), 1, 8))::BIGINT < ((p.b % p.tot) * 4294967296 // p.tot) THEN 1 ELSE 0 END
-         |  END AS copies
-         |  FROM cnt1 c LEFT JOIN par1 p USING (lang)),
-         |mass1 AS (SELECT doc_id, (bpe_tokens * copies)::BIGINT AS m FROM n1),
-         |${scrubChainSql("e1", "weff2",
-             "((doc_id >= 350 AND doc_id < 400) OR (doc_id < 300 AND (doc_id % 50 = 0 OR doc_id = 13)))",
-             "SELECT gh FROM e1g GROUP BY gh HAVING count(*) >= 2")},
-         |${scrubChainSql("e2", "e1out", "1=1", "SELECT gh FROM geval")},
-         |tokE AS (
-         |  SELECT doc_id, ('0x' || substr(md5(t.w), 1, 8))::BIGINT % 256 AS bucket
-         |  FROM e2out, unnest(ws) AS t(w)),
-         |flE AS (SELECT tokE.doc_id, count(badS.bucket) AS n_flagged FROM tokE LEFT JOIN badS USING (bucket) GROUP BY 1),
-         |gatedE AS (SELECT e2out.doc_id, e2out.ws FROM e2out LEFT JOIN flE USING (doc_id) WHERE coalesce(flE.n_flagged, 0) = 0),
-         |t4E AS (SELECT doc_id, t.w AS wd FROM gatedE, unnest(ws) AS t(w)),
-         |encE AS (SELECT doc_id, ${graft.text.Bpe.mergeChainSql("wd", graft.text.Bpe.DefaultMerges)} AS s FROM t4E),
-         |perTE AS (
-         |  SELECT doc_id, sum(length(s) - length(replace(s, '(', '')))::BIGINT AS bpe
-         |  FROM encE GROUP BY doc_id),
-         |cnt2 AS (
-         |  SELECT g.doc_id, d0.lang, coalesce(perTE.bpe, 0)::BIGINT AS bpe_tokens
-         |  FROM gatedE g JOIN d0 USING (doc_id) LEFT JOIN perTE USING (doc_id)),
-         |tot2 AS (SELECT lang, sum(bpe_tokens)::BIGINT AS tot FROM (
-         |  SELECT lang, bpe_tokens FROM cntS WHERE doc_id % 50 <> 0 AND doc_id <> 13
-         |  UNION ALL SELECT lang, bpe_tokens FROM cnt1
-         |  UNION ALL SELECT lang, bpe_tokens FROM cnt2) GROUP BY 1),
-         |par2 AS (SELECT lang, tot,
-         |  CASE lang WHEN 'en' THEN 30000 WHEN 'fr' THEN 800 ELSE NULL END AS b FROM tot2),
-         |n2 AS (SELECT c.doc_id, c.bpe_tokens,
-         |  CASE WHEN p.b IS NULL THEN 1
-         |       WHEN p.tot = 0 THEN 0
-         |       ELSE (p.b // p.tot) + CASE WHEN ('0x' || substr(md5('rep:' || c.doc_id), 1, 8))::BIGINT < ((p.b % p.tot) * 4294967296 // p.tot) THEN 1 ELSE 0 END
-         |  END AS copies
-         |  FROM cnt2 c LEFT JOIN par2 p USING (lang)),
-         |mass2 AS (SELECT doc_id, (bpe_tokens * copies)::BIGINT AS m FROM n2),
-         |tt AS (
-         |  SELECT u.doc_id, u.lang,
-         |    coalesce(CASE WHEN u.doc_id >= 350 THEN e_m.m
-         |                  WHEN u.doc_id >= 300 THEN c_m.m
-         |                  WHEN u.doc_id % 50 = 0 OR u.doc_id = 13 THEN e_m.m
-         |                  ELSE a_m.m END, 0)::BIGINT AS tok
-         |  FROM (SELECT doc_id, lang FROM d0 WHERE doc_id < 400) u
-         |  LEFT JOIN massS a_m ON u.doc_id = a_m.doc_id
-         |  LEFT JOIN mass1 c_m ON u.doc_id = c_m.doc_id
-         |  LEFT JOIN mass2 e_m ON u.doc_id = e_m.doc_id),
-         |pc AS (
-         |  SELECT doc_id, lang, tok, (doc_id // 300)::BIGINT AS shard,
-         |    coalesce(sum(tok) OVER (PARTITION BY lang, (doc_id // 300) ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS pre
-         |  FROM tt)
-         |SELECT doc_id, lang, tok::BIGINT AS emitted_tokens, shard,
-         |  (pre // 512)::BIGINT AS bin_first,
-         |  (CASE WHEN tok <= 0 THEN pre // 512
-         |        ELSE (pre + tok - 1) // 512 END)::BIGINT AS bin_last,
-         |  (pre % 512)::BIGINT AS offset_in_bin
-         |FROM pc ORDER BY doc_id""".stripMargin,
-
-    // p6's permutation machinery composed with p10's placement
-    // arithmetic: prefix sums run per (source, permutation-shard)
-    // ordered by the permutation's pos (doc_id breaking ties)
-    "p16_epoch_pack" ->
-      """WITH u AS (
-        |  SELECT doc_id, source,
-        |    len(regexp_extract_all(text, '\S+'))::BIGINT AS ws_tokens,
-        |    ('0x' || substr(md5('epoch3:' || doc_id), 1, 8))::BIGINT AS u
-        |  FROM documents),
-        |p AS (
-        |  SELECT doc_id, source, ws_tokens, (u * 8 // 4294967296)::BIGINT AS shard,
-        |    (row_number() OVER (PARTITION BY (u * 8 // 4294967296) ORDER BY u, doc_id) - 1)::BIGINT AS pos
-        |  FROM u),
-        |c AS (
-        |  SELECT doc_id, source, ws_tokens, shard,
-        |    coalesce(sum(ws_tokens) OVER (PARTITION BY source, shard ORDER BY pos, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS pre
-        |  FROM p)
-        |SELECT doc_id, source, shard,
-        |  (pre // 512)::BIGINT AS bin_first,
-        |  (CASE WHEN ws_tokens <= 0 THEN pre // 512
-        |        ELSE (pre + ws_tokens - 1) // 512 END)::BIGINT AS bin_last,
-        |  (pre % 512)::BIGINT AS offset_in_bin
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    "p2_weighted_sample" ->
-      s"""SELECT doc_id, lang, source FROM documents
-         |WHERE ('0x' || substr(md5('samp:' || doc_id), 1, 8))::BIGINT <
-         |  CASE lang WHEN 'en' THEN ${TextAnalysis.sampleThreshold(0.35)}
-         |            WHEN 'fr' THEN ${TextAnalysis.sampleThreshold(0.8)}
-         |            ELSE ${TextAnalysis.sampleThreshold(1.0)} END
-         |ORDER BY doc_id""".stripMargin,
-
-    "x7_pii_scrub" ->
-      s"""WITH aug AS (
-         |  SELECT doc_id, $plantPiiSql AS text
-         |  FROM documents)
-         |SELECT doc_id,
-         |  len(regexp_extract_all(text, '${TextAnalysis.EmailRe}'))::BIGINT AS n_emails,
-         |  len(regexp_extract_all(text, '${TextAnalysis.IpRe}'))::BIGINT AS n_ips,
-         |  len(regexp_extract_all(text, '${TextAnalysis.PhoneRe}'))::BIGINT AS n_phones,
-         |  md5(${scrubSql("text")}) AS scrubbed_md5
-         |FROM aug ORDER BY doc_id""".stripMargin,
-
-    // the merge chain's parenthesized symbol string is the SEGMENTATION
-    // itself: extract the symbols, map each to its vocab id (base
-    // alphabet VALUES + one row per merge, generated from the same
-    // Scala table the kernel carries), flatten in (word, symbol) order
-    "x12_bpe_encode" -> {
-      val base = "abcdefghijklmnopqrstuvwxyz0123456789"
-      val vocabRows = (base.zipWithIndex.map { case (c, i) => s"('$c', $i)" } ++
-        graft.text.Bpe.DefaultMerges.zipWithIndex.map { case ((a, b), r) =>
-          s"('${a + b}', ${36 + r})"
-        }).mkString(", ")
-      s"""WITH w AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-         |  FROM documents),
-         |t AS (SELECT doc_id, t.i AS widx, ws[t.i] AS wd FROM w, unnest(range(1, len(ws)+1)) AS t(i)),
-         |enc AS (SELECT doc_id, widx, ${graft.text.Bpe.mergeChainSql("wd", graft.text.Bpe.DefaultMerges)} AS s FROM t),
-         |sym AS (
-         |  SELECT doc_id, widx, u.j AS sidx, l[u.j] AS sym
-         |  FROM (SELECT doc_id, widx, regexp_extract_all(s, '\\(([^()]*)\\)', 1) AS l FROM enc),
-         |       unnest(range(1, len(l)+1)) AS u(j)),
-         |v(sym, id) AS (VALUES $vocabRows)
-         |SELECT doc_id,
-         |  (row_number() OVER (PARTITION BY doc_id ORDER BY widx, sidx) - 1)::BIGINT AS pos,
-         |  v.id::INT AS token_id
-         |FROM sym JOIN v USING (sym)
-         |ORDER BY doc_id, pos""".stripMargin
-    },
-
-    // the deep-vocab replay (see deepEncodeSql) over the 36-symbol
-    // words split — x13's corpus is lowercase-alnum by construction
-    "x13_bpe_encode_deep" -> deepEncodeSql(
-      """w AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-        |  FROM documents)""".stripMargin),
-
-    // the same replay over WHITESPACE-split words of the punctuation-
-    // planted corpus: symbols outside [a-z0-9] fall through the merge
-    // VALUES to ord() — ',' hashes to 44, '%' to 37 — exactly the
-    // kernel's byte ids (corpus is ASCII, so byte ≡ codepoint)
-    "x14_bpe_bytes" -> deepEncodeSql(
-      s"aug AS (SELECT doc_id, $plantPunctSql AS text FROM documents),\n" +
-        "w AS (SELECT doc_id, regexp_extract_all(text, '\\S+') AS ws FROM aug)"),
-
-    // frequency table per (lang, token), then vocabulary-bounded
-    // aggregates; topk_mass sums the 10 largest counts (tie-safe: a
-    // boundary tie cannot change the sum of a count multiset)
-    "x17_token_stats" ->
-      """WITH w AS (
-        |  SELECT lang,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-        |  FROM documents),
-        |f AS (
-        |  SELECT lang, t.w AS tok, count(*)::BIGINT AS c
-        |  FROM w, unnest(ws) AS t(w)
-        |  WHERE lang IS NOT NULL GROUP BY 1, 2),
-        |a AS (
-        |  SELECT lang, sum(c)::BIGINT AS total_tokens, count(*)::BIGINT AS n_types,
-        |         sum(CASE WHEN c = 1 THEN 1 ELSE 0 END)::BIGINT AS n_hapax
-        |  FROM f GROUP BY 1),
-        |r AS (SELECT lang, c, row_number() OVER (PARTITION BY lang ORDER BY c DESC) AS rn FROM f),
-        |tp AS (SELECT lang, sum(c)::BIGINT AS topk_mass FROM r WHERE rn <= 10 GROUP BY 1)
-        |SELECT a.lang, a.total_tokens, a.n_types, a.n_hapax,
-        |  coalesce(tp.topk_mass, 0)::BIGINT AS topk_mass,
-        |  (a.n_types * 10000 // greatest(a.total_tokens, 1))::BIGINT AS ttr_x4,
-        |  (a.n_hapax * 10000 // greatest(a.n_types, 1))::BIGINT AS hapax_x4,
-        |  (coalesce(tp.topk_mass, 0) * 10000 // greatest(a.total_tokens, 1))::BIGINT AS topk_share_x4
-        |FROM a LEFT JOIN tp USING (lang) ORDER BY a.lang""".stripMargin,
-
-    // the same k smallest md5 values on both engines → bit-identical
-    // estimate; saturated groups (n < k) emit the exact count
-    "x16_ngram_kmv" ->
-      """WITH w AS (
-        |  SELECT lang,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-        |  FROM documents),
-        |g AS (
-        |  SELECT DISTINCT lang,
-        |    ('0x' || substr(md5(array_to_string(ws[t.i:t.i+2], ' ')), 1, 8))::BIGINT AS h
-        |  FROM w, unnest(range(1, len(ws)-1)) AS t(i)
-        |  WHERE lang IS NOT NULL),
-        |r AS (
-        |  SELECT lang, h,
-        |    row_number() OVER (PARTITION BY lang ORDER BY h) AS rn,
-        |    count(*) OVER (PARTITION BY lang) AS n
-        |  FROM g)
-        |SELECT lang, max(n)::BIGINT AS n_distinct,
-        |  (CASE WHEN max(n) < 256 THEN max(n)
-        |        ELSE (255 * 4294967296) // greatest(max(CASE WHEN rn = 256 THEN h END), 1) END)::BIGINT AS kmv_est
-        |FROM r GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // absorbed-state ≡ one-shot over the EFFECTIVE corpus: the x17 and
-    // x16 chains recomputed over documents with every doc_id%10==0
-    // text append-edited (the superseded version) — the oracle never
-    // sees the standing log, only the corpus the state must equal
-    "x18_standing_stats" ->
-      """WITH eff AS (
-        |  SELECT doc_id, lang,
-        |    CASE WHEN doc_id % 10 = 0 THEN text || ' graftxa graftxb graftxa'
-        |         ELSE text END AS text
-        |  FROM documents),
-        |w AS (
-        |  SELECT lang,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-        |  FROM eff),
-        |f AS (
-        |  SELECT lang, t.w AS tok, count(*)::BIGINT AS c
-        |  FROM w, unnest(ws) AS t(w)
-        |  WHERE lang IS NOT NULL GROUP BY 1, 2),
-        |a AS (
-        |  SELECT lang, sum(c)::BIGINT AS total_tokens, count(*)::BIGINT AS n_types,
-        |         sum(CASE WHEN c = 1 THEN 1 ELSE 0 END)::BIGINT AS n_hapax
-        |  FROM f GROUP BY 1),
-        |r AS (SELECT lang, c, row_number() OVER (PARTITION BY lang ORDER BY c DESC) AS rn FROM f),
-        |tp AS (SELECT lang, sum(c)::BIGINT AS topk_mass FROM r WHERE rn <= 10 GROUP BY 1),
-        |g AS (
-        |  SELECT DISTINCT lang,
-        |    ('0x' || substr(md5(array_to_string(ws[t.i:t.i+2], ' ')), 1, 8))::BIGINT AS h
-        |  FROM w, unnest(range(1, len(ws)-1)) AS t(i)
-        |  WHERE lang IS NOT NULL),
-        |kr AS (
-        |  SELECT lang, h,
-        |    row_number() OVER (PARTITION BY lang ORDER BY h) AS rn,
-        |    count(*) OVER (PARTITION BY lang) AS n
-        |  FROM g),
-        |km AS (
-        |  SELECT lang,
-        |    (CASE WHEN max(n) < 256 THEN max(n)
-        |          ELSE (255 * 4294967296) // greatest(max(CASE WHEN rn = 256 THEN h END), 1) END)::BIGINT AS kmv_est
-        |  FROM kr GROUP BY lang)
-        |SELECT a.lang, a.total_tokens, a.n_types, a.n_hapax,
-        |  coalesce(tp.topk_mass, 0)::BIGINT AS topk_mass,
-        |  (a.n_types * 10000 // greatest(a.total_tokens, 1))::BIGINT AS ttr_x4,
-        |  (a.n_hapax * 10000 // greatest(a.n_types, 1))::BIGINT AS hapax_x4,
-        |  (coalesce(tp.topk_mass, 0) * 10000 // greatest(a.total_tokens, 1))::BIGINT AS topk_share_x4,
-        |  km.kmv_est
-        |FROM a LEFT JOIN tp USING (lang) JOIN km USING (lang) ORDER BY a.lang""".stripMargin,
-
-    // the same sweep aggregated to per-doc byte/token masses: the
-    // compression-ratio arithmetic (bytes·10⁴ // tokens + the [lo, hi]
-    // flag) recomputed over the x14 punctuation-planted head
-    "x15_compression_ratio" -> deepCompressionSql(
-      s"aug AS (SELECT doc_id, $plantPunctSql AS text FROM documents),\n" +
-        "w AS (SELECT doc_id, regexp_extract_all(text, '\\S+') AS ws FROM aug)",
-      lo = 15500L, hi = 90000L),
-
-    // the merge chain (one replace per merge, rank order) re-applies
-    // the EXACT sweep semantics of the BpeCount kernel — see
-    // Bpe.mergeChainSql; token count = count of '(' wrappers
-    "x8_bpe_tokens" ->
-      s"""WITH w AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-         |  FROM documents),
-         |t AS (SELECT doc_id, t.w AS wd FROM w, unnest(ws) AS t(w)),
-         |enc AS (SELECT doc_id, ${graft.text.Bpe.mergeChainSql("wd", graft.text.Bpe.DefaultMerges)} AS s FROM t),
-         |per AS (
-         |  SELECT doc_id, sum(length(s) - length(replace(s, '(', '')))::BIGINT AS bpe
-         |  FROM enc GROUP BY doc_id)
-         |SELECT w.doc_id, len(w.ws)::BIGINT AS n_words, coalesce(per.bpe, 0)::BIGINT AS bpe_tokens
-         |FROM w LEFT JOIN per ON w.doc_id = per.doc_id ORDER BY w.doc_id""".stripMargin,
-
-    // full recompute: the x8 merge chain for per-doc token counts, then
-    // the same integer threshold (budget * 2^32 // lang_total) against
-    // the same md5 uniform
-    "p5_token_budget_mix" ->
-      s"""WITH w AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-         |  FROM documents),
-         |t AS (SELECT doc_id, t.w AS wd FROM w, unnest(ws) AS t(w)),
-         |enc AS (SELECT doc_id, ${graft.text.Bpe.mergeChainSql("wd", graft.text.Bpe.DefaultMerges)} AS s FROM t),
-         |per AS (
-         |  SELECT doc_id, sum(length(s) - length(replace(s, '(', '')))::BIGINT AS bpe
-         |  FROM enc GROUP BY doc_id),
-         |cnt AS (
-         |  SELECT w.doc_id, d0.lang, coalesce(per.bpe, 0)::BIGINT AS bpe_tokens
-         |  FROM w LEFT JOIN per ON w.doc_id = per.doc_id
-         |  JOIN documents d0 ON w.doc_id = d0.doc_id),
-         |tot AS (SELECT lang, sum(bpe_tokens)::BIGINT AS tot FROM cnt GROUP BY 1),
-         |thr AS (SELECT lang,
-         |  CASE lang WHEN 'en' THEN CASE WHEN tot <= 10000 THEN 4294967296 ELSE 10000 * 4294967296 // tot END
-         |            WHEN 'fr' THEN CASE WHEN tot <= 5000 THEN 4294967296 ELSE 5000 * 4294967296 // tot END
-         |            ELSE 4294967296 END AS thr FROM tot)
-         |SELECT cnt.doc_id, cnt.lang, cnt.bpe_tokens
-         |FROM cnt LEFT JOIN thr USING (lang)
-         |WHERE ('0x' || substr(md5('mix:' || cnt.doc_id), 1, 8))::BIGINT < coalesce(thr, 4294967296)
-         |ORDER BY cnt.doc_id""".stripMargin,
-
-    "x6_keywords" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-        |  FROM documents),
-        |wc AS (
-        |  SELECT doc_id, t.w AS w, count(*) AS tf
-        |  FROM w, unnest(ws) AS t(w) GROUP BY 1, 2),
-        |df_ AS (SELECT w, count(*) AS df FROM wc GROUP BY 1),
-        |n AS (SELECT count(*) AS n FROM documents),
-        |scored AS (
-        |  SELECT wc.doc_id, wc.w, wc.tf, df_.df, wc.tf * (n.n // df_.df) AS score
-        |  FROM wc JOIN df_ USING (w), n),
-        |r AS (
-        |  SELECT doc_id, w, tf, df, score,
-        |         row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, w) AS rnk
-        |  FROM scored)
-        |SELECT doc_id, w AS term, tf, df, score, rnk
-        |FROM r WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin,
-
-    "e2_sessionize" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts::TIMESTAMP) AS tus, value FROM events),
-        |d AS (SELECT user_id, tus, value,
-        |        CASE WHEN lag(tus) OVER w IS NULL OR tus - lag(tus) OVER w >= 7200000000 THEN 1 ELSE 0 END AS ns
-        |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus)),
-        |g AS (SELECT user_id, tus, value,
-        |        sum(ns) OVER (PARTITION BY user_id ORDER BY tus ROWS UNBOUNDED PRECEDING) AS sid
-        |      FROM d)
-        |SELECT user_id, min(tus) AS session_start_us, count(*) AS n_events, round(sum(value),2) AS sum_value
-        |FROM g GROUP BY user_id, sid ORDER BY user_id, session_start_us""".stripMargin,
-
-    "e5_stream_sessions" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts::TIMESTAMP) AS tus, value FROM events),
-        |d AS (SELECT user_id, tus, value,
-        |        CASE WHEN lag(tus) OVER w IS NULL OR tus - lag(tus) OVER w >= 7200000000 THEN 1 ELSE 0 END AS ns
-        |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus)),
-        |g AS (SELECT user_id, tus, value,
-        |        sum(ns) OVER (PARTITION BY user_id ORDER BY tus ROWS UNBOUNDED PRECEDING) AS sid
-        |      FROM d),
-        |sess AS (SELECT user_id, min(tus) AS session_start_us, count(*) AS n_events,
-        |                round(sum(value), 2) AS sum_value
-        |         FROM g GROUP BY user_id, sid)
-        |SELECT user_id, session_start_us, n_events, sum_value FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY session_start_us DESC) AS rn
-        |  FROM sess)
-        |WHERE rn > 1 ORDER BY user_id, session_start_us""".stripMargin,
-
-    "d1_exact_dedup" ->
-      """WITH u AS (SELECT * FROM documents UNION ALL SELECT * FROM documents)
-        |SELECT md5(text) AS content_hash, min(doc_id) AS kept_id, count(*) AS n_copies
-        |FROM u GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "d2_ngram_jaccard" -> ngramJaccardSql,
-
-    "d3_minhash_lsh" -> ngramJaccardSql,
-
-    // the d2 chain with the containment tail: per-direction
-    // inter/|S(side)| ratios, gate on the max of the two.
-    // Cap assumption (shared with the d2/d3/d8 oracles): the SQL omits
-    // the engine's maxDf=10000 stop-shingle cap, so it is exact only
-    // while no fixture shingle's document frequency exceeds the cap —
-    // true at every shipped SF (max df ≈ corpus size · shared-phrase
-    // rate ≪ 10000), and containment is MORE cap-sensitive than
-    // Jaccard (each direction's denominator shrinks independently), so
-    // a future fixture crossing the cap must mirror it here (HAVING
-    // count(*) <= 10000 on a df CTE) rather than widen the engine cap
-    "d27_containment" -> containmentOracleSql(),
-
-    // full-recompute ground truth restricted to pairs touching the
-    // batch — the d8 identity applied to the containment tail: values
-    // identical to the one-shot proves the indexed delta loses nothing
-    "d28_containment_delta" -> containmentOracleSql(
-      pairPred = " AND (a >= 400 OR b >= 400)"),
-
-    // as-of-arrival ground truth (the d10 shape for containment): each
-    // pair touching the stream region surfaces exactly once, in the
-    // later doc's batch, so the union of per-batch outputs = all
-    // containment pairs with an endpoint in [400, 600)
-    "d29_stream_containment" -> containmentOracleSql(
-      pairPred = " AND ((a >= 400 AND a < 600) OR (b >= 400 AND b < 600))"),
-
-    // SimHash is md5-based precisely so DuckDB can recompute the whole
-    // fingerprint: per-(doc, bit) sign sums from the 4x16-bit words of
-    // md5(token), packed to one BIGINT per doc, then Hamming via
-    // bit_count(xor) over the C(n,2) pair scan — sf1-feasible.
-    // (The chunk buckets in the Spark plan are only a lossless candidate
-    // generator — output semantics are "all pairs with Hamming <= 10".)
-    "d4_simhash" -> simhashOracleSql(),
-
-    // as-of-arrival ground truth: each within-radius pair touching the
-    // stream region surfaces exactly once (in the later doc's batch),
-    // so the union of per-batch outputs = all pairs with an endpoint
-    // in [400, 600) — the d10 oracle shape for the fingerprint family
-    "d23_stream_simhash" ->
-      simhashOracleSql(pairPred = " AND ((a >= 400 AND a < 600) OR (b >= 400 AND b < 600))"),
-
-    // full-recompute ground truth restricted to pairs touching the
-    // batch (the d8/d18 oracle identity): identical values prove the
-    // incremental simhash path loses nothing
-    "d22_simhash_delta" -> simhashOracleSql(pairPred = " AND (a >= 400 OR b >= 400)"),
-
-    // the d4 chain restricted to the deterministic ~400-doc sample:
-    // tokenization/fingerprints run only for sampled docs, the packed
-    // pair scan is C(400,2) single rows — feasible at ANY corpus size,
-    // which is the point (the full-corpus oracle, feasible at sf1
-    // since the packing, still can't run at arbitrary scale)
-    "d21_simhash_cert" -> simhashOracleSql(
-      prefixCtes = "nn AS (SELECT count(*) AS n FROM documents), samp AS (SELECT doc_id, text FROM documents, nn WHERE ('0x' || substr(md5('cert:' || doc_id), 1, 8))::BIGINT < least(4294967296, 400 * 4294967296 // n)), ",
-      docsFrom = "samp"),
-
-    // same ground truth as d8: the streamed per-batch outputs must union
-    // to exactly the one-shot delta over the whole stream region
-    "d10_stream_dedup" ->
-      """WITH words AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), w -> w <> '') AS ws
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, array_to_string(ws[t.i:t.i+2], ' ') AS s
-        |  FROM words, unnest(range(1, len(ws)-1)) AS t(i)),
-        |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-        |pr AS (SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS inter
-        |       FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
-        |SELECT a, b, round(inter / (sa.sz + sb.sz - inter), 3) AS jac
-        |FROM pr JOIN sz sa ON pr.a = sa.doc_id JOIN sz sb ON pr.b = sb.doc_id
-        |WHERE inter / (sa.sz + sb.sz - inter) >= 0.8
-        |  AND ((a >= 400 AND a < 600) OR (b >= 400 AND b < 600))
-        |ORDER BY a, b""".stripMargin,
-
-    // full-recompute ground truth restricted to pairs touching the new
-    // batch — identical values prove the incremental path loses nothing
-    "d8_dedup_delta" ->
-      """WITH words AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), w -> w <> '') AS ws
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, array_to_string(ws[t.i:t.i+2], ' ') AS s
-        |  FROM words, unnest(range(1, len(ws)-1)) AS t(i)),
-        |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-        |pr AS (SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS inter
-        |       FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
-        |SELECT a, b, round(inter / (sa.sz + sb.sz - inter), 3) AS jac
-        |FROM pr JOIN sz sa ON pr.a = sa.doc_id JOIN sz sb ON pr.b = sb.doc_id
-        |WHERE inter / (sa.sz + sb.sz - inter) >= 0.8 AND (a >= 400 OR b >= 400)
-        |ORDER BY a, b""".stripMargin,
-
-    "d9_contamination" ->
-      """WITH words AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), w -> w <> '') AS ws
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, array_to_string(ws[t.i:t.i+2], ' ') AS s
-        |  FROM words, unnest(range(1, len(ws)-1)) AS t(i)),
-        |tr AS (SELECT DISTINCT s FROM sh WHERE doc_id < 400),
-        |ev AS (SELECT doc_id, s FROM sh WHERE doc_id >= 400),
-        |per AS (SELECT e.doc_id AS id, count(*) AS n_shingles, count(t.s) AS n_hit
-        |        FROM ev e LEFT JOIN tr t ON e.s = t.s GROUP BY 1)
-        |SELECT id, n_shingles, n_hit,
-        |       (n_hit * 1000 // n_shingles) / 1000.0 AS containment
-        |FROM per ORDER BY id""".stripMargin,
-
-    // fixed-projection pair sims since r18 (the exactness sweep): the
-    // threshold compares bit-identical doubles on any engine build
-    "d7_embedding_simjoin" ->
-      """WITH e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-        |fm AS (SELECT id, v, list_max([abs(x::DOUBLE) FOR x IN v]) AS mx FROM e),
-        |fx AS (SELECT id, [floor(x::DOUBLE / mx * 1048576.0)::BIGINT FOR x IN v] AS f FROM fm),
-        |pn AS (SELECT id, v, sqrt(list_inner_product(v, v)) AS nrm
-        |       FROM (SELECT id, [x::DOUBLE FOR x IN f] AS v FROM fx))
-        |SELECT x.id AS a, y.id AS b,
-        | round(list_inner_product(x.v, y.v) / (x.nrm * y.nrm), 4) AS sim
-        |FROM pn x JOIN pn y ON x.id < y.id
-        |WHERE list_inner_product(x.v, y.v) / (x.nrm * y.nrm) >= 0.4
-        |ORDER BY a, b""".stripMargin,
-
-    // exact all-pairs ground truth: the Spark side runs LSH candidates →
-    // exact verify, so a hash match here proves candidate recall = 1
-    "d5_embedding_neardup" ->
-      """WITH e0 AS (SELECT vec_id, embedding FROM embeddings),
-        |p AS (SELECT vec_id + 10000 AS vec_id,
-        |        [CASE WHEN i = 1 THEN ((embedding[i]::DOUBLE + 0.1)::FLOAT) ELSE embedding[i] END
-        |         for i in range(1, len(embedding)+1)] AS embedding FROM e0),
-        |u AS (SELECT * FROM e0 UNION ALL SELECT * FROM p),
-        |e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM u),
-        |fm AS (SELECT id, v, list_max([abs(x::DOUBLE) FOR x IN v]) AS mx FROM e),
-        |fx AS (SELECT id, [floor(x::DOUBLE / mx * 1048576.0)::BIGINT FOR x IN v] AS f FROM fm),
-        |pn AS (SELECT id, v, sqrt(list_inner_product(v, v)) AS nrm
-        |       FROM (SELECT id, [x::DOUBLE FOR x IN f] AS v FROM fx))
-        |SELECT x.id AS a, y.id AS b,
-        | round(list_inner_product(x.v, y.v) / (x.nrm * y.nrm), 4) AS sim
-        |FROM pn x JOIN pn y ON x.id < y.id
-        |WHERE list_inner_product(x.v, y.v) / (x.nrm * y.nrm) >= 0.9
-        |ORDER BY a, b""".stripMargin,
-
-    // the one-shot exact pair set involving at least one streamed id
-    // (a < b and streamed ids are the +10000 range, so "b >= 10000"
-    // covers every such pair); cross-batch + batch×corpus + batch-local
-    // pairs each surface exactly once across the per-batch outputs
-    "d11_stream_embed_dedup" ->
-      """WITH e0 AS (SELECT vec_id, embedding FROM embeddings),
-        |p AS (SELECT vec_id + 10000 AS vec_id,
-        |        [CASE WHEN i = 1 THEN ((embedding[i]::DOUBLE + 0.1)::FLOAT) ELSE embedding[i] END
-        |         for i in range(1, len(embedding)+1)] AS embedding FROM e0 WHERE vec_id < 100),
-        |u AS (SELECT * FROM e0 UNION ALL SELECT * FROM p),
-        |e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM u),
-        |fm AS (SELECT id, v, list_max([abs(x::DOUBLE) FOR x IN v]) AS mx FROM e),
-        |fx AS (SELECT id, [floor(x::DOUBLE / mx * 1048576.0)::BIGINT FOR x IN v] AS f FROM fm),
-        |pn AS (SELECT id, v, sqrt(list_inner_product(v, v)) AS nrm
-        |       FROM (SELECT id, [x::DOUBLE FOR x IN f] AS v FROM fx))
-        |SELECT x.id AS a, y.id AS b,
-        | round(list_inner_product(x.v, y.v) / (x.nrm * y.nrm), 4) AS sim
-        |FROM pn x JOIN pn y ON x.id < y.id
-        |WHERE list_inner_product(x.v, y.v) / (x.nrm * y.nrm) >= 0.9
-        |  AND y.id >= 10000
-        |ORDER BY a, b""".stripMargin,
-
-    // fixed-projection ranking since r18 (the exactness sweep): the
-    // engine and the oracle rank bit-identical doubles on any build
-    "s1_ann_bruteforce" -> Ann.bruteOracleSql(k = 5, queryPred = "q.id < 10"),
-
-    "s2_ann_lsh" -> Ann.lshOracleSql(dims = 64, k = 5),
-
-    "s4_ann_indexed" -> Ann.lshOracleSql(dims = 64, k = 5),
-
-    "s3_ann_ivf" -> Ann.ivfKmeansOracleSql(k = 5),
-
-    "d12_semantic_dedup" ->
-      graft.ann.SemDedup.oracleSql(nlist = 16, rounds = 2, threshold = 0.4),
-
-    "s10_filtered_ann" -> Ann.ivfKmeansOracleSql(k = 5, neighborPred = "label = 1"),
-
-    "s11_filtered_ivfpq" -> graft.ann.IvfPq.oracleSql(k = 5, neighborPred = "label = 1"),
-
-    "d15_semantic_indexed" ->
-      graft.ann.SemDedup.oracleSql(nlist = 16, rounds = 2, threshold = 0.4),
-
-    "d14_semantic_delta" ->
-      graft.ann.SemDedup.deltaOracleSql(nlist = 16, rounds = 2, threshold = 0.9),
-
-    // the dHash chain recomputed from the text bytes: padded raster
-    // length → 72 integer-boundary cells (pad zeros are sum-neutral,
-    // the count term carries them) → cross-multiplied gradient bits →
-    // HUGEINT-assembled fingerprint → brute-force Hamming (the engine's
-    // chunk buckets are exact at the radius, so brute force IS the
-    // contract); the twins' translate() runs in SQL via chr-range
-    // string_agg so no quote-escaping enters the literal
-    "d32_phash_dedup" ->
-      """WITH tw AS (
-        |  SELECT doc_id + 10000000 AS doc_id,
-        |    translate(text,
-        |      (SELECT string_agg(chr(i.i::INT), '' ORDER BY i.i) FROM unnest(range(32,127)) i(i)),
-        |      (SELECT string_agg(chr(i.i::INT), '' ORDER BY i.i) FROM unnest(range(33,128)) i(i))) AS text
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |d0 AS (SELECT doc_id, text FROM documents UNION ALL SELECT doc_id, text FROM tw),
-        |b AS (SELECT doc_id,
-        |        list_transform(range(1, length(text)+1), i -> ascii(substr(text,i,1))::BIGINT) AS bs,
-        |        ((length(text)+15)//16)*16 AS P FROM d0),
-        |cells AS (
-        |  SELECT doc_id, g.g AS g,
-        |    coalesce(list_sum(bs[(g.g*P//72)+1 : ((g.g+1)*P//72)]), 0) AS s,
-        |    ((g.g+1)*P//72) - (g.g*P//72) AS n
-        |  FROM b, unnest(range(0,72)) AS g(g)),
-        |bitrows AS (
-        |  SELECT ca.doc_id, ((ca.g // 9) * 8 + (ca.g % 9))::BIGINT AS j
-        |  FROM cells ca JOIN cells cb ON ca.doc_id = cb.doc_id AND cb.g = ca.g + 1
-        |  WHERE ca.g % 9 < 8 AND ca.s * cb.n > cb.s * ca.n),
-        |fph AS (SELECT doc_id, sum(1::HUGEINT << j)::HUGEINT AS h FROM bitrows GROUP BY 1),
-        |fp AS (SELECT d0.doc_id,
-        |        (CASE WHEN coalesce(h, 0::HUGEINT) >= 9223372036854775808::HUGEINT
-        |              THEN coalesce(h, 0::HUGEINT) - 18446744073709551616::HUGEINT
-        |              ELSE coalesce(h, 0::HUGEINT) END)::BIGINT AS f
-        |       FROM d0 LEFT JOIN fph USING (doc_id)),
-        |ham AS (SELECT x.doc_id AS a, y.doc_id AS b, bit_count(xor(x.f, y.f))::INT AS hamming
-        |        FROM fp x JOIN fp y ON x.doc_id < y.doc_id)
-        |SELECT a, b, hamming FROM ham WHERE hamming <= 6 ORDER BY a, b""".stripMargin,
-
-    // d32's chain with the band-energy source: |sample| = |byte delta|
-    // · 256 (audioFromDocs' synthesis), P = the exact sample count, and
-    // the same 72-cell/right-neighbor gradient bits
-    "d35_audio_phash" -> d35AudioOracle(),
-
-    // d32's chain with the TEMPORAL comparison: same cells over the
-    // padded pixel stream, bit j = cell j vs cell j+8 (9 time-rows ×
-    // 8 position columns — across-frame gradients)
-    "d36_video_phash" -> d36VideoOracle(),
-
-    // the d35/d36 one-shot chains restricted to batch-touching pairs —
-    // the d33 identity applied to the audio / video fingerprints
-    "d37_audio_phash_delta" -> d35AudioOracle(" AND b >= 10000000"),
-    "d38_video_phash_delta" -> d36VideoOracle(" AND b >= 10000000"),
-
-    // the d32 one-shot chain restricted to batch-touching pairs (batch
-    // ids are offset past every standing id, so "touches the batch" is
-    // exactly b >= offset) — the d8 delta identity for fingerprints
-    "d33_phash_delta" -> d33PhashOracle,
-
-    // the streamed as-of-arrival union equals the one-shot restricted
-    // to twin-touching pairs — the SAME ground truth as d33 (each pair
-    // emits exactly once, at its later endpoint's batch)
-    "d34_stream_phash" -> d33PhashOracle,
-
-    // the canonicalization pipeline mirrored step for step: fragment →
-    // query split → scheme/authority lowering → www/default-port strip →
-    // trailing-slash strip → tracking-param filter + param sort
-    "d31_url_dedup" ->
-      s"""WITH u AS (SELECT doc_id, $plantUrlSql AS url FROM documents),
-         |c1 AS (SELECT doc_id, str_split(url, '#')[1] AS nofrag FROM u),
-         |c2 AS (SELECT doc_id, str_split(nofrag, '?')[1] AS pre,
-         |         CASE WHEN contains(nofrag, '?')
-         |              THEN regexp_extract(nofrag, '\\?(.*)$$', 1) ELSE '' END AS q
-         |       FROM c1),
-         |c3 AS (SELECT doc_id,
-         |         lower(regexp_extract(pre, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-         |         regexp_replace(pre, '^[A-Za-z][A-Za-z0-9+.-]*://', '') AS rest, q
-         |       FROM c2),
-         |c4a AS (SELECT doc_id, scheme, q, str_split(rest, '/')[1] AS ar,
-         |          regexp_replace(regexp_extract(rest, '^[^/]*(/.*)$$', 1), '/+$$', '') AS path
-         |        FROM c3),
-         |c4 AS (SELECT doc_id, scheme, q, path,
-         |         CASE WHEN regexp_extract(ar, '^(.*)@[^@]*$$', 1) = ''
-         |              THEN regexp_replace(lower(str_split(ar, '@')[-1]), '^www\\.', '')
-         |              ELSE regexp_extract(ar, '^(.*)@[^@]*$$', 1) || '@' ||
-         |                   regexp_replace(lower(str_split(ar, '@')[-1]), '^www\\.', '')
-         |         END AS auth0
-         |       FROM c4a),
-         |c5 AS (SELECT doc_id, scheme, path,
-         |         CASE WHEN scheme = 'http' THEN regexp_replace(auth0, ':80$$', '')
-         |              WHEN scheme = 'https' THEN regexp_replace(auth0, ':443$$', '')
-         |              ELSE auth0 END AS auth,
-         |         array_to_string(list_sort(list_filter(str_split(q, '&'),
-         |           p -> NOT (starts_with(p, 'utm_') OR str_split(p, '=')[1] = 'fbclid'
-         |                     OR str_split(p, '=')[1] = 'gclid' OR p = ''))), '&') AS qs
-         |       FROM c4),
-         |canon AS (SELECT doc_id,
-         |            scheme || '://' || auth || path ||
-         |            CASE WHEN qs = '' THEN '' ELSE '?' || qs END AS canonical_url
-         |          FROM c5)
-         |SELECT canonical_url, min(doc_id) AS kept_id, count(*)::BIGINT AS n_copies
-         |FROM canon GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // the d14 batch×cell construction over the m4 media derivation,
-    // pairs clustered (d6) and keep-best decided (d25) — all in SQL
-    "d30_media_neardup" ->
-      graft.ann.SemDedup.mediaNeardupOracleSql(nlist = 16, rounds = 2,
-        threshold = 0.9999,
-        source = m4VectorSourceSql),
-
-    "d26_semantic_decon" ->
-      graft.ann.SemDedup.deconOracleSql(nlist = 16, rounds = 2, threshold = 0.9, nprobe = 2),
-
-    // same ground truth as d14: the streamed per-batch outputs union to
-    // exactly the one-shot semantic delta over the whole batch region
-    "d17_stream_semantic" ->
-      graft.ann.SemDedup.deltaOracleSql(nlist = 16, rounds = 2, threshold = 0.9),
-
-    "d13_boilerplate" ->
-      """WITH words AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), w -> w <> '') AS ws
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, array_to_string(ws[t.i:t.i+2], ' ') AS s
-        |  FROM words, unnest(range(1, len(ws)-1)) AS t(i)),
-        |df_ AS (SELECT s, count(*) AS df FROM sh GROUP BY 1),
-        |per AS (
-        |  SELECT sh.doc_id AS id, count(*) AS n_shingles,
-        |         count(CASE WHEN df_.df >= 3 THEN 1 END) AS n_boiler
-        |  FROM sh JOIN df_ USING (s) GROUP BY 1)
-        |SELECT id, n_shingles, n_boiler,
-        |       (n_boiler * 1000 // n_shingles) / 1000.0 AS boiler_ratio
-        |FROM per ORDER BY id""".stripMargin,
-
-    // from-scratch recompute of the whole substring-dedup chain:
-    // positional 15-grams keyed by md5 (both engines hash identically),
-    // occurrence count >= 2, gaps-and-islands maximal-span merge
-    "d16_substring_dedup" ->
-      s"""WITH d0 AS (SELECT doc_id, $plantSpanSql AS text FROM documents),
-        |w AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-        |  FROM d0),
-        |g AS (
-        |  SELECT doc_id, t.i - 1 AS pos, md5(array_to_string(ws[t.i:t.i+14], ' ')) AS gh
-        |  FROM w, unnest(range(1, len(ws)-13)) AS t(i)),
-        |dup AS (SELECT gh FROM g GROUP BY gh HAVING count(*) >= 2),
-        |m AS (SELECT doc_id, pos FROM g JOIN dup USING (gh)),
-        |isl AS (
-        |  SELECT doc_id, pos,
-        |         CASE WHEN lag(pos) OVER win IS NULL OR pos - lag(pos) OVER win > 15 THEN 1 ELSE 0 END AS ns
-        |  FROM m WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
-        |sp AS (
-        |  SELECT doc_id, pos,
-        |         sum(ns) OVER (PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM isl)
-        |SELECT doc_id AS id, min(pos) AS span_start, max(pos) + 15 - min(pos) AS span_len
-        |FROM sp GROUP BY doc_id, sid ORDER BY id, span_start""".stripMargin,
-
-    // full-recompute ground truth restricted to batch docs — the delta
-    // counts occurrences over corpus + batch, so its output is exactly
-    // the one-shot chain's rows for doc_id >= 400 (identical values
-    // prove the incremental path loses nothing)
-    "d18_substring_delta" ->
-      s"""WITH d0 AS (SELECT doc_id, $plantSpanSql AS text FROM documents),
-        |w AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-        |  FROM d0),
-        |g AS (
-        |  SELECT doc_id, t.i - 1 AS pos, md5(array_to_string(ws[t.i:t.i+14], ' ')) AS gh
-        |  FROM w, unnest(range(1, len(ws)-13)) AS t(i)),
-        |dup AS (SELECT gh FROM g GROUP BY gh HAVING count(*) >= 2),
-        |m AS (SELECT doc_id, pos FROM g JOIN dup USING (gh) WHERE doc_id >= 400),
-        |isl AS (
-        |  SELECT doc_id, pos,
-        |         CASE WHEN lag(pos) OVER win IS NULL OR pos - lag(pos) OVER win > 15 THEN 1 ELSE 0 END AS ns
-        |  FROM m WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
-        |sp AS (
-        |  SELECT doc_id, pos,
-        |         sum(ns) OVER (PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM isl)
-        |SELECT doc_id AS id, min(pos) AS span_start, max(pos) + 15 - min(pos) AS span_len
-        |FROM sp GROUP BY doc_id, sid ORDER BY id, span_start""".stripMargin,
-
-    // from-scratch recompute: train grams marked by ANY occurrence in
-    // the eval gram set, then the same maximal-span merge
-    "d20_decontaminate" ->
-      s"""WITH d0 AS (SELECT doc_id, $plantSpanSql AS text FROM documents),
-        |w AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-        |  FROM d0),
-        |g AS (
-        |  SELECT doc_id, t.i - 1 AS pos, md5(array_to_string(ws[t.i:t.i+14], ' ')) AS gh
-        |  FROM w, unnest(range(1, len(ws)-13)) AS t(i)),
-        |ev AS (SELECT DISTINCT gh FROM g WHERE doc_id >= 400),
-        |m AS (SELECT doc_id, pos FROM g JOIN ev USING (gh) WHERE doc_id < 400),
-        |isl AS (
-        |  SELECT doc_id, pos,
-        |         CASE WHEN lag(pos) OVER win IS NULL OR pos - lag(pos) OVER win > 15 THEN 1 ELSE 0 END AS ns
-        |  FROM m WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
-        |sp AS (
-        |  SELECT doc_id, pos,
-        |         sum(ns) OVER (PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM isl)
-        |SELECT doc_id AS id, min(pos) AS span_start, max(pos) + 15 - min(pos) AS span_len
-        |FROM sp GROUP BY doc_id, sid ORDER BY id, span_start""".stripMargin,
-
-    // the Bloom prefilter is exact-verified, so its contract is
-    // literally d20's: same oracle text
-    "d24_bloom_decontaminate" ->
-      s"""WITH d0 AS (SELECT doc_id, $plantSpanSql AS text FROM documents),
-        |w AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-        |  FROM d0),
-        |g AS (
-        |  SELECT doc_id, t.i - 1 AS pos, md5(array_to_string(ws[t.i:t.i+14], ' ')) AS gh
-        |  FROM w, unnest(range(1, len(ws)-13)) AS t(i)),
-        |ev AS (SELECT DISTINCT gh FROM g WHERE doc_id >= 400),
-        |m AS (SELECT doc_id, pos FROM g JOIN ev USING (gh) WHERE doc_id < 400),
-        |isl AS (
-        |  SELECT doc_id, pos,
-        |         CASE WHEN lag(pos) OVER win IS NULL OR pos - lag(pos) OVER win > 15 THEN 1 ELSE 0 END AS ns
-        |  FROM m WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
-        |sp AS (
-        |  SELECT doc_id, pos,
-        |         sum(ns) OVER (PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM isl)
-        |SELECT doc_id AS id, min(pos) AS span_start, max(pos) + 15 - min(pos) AS span_len
-        |FROM sp GROUP BY doc_id, sid ORDER BY id, span_start""".stripMargin,
-
-    // per-batch-causal recompute: batch a's docs are judged against
-    // (standing corpus ∪ a), batch b's against everything — the
-    // as-of-arrival semantics the streaming loop implements
-    "d19_stream_substring" ->
-      s"""WITH d0 AS (SELECT doc_id, $plantSpanSql AS text FROM documents),
-        |w AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-        |  FROM d0),
-        |g AS (
-        |  SELECT doc_id, t.i - 1 AS pos, md5(array_to_string(ws[t.i:t.i+14], ' ')) AS gh
-        |  FROM w, unnest(range(1, len(ws)-13)) AS t(i)),
-        |na AS (SELECT gh FROM g WHERE doc_id < 500 OR doc_id >= 600 GROUP BY gh HAVING count(*) >= 2),
-        |nb AS (SELECT gh FROM g GROUP BY gh HAVING count(*) >= 2),
-        |m AS (
-        |  SELECT doc_id, pos FROM g JOIN na USING (gh) WHERE doc_id >= 400 AND doc_id < 500
-        |  UNION ALL
-        |  SELECT doc_id, pos FROM g JOIN nb USING (gh) WHERE doc_id >= 500 AND doc_id < 600),
-        |isl AS (
-        |  SELECT doc_id, pos,
-        |         CASE WHEN lag(pos) OVER win IS NULL OR pos - lag(pos) OVER win > 15 THEN 1 ELSE 0 END AS ns
-        |  FROM m WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
-        |sp AS (
-        |  SELECT doc_id, pos,
-        |         sum(ns) OVER (PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM isl)
-        |SELECT doc_id AS id, min(pos) AS span_start, max(pos) + 15 - min(pos) AS span_len
-        |FROM sp GROUP BY doc_id, sid ORDER BY id, span_start""".stripMargin,
-
-    "s7_ann_pq" -> graft.ann.Pq.oracleSql(k = 5),
-
-    // identical output to s7 by construction (deterministic train +
-    // encode); the oracle re-derives everything from scratch either way
-    "s8_ann_pq_indexed" -> graft.ann.Pq.oracleSql(k = 5),
-
-    "s9_ivfpq_indexed" -> graft.ann.IvfPq.oracleSql(k = 5),
-
-    "s5_ivf_indexed" -> Ann.ivfKmeansOracleSql(k = 5),
-
-    "x1_langid" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id,
-        |    len(list_filter(ws, x -> list_contains(['der','die','das','und','ist','ein','nicht'], x))) AS score_de,
-        |    len(list_filter(ws, x -> list_contains(['the','a','of','and','to','in','is'], x))) AS score_en,
-        |    len(list_filter(ws, x -> list_contains(['el','la','de','que','y','un','en'], x))) AS score_es,
-        |    len(list_filter(ws, x -> list_contains(['le','la','de','et','un','dans','est'], x))) AS score_fr,
-        |    len(list_filter(ws, x -> list_contains(['de','le','shi','bu','wo','you','zai'], x))) AS score_zh
-        |  FROM w)
-        |SELECT doc_id,
-        |  CASE WHEN score_de >= score_en AND score_de >= score_es AND score_de >= score_fr AND score_de >= score_zh THEN 'de'
-        |       WHEN score_en >= score_es AND score_en >= score_fr AND score_en >= score_zh THEN 'en'
-        |       WHEN score_es >= score_fr AND score_es >= score_zh THEN 'es'
-        |       WHEN score_fr >= score_zh THEN 'fr'
-        |       ELSE 'zh' END AS pred_lang,
-        |  score_de, score_en, score_es, score_fr, score_zh
-        |FROM s ORDER BY doc_id""".stripMargin,
-
-    "x2_quality_score" ->
-      """WITH w AS (
-        |  SELECT doc_id, text,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id,
-        |    length(text)::BIGINT AS n_chars_c,
-        |    len(ws)::BIGINT AS n_words,
-        |    len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))::BIGINT AS n_punct,
-        |    len(list_filter(ws, x -> list_contains(['the','a','of','and','to','in','is'], x)))::BIGINT AS n_stop,
-        |    (list_sum(list_transform(ws, x -> length(x)::BIGINT)))::BIGINT AS word_chars
-        |  FROM w)
-        |SELECT doc_id, n_chars_c, n_words,
-        |  (word_chars * 100 // greatest(n_words, 1)) / 100.0 AS avg_word_len,
-        |  (n_punct * 10000 // greatest(n_chars_c, 1)) / 10000.0 AS punct_ratio,
-        |  (n_stop * 10000 // greatest(n_words, 1)) / 10000.0 AS stop_ratio,
-        |  (least(n_words, 100) * 50 + (n_stop * 3000 // greatest(n_words, 1))
-        |   + 2000 - (n_punct * 2000 // greatest(n_chars_c, 1))) / 10000.0 AS quality
-        |FROM s ORDER BY doc_id""".stripMargin,
-
-    "x3_token_count" ->
-      """SELECT doc_id,
-        | length(text)::BIGINT AS n_chars_c,
-        | len(regexp_extract_all(text, '\S+'))::BIGINT AS ws_tokens,
-        | len(regexp_extract_all(lower(text), '[a-z]+|[0-9]|[^a-z0-9\s]'))::BIGINT AS bpe_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "x4_fingerprint" ->
-      """SELECT doc_id, md5(text) AS content_md5,
-        | list_reduce(
-        |   list_prepend(0::BIGINT, list_transform(range(1, length(text)+1), i -> ascii(substr(text, i, 1))::BIGINT)),
-        |   (a, b) -> (a*31 + b) % 1000000007) AS rolling_hash
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "m1_multimodal_meta" ->
-      """WITH d AS (
-        |  SELECT doc_id, length(text)::BIGINT AS n,
-        |    list_transform(range(1, length(text)+1), i -> ascii(substr(text, i, 1))::BIGINT) AS bytes
-        |  FROM documents),
-        |p AS (SELECT doc_id, bytes, ((n + 15) // 16)::BIGINT AS h FROM d)
-        |SELECT doc_id, 16::BIGINT AS width, h AS height, (16 * h)::BIGINT AS n_pixels,
-        |  (11 + length(h::VARCHAR) + 16 * h)::BIGINT AS payload_bytes,
-        |  (coalesce(list_sum(bytes), 0) % 997)::BIGINT AS checksum,
-        |  h AS n_frames,
-        |  coalesce(bytes[1], -1)::BIGINT AS first_byte
-        |FROM p ORDER BY doc_id""".stripMargin,
-
-    "m2_multimodal_resize" ->
-      """WITH d AS (
-        |  SELECT doc_id, length(text)::BIGINT AS n,
-        |    list_transform(range(1, length(text)+1), i -> ascii(substr(text, i, 1))::BIGINT) AS tb
-        |  FROM documents),
-        |p AS (
-        |  SELECT doc_id, ((n + 15) // 16)::BIGINT AS h,
-        |    [ coalesce(tb[i+1], 0) for i in range(0, 16 * ((n + 15) // 16)) ] AS px
-        |  FROM d),
-        |r AS (
-        |  SELECT doc_id, (h // 2)::BIGINT AS h2,
-        |    [ (px[32*(i//8) + 2*(i%8) + 1] + px[32*(i//8) + 2*(i%8) + 2]
-        |       + px[32*(i//8) + 16 + 2*(i%8) + 1] + px[32*(i//8) + 16 + 2*(i%8) + 2]) // 4
-        |      for i in range(0, 8 * (h // 2)) ] AS rp
-        |  FROM p)
-        |SELECT doc_id, 8::BIGINT AS width, h2 AS height, (8 * h2)::BIGINT AS n_pixels,
-        |  (coalesce(list_sum(rp), 0) % 997)::BIGINT AS checksum,
-        |  coalesce(rp[1], -1)::BIGINT AS first_byte
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    "m6_multimodal_rgb" ->
-      """WITH d AS (
-        |  SELECT doc_id, length(text)::BIGINT AS n,
-        |    list_transform(range(1, length(text)+1), i -> ascii(substr(text, i, 1))::BIGINT) AS tb
-        |  FROM documents),
-        |p AS (
-        |  SELECT doc_id, n, tb,
-        |    (((n + 2) // 3 + 15) // 16)::BIGINT AS h
-        |  FROM d)
-        |SELECT doc_id, 16::BIGINT AS width, h AS height, (16 * h)::BIGINT AS n_pixels,
-        |  coalesce(list_sum([tb[i+1] for i in range(0, n) if i % 3 = 0]), 0)::BIGINT AS r_sum,
-        |  coalesce(list_sum([tb[i+1] for i in range(0, n) if i % 3 = 1]), 0)::BIGINT AS g_sum,
-        |  coalesce(list_sum([tb[i+1] for i in range(0, n) if i % 3 = 2]), 0)::BIGINT AS b_sum
-        |FROM p ORDER BY doc_id""".stripMargin,
-
-    // the waveform recompute from text bytes: delta samples
-    // (b[i]-b[i-1])·256 with b[0]=0, abs/peak/sign-change statistics
-    // over the sample list, payload = 44-byte canonical header + 2
-    // bytes per sample
-    "m7_audio_energy" ->
-      """WITH d AS (
-        |  SELECT doc_id, length(text)::BIGINT AS n,
-        |    list_transform(range(1, length(text)+1),
-        |      i -> (ascii(substr(text, i, 1)) - CASE WHEN i = 1 THEN 0 ELSE ascii(substr(text, i-1, 1)) END) * 256) AS s
-        |  FROM documents)
-        |SELECT doc_id, n AS n_samples, 8000::BIGINT AS sample_rate,
-        |  (n * 1000 // 8000)::BIGINT AS duration_ms,
-        |  (44 + 2 * n)::BIGINT AS payload_bytes,
-        |  coalesce(list_sum(list_transform(s, x -> abs(x))), 0)::BIGINT AS sum_abs,
-        |  coalesce(list_max(list_transform(s, x -> abs(x))), 0)::BIGINT AS peak,
-        |  coalesce(len(list_filter(range(2, n+1), i -> (s[i] < 0) <> (s[i-1] < 0))), 0)::BIGINT AS zero_crossings
-        |FROM d ORDER BY doc_id""".stripMargin,
-
-    // the m4 embed-stub derivation through the shared fixed-projection
-    // brute-force chain (one definition with s1 and the audit)
-    "m3_multimodal_ann" -> Ann.bruteOracleSql(k = 3, queryPred = "q.id < 5",
-      source = m4VectorSourceSql),
-
-    // m3's embed-stub derivation swapped in as the vector source of the
-    // FULL trained-IVF oracle chain (seed, Lloyd rounds, routing, nprobe
-    // probing) — one parameter, the rest is s3/s5's proven construction
-    "m4_multimodal_ann_indexed" -> Ann.ivfKmeansOracleSql(k = 3, queryPred = "id < 5",
-      source = m4VectorSourceSql),
-
-    // m7's delta-waveform derivation + the per-window |s| sums swapped
-    // in as the vector source of the FULL trained-IVF oracle chain —
-    // the m4 parameterization applied to the audio branch
-    "m9_audio_ann_indexed" -> Ann.ivfKmeansOracleSql(k = 3, queryPred = "id < 5",
-      source = m9VectorSourceSql),
-
-    // the m8 segmentation chain (frame window-sums, lag-delta cut
-    // flags, running cut count) grouped into per-segment frame lists,
-    // head-profiled to 16 dims, swapped in as the vector source of the
-    // trained-IVF oracle chain — the m4/m9 parameterization applied to
-    // the video branch; the zero-pad tail of the raster is sum-neutral
-    // so frames derive from the raw text bytes exactly as m8's oracle
-    "m10_segment_ann_indexed" -> Ann.ivfKmeansOracleSql(k = 3,
-      queryPred = "id % 1000 = 0 AND id < 100000",
-      source = m10VectorSourceSql),
-
-    // the same chain as per-stage integer digests (r18 verdict 1a): an
-    // all-BIGINT localization probe the driver's compare adjudicates
-    // stage by stage — immune to representation/rounding divergence
-    "m10_stage_digest" -> Ann.ivfStageDigestSql(k = 3,
-      queryPred = "id % 1000 = 0 AND id < 100000",
-      source = m10VectorSourceSql),
-
-    // the m5 frame construction + SQL windows: lag-delta cut flags,
-    // running cut count = segment id, then the per-segment rollup
-    "m8_scene_cuts" ->
-      """WITH b AS (
-        |  SELECT doc_id,
-        |    list_transform(range(1, length(text)+1), i -> ascii(substr(text, i, 1))::BIGINT) AS bytes
-        |  FROM documents WHERE doc_id % 20 = 0),
-        |fr AS (
-        |  SELECT doc_id, unnest(range(0, (len(bytes)+15)//16)) AS fi, bytes
-        |  FROM b),
-        |wsum AS (
-        |  SELECT doc_id, fi,
-        |    list_sum(bytes[fi*16 + 1 : least(fi*16 + 16, len(bytes))])::BIGINT AS ws
-        |  FROM fr),
-        |c AS (
-        |  SELECT doc_id, fi, ws,
-        |    CASE WHEN abs(ws - lag(ws) OVER (PARTITION BY doc_id ORDER BY fi)) > 150
-        |         THEN 1 ELSE 0 END AS cut
-        |  FROM wsum),
-        |s AS (
-        |  SELECT doc_id, fi, ws,
-        |    sum(cut) OVER (PARTITION BY doc_id ORDER BY fi)::BIGINT AS seg_idx
-        |  FROM c)
-        |SELECT doc_id, seg_idx, min(fi)::BIGINT AS first_frame,
-        |  count(*)::BIGINT AS n_frames, sum(ws)::BIGINT AS seg_sum
-        |FROM s GROUP BY 1, 2 ORDER BY doc_id, seg_idx""".stripMargin,
-
-    "m5_frame_stats" ->
-      """WITH b AS (
-        |  SELECT doc_id,
-        |    list_transform(range(1, length(text)+1), i -> ascii(substr(text, i, 1))::BIGINT) AS bytes
-        |  FROM documents WHERE doc_id % 20 = 0),
-        |fr AS (
-        |  SELECT doc_id, unnest(range(0, (len(bytes)+15)//16)) AS fi, bytes
-        |  FROM b)
-        |SELECT doc_id, fi::INT AS frame_idx, (fi*16)::BIGINT AS frame_offset,
-        |  bytes[fi*16 + 1]::BIGINT AS byte_value,
-        |  list_sum(bytes[fi*16 + 1 : least(fi*16 + 16, len(bytes))])::BIGINT AS window_sum
-        |FROM fr ORDER BY doc_id, frame_idx""".stripMargin,
-
-    "j4_txn_multi_write" ->
-      """SELECT * FROM (
-        | SELECT 'big_orders' AS dataset, count(*) AS n_rows FROM orders WHERE o_totalprice > 200000
-        | UNION ALL
-        | SELECT 'hi_value_customers', count(*) FROM customer WHERE c_acctbal > 5000
-        |) ORDER BY dataset""".stripMargin,
-
-    "j5_lineage" ->
-      """SELECT * FROM (VALUES
-        | ('customer', 'big_orders', 'transform-hop'),
-        | ('customer', 'customers_copy', 'copy'),
-        | ('orders', 'big_orders', 'transform')) t(src, dst, kind)
-        |ORDER BY src, dst, kind""".stripMargin,
-
-    "j7_virtual_dataset" ->
-      """SELECT b.bucket_id, count(*) AS n, round(sum(o_totalprice),2) AS total
-        |FROM (SELECT unnest(range(0,10)) AS bucket_id) b
-        | JOIN orders ON o_orderkey % 10 = b.bucket_id
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "j8_onchange_stream" ->
-      """SELECT event_type, count(*) AS n, round(sum(value),2) AS sum_value
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "g9_paged_traversal" ->
-      s"""SELECT * FROM (
-         | SELECT CAST(c_custkey AS BIGINT) AS start_key, $custUri AS start,
-         |   '${Tpch.pNation}' AS predicate, $natUri AS related
-         | FROM customer JOIN nation ON c_nationkey = n_nationkey
-         | WHERE c_custkey > 50 ORDER BY start_key LIMIT 20
-         |) ORDER BY start_key""".stripMargin,
-
-    "e3_stream_window" ->
-      """WITH b AS (
-        |  SELECT epoch(time_bucket(INTERVAL 1 HOUR, ts::TIMESTAMP))::BIGINT AS window_start,
-        |         event_type, count(*) AS n, round(sum(value),2) AS sum_value
-        |  FROM events GROUP BY 1, 2),
-        |m AS (SELECT max(epoch_us(ts::TIMESTAMP)) AS mx FROM events)
-        |SELECT window_start, event_type, n, sum_value FROM b, m
-        |WHERE (window_start + 3600) * 1000 <= mx // 1000
-        |ORDER BY window_start, event_type""".stripMargin,
-
-    "j9_backup_restore" ->
-      """SELECT * FROM (
-        | SELECT 'customer' AS dataset, count(*) AS n_rows FROM customer
-        | UNION ALL SELECT 'orders', count(*) FROM orders
-        |) ORDER BY dataset""".stripMargin,
-
-    "j10_stream_latest" ->
-      """SELECT user_id, event_id AS last_event_id, event_type AS last_type, value AS last_value
-        |FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn FROM events)
-        |WHERE rn = 1 ORDER BY user_id""".stripMargin,
-
-    "j11_entity_roundtrip" ->
-      s"""SELECT $custUri AS id, c_name AS name, c_acctbal AS acctbal
-         |FROM customer ORDER BY id""".stripMargin,
-
-    "j13_wire_source_sink" ->
-      s"""SELECT $suppUri AS id, s_name AS name, s_acctbal AS acctbal
-         |FROM supplier ORDER BY id""".stripMargin,
-
-    "j16_wire_context" ->
-      """SELECT * FROM (VALUES
-        | ('cust', 'http://graft.io/tpch/customer/'),
-        | ('gs', 'http://graft.io/schema/')) t(prefix, namespace)
-        |ORDER BY prefix""".stripMargin,
-
-    "j15_failing_entities" ->
-      """SELECT * FROM (
-        | SELECT 'clean_events' AS dataset, count(*) AS n_rows FROM events
-        |   WHERE coalesce(json_extract(props, '$.k')::INT < 90, FALSE)
-        | UNION ALL
-        | SELECT 'clean_events_requeue', count(*) FROM events
-        |   WHERE NOT coalesce(json_extract(props, '$.k')::INT < 90, FALSE)
-        | UNION ALL
-        | SELECT 'retried', count(*) FROM events
-        |   WHERE NOT coalesce(json_extract(props, '$.k')::INT < 90, FALSE)
-        |) ORDER BY dataset""".stripMargin,
-
-    "p1_training_corpus" ->
-      """WITH w AS (
-        |  SELECT doc_id, text, source,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-        |  FROM documents),
-        |lang AS (
-        |  SELECT doc_id,
-        |    len(list_filter(ws, x -> list_contains(['der','die','das','und','ist','ein','nicht'], x))) AS de,
-        |    len(list_filter(ws, x -> list_contains(['the','a','of','and','to','in','is'], x))) AS en,
-        |    len(list_filter(ws, x -> list_contains(['el','la','de','que','y','un','en'], x))) AS es,
-        |    len(list_filter(ws, x -> list_contains(['le','la','de','et','un','dans','est'], x))) AS fr,
-        |    len(list_filter(ws, x -> list_contains(['de','le','shi','bu','wo','you','zai'], x))) AS zh
-        |  FROM w),
-        |pred AS (
-        |  SELECT doc_id,
-        |    CASE WHEN de >= en AND de >= es AND de >= fr AND de >= zh THEN 'de'
-        |         WHEN en >= es AND en >= fr AND en >= zh THEN 'en'
-        |         WHEN es >= fr AND es >= zh THEN 'es'
-        |         WHEN fr >= zh THEN 'fr' ELSE 'zh' END AS pred_lang
-        |  FROM lang),
-        |q AS (
-        |  SELECT doc_id,
-        |    (least(len(ws), 100) * 50
-        |     + (len(list_filter(ws, x -> list_contains(['the','a','of','and','to','in','is'], x)))::BIGINT * 3000 // greatest(len(ws)::BIGINT, 1))
-        |     + 2000
-        |     - (len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))::BIGINT * 2000 // greatest(length(text)::BIGINT, 1))) / 10000.0 AS quality
-        |  FROM w),
-        |tk AS (SELECT doc_id, len(regexp_extract_all(text, '\S+'))::BIGINT AS ws_tokens FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, array_to_string(ws[t.i:t.i+2], ' ') AS s
-        |  FROM w, unnest(range(1, len(ws)-1)) AS t(i)),
-        |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-        |pr AS (SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS inter
-        |       FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |dup AS (
-        |  SELECT DISTINCT b AS doc_id
-        |  FROM pr JOIN sz sa ON pr.a = sa.doc_id JOIN sz sb ON pr.b = sb.doc_id
-        |  WHERE inter / (sa.sz + sb.sz - inter) >= 0.8)
-        |SELECT d.source, count(*) AS n_docs, sum(tk.ws_tokens)::BIGINT AS total_tokens,
-        |       round(sum(q.quality), 2) AS sum_quality
-        |FROM documents d
-        | JOIN pred USING (doc_id) JOIN q USING (doc_id) JOIN tk USING (doc_id)
-        |WHERE pred.pred_lang = 'en' AND q.quality >= 0.40
-        |  AND doc_id NOT IN (SELECT doc_id FROM dup)
-        |GROUP BY d.source ORDER BY d.source""".stripMargin,
-
-    "c7_asof_join" ->
-      """WITH u AS (SELECT DISTINCT user_id FROM events),
-        |probes AS (SELECT user_id, t.t FROM u, unnest([300,600,900]::BIGINT[]) AS t(t))
-        |SELECT p.user_id, p.t, e.event_id AS asof_event_id,
-        |       e.event_type AS asof_type, e.value AS asof_value
-        |FROM probes p ASOF JOIN events e
-        |  ON p.user_id = e.user_id AND p.t >= e.event_id
-        |ORDER BY p.user_id, p.t""".stripMargin,
-
-    // per-root recursive traversal + weighted aggregation: all declared
-    // edge legs (the allEdges union), min depth per (root, uri)
-    "g15_traversal_agg" ->
-      s"""WITH RECURSIVE e AS (
-         |    SELECT $custUri AS src, $natUri AS dst FROM customer JOIN nation ON c_nationkey = n_nationkey
-         |  UNION ALL
-         |    SELECT '${tpchBase}lineitem/' || l_orderkey || '-' || l_linenumber, '${tpchBase}orders/' || o_orderkey
-         |    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |  UNION ALL
-         |    SELECT '${tpchBase}lineitem/' || l_orderkey || '-' || l_linenumber, '${tpchBase}part/' || p_partkey
-         |    FROM lineitem JOIN part ON l_partkey = p_partkey
-         |  UNION ALL
-         |    SELECT '${tpchBase}lineitem/' || l_orderkey || '-' || l_linenumber, $suppUri
-         |    FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-         |  UNION ALL
-         |    SELECT $natUri, '${tpchBase}region/' || r_regionkey FROM nation JOIN region ON n_regionkey = r_regionkey
-         |  UNION ALL
-         |    SELECT '${tpchBase}orders/' || o_orderkey, $custUri FROM orders JOIN customer ON o_custkey = c_custkey
-         |  UNION ALL
-         |    SELECT $suppUri, $natUri FROM supplier JOIN nation ON s_nationkey = n_nationkey),
-         |r(root, uri, depth) AS (
-         |  SELECT '${tpchBase}lineitem/' || l_orderkey || '-' || l_linenumber,
-         |         '${tpchBase}lineitem/' || l_orderkey || '-' || l_linenumber, 0
-         |  FROM lineitem WHERE l_orderkey < 100
-         |  UNION ALL
-         |  SELECT r.root, e.dst, r.depth + 1 FROM r JOIN e ON e.src = r.uri WHERE r.depth < 2),
-         |m AS (SELECT root, uri, min(depth) AS depth FROM r GROUP BY 1, 2),
-         |w AS (
-         |    SELECT '${tpchBase}orders/' || o_orderkey AS uri, o_totalprice AS weight FROM orders
-         |  UNION ALL
-         |    SELECT '${tpchBase}part/' || p_partkey, p_retailprice FROM part
-         |  UNION ALL
-         |    SELECT $suppUri, s_acctbal FROM supplier)
-         |SELECT root, count(*)::BIGINT AS n_reached,
-         |       sum(CASE WHEN depth = 1 THEN 1 ELSE 0 END)::BIGINT AS n_depth1,
-         |       sum(CASE WHEN depth = 2 THEN 1 ELSE 0 END)::BIGINT AS n_depth2,
-         |       round(sum(coalesce(weight, 0.0)), 2) AS sum_weight
-         |FROM m LEFT JOIN w USING (uri)
-         |WHERE depth > 0 GROUP BY root ORDER BY root""".stripMargin,
-
-    "g11_reachability" ->
-      s"""WITH RECURSIVE r(uri, depth) AS (
-         |  SELECT $custUri, 0 FROM customer WHERE c_custkey < 5
-         |  UNION ALL
-         |  SELECT e.dst, r.depth + 1 FROM r JOIN (
-         |    SELECT $custUri AS src, $natUri AS dst FROM customer JOIN nation ON c_nationkey = n_nationkey
-         |    UNION ALL
-         |    SELECT $natUri, '${tpchBase}region/' || r_regionkey FROM nation JOIN region ON n_regionkey = r_regionkey
-         |  ) e ON e.src = r.uri
-         |  WHERE r.depth < 2)
-         |SELECT uri, min(depth)::INT AS depth FROM r GROUP BY uri ORDER BY uri""".stripMargin,
-
-    "g10_merge_partials" ->
-      s"""SELECT $custUri AS id, c_name AS name, c_acctbal AS acctbal,
-         | CASE WHEN c_custkey % 2 = 0 THEN c_mktsegment END AS segment
-         |FROM customer ORDER BY id""".stripMargin,
-
-    "c8_props_extract" ->
-      """SELECT event_type, count(*) AS n,
-        | sum(json_extract(props, '$.k')::INT)::BIGINT AS sum_k,
-        | min(json_extract(props, '$.k')::INT) AS min_k,
-        | max(json_extract(props, '$.k')::INT) AS max_k
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "x5_repetition" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), x -> x <> '') AS ws
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id,
-        |    [array_to_string(ws[i:i+2], ' ') for i in range(1, greatest(len(ws)-1, 1))] AS tri,
-        |    [array_to_string(ws[i:i+1], ' ') for i in range(1, greatest(len(ws), 1))] AS bi
-        |  FROM w),
-        |tri AS (
-        |  SELECT doc_id, len(tri)::BIGINT AS n_3grams, len(list_distinct(tri))::BIGINT AS n_distinct_3grams
-        |  FROM g),
-        |bic AS (
-        |  SELECT doc_id, b.g AS gram, count(*) AS cnt
-        |  FROM g, unnest(bi) AS b(g) GROUP BY 1, 2),
-        |bia AS (
-        |  SELECT doc_id, max(cnt)::BIGINT AS top_cnt, sum(cnt)::BIGINT AS n_2grams
-        |  FROM bic GROUP BY 1)
-        |SELECT t.doc_id, t.n_3grams, t.n_distinct_3grams,
-        |  ((t.n_3grams - t.n_distinct_3grams) * 10000 // greatest(t.n_3grams, 1)) / 10000.0 AS dup3_frac,
-        |  coalesce((b.top_cnt * 10000 // greatest(b.n_2grams, 1)) / 10000.0, 0.0) AS top_bigram_share
-        |FROM tri t LEFT JOIN bia b USING (doc_id) ORDER BY t.doc_id""".stripMargin,
-
-    "d25_keep_best" ->
-      """WITH RECURSIVE words AS (
-        |  SELECT doc_id, text,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), w -> w <> '') AS ws
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, array_to_string(ws[t.i:t.i+2], ' ') AS s
-        |  FROM words, unnest(range(1, len(ws)-1)) AS t(i)),
-        |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-        |pr AS (SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS inter
-        |       FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT a, b FROM pr JOIN sz sa ON pr.a = sa.doc_id JOIN sz sb ON pr.b = sb.doc_id
-        |  WHERE inter / (sa.sz + sb.sz - inter) >= 0.8),
-        |edges AS (SELECT a, b FROM pairs UNION SELECT b, a FROM pairs),
-        |r(src, dst) AS (
-        |  SELECT a, b FROM edges
-        |  UNION
-        |  SELECT r.src, e.b FROM r JOIN edges e ON r.dst = e.a),
-        |cl AS (SELECT src AS id, least(src, min(dst)) AS cluster_id FROM r GROUP BY src),
-        |qs AS (
-        |  SELECT doc_id,
-        |    length(text)::BIGINT AS n_chars_c,
-        |    len(ws)::BIGINT AS n_words,
-        |    len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))::BIGINT AS n_punct,
-        |    len(list_filter(ws, x -> list_contains(['the','a','of','and','to','in','is'], x)))::BIGINT AS n_stop
-        |  FROM words),
-        |q AS (
-        |  SELECT doc_id,
-        |    (least(n_words, 100) * 50 + (n_stop * 3000 // greatest(n_words, 1))
-        |     + 2000 - (n_punct * 2000 // greatest(n_chars_c, 1))) / 10000.0 AS quality
-        |  FROM qs),
-        |j AS (SELECT cl.cluster_id, cl.id, q.quality FROM cl JOIN q ON cl.id = q.doc_id),
-        |rk AS (SELECT cluster_id, id, quality,
-        |       row_number() OVER (PARTITION BY cluster_id ORDER BY quality DESC, id) AS rk,
-        |       count(*) OVER (PARTITION BY cluster_id) AS n_members
-        |       FROM j)
-        |SELECT cluster_id, id AS kept_id, quality AS kept_score, n_members
-        |FROM rk WHERE rk = 1 ORDER BY cluster_id""".stripMargin,
-
-    // the d6 component chain joined back to every doc (singletons are
-    // their own rep), then the md5-of-rep threshold decision — both
-    // members of a pair share a rep, so no pair crosses by construction
-    "p22_leak_split" ->
-      """WITH RECURSIVE words AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), w -> w <> '') AS ws
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, array_to_string(ws[t.i:t.i+2], ' ') AS s
-        |  FROM words, unnest(range(1, len(ws)-1)) AS t(i)),
-        |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-        |pr AS (SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS inter
-        |       FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT a, b FROM pr JOIN sz sa ON pr.a = sa.doc_id JOIN sz sb ON pr.b = sb.doc_id
-        |  WHERE inter / (sa.sz + sb.sz - inter) >= 0.8),
-        |edges AS (SELECT a, b FROM pairs UNION SELECT b, a FROM pairs),
-        |r(src, dst) AS (
-        |  SELECT a, b FROM edges
-        |  UNION
-        |  SELECT r.src, e.b FROM r JOIN edges e ON r.dst = e.a),
-        |cl AS (SELECT src AS id, least(src, min(dst)) AS cluster_id FROM r GROUP BY src),
-        |rep AS (
-        |  SELECT d.doc_id, coalesce(cl.cluster_id, d.doc_id) AS cluster_id
-        |  FROM documents d LEFT JOIN cl ON d.doc_id = cl.id)
-        |SELECT doc_id, cluster_id,
-        |  CASE WHEN ('0x' || substr(md5('lsplit:' || cluster_id), 1, 8))::BIGINT < 858993459
-        |       THEN 'holdout' ELSE 'train' END AS split
-        |FROM rep ORDER BY doc_id""".stripMargin,
-
-    "p25_split_drift" ->
-      """WITH RECURSIVE batch AS (
-        |  SELECT d.doc_id, d2.text
-        |  FROM documents d JOIN documents d2 ON d2.doc_id = d.doc_id + 200
-        |  WHERE d.doc_id < 20
-        |  UNION ALL
-        |  SELECT doc_id, text FROM documents WHERE doc_id >= 400),
-        |standing AS (SELECT doc_id, text FROM documents WHERE doc_id < 400),
-        |words_s AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), w -> w <> '') AS ws
-        |  FROM standing),
-        |sh_s AS (
-        |  SELECT DISTINCT doc_id, array_to_string(ws[t.i:t.i+2], ' ') AS s
-        |  FROM words_s, unnest(range(1, len(ws)-1)) AS t(i)),
-        |sz_s AS (SELECT doc_id, count(*) AS sz FROM sh_s GROUP BY 1),
-        |pr_s AS (SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS inter
-        |         FROM sh_s a JOIN sh_s b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |pairs_s AS (
-        |  SELECT a, b FROM pr_s JOIN sz_s sa ON pr_s.a = sa.doc_id JOIN sz_s sb ON pr_s.b = sb.doc_id
-        |  WHERE inter / (sa.sz + sb.sz - inter) >= 0.8),
-        |edges_s AS (SELECT a, b FROM pairs_s UNION SELECT b, a FROM pairs_s),
-        |r_s(src, dst) AS (
-        |  SELECT a, b FROM edges_s
-        |  UNION
-        |  SELECT r_s.src, e.b FROM r_s JOIN edges_s e ON r_s.dst = e.a),
-        |cl_s AS (SELECT src AS id, least(src, min(dst)) AS cluster_id FROM r_s GROUP BY src),
-        |rep_s AS (
-        |  SELECT s.doc_id, coalesce(cl_s.cluster_id, s.doc_id) AS cluster_id
-        |  FROM standing s LEFT JOIN cl_s ON s.doc_id = cl_s.id),
-        |splits AS (
-        |  SELECT DISTINCT cluster_id,
-        |    CASE WHEN ('0x' || substr(md5('lsplit:' || cluster_id), 1, 8))::BIGINT < 858993459
-        |         THEN 'holdout' ELSE 'train' END AS split
-        |  FROM rep_s),
-        |eff AS (
-        |  SELECT doc_id, text FROM standing WHERE doc_id NOT IN (SELECT doc_id FROM batch)
-        |  UNION ALL SELECT doc_id, text FROM batch),
-        |words_e AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), w -> w <> '') AS ws
-        |  FROM eff),
-        |sh_e AS (
-        |  SELECT DISTINCT doc_id, array_to_string(ws[t.i:t.i+2], ' ') AS s
-        |  FROM words_e, unnest(range(1, len(ws)-1)) AS t(i)),
-        |sz_e AS (SELECT doc_id, count(*) AS sz FROM sh_e GROUP BY 1),
-        |pr_e AS (SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS inter
-        |         FROM sh_e a JOIN sh_e b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |pairs_e AS (
-        |  SELECT a, b FROM pr_e JOIN sz_e sa ON pr_e.a = sa.doc_id JOIN sz_e sb ON pr_e.b = sb.doc_id
-        |  WHERE inter / (sa.sz + sb.sz - inter) >= 0.8),
-        |bpairs AS (
-        |  SELECT a, b FROM pairs_e
-        |  WHERE a IN (SELECT doc_id FROM batch) OR b IN (SELECT doc_id FROM batch)),
-        |br AS (
-        |  SELECT a, b, coalesce(ca.cluster_id, a) AS cluster_a, coalesce(cb.cluster_id, b) AS cluster_b
-        |  FROM bpairs LEFT JOIN cl_s ca ON bpairs.a = ca.id LEFT JOIN cl_s cb ON bpairs.b = cb.id
-        |  WHERE coalesce(ca.cluster_id, a) <> coalesce(cb.cluster_id, b))
-        |SELECT br.a, br.b, br.cluster_a, br.cluster_b, sa.split AS split_a, sb.split AS split_b,
-        |  CASE WHEN sa.split IS NOT NULL AND sb.split IS NOT NULL
-        |       THEN (sa.split <> sb.split)::INT END AS crosses_split_boundary
-        |FROM br LEFT JOIN splits sa ON br.cluster_a = sa.cluster_id
-        |        LEFT JOIN splits sb ON br.cluster_b = sb.cluster_id
-        |ORDER BY br.a, br.b""".stripMargin,
-
-    "d6_dedup_clusters" ->
-      """WITH RECURSIVE words AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), w -> w <> '') AS ws
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, array_to_string(ws[t.i:t.i+2], ' ') AS s
-        |  FROM words, unnest(range(1, len(ws)-1)) AS t(i)),
-        |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-        |pr AS (SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS inter
-        |       FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT a, b FROM pr JOIN sz sa ON pr.a = sa.doc_id JOIN sz sb ON pr.b = sb.doc_id
-        |  WHERE inter / (sa.sz + sb.sz - inter) >= 0.8),
-        |edges AS (SELECT a, b FROM pairs UNION SELECT b, a FROM pairs),
-        |r(src, dst) AS (
-        |  SELECT a, b FROM edges
-        |  UNION
-        |  SELECT r.src, e.b FROM r JOIN edges e ON r.dst = e.a)
-        |SELECT src AS id, least(src, min(dst)) AS cluster_id
-        |FROM r GROUP BY src ORDER BY id""".stripMargin
-  )
-
-  /** Exact word-3-gram Jaccard pairs at threshold 0.8 — the oracle for
-    * BOTH d2 (inverted-index exact join) and d3 (MinHash-LSH candidates +
-    * exact verify): at this threshold LSH recall is ≈ 1, so both must
-    * produce the identical pair set. */
-  private val ngramJaccardSql: String =
-    """WITH words AS (
-      |  SELECT doc_id,
-      |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' '), w -> w <> '') AS ws
-      |  FROM documents),
-      |sh AS (
-      |  SELECT DISTINCT doc_id, array_to_string(ws[t.i:t.i+2], ' ') AS s
-      |  FROM words, unnest(range(1, len(ws)-1)) AS t(i)),
-      |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-      |pr AS (SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS inter
-      |       FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
-      |SELECT a, b, round(inter / (sa.sz + sb.sz - inter), 3) AS jac
-      |FROM pr JOIN sz sa ON pr.a = sa.doc_id JOIN sz sb ON pr.b = sb.doc_id
-      |WHERE inter / (sa.sz + sb.sz - inter) >= 0.8 ORDER BY a, b""".stripMargin
+  val auditSql: Map[String, String] =
+    defs.flatMap(d => d.audit.map(d.name -> _)).toMap
 }

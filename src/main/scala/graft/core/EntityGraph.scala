@@ -260,8 +260,11 @@ final case class EntityGraph(datasets: Map[String, EntityDataset], ns: Namespace
     * (aggregate over everything reachable from each start entity):
     * multi-source BFS where every frontier row carries its ORIGIN, so
     * one pass answers "per start node, what is within k hops" for the
-    * whole start set. Output (root, uri, depth) with the MINIMUM depth
-    * per (root, uri).
+    * whole start set. Output (root, uri, depth), a multiset: every
+    * start row passes through as (uri, uri, 0) as given — a start URI
+    * listed twice yields two such rows — and every other node reached
+    * from a root appears once per distinct root, at its minimum depth
+    * from that root.
     *
     * Scale shape: identical to `reachable` (same pinned adjacency, same
     * pinning of frontiers) — except keys are (root, uri) pairs, so

@@ -11,32 +11,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * the standard way a library ships Catalyst extensions to a cluster.
   * `register` does the same for an already-running session. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.dotProductDescriptor)
-    ext.injectFunction(GraftExtensions.polyHashDescriptor)
-    ext.injectFunction(GraftExtensions.hyperplaneSketchDescriptor)
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, cls, build) =>
+      ext.injectFunction((new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
 }
 
 object GraftExtensions {
-
-  private val dotProductDescriptor = (
-    new FunctionIdentifier("dot_product"),
-    new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "dot_product(a, b) takes exactly 2 arguments")
-      DotProduct(children.head, children(1))
-    }
-  )
-
-  private val polyHashDescriptor = (
-    new FunctionIdentifier("poly_hash"),
-    new ExpressionInfo(classOf[PolyHash].getName, "poly_hash"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "poly_hash(s) takes exactly 1 argument")
-      PolyHash(children.head)
-    }
-  )
 
   /** hyperplane_sketch(v, table, bits, dims): the LSH sketch kernel with
     * its deterministic sign matrix resolved from the three foldable int
@@ -53,29 +34,23 @@ object GraftExtensions {
     HyperplaneSketch(children.head, signs)
   }
 
-  private val hyperplaneSketchDescriptor = (
-    new FunctionIdentifier("hyperplane_sketch"),
-    new ExpressionInfo(classOf[HyperplaneSketch].getName, "hyperplane_sketch"),
-    (children: Seq[Expression]) => mkSketch(children)
-  )
+  /** (SQL name, expression class, builder) of every graft function —
+    * the one table both the extension (`apply`) and `register` read. */
+  private val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("dot_product", classOf[DotProduct], children => {
+      require(children.size == 2, "dot_product(a, b) takes exactly 2 arguments")
+      DotProduct(children.head, children(1))
+    }),
+    ("poly_hash", classOf[PolyHash], children => {
+      require(children.size == 1, "poly_hash(s) takes exactly 1 argument")
+      PolyHash(children.head)
+    }),
+    ("hyperplane_sketch", classOf[HyperplaneSketch], mkSketch))
 
-  /** Register graft functions on a live session (tests, notebooks). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product",
-      children => {
-        require(children.size == 2, "dot_product(a, b) takes exactly 2 arguments")
-        DotProduct(children.head, children(1))
-      },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "poly_hash",
-      children => {
-        require(children.size == 1, "poly_hash(s) takes exactly 1 argument")
-        PolyHash(children.head)
-      },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hyperplane_sketch", mkSketch, "scala_udf")
-  }
+  /** Register graft functions on a live session (tests, notebooks);
+    * idempotent — a second call replaces each function with itself. */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    functions.foreach { case (name, _, build) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "scala_udf")
+    }
 }

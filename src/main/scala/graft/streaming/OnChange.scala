@@ -520,16 +520,18 @@ object OnChange {
     * batch. `tables` names the standing tables the loop writes: before
     * the drain starts, any of them that a table swap left only under
     * its swap name (a crash between the swap's drop and its rename) is
-    * renamed back (`Tables.recover`, catalog-only); after it, the
-    * CALLER's view of those that exist is refreshed, since the appends
-    * ran through the stream's session clone. A restart with the same
+    * renamed back (`Tables.recover`, catalog-only); after it — also
+    * when a batch failed, so a read after the failure sees what the
+    * failed batch left instead of a stale file listing — the CALLER's
+    * view of those that exist is refreshed, since the appends ran
+    * through the stream's session clone. A restart with the same
     * `checkpointDir` resumes after the last committed batch and
     * redelivers an uncommitted one. */
   private[graft] def drain(spark: SparkSession, dir: String, checkpointDir: String,
                            tables: Seq[String])(step: (DataFrame, Long) => Unit): Unit = {
     tables.foreach(Tables.recover(spark, _))
     val schema = spark.read.parquet(dir).schema
-    spark.readStream.schema(schema)
+    try spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(dir)
       .writeStream
@@ -538,7 +540,7 @@ object OnChange {
       .trigger(Trigger.AvailableNow())
       .start()
       .awaitTermination()
-    tables.filter(spark.catalog.tableExists).foreach(spark.catalog.refreshTable)
+    finally tables.filter(spark.catalog.tableExists).foreach(spark.catalog.refreshTable)
   }
 
   /** One micro-batch of a marker-guarded index loop: the replay and

@@ -2,6 +2,9 @@ package graft
 
 import graft.functions.GraftExtensions
 import graft.ops.Skew
+import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions._
 
 class FunctionsSpec extends SparkSpec {
@@ -68,6 +71,33 @@ class FunctionsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(viaSql == viaApi)
     assert(viaSql.values.toSet.size > 1, "sketches should spread across buckets")
+  }
+
+  test("the session extension (apply) injects the functions register installs, with the same builders") {
+    val injected = scala.collection.mutable.ArrayBuffer
+      .empty[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)]
+    new GraftExtensions()(new SparkSessionExtensions {
+      override def injectFunction(
+          f: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)): Unit = injected += f
+    })
+    assert(injected.map(_._1.funcName) == Seq("dot_product", "poly_hash", "hyperplane_sketch"))
+    injected.foreach { case (id, info, build) =>
+      assert(info.getName == id.funcName && info.getClassName.startsWith("graft.functions."), info)
+      val e = intercept[IllegalArgumentException](build(Seq.empty))
+      assert(e.getMessage.contains(s"${id.funcName}("), e.getMessage)
+      // installed under a prefixed name, each injected builder must
+      // answer exactly as the one register installs
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        "ext_" + id.funcName, build, "scala_udf")
+    }
+    GraftExtensions.register(spark)
+    spark.read.parquet(s"$sfDir/embeddings.parquet").limit(20)
+      .createOrReplaceTempView("emb_ext_spec")
+    def calls(p: String) = s"${p}dot_product(embedding, embedding), " +
+      s"${p}poly_hash(cast(vec_id AS STRING)), ${p}hyperplane_sketch(embedding, 3, 8, 64)"
+    val rows = spark.sql(s"SELECT ${calls("ext_")}, ${calls("")} FROM emb_ext_spec").collect()
+    assert(rows.length == 20)
+    rows.foreach(r => assert((0 until 3).map(r.get) == (3 until 6).map(r.get), r))
   }
 
   test("Graft facade: session has functions registered, graph traverses") {
